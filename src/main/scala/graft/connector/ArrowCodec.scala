@@ -1,17 +1,21 @@
 package graft.connector
 
-import java.io.{ByteArrayInputStream, InputStream, OutputStream}
+import java.io.{ByteArrayInputStream, FilterOutputStream, InputStream, OutputStream}
 import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.memory.{BufferAllocator, RootAllocator}
 import org.apache.arrow.vector._
 import org.apache.arrow.vector.complex.MapVector
+import org.apache.arrow.vector.dictionary.{Dictionary, DictionaryProvider}
 import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter}
 import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit}
-import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ArrowSchema}
+import org.apache.arrow.vector.types.pojo.{ArrowType, DictionaryEncoding, Field, FieldType, Schema => ArrowSchema}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnarBatch}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Arrow IPC ⇄ Spark columnar codec — the Spark-native counterpart of the
   * reference's Arrow serde core (serializer `clickhouse-arrow/src/arrow/
@@ -254,22 +258,79 @@ object ArrowCodec {
 
   // ------------------------------------------------------------- encoding
 
+  /** Writes value `j` of container `c` into slot `i` of one vector. A SAM
+    * trait rather than a `(Int, SpecializedGetters, Int) => Unit` closure:
+    * Function3 is not specialized, so the closure would box both indices
+    * on every value. */
+  private trait Setter { def apply(i: Int, c: SpecializedGetters, j: Int): Unit }
+
+  /** Slot `i` of `v` := the bytes of `s`, copied straight from its backing
+    * `byte[]`; `getBytes` (an extra copy) only when the string lives
+    * off-heap. */
+  private def setUtf8(v: BaseVariableWidthVector, i: Int, s: UTF8String): Unit =
+    s.getBaseObject match {
+      case a: Array[Byte] =>
+        v.setSafe(i, a, (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes)
+      case _ => v.setSafe(i, s.getBytes)
+    }
+
+  private val DefaultBatchRows = 65536
+
   /** Streaming InternalRow → Arrow IPC encoder. Rows buffer into batches
     * of `maxRowsPerBatch` (the A9 batch-splitter equivalent,
     * `arrow/utils.rs:49`); everything is written to `out` and flushed once
     * at `finish()` (the reference's deferred-flush insert,
-    * `client/internal.rs:482-535`).
+    * `client/internal.rs:482-535`). `out` stays open for the caller.
+    *
+    * Output column `j` reads input ordinal `ordinals(j)` (identity when
+    * null), so a projection needs no per-row copy. A column with an entry
+    * in `dictionaries` is written DICTIONARY-encoded — the
+    * `LowCardinality(String)` wire form: Int32 indices into the given keys,
+    * whose map values must be 0..n-1 in iteration order. Every value the
+    * column holds must be a key: the dictionary goes out with the first
+    * batch and cannot change afterwards (see [[encodeDict]]).
     */
-  final class Encoder(schema: StructType, maxRowsPerBatch: Int, out: OutputStream) {
+  final class Encoder(
+      schema: StructType,
+      maxRowsPerBatch: Int,
+      out: OutputStream,
+      ordinals: Array[Int] = null,
+      dictionaries: Map[Int, java.util.LinkedHashMap[UTF8String, Integer]] = Map.empty) {
     private val allocator =
       rootAllocator.newChildAllocator(s"graft-enc-${System.identityHashCode(this)}", 0, Long.MaxValue)
-    private val root = VectorSchemaRoot.create(toArrowSchema(schema), allocator)
-    private val writer = new ArrowStreamWriter(root, null, out)
+    private val provider = new DictionaryProvider.MapDictionaryProvider()
+    private val root = VectorSchemaRoot.create(new ArrowSchema(
+      schema.fields.toSeq.zipWithIndex.map { case (f, j) =>
+        dictionaries.get(j).fold(toArrowField(f))(dictField(f, j, _))
+      }.asJava), allocator)
+    // the writer keeps copies of the dictionaries it sent and frees them
+    // only in close(), which would also close `out`: give it a stream
+    // whose close leaves `out` open
+    private val writer = new ArrowStreamWriter(root, provider, new FilterOutputStream(out) {
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = this.out.write(b, off, len)
+      override def close(): Unit = ()
+    })
     private val resetHooks = scala.collection.mutable.ListBuffer.empty[() => Unit]
-    private val setters: Array[(Int, InternalRow) => Unit] =
+    private val src: Array[Int] = if (ordinals == null) Array.range(0, schema.length) else ordinals
+    private val setters: Array[Setter] =
       schema.fields.zipWithIndex.map { case (f, j) => setterFor(f, j, root.getVector(j)) }
     private var n = 0
     writer.start()
+
+    /** Int32 index field over a dictionary of `keys`, registered with the
+      * writer's provider under id `j`. */
+    private def dictField(
+        f: StructField, j: Int, keys: java.util.LinkedHashMap[UTF8String, Integer]): Field = {
+      val encoding = new DictionaryEncoding(j.toLong, false, new ArrowType.Int(32, true))
+      val dv = new VarCharVector(s"${f.name}_dict", allocator)
+      dv.allocateNew(keys.size)
+      var k = 0
+      keys.keySet.forEach { s => setUtf8(dv, k, s); k += 1 }
+      dv.setValueCount(keys.size)
+      provider.put(new Dictionary(dv, encoding))
+      new Field(f.name, new FieldType(f.nullable, new ArrowType.Int(32, true), encoding),
+        java.util.List.of[Field]())
+    }
 
     private def setNull(v: FieldVector, i: Int): Unit = v match {
       case b: BaseFixedWidthVector => b.setNull(i)
@@ -283,10 +344,8 @@ object ArrowCodec {
       * top-level rows, array elements, struct fields, and map entries —
       * the per-family dispatch of the reference's serializer modules
       * (`arrow/serialize/{primitive,binary,list,map,tuple}.rs`).
-      * Signature: (vector index, container, ordinal in container).
       */
-    private def valueSetter(
-        dt: DataType, v: FieldVector): (Int, org.apache.spark.sql.catalyst.expressions.SpecializedGetters, Int) => Unit =
+    private def valueSetter(dt: DataType, v: FieldVector): Setter =
       dt match {
         case BooleanType => (i, c, j) => v.asInstanceOf[BitVector].setSafe(i, if (c.getBoolean(j)) 1 else 0)
         case ByteType => (i, c, j) => v.asInstanceOf[TinyIntVector].setSafe(i, c.getByte(j))
@@ -307,16 +366,19 @@ object ArrowCodec {
         // Dynamic (struct(dynamic_type, value)) writes its stringified
         // value — the server coerces strings into Dynamic
         case st: StructType if v.isInstanceOf[VarCharVector] =>
+          val vc = v.asInstanceOf[VarCharVector]
           (i, c, j) => {
             val row = c.getStruct(j, st.size)
-            if (row == null || row.isNullAt(1)) v.asInstanceOf[VarCharVector].setNull(i)
-            else v.asInstanceOf[VarCharVector].setSafe(i, row.getUTF8String(1).getBytes)
+            if (row == null || row.isNullAt(1)) vc.setNull(i)
+            else setUtf8(vc, i, row.getUTF8String(1))
           }
         case IntegerType => (i, c, j) => v.asInstanceOf[IntVector].setSafe(i, c.getInt(j))
         case LongType => (i, c, j) => v.asInstanceOf[BigIntVector].setSafe(i, c.getLong(j))
         case FloatType => (i, c, j) => v.asInstanceOf[Float4Vector].setSafe(i, c.getFloat(j))
         case DoubleType => (i, c, j) => v.asInstanceOf[Float8Vector].setSafe(i, c.getDouble(j))
-        case StringType => (i, c, j) => v.asInstanceOf[VarCharVector].setSafe(i, c.getUTF8String(j).getBytes)
+        case StringType =>
+          val vc = v.asInstanceOf[VarCharVector]
+          (i, c, j) => setUtf8(vc, i, c.getUTF8String(j))
         case BinaryType => v match {
           // fixed-width wire form (FixedWidthKey metadata): zero-pad /
           // truncate to the declared width, CH FixedString semantics
@@ -417,22 +479,25 @@ object ArrowCodec {
         case other => throw new UnsupportedOperationException(other.toString)
       }
 
-    private def setterFor(f: StructField, j: Int, v: FieldVector): (Int, InternalRow) => Unit = {
-      val set = valueSetter(f.dataType, v)
+    private def setterFor(f: StructField, j: Int, v: FieldVector): Setter = {
+      val set: Setter = dictionaries.get(j) match {
+        case Some(keys) =>
+          val iv = v.asInstanceOf[IntVector]
+          (i, c, k) => iv.setSafe(i, keys.get(c.getUTF8String(k)).intValue)
+        case None => valueSetter(f.dataType, v)
+      }
       v match {
         // dense-union (Variant) nulls need the per-branch offset counters
         // that live inside the value setter, so nulls route through it
         // (it writes tag 0 + a null slot on branch 0) instead of setNull
-        case _: org.apache.arrow.vector.complex.DenseUnionVector =>
-          (i, row) => set(i, row, j)
-        case _ =>
-          (i, row) => if (row.isNullAt(j)) setNull(v, i) else set(i, row, j)
+        case _: org.apache.arrow.vector.complex.DenseUnionVector => set
+        case _ => (i, c, k) => if (c.isNullAt(k)) setNull(v, i) else set(i, c, k)
       }
     }
 
     def write(row: InternalRow): Unit = {
       var j = 0
-      while (j < setters.length) { setters(j)(n, row); j += 1 }
+      while (j < setters.length) { setters(j)(n, row, src(j)); j += 1 }
       n += 1
       if (n >= maxRowsPerBatch) flushBatch()
     }
@@ -448,124 +513,60 @@ object ArrowCodec {
     /** Write any buffered rows, the end-of-stream marker, and release. */
     def finish(): Unit = {
       flushBatch()
-      writer.end()
+      writer.close() // before the root and dictionaries it references
       root.close()
+      provider.close()
       allocator.close()
     }
   }
 
   /** Encode a fully-materialized row seq as one IPC stream (test/server
     * helper; the write path streams through [[Encoder]] directly). */
-  def encode(schema: StructType, rows: Iterator[InternalRow], maxRowsPerBatch: Int = 65536): Array[Byte] = {
+  def encode(schema: StructType, rows: Iterator[InternalRow]): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
-    val enc = new Encoder(schema, maxRowsPerBatch, bos)
+    val enc = new Encoder(schema, DefaultBatchRows, bos)
     rows.foreach(enc.write)
     enc.finish()
     bos.toByteArray
   }
 
-  /** Encode with the named string columns DICTIONARY-encoded — the wire
+  /** Encode with the named String columns DICTIONARY-encoded — the wire
     * form of `LowCardinality(String)` (A5; reference
-    * `arrow/serialize/low_cardinality.rs:1-60`: per-block dict + keys,
-    * key width chosen from cardinality). Indices here are Int32 over one
-    * dictionary computed for the whole stream: the Arrow Java stream
-    * reader has no dictionary-replacement support, so the one-dict form
-    * is the interoperable one — which is also why [[Encoder]] (the
-    * unbounded streaming insert path) stays plain-encoded: it would have
-    * to buffer the whole partition to learn the dictionary first. This
-    * helper is for bounded blocks (server responses, client-side batch
-    * inserts); [[BatchReader]] decodes it transparently on arrival.
+    * `arrow/serialize/low_cardinality.rs:1-60`: per-block dict + keys).
+    * A first pass collects each such column's keys in first-appearance
+    * order, each key cloned (the rows may share one reused buffer); then
+    * the rows stream through [[Encoder]] in its dictionary mode, which
+    * writes every other column as it always does. Named columns that are
+    * not String encode plain. `ordinals` as for [[Encoder]].
+    *
+    * One dictionary per stream: the Arrow Java stream reader has no
+    * dictionary-replacement support, so the keys must be known before the
+    * first batch — which is why this takes bounded input (server
+    * responses, client-side batch inserts) while the unbounded streaming
+    * insert stays plain. [[BatchReader]] decodes it transparently.
     */
   def encodeDict(
-      schema: StructType, rows: Seq[InternalRow], dictCols: Set[String]): Array[Byte] = {
-    import org.apache.arrow.vector.dictionary.{Dictionary, DictionaryProvider}
-    import org.apache.arrow.vector.types.pojo.DictionaryEncoding
-
-    val encodable = schema.fields.zipWithIndex.collect {
-      case (f, j) if dictCols.contains(f.name) && f.dataType == StringType => j
-    }.toSet
-    if (encodable.isEmpty) return encode(schema, rows.iterator)
-
-    val allocator =
-      rootAllocator.newChildAllocator(s"graft-dictenc-${System.identityHashCode(rows)}", 0, Long.MaxValue)
-    val toClose = scala.collection.mutable.ListBuffer.empty[AutoCloseable]
-    try {
-      val provider = new DictionaryProvider.MapDictionaryProvider()
-      // per-column dictionaries: value order = first appearance (the
-      // reference's per-block dict build order)
-      val colIndex: Map[Int, (Map[String, Int], DictionaryEncoding)] = encodable.map { j =>
-        val seen = new java.util.LinkedHashMap[String, Integer]()
+      schema: StructType,
+      rows: Seq[InternalRow],
+      dictCols: Set[String],
+      ordinals: Array[Int] = null): Array[Byte] = {
+    val dictionaries = schema.fields.indices.collect {
+      case j if dictCols(schema(j).name) && schema(j).dataType == StringType =>
+        val k = if (ordinals == null) j else ordinals(j)
+        val keys = new java.util.LinkedHashMap[UTF8String, Integer]()
         rows.foreach { r =>
-          if (!r.isNullAt(j)) {
-            val s = r.getUTF8String(j).toString
-            if (!seen.containsKey(s)) seen.put(s, seen.size())
+          if (!r.isNullAt(k)) {
+            val s = r.getUTF8String(k)
+            if (!keys.containsKey(s)) keys.put(s.clone(), keys.size)
           }
         }
-        val dictVec = new VarCharVector(s"${schema.fields(j).name}_dict", allocator)
-        toClose += dictVec
-        dictVec.allocateNew(seen.size())
-        seen.forEach((s, i) => dictVec.setSafe(i.intValue(), s.getBytes("UTF-8")))
-        dictVec.setValueCount(seen.size())
-        val encoding = new DictionaryEncoding(j.toLong, false, new ArrowType.Int(32, true))
-        provider.put(new Dictionary(dictVec, encoding))
-        j -> (seen.asScala.map { case (k, v) => k -> v.intValue() }.toMap, encoding)
-      }.toMap
-
-      val fields = schema.fields.zipWithIndex.map { case (f, j) =>
-        if (encodable(j))
-          new Field(f.name,
-            new FieldType(f.nullable, new ArrowType.Int(32, true), colIndex(j)._2),
-            java.util.List.of[Field]())
-        else toArrowField(f)
-      }
-      val root = VectorSchemaRoot.create(new ArrowSchema(java.util.List.of(fields: _*)), allocator)
-      toClose += root
-      val bos = new java.io.ByteArrayOutputStream()
-      val writer = new ArrowStreamWriter(root, provider, bos)
-      toClose += writer
-      writer.start()
-      root.allocateNew()
-      schema.fields.zipWithIndex.foreach { case (f, j) =>
-        val v = root.getVector(j)
-        var i = 0
-        if (encodable(j)) {
-          val iv = v.asInstanceOf[IntVector]
-          val lookup = colIndex(j)._1
-          rows.foreach { r =>
-            if (r.isNullAt(j)) iv.setNull(i)
-            else iv.setSafe(i, lookup(r.getUTF8String(j).toString))
-            i += 1
-          }
-        } else {
-          rows.foreach { r =>
-            if (r.isNullAt(j)) v match {
-              case b: BaseFixedWidthVector => b.setNull(i)
-              case b: BaseVariableWidthVector => b.setNull(i)
-              case other =>
-                throw new UnsupportedOperationException(s"encodeDict null for: ${f.dataType}")
-            }
-            else f.dataType match {
-              case StringType => v.asInstanceOf[VarCharVector].setSafe(i, r.getUTF8String(j).getBytes)
-              case LongType => v.asInstanceOf[BigIntVector].setSafe(i, r.getLong(j))
-              case IntegerType => v.asInstanceOf[IntVector].setSafe(i, r.getInt(j))
-              case DoubleType => v.asInstanceOf[Float8Vector].setSafe(i, r.getDouble(j))
-              case other => throw new UnsupportedOperationException(
-                s"encodeDict non-dict column type: $other")
-            }
-            i += 1
-          }
-        }
-      }
-      root.setRowCount(rows.size)
-      writer.writeBatch()
-      writer.end()
-      bos.toByteArray
-    } finally {
-      // reverse creation order: writer releases its dictionary batches
-      // before the roots/vectors they reference go down
-      toClose.reverse.foreach(c => try c.close() catch { case _: Exception => () })
-      allocator.close()
-    }
+        j -> keys
+    }.toMap
+    val bos = new java.io.ByteArrayOutputStream()
+    val enc = new Encoder(schema, DefaultBatchRows, bos, ordinals, dictionaries)
+    rows.foreach(enc.write)
+    enc.finish()
+    bos.toByteArray
   }
 
   // ------------------------------------------------------------- decoding

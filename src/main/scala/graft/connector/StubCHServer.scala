@@ -632,33 +632,15 @@ final class StubCHServer(tlsContext: Option[javax.net.ssl.SSLContext]) {
             // the column list between SELECT and FROM
             val colsPart = sql.substring(sql.toUpperCase.indexOf("SELECT") + 6,
               sql.toUpperCase.indexOf(" FROM "))
-            val pred: InternalRow => Boolean = {
-              val m = java.util.regex.Pattern
-                .compile(
-                  "(?i)\\sWHERE\\s(.*?)(?:\\s(?:LIMIT\\s+\\d+.*|OFFSET\\s+\\d+.*|ORDER\\s+BY\\s.*|GROUP\\s+BY\\s.*)\\s*$|$)",
-                  java.util.regex.Pattern.DOTALL)
-                .matcher(sql)
-              if (m.find()) StubWhere.compile(m.group(1), data.schema) else _ => true
-            }
-            val unsorted = data.rows.filter(pred)
-            // pushed TopN arrives as ORDER BY ... LIMIT n — honor the sort
-            val filtered = {
-              val m = java.util.regex.Pattern
-                .compile(
-                  "(?i)\\sORDER\\s+BY\\s+(.*?)(?:\\s+LIMIT\\s+\\d+(?:\\s+OFFSET\\s+\\d+)?|\\s+OFFSET\\s+\\d+(?:\\s+ROWS?)?)?\\s*$",
-                  java.util.regex.Pattern.DOTALL)
-                .matcher(sql)
-              if (m.find()) sortRows(unsorted, data.schema, m.group(1)) else unsorted
-            }
             if (colsPart.toUpperCase.matches("(?s).*\\b(COUNT|MIN|MAX|SUM)\\s*\\(.*")) {
-              StubAgg.run(sql, colsPart, data.schema, filtered)
+              StubAgg.run(sql, colsPart, data.schema, matching(sql, data))
             } else {
-              val wanted: Seq[Int] =
-                if (colsPart.trim == "*") data.schema.indices
+              val wanted: Array[Int] =
+                if (colsPart.trim == "*") data.schema.indices.toArray
                 else {
                   val m = java.util.regex.Pattern.compile(identRe).matcher(colsPart)
                   val names = Iterator.continually(m).takeWhile(_.find()).map(unescape).toSeq
-                  names.map(n => data.schema.fieldIndex(n))
+                  names.map(n => data.schema.fieldIndex(n)).toArray
                 }
               // pushed pagination: `LIMIT n [OFFSET m]` or `OFFSET m ROWS`
               // — OFFSET skips first (SQL semantics), LIMIT caps the rest
@@ -670,21 +652,43 @@ final class StubCHServer(tlsContext: Option[javax.net.ssl.SSLContext]) {
                 val m = java.util.regex.Pattern.compile("(?i)\\bOFFSET\\s+(\\d+)").matcher(sql)
                 if (m.find()) Some(m.group(1).toInt) else None
               }
-              val projSchema = StructType(wanted.map(data.schema.fields))
-              val shifted = offset.map(filtered.drop).getOrElse(filtered)
-              val limited = limit.map(shifted.take).getOrElse(shifted)
-              summaryRows.set((limited.size.toLong, -1L))
-              val projected = limited.iterator.map { r =>
-                InternalRow.fromSeq(wanted.map(i => r.get(i, data.schema.fields(i).dataType)))
-              }
+              val projSchema = StructType(wanted.toSeq.map(data.schema.fields))
+              // a `LIMIT 0` schema probe never reads the rows
+              val rows =
+                if (limit.contains(0)) Vector.empty[InternalRow]
+                else {
+                  val all = matching(sql, data)
+                  val shifted = offset.map(all.drop).getOrElse(all)
+                  limit.map(shifted.take).getOrElse(shifted)
+                }
+              summaryRows.set((rows.size.toLong, -1L))
               val dictCols = lowCardCols.getOrDefault(name, Set.empty)
-                .intersect(projSchema.fieldNames.toSet)
-              if (dictCols.nonEmpty)
-                Right(ArrowCodec.encodeDict(projSchema, projected.toVector, dictCols))
-              else Right(ArrowCodec.encode(projSchema, projected))
+              // the stored rows encode directly: output column j reads
+              // stored ordinal wanted(j)
+              Right(ArrowCodec.encodeDict(projSchema, rows, dictCols, wanted))
             }
         }
     }
+
+  /** The table's rows that pass the SELECT's WHERE, in its ORDER BY order
+    * — the stored vector itself when there is neither. */
+  private def matching(sql: String, data: TableData): Vector[InternalRow] = {
+    val where = java.util.regex.Pattern
+      .compile(
+        "(?i)\\sWHERE\\s(.*?)(?:\\s(?:LIMIT\\s+\\d+.*|OFFSET\\s+\\d+.*|ORDER\\s+BY\\s.*|GROUP\\s+BY\\s.*)\\s*$|$)",
+        java.util.regex.Pattern.DOTALL)
+      .matcher(sql)
+    val unsorted =
+      if (where.find()) data.rows.filter(StubWhere.compile(where.group(1), data.schema))
+      else data.rows
+    // pushed TopN arrives as ORDER BY ... LIMIT n — honor the sort
+    val order = java.util.regex.Pattern
+      .compile(
+        "(?i)\\sORDER\\s+BY\\s+(.*?)(?:\\s+LIMIT\\s+\\d+(?:\\s+OFFSET\\s+\\d+)?|\\s+OFFSET\\s+\\d+(?:\\s+ROWS?)?)?\\s*$",
+        java.util.regex.Pattern.DOTALL)
+      .matcher(sql)
+    if (order.find()) sortRows(unsorted, data.schema, order.group(1)) else unsorted
+  }
 
   /** Evaluate an `ORDER BY a [ASC|DESC] [NULLS FIRST|LAST], ...` clause —
     * the pushed-TopN sort the real server would perform. */

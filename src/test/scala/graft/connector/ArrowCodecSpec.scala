@@ -177,4 +177,44 @@ class ArrowCodecSpec extends SparkSpec {
     val plain = ArrowCodec.encodeDict(schema, rows.take(1), Set("id"))
     assert(ArrowCodec.decode(plain)._2.size === 1)
   }
+
+  test("strings from off-heap bases and from one reused row buffer encode like on-heap copies") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+    import org.apache.spark.sql.execution.vectorized.OffHeapColumnVector
+    import org.apache.spark.sql.vectorized.ColumnarBatch
+    import org.apache.spark.unsafe.types.UTF8String
+    val schema = StructType(Seq(StructField("tag", StringType)))
+    val values = Seq("b", null, "a", "b", "ünïcode", "a", "")
+    def strings(bytes: Array[Byte]): Seq[String] = ArrowCodec.decode(bytes)._2
+      .map(r => if (r.isNullAt(0)) null else r.getUTF8String(0).toString)
+    val onHeap = values.map(v => InternalRow(if (v == null) null else UTF8String.fromString(v)))
+    assert(strings(ArrowCodec.encode(schema, onHeap.iterator)) === values)
+    assert(strings(ArrowCodec.encodeDict(schema, onHeap, Set("tag"))) === values)
+
+    // a ColumnarBatch over an OffHeapColumnVector hands out strings whose
+    // base is not a byte[]: the encoder's getBytes fallback
+    val col = new OffHeapColumnVector(values.size, StringType)
+    try {
+      values.zipWithIndex.foreach { case (v, i) =>
+        if (v == null) col.putNull(i) else col.putByteArray(i, v.getBytes("UTF-8"))
+      }
+      val batch = new ColumnarBatch(Array(col), values.size)
+      assert(!batch.getRow(0).getUTF8String(0).getBaseObject.isInstanceOf[Array[Byte]])
+      assert(strings(ArrowCodec.encode(schema, batch.rowIterator.asScala)) === values)
+      val offHeapRows = values.indices.map(i =>
+        InternalRow(if (col.isNullAt(i)) null else col.getUTF8String(i)))
+      assert(strings(ArrowCodec.encodeDict(schema, offHeapRows, Set("tag"))) === values)
+    } finally col.close()
+
+    // every element is the projection's one UnsafeRow, rewritten in place
+    // (how toRdd iterators hand rows out): dictionary keys must be copies
+    val proj = UnsafeProjection.create(schema)
+    val reused = new IndexedSeq[InternalRow] {
+      def length: Int = onHeap.length
+      def apply(i: Int): InternalRow = proj(onHeap(i))
+    }
+    assert(reused(0) eq reused(1))
+    assert(strings(ArrowCodec.encodeDict(schema, reused, Set("tag"))) === values)
+  }
 }

@@ -775,6 +775,49 @@ class ConnectorSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  /** Stub table `lc_mixed`: a LowCardinality String beside Date, Decimal,
+    * Boolean, nullable Int32 and Array<Long> columns. */
+  private def loadMixedLowCard(srv: StubCHServer): org.apache.spark.sql.DataFrame = {
+    val df = Seq(
+      (1L, "AIR", java.sql.Date.valueOf("2024-05-17"), BigDecimal("12.50"), true, Some(7), Seq(1L, 2L)),
+      (2L, "MAIL", java.sql.Date.valueOf("1969-12-31"), BigDecimal("-0.01"), false, None, Seq.empty[Long]),
+      (3L, "AIR", java.sql.Date.valueOf("2000-02-29"), BigDecimal("0.00"), true, Some(-3), Seq(5L)),
+      (4L, null, java.sql.Date.valueOf("2024-01-01"), BigDecimal("99.99"), false, Some(0), Seq(3L, 4L)))
+      .toDF("id", "mode", "d", "dec", "flag", "n", "arr")
+      .withColumn("dec", col("dec").cast("decimal(10,2)"))
+    srv.load("lc_mixed", df)
+    srv.markLowCardinality("lc_mixed", Set("mode"))
+    df
+  }
+
+  test("LowCardinality tables with Date, Decimal, Boolean, nullable Int32 and Array<Long> columns scan intact") {
+    val srv = freshServer()
+    try {
+      val df = loadMixedLowCard(srv)
+      val back = spark.read.format("graft-ch").option("url", srv.url).option("table", "lc_mixed").load()
+      assert(back.schema.map(f => (f.name, f.dataType)) === df.schema.map(f => (f.name, f.dataType)))
+      assert(back.orderBy("id").collect().map(_.toSeq) === df.orderBy("id").collect().map(_.toSeq))
+    } finally srv.stop()
+  }
+
+  test("stub SELECT of a reordered column subset with LIMIT/OFFSET keeps order, values and the dictionary") {
+    val srv = freshServer()
+    try {
+      loadMixedLowCard(srv)
+      val raw = CHHttp.queryArrow(srv.url, "SELECT `arr`, `mode`, `id` FROM `lc_mixed` LIMIT 2 OFFSET 1")
+      val bytes = try raw.readAllBytes() finally raw.close()
+      val (schema, rows) = ArrowCodec.decode(bytes)
+      assert(schema.fieldNames.toSeq === Seq("arr", "mode", "id"))
+      assert(rows.map(r => (r.getArray(0).toLongArray.toSeq, r.getUTF8String(1).toString, r.getLong(2))) ===
+        Seq((Seq.empty[Long], "MAIL", 2L), (Seq(5L), "AIR", 3L)))
+      val alloc = ArrowCodec.rootAllocator.newChildAllocator("lc-subset", 0, Long.MaxValue)
+      val rdr = new org.apache.arrow.vector.ipc.ArrowStreamReader(
+        new java.io.ByteArrayInputStream(bytes), alloc)
+      try assert(rdr.getVectorSchemaRoot.getSchema.getFields.get(1).getDictionary != null)
+      finally { rdr.close(); alloc.close() }
+    } finally srv.stop()
+  }
+
   test("server row stats make small connector dims auto-broadcast (no hint)") {
     val srv = freshServer()
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
