@@ -76,6 +76,19 @@ class IndexStoreSpec extends SparkSpec {
     assert(back == meta)
   }
 
+  test("an artifact of a retired format fails on load, naming path and both formats") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft_fmt_").toString + "/idx"
+    IndexStore.save(Seq((1L, "a")).toDF("id", "v"), path, Map("kind" -> "t"))
+    val sidecar = s"${IndexStore.resolveDir(spark, path)}/_index_meta.json"
+    IndexStore.writeMeta(spark, sidecar,
+      IndexStore.readMeta(spark, path) + ("format" -> "2"))
+    val e = intercept[IllegalArgumentException](IndexStore.load(spark, path))
+    assert(e.getMessage.contains(path) && e.getMessage.contains("format 2") &&
+      e.getMessage.contains(s"speaks ${IndexStore.FormatVersion}"), e.getMessage)
+    assert(IndexStore.FormatVersion == "3")
+  }
+
   test("cold IVF probe from a fresh session equals the warm probe; no application guard fires") {
     val d = sf001
     val path = s"${IndexStore.tempRoot(spark)}/spec/ivf"

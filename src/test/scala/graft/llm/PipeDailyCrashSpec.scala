@@ -53,8 +53,8 @@ class PipeDailyCrashSpec extends SparkSpec {
 
     val hooks: Seq[(String, () => Unit, () => Unit)] = Seq(
       ("after-pool",
-        () => TextOps.bm25AppendHookAfterPool = () => throw new RuntimeException("boom"),
-        () => TextOps.bm25AppendHookAfterPool = () => ()),
+        () => IndexStore.appendHookAfterPool = () => throw new RuntimeException("boom"),
+        () => IndexStore.appendHookAfterPool = () => ()),
       ("before-flip",
         () => IndexStore.swapHookBeforeFlip = () => throw new RuntimeException("boom"),
         () => IndexStore.swapHookBeforeFlip = () => ()),

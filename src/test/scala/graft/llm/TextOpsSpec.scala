@@ -210,7 +210,7 @@ class TextOpsSpec extends SparkSpec {
         .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl")).collect()(0)
       assert(r.getLong(0) === meta("n").toLong, s"$tag: n diverged from postings")
       assert(r.getLong(1) === meta("sumDl").toLong, s"$tag: sumDl diverged from postings")
-      val bad = IndexStore.load(spark, s"$path/state").withColumn("m", lit(1))
+      val bad = IndexStore.loadAux(spark, s"$path/state", "dfs").withColumn("m", lit(1))
         .join(posts.groupBy("term").agg(count(lit(1)).as("df")).withColumn("r", lit(1)),
           Seq("term", "df"), "full")
         .where(col("m").isNull || col("r").isNull).count()
@@ -221,10 +221,10 @@ class TextOpsSpec extends SparkSpec {
 
     // crash A: after the pool write, before the generation stages — the
     // exact window the old three-step chain left inconsistent
-    TextOps.bm25AppendHookAfterPool = () => throw new RuntimeException("boom-pool")
+    IndexStore.appendHookAfterPool = () => throw new RuntimeException("boom-pool")
     try intercept[RuntimeException] {
       TextOps.appendBm25Index(spark, path, docs.where(slice === 1))
-    } finally TextOps.bm25AppendHookAfterPool = () => ()
+    } finally IndexStore.appendHookAfterPool = () => ()
     assert(assertConsistent("crash after pool write") === n0,
       "a crashed append's orphan pool dir leaked into the served state")
 
@@ -258,7 +258,7 @@ class TextOpsSpec extends SparkSpec {
     // dirs, and the SECOND compaction reclaims those
     TextOps.compactBm25Postings(spark, path)
     assert(assertConsistent("after compact") === nFinal)
-    val pool = new org.apache.hadoop.fs.Path(s"$path/pool")
+    val pool = new org.apache.hadoop.fs.Path(s"$path/state/pool")
     val fs = pool.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val afterFirst = fs.listStatus(pool).count(_.isDirectory)
     assert(afterFirst === 3,
@@ -281,7 +281,7 @@ class TextOpsSpec extends SparkSpec {
     val path = java.nio.file.Files.createTempDirectory("graft_bm25_multi_").toString + "/idx"
     TextOps.saveBm25State(spark, path, p0, ts0, r0.getLong(0), r0.getLong(1))
     def manifestSize: Int =
-      IndexStore.loadAux(spark, s"$path/state", "manifest").count().toInt
+      IndexStore.manifestEntries(spark, s"$path/state").size
     assert(manifestSize === 1)
     // two sequential appends: each commits its own generation and
     // extends the manifest by exactly its pool dir
@@ -323,7 +323,7 @@ class TextOpsSpec extends SparkSpec {
   test("manifest stats pruning: a doc-scoped read opens only the pool dirs whose range covers it") {
     val docs = graft.Tables.t(spark, sf001, "documents")
     // range-DISJOINT batches — the daily-append shape (monotone doc
-    // ids), where the manifest's per-dir (min_doc, max_doc) stats can
+    // ids), where the manifest's per-segment doc_id ranges can
     // actually separate the pool
     val ids = docs.select("doc_id").as[Long].collect().sorted
     val (t1, t2) = (ids(ids.length / 3), ids(2 * ids.length / 3))
@@ -340,7 +340,7 @@ class TextOpsSpec extends SparkSpec {
     // of the three manifest dirs before any parquet is opened
     val target = ids(ids.length / 2)
     assert(target >= t1 && target < t2)
-    val dirs = TextOps.bm25DirsForDocs(spark, path, Seq(target))
+    val dirs = IndexStore.segmentsFor(spark, s"$path/state", Seq(target))
     assert(dirs.size === 1,
       s"manifest stats pruning opened ${dirs.size} of 3 pool dirs: $dirs")
     // correctness does not ride the stats: the pruned read equals the
@@ -356,6 +356,28 @@ class TextOpsSpec extends SparkSpec {
     // empty frame without opening the pool at all
     val none = TextOps.bm25PostingsForDocs(spark, path, Seq(ids.last + 1000))
     assert(none.count() === 0)
+  }
+
+  test("BM25 postings damage is detected by the artifact's manifest audit") {
+    val docs = graft.Tables.t(spark, sf001, "documents")
+    val slice = pmod(col("doc_id"), lit(5L))
+    val p0 = TextOps.bm25Postings(docs.where(slice >= 1))
+    val ts0 = p0.groupBy("term").agg(count(lit(1)).as("df"))
+    val r0 = p0.select("doc_id", "dl").dropDuplicates("doc_id")
+      .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl")).collect()(0)
+    val path = java.nio.file.Files.createTempDirectory("graft_bm25_audit_").toString + "/idx"
+    TextOps.saveBm25State(spark, path, p0, ts0, r0.getLong(0), r0.getLong(1))
+    val state = s"$path/state"
+    val saved = IndexStore.manifestEntries(spark, state).map(_.dir)
+    assert(TextOps.appendBm25Index(spark, path, docs.where(slice === 0)))
+    IndexStore.verifyManifest(spark, state)
+    // the postings ARE the artifact's data: losing one parquet file of
+    // the appended segment must fail the audit, naming that segment
+    val Seq(target) = IndexStore.manifestEntries(spark, state).map(_.dir).diff(saved)
+    val file = IndexStore.parquetFiles(spark, s"$state/$target").head
+    assert(new java.io.File(file.toUri).delete())
+    val e = intercept[IllegalArgumentException](IndexStore.verifyManifest(spark, state))
+    assert(e.getMessage.contains(target), e.getMessage)
   }
 
   test("vocab drift: the board row's statistic is bounded, and self-drift is exactly zero") {
