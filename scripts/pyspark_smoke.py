@@ -249,6 +249,12 @@ def bm25_index_probe():
     assert len(rows) > 0 and all(r.rank <= 5 for r in rows), len(rows)
 
 
+def ann_family(kind):
+    # the standing ANN family with sidecar kind `kind` (graft.llm.AnnFamily)
+    fams = spark._jvm.graft.llm.AnnFamily.all()
+    return next(fams.apply(i) for i in range(fams.size()) if fams.apply(i).kind() == kind)
+
+
 # 16: round-13 surface — ANN batch probe through the STANDING LSH
 # bucket table from Python
 def lsh_index_probe():
@@ -258,8 +264,8 @@ def lsh_index_probe():
     emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
     q = emb.filter("vec_id % 25 = 0")
     out = DataFrame(
-        jvm.graft.llm.Similarity.lshIndexProbe(
-            spark._jsparkSession, SF_DIR, q._jdf, 5), spark)
+        jvm.graft.llm.Similarity.indexProbe(
+            spark._jsparkSession, SF_DIR, ann_family("lsh"), q._jdf, 5, 0, 0), spark)
     rows = out.collect()
     assert out.columns == ["qid", "vid", "cos"], out.columns
     assert len(rows) > 0, "LSH standing probe returned no neighbors"
@@ -274,12 +280,14 @@ def cold_index_probe():
 
     jvm = spark._jvm
     path = jvm.graft.llm.IndexStore.tempRoot(spark._jsparkSession) + "/pysmoke/ivf"
-    jvm.graft.llm.Similarity.saveIvfIndex(spark._jsparkSession, SF_DIR, path)
+    jvm.graft.llm.Similarity.saveIndex(spark._jsparkSession, SF_DIR, ann_family("ivf"), path)
     fresh = spark._jsparkSession.newSession()
-    q = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet")).filter(
-        "vec_id % 25 = 0")
+    emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
+    corpus = emb.selectExpr("vec_id AS vid", "CAST(embedding AS array<double>) AS cv")
+    q = emb.filter("vec_id % 25 = 0")
     out = DataFrame(
-        jvm.graft.llm.Similarity.ivfColdProbe(fresh, path, q._jdf, 5, 4), spark)
+        jvm.graft.llm.Similarity.coldProbe(
+            fresh, path, ann_family("ivf"), corpus._jdf, q._jdf, 5, 4, 0), spark)
     rows = out.collect()
     assert out.columns == ["qid", "vid", "cos"], out.columns
     assert len(rows) > 0, "cold IVF probe returned no neighbors"

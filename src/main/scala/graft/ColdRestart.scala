@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.llm.{Dedup, IndexStore, Similarity, TextOps}
+import graft.llm.{AnnFamily, Dedup, IndexStore, Similarity, TextOps}
 
 /** Cross-JVM restart certification (the strongest form of "standing
   * means survives a restart"): [[ColdSave]] builds every standing
@@ -50,10 +50,7 @@ object ColdSave {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     import ColdRestart._
 
-    Similarity.saveIvfIndex(spark, sfDir, s"$outDir/ivf")
-    Similarity.savePqIndex(spark, sfDir, s"$outDir/pq")
-    Similarity.saveIvfPqIndex(spark, sfDir, s"$outDir/ivfpq")
-    Similarity.saveLshIndex(spark, sfDir, s"$outDir/lsh")
+    AnnFamily.all.foreach(fam => Similarity.saveIndex(spark, sfDir, fam, s"$outDir/${fam.kind}"))
     TextOps.saveBm25Index(spark, sfDir, s"$outDir/bm25")
     Dedup.saveBandIndex(spark, sfDir, s"$outDir/bands")
     TextOps.saveQualWeights(spark, sfDir, s"$outDir/qualw")
@@ -63,13 +60,13 @@ object ColdSave {
     val docs = Tables.t(spark, sfDir, "documents")
     def dump(name: String, df: DataFrame): Unit =
       df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/expected/$name")
-    dump("ivf", Similarity.ivfIndexProbe(spark, sfDir, queriesOf(emb), k = 5, nprobe = 0))
-    dump("lsh", Similarity.lshIndexProbe(spark, sfDir, queriesOf(emb), k = 5))
+    dump("ivf", Similarity.indexProbe(spark, sfDir, AnnFamily.Ivf, queriesOf(emb), k = 5))
+    dump("lsh", Similarity.indexProbe(spark, sfDir, AnnFamily.Lsh, queriesOf(emb), k = 5))
     // PQ: the ARTIFACT is the contract (probe output rides partition-
     // local shortlist ties) — dump the codes table itself; same
     // convention for the composed IVF-PQ table
-    dump("pq", Similarity.pqIndexFor(spark, sfDir))
-    dump("ivfpq", Similarity.ivfPqIndexFor(spark, sfDir))
+    dump("pq", Similarity.indexFor(spark, sfDir, AnnFamily.Pq))
+    dump("ivfpq", Similarity.indexFor(spark, sfDir, AnnFamily.IvfPq))
     dump("bm25", TextOps.bm25IndexProbe(spark, sfDir, bm25Queries(docs), k = 5))
     dump("bands", Dedup.incrementalCandidates(batchOf(docs),
       Dedup.corpusBandIndexFor(spark, sfDir)))
@@ -95,13 +92,10 @@ object ColdProbe {
     def expect(name: String): DataFrame = spark.read.parquet(s"$outDir/expected/$name")
 
     val results = Seq(
-      "ivf" -> mismatches(
-        Similarity.ivfColdProbe(spark, s"$outDir/ivf", queriesOf(emb), k = 5, nprobe = 0),
-        expect("ivf")),
-      "lsh" -> mismatches(
-        Similarity.lshColdProbe(spark, s"$outDir/lsh",
-          emb, queriesOf(emb), k = 5),
-        expect("lsh")),
+      "ivf" -> mismatches(Similarity.coldProbe(spark, s"$outDir/ivf", AnnFamily.Ivf,
+        Similarity.corpusOf(emb), queriesOf(emb), k = 5), expect("ivf")),
+      "lsh" -> mismatches(Similarity.coldProbe(spark, s"$outDir/lsh", AnnFamily.Lsh,
+        Similarity.corpusOf(emb), queriesOf(emb), k = 5), expect("lsh")),
       "pq" -> mismatches(IndexStore.load(spark, s"$outDir/pq"), expect("pq")),
       "ivfpq" -> mismatches(IndexStore.load(spark, s"$outDir/ivfpq"), expect("ivfpq")),
       "bm25" -> mismatches(

@@ -174,6 +174,182 @@ private[llm] object VecKernels extends Serializable {
   }
 }
 
+/** A trained ANN model. Each family fills the parts it uses: coarse
+  * `centroids` (IVF and IVF-PQ; flat PQ holds ONE all-zero centroid, so
+  * its residuals are the vectors themselves), PQ `codebooks` over the
+  * subspaces [bounds(f), bounds(f+1)), and the LSH hyperplanes.
+  */
+final case class AnnModel(
+    centroids: Array[Array[Double]] = Array.empty,
+    codebooks: Array[Array[Array[Double]]] = Array.empty,
+    bounds: Array[Int] = Array.empty,
+    planes: Array[Array[Array[Double]]] = Array.empty)
+
+/** One standing ANN family, described once: the artifact's sidecar
+  * `kind`, its stored key and row id, its partition columns and model
+  * tables, training and encoding under a fixed model, and the probe.
+  * [[Similarity]] writes the lifecycle once over these four values —
+  * the build-once memo, merge, delete, save, cold probe, the ingest
+  * step and the certification rows. They are a closed set, not an
+  * option: IVF-flat keeps its full-vector probe and LSH its bucket join;
+  * PQ and IVF-PQ share the one ADC scan ([[Similarity.ivfPqScan]]).
+  * Training is seeded (42), so a retrain reproduces the model.
+  *
+  * @param storedKey   the stored columns that decide a row; the
+  *                    convergence and round-trip checks compare on them
+  * @param rowId       one stored row per id: merges dedup on it
+  * @param stableProbe probe output does not depend on the artifact's
+  *                    file layout (the candidates are re-ranked exactly
+  *                    under a total tie-break), so a cold probe must equal
+  *                    the warm one row for row; an ADC shortlist rides
+  *                    partition-local ties, so the PQ families certify
+  *                    the artifact's rows instead
+  */
+sealed abstract class AnnFamily(val kind: String, val storedKey: Seq[String],
+    val rowId: Seq[String], val partitionBy: Seq[String], val stableProbe: Boolean) {
+
+  /** Train over a (vid, cv) corpus; `nlist` sizes the coarse quantizer
+    * and is evaluated only by the families that have one. */
+  def train(corpus: DataFrame, nlist: => Int): AnnModel
+
+  /** (vid, cv) rows → stored rows under a fixed model, one JIT'd pass. */
+  def encode(corpus: DataFrame, model: AnnModel): DataFrame
+
+  /** Top-k (qid, vid, cos) of `queries` (vec_id, embedding) against a
+    * stored `index`; `corpus` (vid, cv) feeds the exact re-rank of the
+    * families whose rows do not carry their vectors (IVF-flat never
+    * evaluates it, so a probe pays no corpus schema job). A 0 knob is
+    * density-scaled from `rows`, the index row count, which is read at
+    * most once and only when a knob needs it. */
+  def probe(index: DataFrame, corpus: => DataFrame, model: AnnModel, queries: DataFrame,
+      k: Int, nprobe: Int, shortlistFactor: Int)(rows: => Long): DataFrame
+
+  /** Sidecar entries besides `kind`. */
+  def sidecar(model: AnnModel): Map[String, String]
+
+  /** Aux tables holding the model's matrices. */
+  def modelTables(s: SparkSession, model: AnnModel): Map[String, DataFrame] = Map.empty
+
+  /** The model back from a saved artifact's sidecar and aux tables. */
+  def readModel(s: SparkSession, path: String, meta: Map[String, String]): AnnModel
+}
+
+object AnnFamily {
+  import Similarity._
+
+  /** IVF-flat: (vid, cv, cell), cell-partitioned; the probe re-ranks the
+    * full vectors of the probed cells. */
+  case object Ivf extends AnnFamily("ivf", Seq("vid", "cell"), Seq("vid"), Seq("cell"),
+      stableProbe = true) {
+    def train(corpus: DataFrame, nlist: => Int): AnnModel = AnnModel(centroids =
+      trainCoarseQuantizer(corpus.select(col("cv")), nlist, normalize = false, seed = 42L))
+    def encode(corpus: DataFrame, model: AnnModel): DataFrame =
+      ivfAssign(corpus, model.centroids)
+    def probe(index: DataFrame, corpus: => DataFrame, model: AnnModel, queries: DataFrame,
+        k: Int, nprobe: Int, shortlistFactor: Int)(rows: => Long): DataFrame =
+      ivfProbe(index, model.centroids, queries, k,
+        if (nprobe > 0) nprobe else densityNprobe(rows, model.centroids.length))
+    def sidecar(model: AnnModel): Map[String, String] =
+      Map("nlist" -> model.centroids.length.toString)
+    override def modelTables(s: SparkSession, model: AnnModel): Map[String, DataFrame] =
+      Map(IndexStore.ModelTable -> IndexStore.modelDf(s, Map("centroids" -> model.centroids)))
+    def readModel(s: SparkSession, path: String, meta: Map[String, String]): AnnModel =
+      AnnModel(centroids = IndexStore.readModelMatrix(s, path, "centroids"))
+  }
+
+  /** Flat PQ: the zero-centroid IVF-PQ, stored as (vid, codes). */
+  case object Pq extends AnnFamily("pq", Seq("vid", "codes"), Seq("vid"), Nil,
+      stableProbe = false) {
+    def train(corpus: DataFrame, nlist: => Int): AnnModel = {
+      val sample = normalizedSample(corpus.select(col("cv")), 2048)
+      require(sample.nonEmpty, "pq: empty corpus")
+      flatPqModel(sample, pqM, pqKsub, seed = 42L)
+    }
+    def encode(corpus: DataFrame, model: AnnModel): DataFrame =
+      ivfPqEncodeDf(corpus, model.centroids, model.codebooks, model.bounds)
+        .select("vid", "codes")
+    def probe(index: DataFrame, corpus: => DataFrame, model: AnnModel, queries: DataFrame,
+        k: Int, nprobe: Int, shortlistFactor: Int)(rows: => Long): DataFrame =
+      ivfPqScan(index, corpus, model, queries, k, nprobe = 1,
+        if (shortlistFactor > 0) shortlistFactor else densityShortlistFactor(rows))
+    def sidecar(model: AnnModel): Map[String, String] = Map(
+      "m" -> pqM.toString, "ksub" -> pqKsub.toString,
+      "bounds" -> IndexStore.encodeInts(model.bounds))
+    override def modelTables(s: SparkSession, model: AnnModel): Map[String, DataFrame] =
+      Map(IndexStore.ModelTable ->
+        IndexStore.modelDf(s, Map.empty, Map("codebooks" -> model.codebooks)))
+    def readModel(s: SparkSession, path: String, meta: Map[String, String]): AnnModel = {
+      val bounds = IndexStore.decodeInts(meta("bounds"))
+      AnnModel(Array(new Array[Double](bounds.last)),
+        IndexStore.readModelCube(s, path, "codebooks"), bounds)
+    }
+  }
+
+  /** Composed IVF-PQ: (vid, cell, codes), cell-partitioned, residual
+    * codes (FAISS `by_residual`). */
+  case object IvfPq extends AnnFamily("ivfpq", Seq("vid", "cell", "codes"), Seq("vid"),
+      Seq("cell"), stableProbe = false) {
+    def train(corpus: DataFrame, nlist: => Int): AnnModel = {
+      val (centroids, codebooks, bounds) =
+        ivfPqTrainAt(corpus.select(col("cv")), nlist, pqM, pqKsub, seed = 42L)
+      AnnModel(centroids, codebooks, bounds)
+    }
+    def encode(corpus: DataFrame, model: AnnModel): DataFrame =
+      ivfPqEncodeDf(corpus, model.centroids, model.codebooks, model.bounds)
+    def probe(index: DataFrame, corpus: => DataFrame, model: AnnModel, queries: DataFrame,
+        k: Int, nprobe: Int, shortlistFactor: Int)(rows: => Long): DataFrame = {
+      lazy val n = rows
+      ivfPqScan(index, corpus, model, queries, k,
+        if (nprobe > 0) nprobe else densityNprobe(n, model.centroids.length),
+        if (shortlistFactor > 0) shortlistFactor else densityShortlistFactor(n))
+    }
+    def sidecar(model: AnnModel): Map[String, String] = Map(
+      "nlist" -> model.centroids.length.toString, "m" -> pqM.toString,
+      "ksub" -> pqKsub.toString, "by_residual" -> "true",
+      "bounds" -> IndexStore.encodeInts(model.bounds))
+    override def modelTables(s: SparkSession, model: AnnModel): Map[String, DataFrame] =
+      Map(IndexStore.ModelTable -> IndexStore.modelDf(s,
+        Map("centroids" -> model.centroids), Map("codebooks" -> model.codebooks)))
+    def readModel(s: SparkSession, path: String, meta: Map[String, String]): AnnModel = {
+      // this reader scores by_residual; a legacy no-residual artifact
+      // would silently produce garbage ADC sums — fail naming the layout
+      require(meta.getOrElse("by_residual", "false") == "true",
+        s"ivfpq: artifact at $path is not residual-encoded " +
+          "(by_residual missing/false) — rebuild it under the r16 layout")
+      AnnModel(IndexStore.readModelMatrix(s, path, "centroids"),
+        IndexStore.readModelCube(s, path, "codebooks"),
+        IndexStore.decodeInts(meta("bounds")))
+    }
+  }
+
+  /** Sign-LSH: (vid, t, bucket), t-partitioned; the planes are a pure
+    * function of the sidecar's (seed, tables, bits, dim). */
+  case object Lsh extends AnnFamily("lsh", Seq("vid", "t", "bucket"), Seq("vid", "t"),
+      Seq("t"), stableProbe = true) {
+    def train(corpus: DataFrame, nlist: => Int): AnnModel = {
+      val dim = dimOf(corpus, "cv")
+      require(dim > 0, "lsh: empty corpus")
+      AnnModel(planes = lshPlanesFor(dim))
+    }
+    def encode(corpus: DataFrame, model: AnnModel): DataFrame =
+      lshAssign(corpus, model.planes)
+    def probe(index: DataFrame, corpus: => DataFrame, model: AnnModel, queries: DataFrame,
+        k: Int, nprobe: Int, shortlistFactor: Int)(rows: => Long): DataFrame =
+      lshProbe(index, corpus, model.planes, queries, k)
+    def sidecar(model: AnnModel): Map[String, String] = Map(
+      "seed" -> "42", "tables" -> model.planes.length.toString,
+      "bits" -> model.planes(0).length.toString, "dim" -> model.planes(0)(0).length.toString)
+    def readModel(s: SparkSession, path: String, meta: Map[String, String]): AnnModel = {
+      require(meta("seed") == "42" && meta("tables").toInt == lshTables,
+        s"lsh: artifact at $path trained under a different LSH config " +
+          s"(seed=${meta("seed")}, tables=${meta("tables")})")
+      AnnModel(planes = lshPlanesFor(meta("dim").toInt, meta("bits").toInt))
+    }
+  }
+
+  val all: Seq[AnnFamily] = Seq(Ivf, Pq, IvfPq, Lsh)
+}
+
 /** Approximate-nearest-neighbor search over the `embeddings` fixture
   * (SURVEY.md §2.3): brute-force cosine top-k as the exact baseline, and a
   * random-hyperplane (sign-LSH) bucketed variant as the scale path.
@@ -196,6 +372,18 @@ object Similarity extends QueryRegistry {
       .toDF("qid", "vid", "cos")
   }
 
+  /** Largest query batch [[bruteForceTopK]] may collect to the driver —
+    * the declared exact-baseline bound (the ANN paths are the ones that
+    * scale past it). */
+  private[llm] val maxQueryBatch: Int = 1 << 16
+
+  /** Largest micro-batch slice a stream-drive harness may collect to
+    * feed MemoryStream (the drives are certification harnesses — a
+    * production loop ingests from a real source and never collects).
+    * Enforced with the one-execution limit-probe pattern at every
+    * drive's collect. */
+  private[llm] val maxStreamSlice: Int = 1 << 20
+
   /** Exact top-k by cosine for each query vector — the correctness
     * baseline the ANN paths are measured against. O(N·Q) dot products by
     * design; use [[lshTopK]]/[[ivfTopK]]/[[pqTopK]] at scale.
@@ -213,18 +401,6 @@ object Similarity extends QueryRegistry {
     * norms as their own sqrt each — ties broken (cos desc, vid asc)
     * inside the heap, matching the TopN sort.
     */
-  /** Largest query batch [[bruteForceTopK]] may collect to the driver —
-    * the declared exact-baseline bound (the ANN paths are the ones that
-    * scale past it). */
-  private[llm] val maxQueryBatch: Int = 1 << 16
-
-  /** Largest micro-batch slice a stream-drive harness may collect to
-    * feed MemoryStream (the drives are certification harnesses — a
-    * production loop ingests from a real source and never collects).
-    * Enforced with the one-execution limit-probe pattern at every
-    * drive's collect. */
-  private[llm] val maxStreamSlice: Int = 1 << 20
-
   def bruteForceTopK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
@@ -419,11 +595,8 @@ object Similarity extends QueryRegistry {
     */
   def ivfTopK(emb: DataFrame, queries: DataFrame, k: Int, nlist: Int, nprobe: Int,
               sampleCap: Int = 2048, seed: Long = 42L): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     val cv = emb.select(col("embedding").cast("array<double>"))
-    if (cv.limit(1).isEmpty)
-      return spark.emptyDataset[(Long, Long, Double)].toDF("qid", "vid", "cos")
+    if (cv.limit(1).isEmpty) return emptyTopK(emb.sparkSession)
     // 0 = density-scaled, resolved on ONE raw corpus count (metadata-
     // cheap on parquet; lazy so explicit knobs never pay it — ADVICE
     // r17: the nlist/nprobe pair used to count twice)
@@ -432,17 +605,16 @@ object Similarity extends QueryRegistry {
     val centroids = trainCoarseQuantizer(cv, nl, normalize = false, seed,
       sampleFloor = sampleCap)
     val np = if (nprobe > 0) nprobe else densityNprobe(n, nl)
-    ivfProbe(ivfAssign(emb, centroids), centroids, queries, k, np)
+    ivfProbe(ivfAssign(corpusOf(emb), centroids), centroids, queries, k, np)
   }
 
-  /** One JIT'd pass assigning every corpus vector to its IVF cell —
-    * the posting-list build half of [[ivfTopK]], shared with the
-    * standing-index path ([[SimilarityQueries.ivfIndexFor]]). */
-  private[llm] def ivfAssign(emb: DataFrame, centroids: Array[Array[Double]]): DataFrame = {
-    val spark = emb.sparkSession
+  /** One JIT'd pass assigning every (vid, cv) corpus vector to its IVF
+    * cell — the posting-list build half of [[ivfTopK]], shared with the
+    * standing IVF family ([[AnnFamily.Ivf]]). */
+  private[llm] def ivfAssign(c: DataFrame, centroids: Array[Array[Double]]): DataFrame = {
+    val spark = c.sparkSession
     import spark.implicits._
-    emb.select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("cv"))
-      .as[(Long, Array[Double])]
+    c.as[(Long, Array[Double])]
       .mapPartitions(_.map { case (id, v) => (id, v, VecKernels.nearestCentroid(v, centroids)) })
       .toDF("vid", "cv", "cell")
   }
@@ -464,18 +636,12 @@ object Similarity extends QueryRegistry {
       queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
     val spark = assigned.sparkSession
     import spark.implicits._
-    // 0 = density-scaled (same convention as the PQ/IVF-PQ scans): a
-    // fixed probe width that holds the recall floor at sf0.01 density
-    // misses it at sf0.1 (r16 verdict weak-#1); the count is
-    // metadata-cheap on a standing artifact or checkpointed frame
-    val np = if (nprobe > 0) nprobe
-             else densityNprobe(assigned.count(), centroids.length)
     val q = queries
       .select(col("vec_id").as("qid"), col("embedding").cast("array<double>").as("qv"))
     val probes = q
       .as[(Long, Array[Double])]
       .mapPartitions(_.flatMap { case (id, v) =>
-        VecKernels.nearestCentroids(v, centroids, np).iterator.map(cell => (id, cell))
+        VecKernels.nearestCentroids(v, centroids, nprobe).iterator.map(cell => (id, cell))
       })
       .toDF("qid", "cell")
     val cand = scoreCosine(
@@ -505,23 +671,43 @@ object Similarity extends QueryRegistry {
     * top-s, s = shortlistFactor·k), so the shuffle after the scan carries
     * at most partitions × Q × s rows — never the N × Q score matrix.
     * The shortlist is broadcast back against the corpus for an exact
-    * cosine re-rank, then final top-k.
+    * cosine re-rank, then final top-k. Runs as the zero-centroid IVF-PQ
+    * ([[flatPqModel]]) through the one ADC scan, [[ivfPqScan]].
     */
   def pqTopK(emb: DataFrame, queries: DataFrame, k: Int, m: Int = 8, ksub: Int = 256,
              sampleCap: Int = 2048, shortlistFactor: Int = 0, seed: Long = 42L): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val c = emb.select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("cv"))
-    val sample = c.select(col("cv")).limit(sampleCap).as[Array[Double]].collect()
-      .map(VecKernels.normalize)
-    if (sample.isEmpty) return spark.emptyDataset[(Long, Long, Double)].toDF("qid", "vid", "cos")
-    val (codebooks, bounds) = pqTrain(sample, m, ksub, seed)
+    val c = corpusOf(emb)
+    val sample = normalizedSample(c.select(col("cv")), sampleCap)
+    if (sample.isEmpty) return emptyTopK(emb.sparkSession)
+    val model = flatPqModel(sample, m, ksub, seed)
     // density knob resolved on the RAW corpus count (metadata-cheap on
     // parquet) so the encode pass runs once, not once-per-resolution
     val slf = if (shortlistFactor > 0) shortlistFactor
               else densityShortlistFactor(c.count())
-    pqScan(pqEncodeDf(c, codebooks, bounds), c, codebooks, bounds, queries,
-      k, ksub, slf)
+    ivfPqScan(AnnFamily.Pq.encode(c, model), c, model, queries, k, nprobe = 1, slf)
+  }
+
+  /** Flat PQ as the zero-centroid IVF-PQ: one all-zero coarse centroid
+    * (the residual against 0.0 is the vector itself, so codes and the
+    * codebook training inputs are the plain PQ ones) and [[pqTrain]]'s
+    * codebooks over the normalized `sample`. */
+  private[llm] def flatPqModel(sample: Array[Array[Double]], m: Int, ksub: Int,
+      seed: Long): AnnModel = {
+    val (codebooks, bounds) = pqTrain(sample, m, ksub, seed)
+    AnnModel(Array(new Array[Double](sample(0).length)), codebooks, bounds)
+  }
+
+  /** The first `n` vectors of a one-column `array<double>` frame,
+    * L2-normalized — the bounded driver-side training sample. */
+  private[llm] def normalizedSample(cv: DataFrame, n: Int): Array[Array[Double]] = {
+    val spark = cv.sparkSession
+    import spark.implicits._
+    cv.limit(n).as[Array[Double]].collect().map(VecKernels.normalize)
+  }
+
+  private def emptyTopK(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    spark.emptyDataset[(Long, Long, Double)].toDF("qid", "vid", "cos")
   }
 
   /** Codebook training half of [[pqTopK]] (bounded driver sample, one
@@ -543,20 +729,6 @@ object Similarity extends QueryRegistry {
       codebooks(f) = VecKernels.kmeans(sub, ksub, iters = 8, seed = seed + f)
     }
     (codebooks, bounds)
-  }
-
-  /** Corpus → (vid, codes): one JIT'd pass, nothing but ids+codes
-    * shuffled — the artifact a real deployment materializes (m bytes
-    * per vector instead of 4·dim floats). */
-  private[llm] def pqEncodeDf(c: DataFrame, codebooks: Array[Array[Array[Double]]],
-      bounds: Array[Int]): DataFrame = {
-    val spark = c.sparkSession
-    import spark.implicits._
-    c.as[(Long, Array[Double])]
-      .mapPartitions(_.map { case (vid, v) =>
-        (vid, VecKernels.pqEncode(VecKernels.normalize(v), codebooks, bounds))
-      })
-      .toDF("vid", "codes")
   }
 
   /** Queries per ADC tile: each tile's LUTs are executor-built, gathered,
@@ -687,220 +859,21 @@ object Similarity extends QueryRegistry {
   private[llm] def ivfPqTrainAt(cv: DataFrame, nlist: Int, m: Int, ksub: Int,
       seed: Long, sampleFloor: Int = 2048)
       : (Array[Array[Double]], Array[Array[Array[Double]]], Array[Int]) = {
-    val spark = cv.sparkSession
-    import spark.implicits._
     val need = quantizerSampleSize(nlist, sampleFloor)
     if (quantizerPointsPerCell.toLong * nlist <= quantizerDriverSampleCap) {
       // one bounded sample trains both quantizers — the classic recipe
-      val sample = cv.limit(need).as[Array[Double]].collect()
-        .map(VecKernels.normalize)
+      val sample = normalizedSample(cv, need)
       require(sample.nonEmpty, "ivfPqTrainAt: empty corpus")
       ivfPqTrain(sample, nlist, m, ksub, seed)
     } else {
       val centroids = trainCoarseQuantizer(cv, nlist, normalize = true, seed,
         sampleFloor)
-      val csample = cv
-        .limit(math.max(sampleFloor, quantizerPointsPerCell * ksub))
-        .as[Array[Double]].collect().map(VecKernels.normalize)
+      val csample = normalizedSample(cv, math.max(sampleFloor, quantizerPointsPerCell * ksub))
       val residuals = csample.map(v =>
         VecKernels.residual(v, centroids(VecKernels.nearestCentroid(v, centroids))))
       val (codebooks, bounds) = pqTrain(residuals, m, ksub, seed)
       (centroids, codebooks, bounds)
     }
-  }
-
-  /** ADC scan + exact re-rank half of [[pqTopK]].
-    *
-    * Fully distributed (VERDICT r14 weak-#1, the same rewrite
-    * [[lshProbe]] received in r14): the query batch is never collected.
-    * Per-query ADC lookup tables — lut(f*ksub + code) = partial dot of
-    * the normalized query subvector with codebook centroid `code` — are
-    * built by a JIT'd `mapPartitions` over the query frame with ONLY the
-    * codebooks (bounded model state, m × ksub × subdim doubles)
-    * broadcast. The batch is hash-tiled into [[pqLutTile]]-query chunks
-    * processed one at a time — gather (tile-bounded by construction — a
-    * loud `require` names the contract), rebroadcast, one heap scan
-    * over the codes table checkpointed to executor blocks, broadcast
-    * destroyed — so driver peak is one tile at any batch size up to
-    * [[maxQueryBatch]] (the family budget, breach dies loudly). The
-    * partition-local bounded min-heaps are unchanged: the shuffle after
-    * each scan carries at most partitions × tile × s rows (with their
-    * ADC scores, so the global shortlist cut keeps the best candidates),
-    * never the N × Q score matrix. The
-    * exact-cosine re-rank attaches query vectors by JOIN of the query
-    * frame (AQE broadcasts when small) — no qid→vector map broadcast.
-    * Against a STANDING codes table this is the whole per-batch cost —
-    * the m-bytes-per-vector scans plus a shortlist-sized join, never an
-    * encode pass. */
-  private[llm] def pqScan(codes: DataFrame, c: DataFrame,
-      codebooks: Array[Array[Array[Double]]], bounds: Array[Int],
-      queries: DataFrame, k: Int, ksub: Int, shortlistFactor: Int): DataFrame = {
-    val spark = c.sparkSession
-    import spark.implicits._
-    val mm = codebooks.length
-    val bcModel = spark.sparkContext.broadcast((codebooks, bounds))
-
-    val q = queries
-      .select(col("vec_id").as("qid"), col("embedding").cast("array<double>").as("qv"))
-
-    // distributed LUT build: one JIT'd pass over a query frame,
-    // codebooks broadcast — the only model state any executor holds
-    def lutOf(frame: DataFrame) = frame.as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val (cbs, bds) = bcModel.value
-        it.map { case (id, qv) =>
-          val nq = VecKernels.normalize(qv)
-          val lut = new Array[Double](mm * ksub)
-          var f = 0
-          while (f < mm) {
-            val cb = cbs(f)
-            var cI = 0
-            while (cI < cb.length) {
-              var dot = 0.0; var i = bds(f); var j = 0
-              val cen = cb(cI)
-              while (i < bds(f + 1)) { dot += nq(i) * cen(j); i += 1; j += 1 }
-              lut(f * ksub + cI) = dot
-              cI += 1
-            }
-            f += 1
-          }
-          (id, lut)
-        }
-      }
-      .toDF("qid", "lut")
-    // 0 = density-scaled from the standing codes table (metadata-cheap
-    // count on a parquet artifact or checkpointed frame)
-    val s = (if (shortlistFactor > 0) shortlistFactor
-             else densityShortlistFactor(codes.count())) * k
-
-    // tile detection rides the gather itself (r19): collect at most
-    // tile+1 LUT rows — when they fit one tile they ARE the tile's
-    // rows, so the common single-tile probe pays ONE job where the
-    // r18 shape paid a bounded count job AND the gather. A tile+1
-    // result falls to the multi-tile path, discarding exactly one
-    // tile's LUT builds (bounded waste, only on >tile batches — the
-    // rare case; the r16 review objection was to building tile+1 LUTs
-    // on EVERY multi-tile probe's sizing pass AND re-paying them per
-    // tile, which this does not: the multi-tile path still sizes by a
-    // kernel-free count and gathers per tile). The tile filter goes on
-    // the QUERY frame, below the LUT kernel — filtering the built
-    // lutDf cannot push past the typed mapPartitions, so each tile
-    // would re-pay the FULL-batch LUT build (O(B·T) instead of O(B))
-    val headRows = lutOf(q.limit(pqLutTile + 1))
-      .as[(Long, Array[Double])].collect()
-    if (headRows.isEmpty)
-      return spark.emptyDataset[(Long, Long, Double)].toDF("qid", "vid", "cos")
-
-    // one tile's shortlist scan: the tile's LUT rows are broadcast and
-    // every codes partition feeds bounded per-query min-heaps — the
-    // post-scan shuffle carries at most partitions × tile × s rows,
-    // never the N × Q score matrix. Each candidate carries its ADC
-    // score so the global truncation below keeps the BEST candidates
-    // (ADVICE r15: a vid-ordered cut could drop the true top hit
-    // before the exact re-rank once partition count grows).
-    def tileShortlist(rows: Array[(Long, Array[Double])])
-        : (DataFrame, org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Array[Double]])]) = {
-      val qids = rows.map(_._1)
-      val luts = rows.map(_._2)
-      val bcLuts = spark.sparkContext.broadcast((qids, luts))
-      val shortlist = codes.as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          val (ids, ls) = bcLuts.value
-          val nq = ids.length
-          // bounded per-query min-heaps: (score, vid), worst on top
-          val heaps = Array.fill(nq)(
-            scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
-              Ordering.by[(Double, Long), Double](_._1).reverse))
-          it.foreach { case (vid, cd) =>
-            var qi = 0
-            while (qi < nq) {
-              if (ids(qi) != vid) {
-                val lut = ls(qi)
-                var score = 0.0; var f = 0
-                while (f < cd.length) { score += lut(f * ksub + (cd(f) & 0xff)); f += 1 }
-                val h = heaps(qi)
-                if (h.size < s) h.enqueue((score, vid))
-                else if (score > h.head._1) { h.dequeue(); h.enqueue((score, vid)) }
-              }
-              qi += 1
-            }
-          }
-          Iterator.range(0, nq).flatMap(qi =>
-            heaps(qi).iterator.map { case (sc, vid) => (ids(qi), vid, sc) })
-        }
-        .toDF("qid", "vid", "adc")
-      (shortlist, bcLuts)
-    }
-
-    val shortUnion: DataFrame =
-      if (headRows.length <= pqLutTile) {
-        // single tile — the common probe-batch case: the detection
-        // gather above is already the whole batch's LUT rows; one
-        // broadcast (~tile × m × ksub × 8 B, ContextCleaner-reclaimed
-        // once the returned frame is dereferenced), one lazy scan that
-        // fuses into the caller's action
-        tileShortlist(headRows)._1
-      } else {
-        val nQ = q.count()
-        // the family's batch budget (bruteForceTopK/lshTopK carry the
-        // same named contract): a mis-carved corpus-sized "query" frame
-        // dies here naming the knob, not as ceil(nQ/tile) slow scan jobs
-        require(nQ <= maxQueryBatch,
-          s"pqScan: query batch carries $nQ rows, over maxQueryBatch " +
-            s"($maxQueryBatch) — probe in bounded batches")
-        val tiles = math.max(1, math.ceil(nQ.toDouble / pqLutTile).toInt)
-        // tiles are processed SEQUENTIALLY: gather tile i, broadcast,
-        // run its codes scan into an eager localCheckpoint (executor
-        // blocks, not driver memory — the shortlist is ≤ tile × s ×
-        // partitions rows), then destroy() the broadcast before
-        // gathering tile i+1. Driver peak is genuinely ONE tile's LUT
-        // rows plus one live broadcast, at the cost of one codes-scan
-        // job per tile — the right trade past ~10⁵-query batches; the
-        // single-tile fast path above keeps common batches one-job.
-        val parts = (0 until tiles).flatMap { tileIdx =>
-          val rows = lutOf(q.where(pmod(hash(col("qid")), lit(tiles)) === tileIdx))
-            .as[(Long, Array[Double])].collect()
-          // hash-tiling over DISTINCT qids keeps tiles near pqLutTile; a
-          // 4× breach means duplicate/adversarial qids — die with the
-          // contract named, not an executor OOM inside the heap scan
-          require(rows.length <= pqLutTile.toLong * 4,
-            s"pqScan: tile $tileIdx carries ${rows.length} queries, over 4× the " +
-              s"$pqLutTile-query tile budget — query vec_ids must be distinct")
-          if (rows.isEmpty) None
-          else {
-            val (df, bc) = tileShortlist(rows)
-            val ck = df.localCheckpoint(eager = true)
-            bc.destroy()
-            Some(ck)
-          }
-        }
-        if (parts.isEmpty)
-          return spark.emptyDataset[(Long, Long, Double)].toDF("qid", "vid", "cos")
-        parts.reduce(_ unionByName _)
-      }
-    // global shortlist per query truncated BEST-FIRST by ADC score,
-    // then exact re-rank on the (small) union; groupBy/max folds any
-    // duplicate vid rows the way dropDuplicates did, score-safely
-    val short = graft.operators.LimitBy
-      .limitBy(shortUnion.groupBy("qid", "vid").agg(max(col("adc")).as("adc")),
-        Seq(col("qid")), Seq(col("adc").desc, col("vid").asc), s * 8)
-      .select(col("qid"), col("vid"))
-    // same IEEE operation order as the previous inline kernel: dot over
-    // min-length, each norm its own sqrt, query-norm × corpus-norm.
-    // `short` stays hinted (two longs per row, batch × s·8 bounded — the
-    // hint keeps the corpus from shuffling on vid); the query-vector
-    // frame is NOT hinted — AQE broadcasts it only when actually small
-    val rerank = c.join(broadcast(short), Seq("vid"))
-      .join(q, Seq("qid"))
-      .select(col("qid"), col("vid"), col("qv"), col("cv"))
-      .as[(Long, Long, Array[Double], Array[Double])]
-      .mapPartitions(_.map { case (qid, vid, qv, cv) =>
-        (qid, vid, VecKernels.cosine(qv, cv))
-      })
-      .toDF("qid", "vid", "cos")
-    graft.operators.LimitBy
-      .limitBy(rerank, Seq(col("qid")), Seq(col("cos").desc, col("vid").asc), k)
-      .select(col("qid"), col("vid"), round(col("cos"), 6).as("cos"))
   }
 
   /** Both composed-index quantizers from ONE bounded normalized sample —
@@ -952,46 +925,54 @@ object Similarity extends QueryRegistry {
       .toDF("vid", "cell", "codes")
   }
 
-  /** Cell-pruned ADC scan + exact re-rank over a composed (vid, cell,
-    * codes) index — [[pqScan]]'s fully-distributed shape with the IVF
-    * pruning in front: per query, ONE JIT'd pass computes both its
-    * `nprobe` probe cells and its ADC lookup table (only the model —
-    * centroids + codebooks — is broadcast); tiles are gathered
-    * tile-bounded and rebroadcast with an nlist-bounded cell → queries
-    * map; the codes scan FILTERS to the tile's probed cells first (on a
-    * cell-partitioned standing artifact that is partition pruning, not
-    * a scan) and scores each surviving row only against the queries
-    * that probed its cell — per-row work is |queries probing this
-    * cell|, not |tile|. Partition-local bounded min-heaps keep the
-    * post-scan shuffle at partitions × tile × s rows; the exact-cosine
-    * re-rank attaches query vectors by JOIN (AQE decides transport). */
-  private[llm] def ivfPqScan(index: DataFrame, c: DataFrame,
-      centroids: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]], bounds: Array[Int],
-      queries: DataFrame, k: Int, ksub: Int, nprobe: Int,
-      shortlistFactor: Int): DataFrame = {
+  /** The one ADC scan: cell-pruned asymmetric-distance scan + exact
+    * re-rank over a PQ-coded index — composed IVF-PQ (vid, cell, codes)
+    * and flat PQ (vid, codes) alike. Flat PQ is IVF-PQ with one
+    * all-zero coarse centroid: its residuals are the vectors, every
+    * query probes cell 0, and the coarse term q·0 is +0.0, so its scores
+    * are the plain ADC sums bit for bit.
+    *
+    * Fully distributed: per query, ONE JIT'd pass over the query frame
+    * computes its `nprobe` probe cells, its ADC lookup table —
+    * lut(f·stride + code) = partial dot of the normalized query
+    * subvector with codebook centroid `code` — and the exact q·centroid
+    * term per cell; only the model is broadcast. The batch is hash-tiled
+    * into [[pqLutTile]]-query chunks: each tile is gathered
+    * (tile-bounded by construction — a loud `require` names the
+    * contract), rebroadcast with an nlist-bounded cell → queries map,
+    * and scanned; the codes scan FILTERS to the tile's probed cells first
+    * (on a cell-partitioned artifact that is static partition pruning)
+    * and scores each surviving row only against the queries that probed
+    * its cell. Partition-local bounded min-heaps (local top-s, s =
+    * shortlistFactor·k) keep the post-scan shuffle at partitions × tile
+    * × s rows, each with its ADC score so the global cut keeps the BEST
+    * candidates — never the N × Q score matrix. The exact-cosine re-rank
+    * against `c` (vid, cv) attaches query vectors by JOIN (AQE decides
+    * transport). `nprobe` and `shortlistFactor` arrive resolved. Against
+    * a STANDING index this is the whole per-batch cost — no training, no
+    * encode pass. */
+  private[llm] def ivfPqScan(index: DataFrame, c: DataFrame, model: AnnModel,
+      queries: DataFrame, k: Int, nprobe: Int, shortlistFactor: Int): DataFrame = {
     val spark = c.sparkSession
     import spark.implicits._
-    val mm = codebooks.length
-    // 0 = density-scaled (one metadata-cheap count serves both knobs)
-    val idxN = if (nprobe > 0 && shortlistFactor > 0) 0L else index.count()
-    val np = if (nprobe > 0) nprobe else densityNprobe(idxN, centroids.length)
-    val slf = if (shortlistFactor > 0) shortlistFactor else densityShortlistFactor(idxN)
-    val bcModel = spark.sparkContext.broadcast((centroids, codebooks, bounds))
+    val mm = model.codebooks.length
+    // any LUT row stride ≥ every codebook's length addresses the same dots
+    val stride = model.codebooks.map(_.length).max
+    val bcModel = spark.sparkContext.broadcast((model.centroids, model.codebooks, model.bounds))
     val q = queries
       .select(col("vec_id").as("qid"), col("embedding").cast("array<double>").as("qv"))
 
     // one pass per query: probe cells + residual ADC LUT + the exact
-    // q·centroid term per cell (same kernel economy as pqScan's lutOf;
-    // by_residual scoring is q·centroid(cell) + ADC(residual codes))
+    // q·centroid term per cell (by_residual scoring is q·centroid(cell)
+    // + ADC(residual codes))
     def probeOf(frame: DataFrame) = frame.as[(Long, Array[Double])]
       .mapPartitions { it =>
         val (cents, cbs, bds) = bcModel.value
         it.map { case (id, qv) =>
           val nq = VecKernels.normalize(qv)
-          val cells = VecKernels.nearestCentroids(nq, cents, np)
+          val cells = VecKernels.nearestCentroids(nq, cents, nprobe)
           val cdots = VecKernels.centroidDots(nq, cents)
-          val lut = new Array[Double](mm * ksub)
+          val lut = new Array[Double](mm * stride)
           var f = 0
           while (f < mm) {
             val cb = cbs(f)
@@ -1000,7 +981,7 @@ object Similarity extends QueryRegistry {
               var dot = 0.0; var i = bds(f); var j = 0
               val cen = cb(cI)
               while (i < bds(f + 1)) { dot += nq(i) * cen(j); i += 1; j += 1 }
-              lut(f * ksub + cI) = dot
+              lut(f * stride + cI) = dot
               cI += 1
             }
             f += 1
@@ -1009,17 +990,19 @@ object Similarity extends QueryRegistry {
         }
       }
       .toDF("qid", "cells", "lut", "cdots")
-    val s = slf * k
+    val s = shortlistFactor * k
 
-    // same tile protocol as pqScan (r19): the bounded gather IS the
-    // tile detection — one job on the common single-tile case;
-    // multi-tile processes tiles sequentially (gather → broadcast →
-    // scan to localCheckpoint → destroy) under the family's
-    // maxQueryBatch budget — driver peak is genuinely one tile
+    // tile detection rides the gather itself (r19): collect at most
+    // tile+1 probe rows — when they fit one tile they ARE the tile's
+    // rows, so the common single-tile probe pays ONE job. A tile+1
+    // result falls to the multi-tile path, discarding exactly one tile's
+    // LUT builds (bounded waste, only on >tile batches). The tile filter
+    // goes on the QUERY frame, below the LUT kernel — filtering the built
+    // frame cannot push past the typed mapPartitions, so each tile would
+    // re-pay the FULL-batch LUT build
     val headRows = probeOf(q.limit(pqLutTile + 1))
       .as[(Long, Array[Int], Array[Double], Array[Double])].collect()
-    if (headRows.isEmpty)
-      return spark.emptyDataset[(Long, Long, Double)].toDF("qid", "vid", "cos")
+    if (headRows.isEmpty) return emptyTopK(spark)
 
     def tileShortlist(rows: Array[(Long, Array[Int], Array[Double], Array[Double])])
         : (DataFrame, org.apache.spark.broadcast.Broadcast[
@@ -1032,16 +1015,19 @@ object Similarity extends QueryRegistry {
         .flatMap { case ((_, cells, _, _), qi) => cells.iterator.map(cl => (cl, qi)) }
         .toSeq.groupBy(_._1).map { case (cl, xs) => (cl, xs.map(_._2).toArray) }
       val bcTile = spark.sparkContext.broadcast((qids, luts, cdots, cellQ))
-      val probedCells = cellQ.keys.toSeq
-      val shortlist = index
-        // on the cell-partitioned standing artifact this IS partition
-        // pruning: only nprobe/nlist of the codes are ever read
-        .where(col("cell").isin(probedCells: _*))
-        .select(col("vid"), col("cell"), col("codes"))
-        .as[(Long, Int, Array[Byte])]
+      // on the cell-partitioned standing artifact the filter IS partition
+      // pruning: only nprobe/nlist of the codes are ever read; flat PQ
+      // stores no cell column — every row sits in cell 0
+      val coded =
+        if (index.columns.contains("cell"))
+          index.where(col("cell").isin(cellQ.keys.toSeq: _*))
+            .select(col("vid"), col("cell"), col("codes"))
+        else index.select(col("vid"), lit(0).as("cell"), col("codes"))
+      val shortlist = coded.as[(Long, Int, Array[Byte])]
         .mapPartitions { it =>
           val (ids, ls, cds, cq) = bcTile.value
           val nq = ids.length
+          // bounded per-query min-heaps: (score, vid), worst on top
           val heaps = new Array[scala.collection.mutable.PriorityQueue[(Double, Long)]](nq)
           it.foreach { case (vid, cell, cd) =>
             cq.get(cell) match {
@@ -1051,10 +1037,8 @@ object Similarity extends QueryRegistry {
                   val qi = qs(x)
                   if (ids(qi) != vid) {
                     val lut = ls(qi)
-                    // by_residual ADC: exact q·centroid(cell) + the
-                    // residual LUT sum
                     var score = cds(qi)(cell); var f = 0
-                    while (f < cd.length) { score += lut(f * ksub + (cd(f) & 0xff)); f += 1 }
+                    while (f < cd.length) { score += lut(f * stride + (cd(f) & 0xff)); f += 1 }
                     var h = heaps(qi)
                     if (h == null) {
                       h = scala.collection.mutable.PriorityQueue.empty[(Double, Long)](
@@ -1081,22 +1065,32 @@ object Similarity extends QueryRegistry {
 
     val shortUnion: DataFrame =
       if (headRows.length <= pqLutTile) {
-        // single tile: the detection gather is already the batch's
-        // probe rows; one broadcast (ContextCleaner-reclaimed once the
-        // frame is dereferenced), one lazy scan
+        // single tile — the common probe-batch case: the detection
+        // gather is already the batch's probe rows; one broadcast
+        // (ContextCleaner-reclaimed once the returned frame is
+        // dereferenced), one lazy scan that fuses into the caller's action
         tileShortlist(headRows)._1
       } else {
         val nQ = q.count()
+        // the family's batch budget (bruteForceTopK/lshTopK carry the
+        // same named contract): a mis-carved corpus-sized "query" frame
+        // dies here naming the knob, not as ceil(nQ/tile) slow scan jobs
         require(nQ <= maxQueryBatch,
           s"ivfPqScan: query batch carries $nQ rows, over maxQueryBatch " +
             s"($maxQueryBatch) — probe in bounded batches")
         val tiles = math.max(1, math.ceil(nQ.toDouble / pqLutTile).toInt)
-        // sequential tiles: driver holds ONE tile's rows + one live
-        // broadcast at a time; each tile's pruned scan lands in
-        // executor-block localCheckpoints (see pqScan for the trade)
+        // tiles are processed SEQUENTIALLY: gather tile i, broadcast,
+        // run its codes scan into an eager localCheckpoint (executor
+        // blocks, not driver memory), then destroy() the broadcast before
+        // gathering tile i+1. Driver peak is ONE tile's rows plus one live
+        // broadcast, at the cost of one codes-scan job per tile — the
+        // right trade past ~10⁵-query batches
         val parts = (0 until tiles).flatMap { tileIdx =>
           val rows = probeOf(q.where(pmod(hash(col("qid")), lit(tiles)) === tileIdx))
             .as[(Long, Array[Int], Array[Double], Array[Double])].collect()
+          // hash-tiling over DISTINCT qids keeps tiles near pqLutTile; a
+          // 4× breach means duplicate/adversarial qids — die with the
+          // contract named, not an executor OOM inside the heap scan
           require(rows.length <= pqLutTile.toLong * 4,
             s"ivfPqScan: tile $tileIdx carries ${rows.length} queries, over 4× the " +
               s"$pqLutTile-query tile budget — query vec_ids must be distinct")
@@ -1108,16 +1102,20 @@ object Similarity extends QueryRegistry {
             Some(ck)
           }
         }
-        if (parts.isEmpty)
-          return spark.emptyDataset[(Long, Long, Double)].toDF("qid", "vid", "cos")
+        if (parts.isEmpty) return emptyTopK(spark)
         parts.reduce(_ unionByName _)
       }
-    // best-first global shortlist cut by ADC score (ADVICE r15), dup
-    // vids folded by max — same contract as pqScan
+    // global shortlist per query truncated BEST-FIRST by ADC score
+    // (ADVICE r15: a vid-ordered cut could drop the true top hit), then
+    // exact re-rank on the (small) union; groupBy/max folds duplicate
+    // vid rows score-safely
     val short = graft.operators.LimitBy
       .limitBy(shortUnion.groupBy("qid", "vid").agg(max(col("adc")).as("adc")),
         Seq(col("qid")), Seq(col("adc").desc, col("vid").asc), s * 8)
       .select(col("qid"), col("vid"))
+    // `short` stays hinted (two longs per row, batch × s·8 bounded — the
+    // hint keeps the corpus from shuffling on vid); the query-vector
+    // frame is NOT hinted — AQE broadcasts it only when actually small
     val rerank = c.join(broadcast(short), Seq("vid"))
       .join(q, Seq("qid"))
       .select(col("qid"), col("vid"), col("qv"), col("cv"))
@@ -1133,19 +1131,15 @@ object Similarity extends QueryRegistry {
 
   /** IVF-PQ ANN top-k, rebuilding everything per call (training both
     * quantizers on one bounded normalized sample) — owns the rebuild
-    * cost class; the standing path is [[ivfPqIndexFor]] /
-    * [[ivfPqIndexProbe]]. */
+    * cost class; the standing path is [[indexProbe]] of
+    * [[AnnFamily.IvfPq]]. */
   def ivfPqTopK(emb: DataFrame, queries: DataFrame, k: Int,
       nlist: Int = 0, nprobe: Int = 0, m: Int = 8, ksub: Int = 256,
       sampleCap: Int = 2048, shortlistFactor: Int = 0, seed: Long = 42L): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val c = emb.select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("cv"))
-    if (c.limit(1).isEmpty)
-      return spark.emptyDataset[(Long, Long, Double)].toDF("qid", "vid", "cos")
+    val c = corpusOf(emb)
+    if (c.limit(1).isEmpty) return emptyTopK(emb.sparkSession)
     // density knobs resolved on ONE raw corpus count (lazy: explicit
-    // knobs never pay it) so the encode pass runs once — ivfPqScan
-    // would otherwise count the un-checkpointed encode frame
+    // knobs never pay it) so the encode pass runs once
     lazy val n = c.count()
     val nl = if (nlist > 0) nlist else densityNlist(n)
     val (centroids, codebooks, bounds) =
@@ -1153,7 +1147,7 @@ object Similarity extends QueryRegistry {
     val np = if (nprobe > 0) nprobe else densityNprobe(n, nl)
     val slf = if (shortlistFactor > 0) shortlistFactor else densityShortlistFactor(n)
     ivfPqScan(ivfPqEncodeDf(c, centroids, codebooks, bounds), c,
-      centroids, codebooks, bounds, queries, k, ksub, np, slf)
+      AnnModel(centroids, codebooks, bounds), queries, k, np, slf)
   }
 
   /** Embedding-cosine near-duplicate PAIRS, exact: all (a < b) pairs with
@@ -1278,222 +1272,158 @@ object Similarity extends QueryRegistry {
       embedDupPairsExact(t(s, d, "embeddings"), tau = 0.4).localCheckpoint()
     }
 
-  // ---- standing IVF index (VERDICT r12 next-#3 — the production ANN
-  // shape, mirroring the dedup corpusBandIndexFor pattern): centroids
-  // trained and the corpus assigned ONCE per (session, fixture dir),
-  // the assignment persisted and pinned; every query batch probes the
-  // SAME materialization. In production this is a small centroids table
-  // plus the corpus parquet partitioned by cell id — probes become
-  // partition-pruned scans, and the index build is amortized over every
-  // future batch. The full per-rep rebuild cost class stays owned on
-  // the board by `x_sim_topk_ivf`, which re-fits everything each rep.
+  /** (vec_id, embedding) → the (vid, cv) corpus shape every ANN build,
+    * merge and re-rank reads. */
+  private[graft] def corpusOf(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("cv"))
 
-  private val ivfIndexCache = new SessionMemo[String](pin = true)
-  // centroids keyed by (applicationId, dir), written inside the memo's
-  // per-key compute so they always correspond to the live assignment;
-  // kmeans is deterministic (fixed seed, deterministic sample), so a
-  // liveness-triggered recompute reproduces identical centroids
-  private val ivfCentroidCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Array[Array[Double]]]()
+  /** PQ shape of the standing PQ and IVF-PQ families: 8 one-byte codes
+    * per vector over 256-centroid subquantizers. */
+  private[llm] val pqM = 8
+  private[llm] val pqKsub = 256
 
-  /** The persisted cell assignment of the standing IVF index, built once
-    * per (session, fixture dir); SimilaritySpec pins object-identity
-    * reuse across probes. */
-  def ivfIndexFor(s: SparkSession, d: String): DataFrame =
-    ivfIndexCache.getOrCompute(s, d) {
-      import s.implicits._
-      val emb = t(s, d, "embeddings")
-      val cv = emb.select(col("embedding").cast("array<double>"))
-      require(!cv.limit(1).isEmpty, s"ivfIndexFor($d): empty embeddings corpus")
-      val centroids = Similarity.trainCoarseQuantizer(cv,
-        Similarity.densityNlist(corpusRows(s, d, "embeddings")), normalize = false, seed = 42L)
-      ivfCentroidCache.put((s.sparkContext.applicationId, d), centroids)
-      ivfAssign(emb, centroids).localCheckpoint()
+  // ---- standing ANN indexes (VERDICT r12 next-#3 — the production ANN
+  // shape, mirroring the dedup corpusBandIndexFor pattern): each
+  // family's model is trained and the corpus encoded ONCE per (session,
+  // fixture dir, family), the encoded table persisted and pinned; every
+  // query batch probes the SAME materialization. In production this is
+  // a small model table plus the corpus parquet partitioned by cell id
+  // (or LSH table) — probes become partition-pruned scans, and the
+  // build is amortized over every future batch. The per-rep rebuild
+  // cost classes stay owned on the board by the `x_sim_topk_*` rows.
+
+  private val standing = new SessionMemo[(String, AnnFamily)](pin = true)
+  // models keyed by (applicationId, dir, family), written inside the
+  // memo's per-key compute so they always correspond to the live table;
+  // training is deterministic (fixed seed, deterministic sample), so a
+  // liveness-triggered recompute reproduces an identical model
+  private val standingModels =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, AnnFamily), AnnModel]()
+
+  /** The family's standing encoded table and model, built once per
+    * (session, fixture dir); SimilaritySpec pins object-identity reuse
+    * across probes. The coarse quantizer is sized for the full corpus. */
+  private def standingOf(s: SparkSession, d: String, fam: AnnFamily): (DataFrame, AnnModel) = {
+    val key = (s.sparkContext.applicationId, d, fam)
+    val index = standing.getOrCompute(s, (d, fam)) {
+      val c = corpusOf(t(s, d, "embeddings"))
+      val model = fam.train(c, densityNlist(corpusRows(s, d, "embeddings")))
+      standingModels.put(key, model)
+      fam.encode(c, model).localCheckpoint()
     }
-
-  /** Batch probe against the STANDING index: per-batch cost is
-    * |batch| × nprobe probe rows into cell-pruned postings — never an
-    * O(corpus) rebuild. */
-  def ivfIndexProbe(s: SparkSession, d: String, queries: DataFrame,
-      k: Int, nprobe: Int): DataFrame = {
-    val index = ivfIndexFor(s, d)
-    val centroids = ivfCentroidCache.get((s.sparkContext.applicationId, d))
-    require(centroids != null, s"ivfIndexProbe($d): centroids missing — " +
-      "ivfIndexFor must compute in this application before probing")
-    // 0 = density-scaled; the standing index covers the full fixture
-    // corpus by construction, so the knob resolves from the corpus
-    // footer count — same integer, no count job on the index (r19)
-    val np = if (nprobe > 0) nprobe
-             else densityNprobe(corpusRows(s, d, "embeddings"), centroids.length)
-    ivfProbe(index, centroids, queries, k, np)
+    val model = standingModels.get(key)
+    require(model != null, s"standing ${fam.kind} index ($d): model missing — " +
+      "the index must be built in this application before probing")
+    (index, model)
   }
 
-  /** IVF index MAINTENANCE — the ANN mirror of
-    * [[Dedup.mergeBandIndex]], completing the ingest loop for the
-    * similarity family: an admitted batch is assigned to cells with the
-    * STANDING centroids (no retrain — centroid refresh is a separate
-    * offline job in production, exactly like periodic IVF re-training)
-    * and its rows APPENDED to the assignment table (a parquet append
-    * into the cell-partitioned layout; the corpus side is never
-    * re-assigned). Idempotent like the dedup merge: re-admissions
-    * dedup on vid. Convergence: because assignment is per-row under
-    * fixed centroids, the maintained table is row-set identical to
-    * assigning the combined corpus directly — SimilaritySpec pins it,
-    * `x_sim_index_update` certifies probe-equality end to end.
-    * APPEND/replay semantics only: a re-admitted vid is assumed to
-    * carry the same vector (dedup keeps one arbitrary row); updating a
-    * vector in place needs delete-then-admit, same as the dedup index. */
-  def mergeIvfIndex(index: DataFrame, admitted: DataFrame,
-      centroids: Array[Array[Double]]): DataFrame =
-    // r18 note: an O(batch) anti-join merge shape (dedup the increment,
-    // never reshuffle the standing side) was built and MEASURED here —
-    // it ran 30-75% slower on the live ingest drives (the standing side
-    // gets broadcast/hash-built per admit, and the drive's own
-    // per-batch state checkpoint re-executes it), so the union+dedup
-    // form stays. At 100 TB the admit path that matters is the DISK
-    // chain (IndexStore.append — a zero-shuffle segment append +
-    // metadata-only commit), which these in-memory merges mirror only
-    // for certification scenarios whose state the drive materializes
-    // per batch anyway. See OPTIMIZATION_r18.md.
-    index.unionByName(ivfAssign(admitted, centroids))
-      .dropDuplicates("vid")
+  /** The standing encoded table of `fam` over the fixture at `d`. */
+  def indexFor(s: SparkSession, d: String, fam: AnnFamily): DataFrame =
+    standingOf(s, d, fam)._1
 
-  // ---- standing PQ index (the codebook half of verdict next-#3): the
-  // trained codebooks + the m-bytes-per-vector codes table are THE
-  // artifact a PQ deployment materializes; rebuilding both per query
-  // batch (as x_sim_topk_pq deliberately does, owning that cost class)
-  // is the anti-shape at scale. Probing the standing codes table costs
-  // one ADC scan + a shortlist re-rank per batch.
-
-  private val pqIndexCache = new SessionMemo[String](pin = true)
-  private val pqModelCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (Array[Array[Array[Double]]], Array[Int])]()
-  private val pqM = 8
-  private val pqKsub = 256
-
-  /** The persisted PQ codes table, built once per (session, fixture
-    * dir); codebooks + subspace bounds land in the companion model
-    * cache under the same compute (deterministic: fixed seed +
-    * deterministic sample, so a liveness recompute reproduces them). */
-  def pqIndexFor(s: SparkSession, d: String): DataFrame =
-    pqIndexCache.getOrCompute(s, d) {
-      import s.implicits._
-      val c = t(s, d, "embeddings")
-        .select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("cv"))
-      val sample = c.select(col("cv")).limit(2048).as[Array[Double]].collect()
-        .map(VecKernels.normalize)
-      require(sample.nonEmpty, s"pqIndexFor($d): empty embeddings corpus")
-      val (codebooks, bounds) = Similarity.pqTrain(sample, pqM, pqKsub, seed = 42L)
-      pqModelCache.put((s.sparkContext.applicationId, d), (codebooks, bounds))
-      Similarity.pqEncodeDf(c, codebooks, bounds).localCheckpoint()
-    }
-
-  /** Batch probe against the STANDING codes table: ADC scan (m bytes
-    * per corpus vector) + exact re-rank of the shortlist — no encode
-    * pass, no codebook training. */
-  def pqIndexProbe(s: SparkSession, d: String, queries: DataFrame,
-      k: Int, shortlistFactor: Int = 0): DataFrame = {
-    val codes = pqIndexFor(s, d)
-    val model = pqModelCache.get((s.sparkContext.applicationId, d))
-    require(model != null, s"pqIndexProbe($d): codebooks missing — " +
-      "pqIndexFor must compute in this application before probing")
-    val (codebooks, bounds) = model
-    val c = t(s, d, "embeddings")
-      .select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("cv"))
-    // 0 = density-scaled from the corpus footer count (r19, see
-    // ivfIndexProbe) — the standing codes table is the full corpus
-    val slf = if (shortlistFactor > 0) shortlistFactor
-              else densityShortlistFactor(corpusRows(s, d, "embeddings"))
-    Similarity.pqScan(codes, c, codebooks, bounds, queries, k, pqKsub, slf)
+  /** Batch probe against the STANDING index: the per-batch cost is the
+    * family's pruned probe plus its re-rank — never an O(corpus)
+    * rebuild. 0 knobs resolve from the corpus footer count: the
+    * standing index covers the full fixture corpus by construction, so
+    * it is the same integer as counting the index, without the job
+    * (r19). */
+  def indexProbe(s: SparkSession, d: String, fam: AnnFamily, queries: DataFrame, k: Int,
+      nprobe: Int = 0, shortlistFactor: Int = 0): DataFrame = {
+    val (index, model) = standingOf(s, d, fam)
+    fam.probe(index, corpusOf(t(s, d, "embeddings")), model, queries, k, nprobe,
+      shortlistFactor)(corpusRows(s, d, "embeddings"))
   }
 
-  /** PQ codes MAINTENANCE — the codes-table mirror of
-    * [[mergeIvfIndex]]: an admitted batch is encoded with the STANDING
-    * codebooks (no retrain — codebook refresh is the same separate
-    * offline job as IVF centroid refresh) and its codes APPENDED to the
-    * codes table (a parquet append; the corpus is never re-encoded).
-    * Idempotent on vid; under fixed codebooks encoding is per-row, so
-    * the maintained table is row-set identical to encoding the combined
-    * corpus directly — `x_sim_index_update_pq` certifies probe-equality
-    * end to end. Same APPEND/replay contract as the IVF/dedup merges:
-    * in-place vector update = delete-then-admit. */
-  def mergePqIndex(codes: DataFrame, admitted: DataFrame,
-      codebooks: Array[Array[Array[Double]]], bounds: Array[Int]): DataFrame =
-    codes.unionByName(Similarity.pqEncodeDf(admitted, codebooks, bounds))
-      .dropDuplicates("vid")
+  /** Index MAINTENANCE — the ANN mirror of [[Dedup.mergeBandIndex]]: the
+    * admitted (vid, cv) batch is encoded under the STANDING model (no
+    * retrain — model refresh is a separate offline job, like periodic
+    * IVF re-training) and APPENDED; the corpus is never re-encoded.
+    * Idempotent on the family's row id. Because encoding is per-row
+    * under a fixed model, the maintained table is row-set identical to
+    * encoding the combined corpus directly (the `x_sim_index_update*`
+    * rows certify it). APPEND/replay semantics only: a re-admitted vid
+    * is assumed to carry the same vector; updating a vector in place is
+    * delete-then-admit ([[deleteFromIndex]]).
+    *
+    * r18 note: an O(batch) anti-join merge (dedup the increment, never
+    * reshuffle the standing side) MEASURED 30-75% slower on the live
+    * ingest drives (the standing side gets broadcast/hash-built per
+    * admit, and the drive's per-batch checkpoint re-executes it), so the
+    * union+dedup form stays. At 100 TB the admit path is the DISK chain
+    * (IndexStore.append — a zero-shuffle segment append + metadata-only
+    * commit); see OPTIMIZATION_r18.md. */
+  def mergeIndex(fam: AnnFamily, index: DataFrame, admitted: DataFrame,
+      model: AnnModel): DataFrame =
+    index.unionByName(fam.encode(admitted, model)).dropDuplicates(fam.rowId)
 
-  // ---- standing IVF-PQ index (the composed production shape: cell
-  // partition-pruning × m-byte rows — the two prunings multiply, so a
-  // probe reads ~(nprobe/nlist) × m/(4·dim) of a flat scan; this is
-  // what FAISS-style deployments actually materialize at 100 TB). One
-  // (vid, cell, codes) table, both quantizers trained on one bounded
-  // normalized sample. ----
+  /** Index DELETION — same contract as [[Dedup.deleteFromBandIndex]] (the
+    * right-to-be-forgotten path): drop all rows for the given vids from
+    * a stored table of any family (each keys its rows by `vid`) — an
+    * anti-join here, tombstones-at-read or a partition rewrite at
+    * compaction in production. With [[mergeIndex]] it completes
+    * update-in-place as delete-then-admit. Idempotent on absent ids. */
+  def deleteFromIndex(index: DataFrame, vids: DataFrame): DataFrame =
+    index.join(vids.select(col(vids.columns.head).as("vid")), Seq("vid"), "left_anti")
 
-  private val ivfPqIndexCache = new SessionMemo[String](pin = true)
-  private val ivfPqModelCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      (Array[Array[Double]], Array[Array[Array[Double]]], Array[Int])]()
+  // ---- cross-application persistence (VERDICT r13 next-#1): a standing
+  // table is written through [[IndexStore]] — parquet in the family's
+  // partition layout, scalars in the sidecar under `kind`, matrices in
+  // the `model` aux table (doubles round-trip as their IEEE-754 bits) —
+  // and the COLD probe takes only (session, path), structurally unable
+  // to consult the per-application memo. This is the restart half of
+  // "standing": a production loop restarts, loads the artifact, and
+  // probes without a build.
 
-  /** The persisted composed (vid, cell, codes) table, built once per
-    * (session, fixture dir); centroids + codebooks + bounds land in the
-    * companion model cache under the same compute (deterministic: fixed
-    * seed + deterministic sample). */
-  def ivfPqIndexFor(s: SparkSession, d: String): DataFrame =
-    ivfPqIndexCache.getOrCompute(s, d) {
-      import s.implicits._
-      val c = t(s, d, "embeddings")
-        .select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("cv"))
-      require(!c.limit(1).isEmpty, s"ivfPqIndexFor($d): empty embeddings corpus")
-      val (centroids, codebooks, bounds) = Similarity.ivfPqTrainAt(
-        c.select(col("cv")), Similarity.densityNlist(corpusRows(s, d, "embeddings")), pqM, pqKsub, seed = 42L)
-      ivfPqModelCache.put((s.sparkContext.applicationId, d), (centroids, codebooks, bounds))
-      Similarity.ivfPqEncodeDf(c, centroids, codebooks, bounds).localCheckpoint()
-    }
+  private def artifactPath(s: SparkSession, d: String, name: String): String =
+    s"${IndexStore.tempRoot(s)}/${java.lang.Integer.toHexString(d.hashCode)}/$name"
 
-  /** Batch probe against the STANDING composed index: cell-pruned ADC
-    * scan + shortlist re-rank — no training, no encode pass. */
-  def ivfPqIndexProbe(s: SparkSession, d: String, queries: DataFrame,
-      k: Int, nprobe: Int = 0, shortlistFactor: Int = 0): DataFrame = {
-    val index = ivfPqIndexFor(s, d)
-    val model = ivfPqModelCache.get((s.sparkContext.applicationId, d))
-    require(model != null, s"ivfPqIndexProbe($d): model missing — " +
-      "ivfPqIndexFor must compute in this application before probing")
-    val (centroids, codebooks, bounds) = model
-    val c = t(s, d, "embeddings")
-      .select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("cv"))
-    // 0 = density-scaled from the corpus footer count (r19, see
-    // ivfIndexProbe) — the standing composed table is the full corpus
-    val n = corpusRows(s, d, "embeddings")
-    val np = if (nprobe > 0) nprobe else densityNprobe(n, centroids.length)
-    val slf = if (shortlistFactor > 0) shortlistFactor
-              else densityShortlistFactor(n)
-    Similarity.ivfPqScan(index, c, centroids, codebooks, bounds, queries,
-      k, pqKsub, np, slf)
+  /** Write `index`, encoded under `model`, as a `fam` artifact at `path`. */
+  private def writeIndex(fam: AnnFamily, index: DataFrame, model: AnnModel,
+      path: String): Unit =
+    IndexStore.save(index, path, fam.sidecar(model) + ("kind" -> fam.kind),
+      fam.partitionBy, fam.modelTables(index.sparkSession, model))
+
+  /** Persist the family's standing table and model at `path`. */
+  def saveIndex(s: SparkSession, d: String, fam: AnnFamily, path: String): Unit = {
+    val (index, model) = standingOf(s, d, fam)
+    writeIndex(fam, index, model, path)
   }
 
-  /** Composed-index MAINTENANCE: the admitted batch is cell-assigned
-    * AND encoded in one pass under the STANDING model (no retrain —
-    * refresh is the same separate offline job as the per-family
-    * merges), appended, idempotent on vid. Under a fixed model both
-    * halves are per-row deterministic, so the maintained table is
-    * row-set identical to encoding the combined corpus directly. Same
-    * APPEND/replay contract: in-place update = delete-then-admit. */
-  def mergeIvfPqIndex(index: DataFrame, admitted: DataFrame,
-      centroids: Array[Array[Double]],
-      codebooks: Array[Array[Array[Double]]], bounds: Array[Int]): DataFrame =
-    index.unionByName(Similarity.ivfPqEncodeDf(admitted, centroids, codebooks, bounds))
-      .dropDuplicates("vid")
+  /** COLD probe: artifact + sidecar + model table only — no memo, no
+    * model cache, no build. The sidecar's `kind` must be `fam`'s: a
+    * wrong artifact fails naming its path, the kind found and the kind
+    * expected. 0 knobs resolve from the manifest's exact row total
+    * (r19) — the same integers as counting the loaded index. Stored
+    * rows and models round-trip bit-exactly, so an IVF or LSH cold probe
+    * is row-set identical to the warm one; PQ probe output may differ on
+    * ADC ties across file layouts (see [[AnnFamily.stableProbe]]). */
+  def coldProbe(s: SparkSession, path: String, fam: AnnFamily, corpus: DataFrame,
+      queries: DataFrame, k: Int, nprobe: Int = 0, shortlistFactor: Int = 0): DataFrame = {
+    val meta = IndexStore.readMeta(s, path)
+    val found = meta.getOrElse("kind", "")
+    require(found == fam.kind, s"coldProbe: the artifact at $path holds a " +
+      s"'$found' index, expected '${fam.kind}'")
+    fam.probe(IndexStore.load(s, path), corpus, fam.readModel(s, path, meta), queries, k,
+      nprobe, shortlistFactor)(IndexStore.manifestRowTotal(s, path))
+  }
 
-  // ---- standing LSH index (completing the standing trilogy:
-  // LSH/IVF/PQ each with build-once/probe-per-batch semantics): the
-  // corpus bucket table (vid, t, bucket) is the artifact a sign-LSH
-  // deployment materializes — bucket-partitioned parquet at scale, so
-  // a probe prunes to exactly the query batch's probed buckets.
-  // lshTopK deliberately re-hashes the whole corpus per batch and
-  // keeps owning that cost class; the probe path below never touches
-  // a vector until the shortlist re-rank.
+  /** [[saveIndex]] of the composed IVF-PQ family. */
+  def saveIvfPqIndex(s: SparkSession, d: String, path: String): Unit =
+    saveIndex(s, d, AnnFamily.IvfPq, path)
 
-  private val lshTables = 8
+  /** [[coldProbe]] of a composed IVF-PQ artifact; `corpus` is (vid, cv). */
+  def ivfPqColdProbe(s: SparkSession, path: String, corpus: DataFrame,
+      queries: DataFrame, k: Int, nprobe: Int = 0, shortlistFactor: Int = 0): DataFrame =
+    coldProbe(s, path, AnnFamily.IvfPq, corpus, queries, k, nprobe, shortlistFactor)
+
+  // ---- the LSH family's kernels: the corpus bucket table (vid, t,
+  // bucket) is the artifact a sign-LSH deployment materializes —
+  // bucket-partitioned parquet at scale, so a probe prunes to exactly
+  // the query batch's probed buckets. lshTopK deliberately re-hashes the
+  // whole corpus per batch and keeps owning that cost class; the probe
+  // path below never touches a vector until the shortlist re-rank.
+
+  private[llm] val lshTables = 8
   // The STANDING index hashes at 8 bits (256 buckets/table) where the
   // one-shot lshTopK row uses 6: bit-width is the selectivity knob a
   // deployed LSH index is tuned by. At 6 bits the Hamming-1 multi-probe
@@ -1508,8 +1438,7 @@ object Similarity extends QueryRegistry {
   // similarity profile — near-dup-heavy retrieval goes much wider, and
   // the one-shot row keeps 6-bit multiprobe, recall-optimal when you
   // pay a full corpus pass anyway.
-  private val lshIndexBits = 8
-  private val lshIndexCache = new SessionMemo[String](pin = true)
+  private[llm] val lshIndexBits = 8
 
   /** Hyperplanes are a pure function of (seed, dim, bits) — the same
     * seeded gaussians [[lshTopK]] draws — so the probe path recomputes
@@ -1520,32 +1449,23 @@ object Similarity extends QueryRegistry {
     Array.fill(lshTables)(Array.fill(bits)(Array.fill(dim)(rnd.nextGaussian())))
   }
 
-  /** Corpus → (vid, t, bucket): one JIT'd hash pass per vector across
-    * all tables — the build half, shared by the standing index, the
-    * maintenance merge, and the update-scenario rebuild baseline. */
-  private[llm] def lshAssign(emb: DataFrame,
+  /** Corpus (vid, cv) → (vid, t, bucket): one JIT'd hash pass per vector
+    * across all tables — the build half of the LSH family
+    * ([[AnnFamily.Lsh]]). */
+  private[llm] def lshAssign(c: DataFrame,
       planes: Array[Array[Array[Double]]]): DataFrame = {
-    val spark = emb.sparkSession
+    val spark = c.sparkSession
     import spark.implicits._
     val nt = planes.length
-    emb.select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("cv"))
-      .as[(Long, Array[Double])]
+    c.as[(Long, Array[Double])]
       .mapPartitions(_.flatMap { case (vid, cv) =>
         Iterator.range(0, nt).map(t => (vid, t, VecKernels.bucketKey(cv, planes(t))))
       })
       .toDF("vid", "t", "bucket")
   }
 
-  /** The persisted bucket table, built once per (session, fixture dir). */
-  def lshIndexFor(s: SparkSession, d: String): DataFrame =
-    lshIndexCache.getOrCompute(s, d) {
-      val emb = t(s, d, "embeddings")
-      val dim = dimOf(emb)
-      require(dim > 0, s"lshIndexFor($d): empty embeddings corpus")
-      lshAssign(emb, lshPlanesFor(dim)).localCheckpoint()
-    }
-
-  /** Probe half against an explicit bucket table: the query batch's
+  /** Probe half against an explicit bucket table, re-ranking against a
+    * (vid, cv) `corpus`: the query batch's
     * probe buckets (own bucket + every Hamming-1 neighbor per table —
     * the same multi-probe [[lshTopK]] uses) broadcast into an equi-join
     * on (t, bucket) — at scale a partition-pruned scan of the bucket
@@ -1594,7 +1514,6 @@ object Similarity extends QueryRegistry {
       .where(col("qid") =!= col("vid"))
       .select("qid", "vid").dropDuplicates("qid", "vid")
     val scored = corpus
-      .select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("cv"))
       .join(cand, Seq("vid"))
       .join(q, Seq("qid"))
       .select(col("qid"), col("vid"), col("qv"), col("cv"))
@@ -1609,194 +1528,10 @@ object Similarity extends QueryRegistry {
       .select(col("qid"), col("vid"), round(col("cos"), 6).as("cos"))
   }
 
-  /** Batch probe against the STANDING bucket table. */
-  def lshIndexProbe(s: SparkSession, d: String, queries: DataFrame, k: Int): DataFrame = {
-    val emb = t(s, d, "embeddings")
-    val dim = dimOf(emb)
-    require(dim > 0, s"lshIndexProbe($d): empty embeddings corpus")
-    lshProbe(lshIndexFor(s, d), emb, lshPlanesFor(dim), queries, k)
-  }
-
-  /** Index DELETION for the ANN family — same contract as
-    * [[Dedup.deleteFromBandIndex]] (the right-to-be-forgotten path):
-    * drop all rows for the given vids from a standing assignment /
-    * codes / bucket table — an anti-join here, tombstones-at-read or a
-    * partition rewrite at compaction in production. Works unchanged on
-    * all three index kinds because each keys its rows by `vid`; with
-    * [[mergeIvfIndex]]/[[mergePqIndex]]/[[mergeLshIndex]] it completes
-    * update-in-place as delete-then-admit. Idempotent on absent ids. */
-  def deleteFromIndex(index: DataFrame, vids: DataFrame): DataFrame =
-    index.join(vids.select(col(vids.columns.head).as("vid")), Seq("vid"), "left_anti")
-
-  /** LSH bucket-table MAINTENANCE — same contract as [[mergeIvfIndex]]
-    * / [[mergePqIndex]]: hash the admitted batch under the STANDING
-    * planes, append (the corpus is never re-hashed), idempotent on
-    * (vid, t). Row-set identical to hashing the combined corpus
-    * directly — `x_sim_index_update_lsh` certifies it end to end. */
-  def mergeLshIndex(index: DataFrame, admitted: DataFrame,
-      planes: Array[Array[Array[Double]]]): DataFrame =
-    index.unionByName(lshAssign(admitted, planes))
-      .dropDuplicates("vid", "t")
-
-  // ---- cross-application persistence (VERDICT r13 next-#1): the
-  // standing ANN artifacts written as parquet + metadata sidecar via
-  // [[IndexStore]], and COLD probes that take only (session, path) —
-  // structurally unable to consult the per-application memos/model
-  // caches. This is the restart half of "standing": a production
-  // ingest loop restarts, loads the artifact, and probes without a
-  // build. Layout per family:
-  //  - IVF: cell-partitioned assignment table (probes prune to the
-  //    nprobe cells at scale) + centroids in the sidecar;
-  //  - PQ: codes table + codebooks/bounds in the sidecar;
-  //  - LSH: t-partitioned bucket table ((t, bucket)-bucketed at scale)
-  //    + (seed, tables, bits, dim) — planes are a pure function of the
-  //    sidecar values, the reference point made real.
-
-  private def artifactPath(s: SparkSession, d: String, name: String): String =
-    s"${IndexStore.tempRoot(s)}/${java.lang.Integer.toHexString(d.hashCode)}/$name"
-
-  /** Persist the standing IVF artifact at `path`: cell-partitioned
-    * assignment table + the centroid matrix in the `model` aux TABLE
-    * (r17 verdict #3 — matrices no longer ride the JSON sidecar; the
-    * sidecar keeps scalars only). */
-  def saveIvfIndex(s: SparkSession, d: String, path: String): Unit = {
-    val index = ivfIndexFor(s, d)
-    val centroids = ivfCentroidCache.get((s.sparkContext.applicationId, d))
-    require(centroids != null, s"saveIvfIndex($d): centroids missing")
-    IndexStore.save(index, path, Map(
-      "kind" -> "ivf", "nlist" -> centroids.length.toString),
-      partitionBy = Seq("cell"),
-      aux = Map(IndexStore.ModelTable ->
-        IndexStore.modelDf(s, Map("centroids" -> centroids))))
-  }
-
-  /** COLD IVF probe: artifact + sidecar + model table only — no memo,
-    * no model cache, no build. Output is row-set identical to the warm
-    * probe (assignment AND centroids round-trip bit-exactly through
-    * parquet — doubles are stored as their IEEE-754 bits). */
-  def ivfColdProbe(s: SparkSession, path: String, queries: DataFrame,
-      k: Int, nprobe: Int): DataFrame = {
-    val centroids = IndexStore.readModelMatrix(s, path, "centroids")
-    // 0 = density-scaled: the artifact's manifest already carries the
-    // exact row total, so the cold path resolves the knob without the
-    // count job the warm path pays on a frame (r19)
-    val np = if (nprobe > 0) nprobe
-             else densityNprobe(IndexStore.manifestRowTotal(s, path), centroids.length)
-    ivfProbe(IndexStore.load(s, path), centroids, queries, k, np)
-  }
-
-  /** Persist the standing PQ artifact at `path`: codes table +
-    * codebooks in the `model` aux table (bounds stay in the sidecar —
-    * scalar-sized). */
-  def savePqIndex(s: SparkSession, d: String, path: String): Unit = {
-    val codes = pqIndexFor(s, d)
-    val model = pqModelCache.get((s.sparkContext.applicationId, d))
-    require(model != null, s"savePqIndex($d): codebooks missing")
-    val (codebooks, bounds) = model
-    IndexStore.save(codes, path, Map(
-      "kind" -> "pq", "m" -> pqM.toString, "ksub" -> pqKsub.toString,
-      "bounds" -> IndexStore.encodeInts(bounds)),
-      aux = Map(IndexStore.ModelTable ->
-        IndexStore.modelDf(s, Map.empty, Map("codebooks" -> codebooks))))
-  }
-
-  /** COLD PQ probe: ADC scan over the loaded codes + re-rank against
-    * the given corpus table. The CODES round-trip is bit-exact; probe
-    * OUTPUT identity is not certified (the shortlist heap is
-    * partition-local, so parquet vs checkpoint partitioning can differ
-    * on ADC ties — the same reason `x_sim_index_update_pq` pins
-    * codes-table identity, not probe identity). */
-  def pqColdProbe(s: SparkSession, path: String, corpus: DataFrame,
-      queries: DataFrame, k: Int, shortlistFactor: Int = 0): DataFrame = {
-    val meta = IndexStore.readMeta(s, path)
-    // 0 = density-scaled from the manifest row total (r19, see
-    // ivfColdProbe) — same integer as counting the loaded codes
-    val slf = if (shortlistFactor > 0) shortlistFactor
-              else densityShortlistFactor(IndexStore.manifestRowTotal(s, path))
-    Similarity.pqScan(IndexStore.load(s, path), corpus,
-      IndexStore.readModelCube(s, path, "codebooks"),
-      IndexStore.decodeInts(meta("bounds")),
-      queries, k, meta("ksub").toInt, slf)
-  }
-
-  /** Persist the standing LSH artifact at `path`: the bucket table plus
-    * the (seed, tables, bits, dim) tuple the planes derive from — model
-    * state rides the sidecar, exactly as [[lshPlanesFor]]'s scaladoc
-    * promised. */
-  def saveLshIndex(s: SparkSession, d: String, path: String): Unit = {
-    val emb = t(s, d, "embeddings")
-    val dim = dimOf(emb)
-    require(dim > 0, s"saveLshIndex($d): empty embeddings corpus")
-    IndexStore.save(lshIndexFor(s, d), path, Map(
-      "kind" -> "lsh", "seed" -> "42", "tables" -> lshTables.toString,
-      "bits" -> lshIndexBits.toString, "dim" -> dim.toString),
-      partitionBy = Seq("t"))
-  }
-
-  /** COLD LSH probe: planes rebuilt from the sidecar tuple, buckets
-    * from the loaded table, re-rank against the given corpus. Row-set
-    * identical to the warm probe. */
-  def lshColdProbe(s: SparkSession, path: String, corpus: DataFrame,
-      queries: DataFrame, k: Int): DataFrame = {
-    val meta = IndexStore.readMeta(s, path)
-    require(meta("seed") == "42" && meta("tables").toInt == lshTables,
-      s"lshColdProbe: artifact trained under a different LSH config " +
-        s"(seed=${meta("seed")}, tables=${meta("tables")})")
-    lshProbe(IndexStore.load(s, path), corpus,
-      lshPlanesFor(meta("dim").toInt, meta("bits").toInt), queries, k)
-  }
-
-  /** Persist the standing composed IVF-PQ artifact at `path`:
-    * cell-partitioned (vid, cell, codes) parquet — probes become
-    * partition-pruned scans — plus the full model in the sidecar. */
-  def saveIvfPqIndex(s: SparkSession, d: String, path: String): Unit = {
-    val index = ivfPqIndexFor(s, d)
-    val model = ivfPqModelCache.get((s.sparkContext.applicationId, d))
-    require(model != null, s"saveIvfPqIndex($d): model missing")
-    val (centroids, codebooks, bounds) = model
-    IndexStore.save(index, path, Map(
-      "kind" -> "ivfpq", "nlist" -> centroids.length.toString,
-      "m" -> pqM.toString, "ksub" -> pqKsub.toString, "by_residual" -> "true",
-      "bounds" -> IndexStore.encodeInts(bounds)),
-      partitionBy = Seq("cell"),
-      aux = Map(IndexStore.ModelTable -> IndexStore.modelDf(s,
-        Map("centroids" -> centroids), Map("codebooks" -> codebooks))))
-  }
-
-  /** COLD composed probe: model from the sidecar, codes from the
-    * cell-partitioned artifact — the probe's cell filter is partition
-    * pruning on the loaded layout. Codes round-trip bit-exactly; probe
-    * OUTPUT identity is not the contract (ADC shortlist ties — the
-    * [[pqColdProbe]] convention). */
-  def ivfPqColdProbe(s: SparkSession, path: String, corpus: DataFrame,
-      queries: DataFrame, k: Int, nprobe: Int = 0, shortlistFactor: Int = 0): DataFrame = {
-    val meta = IndexStore.readMeta(s, path)
-    // this reader scores by_residual; a legacy no-residual artifact
-    // would silently produce garbage ADC sums — fail naming the layout
-    require(meta.getOrElse("by_residual", "false") == "true",
-      s"ivfPqColdProbe: artifact at $path is not residual-encoded " +
-        "(by_residual missing/false) — rebuild it under the r16 layout")
-    val centroids = IndexStore.readModelMatrix(s, path, "centroids")
-    // 0 = density-scaled from the manifest row total (r19, see
-    // ivfColdProbe) — same integers as the count job on the loaded index
-    val (np, slf) =
-      if (nprobe > 0 && shortlistFactor > 0) (nprobe, shortlistFactor)
-      else {
-        val n = IndexStore.manifestRowTotal(s, path)
-        (if (nprobe > 0) nprobe else densityNprobe(n, centroids.length),
-          if (shortlistFactor > 0) shortlistFactor else densityShortlistFactor(n))
-      }
-    Similarity.ivfPqScan(IndexStore.load(s, path), corpus,
-      centroids,
-      IndexStore.readModelCube(s, path, "codebooks"),
-      IndexStore.decodeInts(meta("bounds")),
-      queries, k, meta("ksub").toInt, np, slf)
-  }
-
-  /** First-row embedding dimensionality (0 on an empty corpus) — the
-    * one-job probe every LSH half used to inline at its call site. */
-  private[llm] def dimOf(emb: DataFrame): Int =
-    emb.select(size(col("embedding")).as("d")).limit(1).collect()
+  /** First-row vector width of `column` (0 on an empty frame) — one
+    * limit-1 job. */
+  private[llm] def dimOf(df: DataFrame, column: String = "embedding"): Int =
+    df.select(size(col(column)).as("d")).limit(1).collect()
       .headOption.map(_.getInt(0)).getOrElse(0)
 
   /** Queries the ingest drive's mid-stream probe takes from each
@@ -1808,49 +1543,63 @@ object Similarity extends QueryRegistry {
     * arrival), at O(sample) instead of O(slice). */
   private val ingestProbeSample = 512
 
-  /** Shared live-engine ingest drive for the ANN stream rows (the BM25
-    * row keeps its own: its state is the postings/dfs/scalars 4-tuple):
-    * 4 ordered micro-batches of the corpus (vec_id pmod 4) through
-    * MemoryStream + foreachBatch — the first `build`s the state, each
-    * later batch first `probe`s the state as it stood with an
-    * [[ingestProbeSample]]-bounded sample of the slice (probe-then-
-    * merge: the admit-time check a production loop runs, O(sample)),
-    * then is admitted via `merge`, with per-merge localCheckpoints
-    * (lineage truncation; the ≤ 4 superseded checkpoints per drive are
-    * bounded and reclaimed by the bench's per-timing blocking sweep).
-    * Returns the maintained state; loud if the corpus was empty or no
-    * live probe ran. */
-  private def annStreamIngest(s: SparkSession, emb: DataFrame, name: String)(
-      build: DataFrame => DataFrame,
-      probe: (DataFrame, DataFrame) => Long,
-      merge: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+  /** The per-batch probe-then-merge step both ANN ingest drives share
+    * (the BM25 rows keep their own: their state is postings + dfs +
+    * scalars). The first micro-batch builds the state under the fixed
+    * `model`; each later batch first probes the state as it stood with
+    * an [[ingestProbeSample]]-bounded sample of the batch (k 3, nprobe
+    * 4, shortlist factor 4 — the admit-time check a production loop
+    * runs, O(sample)), then is admitted by [[mergeIndex]], with
+    * per-merge localCheckpoints (lineage truncation; the ≤ 4 superseded
+    * checkpoints per drive are reclaimed by the bench's per-timing
+    * sweep). `corpus` (vid, cv) feeds the probe's re-rank. */
+  private final class AnnIngest(name: String, fam: AnnFamily, model: AnnModel,
+      corpus: DataFrame) {
+    private val state = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
+    private val probed = new java.util.concurrent.atomic.AtomicLong(0)
+
+    def admit(batch: DataFrame): Unit = {
+      val cur = state.get()
+      // the probe consumes the batch sample several times (tile
+      // detection, LUT gather, re-rank attach), so a PROBED batch keeps
+      // its one checkpoint — measured r18: dropping it slowed the
+      // PQ/IVF-PQ drives ~25% (each probe re-executed the source slice).
+      // The FIRST batch is never probed (no state yet) and the build is
+      // its only consumer, so it skips the checkpoint job (r19)
+      if (cur == null) state.set(fam.encode(corpusOf(batch), model).localCheckpoint())
+      else {
+        val b = batch.localCheckpoint()
+        probed.addAndGet(fam.probe(cur, corpus, model, b.limit(ingestProbeSample), k = 3,
+          nprobe = 4, shortlistFactor = 4)(cur.count()).count())
+        state.set(mergeIndex(fam, cur, corpusOf(b), model).localCheckpoint())
+      }
+    }
+
+    /** The maintained state; loud if the corpus was empty or no live
+      * probe ran. */
+    def result: DataFrame = {
+      require(state.get() != null, s"$name: empty embeddings corpus")
+      require(probed.get() > 0,
+        s"$name: ingest never probed — the probe-then-merge loop did not run")
+      state.get()
+    }
+  }
+
+  /** Live-engine ingest drive: 4 ordered micro-batches of the corpus
+    * (vec_id pmod 4) through MemoryStream + foreachBatch, each admitted
+    * by `ingest`. */
+  private def annStreamIngest(s: SparkSession, emb: DataFrame, name: String,
+      ingest: AnnIngest): Unit = {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     import s.implicits._
     val input = MemoryStream[(Long, Array[Double])]
     val stream = input.toDF().toDF("vec_id", "embedding")
-    val indexRef = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-    val probed = new java.util.concurrent.atomic.AtomicLong(0)
     val ckpt = java.nio.file.Files.createTempDirectory(s"graft_${name}_").toString
     val q = stream.writeStream
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // the ANN probes consume the batch sample several times (tile
-        // detection, LUT gather, re-rank attach), so a PROBED batch
-        // keeps its one checkpoint — measured r18: dropping it slowed
-        // the PQ/IVF-PQ drives ~25% (each probe re-executed the source
-        // slice), unlike the BM25 drives whose batch has one consumer
-        // per branch and runs checkpoint-free. The FIRST batch is never
-        // probed (no standing index yet) and build() is its only
-        // consumer, so it skips the checkpoint job (r19)
-        val cur = indexRef.get()
-        if (cur == null) indexRef.set(build(batch.toDF()).localCheckpoint())
-        else {
-          val b = batch.localCheckpoint()
-          probed.addAndGet(probe(cur, b.limit(ingestProbeSample)))
-          indexRef.set(merge(cur, b).localCheckpoint())
-        }
-        ()
+        ingest.admit(batch.toDF())
       }
       .start()
     try {
@@ -1870,27 +1619,18 @@ object Similarity extends QueryRegistry {
       q.stop()
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
     }
-    val maintained = indexRef.get()
-    require(maintained != null, s"$name: empty embeddings corpus")
-    require(probed.get() > 0,
-      s"$name: streamed ingest never probed — the probe-then-merge loop did not run")
-    maintained
   }
 
-  /** FILE-source variant of [[annStreamIngest]] (VERDICT r15 missing-#2
-    * follow-through beyond the BM25 row): embedding slices LAND as
-    * parquet files in a watched directory — one backlog file, then three
-    * more written between processAllAvailable fences — and a
-    * maxFilesPerTrigger=1 paced `readStream` drives the SAME
-    * probe-then-merge loop. Nothing crosses the driver: batches flow
-    * engine-side from the file source into the merge. Loud if fewer
-    * than 4 non-empty micro-batches were discovered (the two-stage
-    * incremental-discovery gate), if no live probe ran, or if the
-    * corpus was empty. */
-  private def annFileIngest(s: SparkSession, emb: DataFrame, name: String)(
-      build: DataFrame => DataFrame,
-      probe: (DataFrame, DataFrame) => Long,
-      merge: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+  /** FILE-source variant of [[annStreamIngest]] (VERDICT r15 missing-#2):
+    * embedding slices LAND as parquet files in a watched directory — one
+    * backlog file, then three more written between processAllAvailable
+    * fences — and a maxFilesPerTrigger=1 paced `readStream` feeds
+    * `ingest`. Nothing crosses the driver: batches flow engine-side from
+    * the file source into the merge. Loud if fewer than 4 non-empty
+    * micro-batches were discovered (the two-stage incremental-discovery
+    * gate). */
+  private def annFileIngest(s: SparkSession, emb: DataFrame, name: String,
+      ingest: AnnIngest): Unit = {
     val src = emb.select(col("vec_id"),
       col("embedding").cast("array<double>").as("embedding"))
     val tmp = java.nio.file.Files.createTempDirectory(s"graft_${name}_")
@@ -1899,8 +1639,6 @@ object Similarity extends QueryRegistry {
     def land(i: Int): Unit = src.where(pmod(col("vec_id"), lit(4L)) === i)
       .coalesce(1).write.mode("append").parquet(srcDir)
     land(0) // the backlog file the stream starts on
-    val indexRef = new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-    val probed = new java.util.concurrent.atomic.AtomicLong(0)
     val batches = new java.util.concurrent.atomic.AtomicLong(0)
     val q = s.readStream.schema(src.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
@@ -1908,21 +1646,11 @@ object Similarity extends QueryRegistry {
       .option("checkpointLocation", ckpt)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         // one emptiness probe on the source batch (the non-empty-batch
-        // discovery gate needs it); a PROBED batch keeps its checkpoint
-        // for the same multi-consumer probe reason as the MemoryStream
-        // ANN drive (measured r18); the first batch has one consumer
-        // (build) and skips it (r19)
+        // discovery gate needs it)
         if (!batch.isEmpty) {
           batches.incrementAndGet()
-          val cur = indexRef.get()
-          if (cur == null) indexRef.set(build(batch.toDF()).localCheckpoint())
-          else {
-            val b = batch.localCheckpoint()
-            probed.addAndGet(probe(cur, b.limit(ingestProbeSample)))
-            indexRef.set(merge(cur, b).localCheckpoint())
-          }
+          ingest.admit(batch.toDF())
         }
-        ()
       }
       .start()
     try {
@@ -1938,14 +1666,9 @@ object Similarity extends QueryRegistry {
           .foreach(p => java.nio.file.Files.deleteIfExists(p))
       } catch { case _: Throwable => () }
     }
-    val maintained = indexRef.get()
-    require(maintained != null, s"$name: empty embeddings corpus")
     require(batches.get() >= 4,
       s"$name: file-source ingest discovered only ${batches.get()} non-empty " +
         "micro-batches — the paced two-stage discovery gate did not hold")
-    require(probed.get() > 0,
-      s"$name: file-source ingest never probed — the probe-then-merge loop did not run")
-    maintained
   }
 
   /** Recall certification for an ANN top-k against the exact baseline,
@@ -1986,6 +1709,173 @@ object Similarity extends QueryRegistry {
         (col("recall") >= lit(minRecall)).as("recall_ok"),
         (col("fp") === 0L).as("precision_ok"))
   }
+
+  /** Oracle of the ANN contract rows: the independently recomputable
+    * query count (every 25th vector) plus each contract flag as `true`. */
+  private def contractOracle(flags: String*): Option[String] = Some(
+    "SELECT CAST(count(*) AS BIGINT) AS n_queries," +
+      (if (flags.size == 1) " " else "\n  ") + flags.map(f => s"true AS $f").mkString(", ") +
+      "\nFROM embeddings WHERE vec_id % 25 = 0")
+
+  /** Rows present in only one of `a` and `b` on `cols` (a full outer
+    * join), as a one-row `bad` count. */
+  private def mismatch(a: DataFrame, b: DataFrame, cols: Seq[String]): DataFrame =
+    a.select(cols.map(col): _*).withColumn("m", lit(1))
+      .join(b.select(cols.map(col): _*).withColumn("r", lit(1)), cols, "full")
+      .agg(coalesce(sum(when(col("m").isNull || col("r").isNull, 1)
+        .otherwise(0)), lit(0)).as("bad"))
+
+  // ---- the ANN lifecycle certification rows, one function per stage,
+  // generated for every family in `defs`. Recall floors sit ≥ 0.15 under
+  // the probe-measured recalls so model float-order jitter can never
+  // flip them. ----
+
+  /** Batch probe against the STANDING index (build once, probe per
+    * batch): the pinned table is reused, so this row times the probe
+    * path while the family's `x_sim_topk_*` row keeps owning the
+    * rebuild cost. */
+  private def probeRow(name: String, fam: AnnFamily, minRecall: Double): QueryDef =
+    QueryDef(name, (s, d) => annRecallContract(
+      indexProbe(s, d, fam, queriesOf(t(s, d, "embeddings")), k = 5),
+      bruteTopKFor(s, d, 5), minRecall), contractOracle("recall_ok"))
+
+  /** Index MAINTENANCE (the ANN mirror of x_dedup_index_update): a model
+    * trained over the whole corpus, standing rows over vec_id %5 ∈
+    * {2,3,4}, slice %5==1 admitted and MERGED (encode-and-append, no
+    * corpus re-encode, no retrain), the query batch probing the merged
+    * index. Convergence = row-set identity of the merged and the
+    * rebuilt-from-combined-corpus tables on the stored key (encoding is
+    * per-row deterministic under a fixed model, so this is exact and
+    * implies probe identity); recall is measured against the
+    * scenario-exact brute baseline. The row owns its whole scenario cost
+    * per rep. */
+  private def updateRow(name: String, fam: AnnFamily, minRecall: Double): QueryDef =
+    QueryDef(name, (s, d) => {
+      val emb = t(s, d, "embeddings")
+      val c = corpusOf(emb)
+      // sized for the corpus the index will SERVE (the merged whole)
+      val model = fam.train(c, densityNlist(corpusRows(s, d, "embeddings")))
+      val slice = pmod(col("vid"), lit(5L))
+      // standing and merged are checkpointed once per rep: the merged
+      // table feeds the auto-knob count, the probe and the convergence
+      // join (r18; a production admit persists the merged state anyway)
+      val index0 = fam.encode(c.where(slice >= 2), model).localCheckpoint()
+      val merged = mergeIndex(fam, index0, c.where(slice === 1), model).localCheckpoint()
+      val rebuilt = fam.encode(c.where(slice =!= 0), model)
+      val q = queriesOf(emb)
+      val probeM = fam.probe(merged, c.where(slice =!= 0), model, q, k = 5, nprobe = 0,
+        shortlistFactor = 0)(merged.count())
+      annRecallContract(probeM,
+        bruteForceTopK(emb.where(pmod(col("vec_id"), lit(5L)) =!= 0), q, 5), minRecall)
+        .crossJoin(mismatch(merged, rebuilt, fam.storedKey))
+        .select(col("n_queries"), (col("bad") === 0).as("converged"), col("recall_ok"))
+    }, contractOracle("converged", "recall_ok"))
+
+  /** COLD-START probe (VERDICT r13 next-#1): build + SAVE the standing
+    * artifact ONCE per application (saveOnce — the on-disk artifact IS
+    * the standing index, its write the amortized build;
+    * x_sim_index_rebuild owns the full write+swap cost class), then probe
+    * it from a FRESH session whose memo state is empty by construction —
+    * the restart half of "standing". A stable-probe family certifies
+    * cold ≡ warm by row-set identity; a PQ family certifies the
+    * artifact's round trip against the standing table on the stored key
+    * (`checkCol`), plus the family recall floor. */
+  private def coldRow(name: String, fam: AnnFamily, minRecall: Double,
+      checkCol: String): QueryDef =
+    QueryDef(name, (s, d) => {
+      val path = artifactPath(s, d, fam.kind)
+      IndexStore.saveOnce(s, path)(saveIndex(s, d, fam, path))
+      val fresh = s.newSession()
+      val embF = t(fresh, d, "embeddings")
+      val coldW = IndexStore.recreate(s,
+        coldProbe(fresh, path, fam, corpusOf(embF), queriesOf(embF), k = 5))
+      val bad =
+        if (fam.stableProbe)
+          mismatch(coldW, indexProbe(s, d, fam, queriesOf(t(s, d, "embeddings")), k = 5),
+            Seq("qid", "vid", "cos"))
+        else mismatch(IndexStore.load(s, path), indexFor(s, d, fam), fam.storedKey)
+      annRecallContract(coldW, bruteTopKFor(s, d, 5), minRecall)
+        .crossJoin(bad)
+        .select(col("n_queries"), (col("bad") === 0).as(checkCol), col("recall_ok"))
+    }, contractOracle(checkCol, "recall_ok"))
+
+  /** DISK-LEVEL ingest loop (the on-artifact half of the merge
+    * contract): train on the build slice (vec_id %5 ∈ {2,3,4}), save it
+    * in the family's layout, APPEND the admitted slice's encoded files
+    * (disjoint vids ⇒ the raw append IS [[mergeIndex]]'s row set; zero
+    * shuffle of the standing data), then COMPACT. Certified end to end
+    * through a cold probe of the compacted artifact: a stable-probe
+    * family must equal a direct probe of the full-corpus encode, a PQ
+    * family's artifact must equal the full-corpus encode on the stored
+    * key; the data-file count must not grow (a strict drop on any
+    * fragmented layout; PQ exercises compact()'s byte-sized coalesce of
+    * the unpartitioned layout); the recall floor holds. IVF sizes its
+    * quantizer to the build slice (`sizeToBuild`), IVF-PQ to the corpus
+    * the index will serve. */
+  private def diskRow(name: String, fam: AnnFamily, minRecall: Double,
+      sizeToBuild: Boolean = false): QueryDef =
+    QueryDef(name, (s, d) => {
+      val emb = t(s, d, "embeddings")
+      val c = corpusOf(emb)
+      val slice = pmod(col("vid"), lit(5L))
+      val build = c.where(slice >= 2)
+      val model = fam.train(build, densityNlist(
+        if (sizeToBuild) build.count() else corpusRows(s, d, "embeddings")))
+      val live = artifactPath(s, d, s"${fam.kind}_disk")
+      writeIndex(fam, fam.encode(build, model), model, live)
+      IndexStore.append(fam.encode(c.where(slice < 2), model), live)
+      val before = IndexStore.dataFileCount(s, live)
+      IndexStore.compact(s, live)
+      val after = IndexStore.dataFileCount(s, live)
+      val fresh = s.newSession()
+      val embF = t(fresh, d, "embeddings")
+      val coldW = IndexStore.recreate(s,
+        coldProbe(fresh, live, fam, corpusOf(embF), queriesOf(embF), k = 5))
+      // the direct baseline covers the FULL corpus, so its 0 knobs
+      // resolve from the corpus footer count (r19) — the same integers
+      // the cold probe derives from its manifest total
+      val bad =
+        if (fam.stableProbe)
+          mismatch(coldW, fam.probe(fam.encode(c, model), c, model, queriesOf(emb), k = 5,
+            nprobe = 0, shortlistFactor = 0)(corpusRows(s, d, "embeddings")),
+            Seq("qid", "vid", "cos"))
+        else mismatch(IndexStore.load(s, live), fam.encode(c, model), fam.storedKey)
+      annRecallContract(coldW, bruteTopKFor(s, d, 5), minRecall)
+        .crossJoin(bad)
+        .select(col("n_queries"), (col("bad") === 0).as("converged"),
+          lit(after <= before).as("compacted_ok"), col("recall_ok"))
+    }, contractOracle("converged", "compacted_ok", "recall_ok"))
+
+  /** The ANN ingest loop under the LIVE streaming engine (VERDICT r14
+    * missing-#1), from MemoryStream micro-batches or, with `files`, from
+    * parquet shards landing in a watched directory DURING a paced
+    * readStream (the production shape: embedding shards land, the loop
+    * admits them). Both drives run the shared [[AnnIngest]]
+    * probe-then-merge step under a model trained over the whole corpus.
+    * In-engine requires pin ingested ≡ the direct whole-corpus encode
+    * (row-set identity on the stored key — exact under a fixed model)
+    * and that the live probes ran. Certified output = the standard query
+    * batch probed through the ingested index under the family's recall
+    * contract. */
+  private def ingestRow(name: String, fam: AnnFamily, minRecall: Double,
+      files: Boolean): QueryDef =
+    QueryDef(name, (s, d) => {
+      val emb = t(s, d, "embeddings")
+      val c = corpusOf(emb)
+      val n = corpusRows(s, d, "embeddings")
+      val model = fam.train(c, densityNlist(n))
+      val ingest = new AnnIngest(name, fam, model, c)
+      if (files) annFileIngest(s, emb, name, ingest) else annStreamIngest(s, emb, name, ingest)
+      val maintained = ingest.result
+      val diverged = mismatch(maintained, fam.encode(c, model), fam.storedKey)
+        .collect()(0).getLong(0)
+      require(diverged == 0,
+        s"$name: ingested ${fam.kind} index diverged from the direct build ($diverged rows)")
+      // maintained ≡ the whole corpus (the gate above), so the 0 knobs
+      // resolve from the footer count (r19)
+      annRecallContract(fam.probe(maintained, c, model, queriesOf(emb), k = 5, nprobe = 0,
+        shortlistFactor = 0)(n), bruteTopKFor(s, d, 5), minRecall)
+    }, contractOracle("recall_ok"))
 
   private val embedExactPairCountOracle =
     """WITH e AS (SELECT vec_id, embedding::DOUBLE[] v FROM embeddings)
@@ -2032,68 +1922,14 @@ object Similarity extends QueryRegistry {
           lshTopK(emb, queriesOf(emb), k = 5, tables = 8, bits = 6),
           bruteTopKFor(s, d, 5), minRecall = 0.7)
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
+      contractOracle("recall_ok")),
 
-    // ---- batch probe against the STANDING LSH bucket table (the third
-    // member of the standing trilogy next to the IVF and PQ probes):
-    // the bucket table is a pinned persisted artifact; this row times
-    // the probe path — probed-bucket equi-join + shortlist re-rank,
-    // never a corpus re-hash — while x_sim_topk_lsh keeps owning the
-    // full per-rep one-shot scan. The index hashes at the SELECTIVE
-    // 8-bit width (multi-probe touches ~28% of the corpus vs ~87% at
-    // the one-shot row's 6 bits — bit-width is the knob that makes a
-    // standing bucket table's pruned probe real); the recall floor is
-    // correspondingly lower (selectivity trades the moderate-cos tail;
-    // measured 0.62 sf0.01 / 0.70 sf0.1). ----
-    QueryDef(
-      "x_sim_index_probe_lsh",
-      (s, d) => {
-        val emb = t(s, d, "embeddings")
-        annRecallContract(
-          lshIndexProbe(s, d, queriesOf(emb), k = 5),
-          bruteTopKFor(s, d, 5), minRecall = 0.45)
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
-
-    // ---- LSH bucket-table MAINTENANCE (mirror of x_sim_index_update /
-    // x_sim_index_update_pq): standing buckets over vec_id %5 ∈ {2,3,4}
-    // under the standing planes, slice %5==1 admitted + MERGED
-    // (hash-and-append, no corpus re-hash), query batch probes the
-    // merged buckets. Convergence = row-set identity of the bucket
-    // tables (hashing is per-row deterministic under fixed planes) +
-    // recall vs the scenario-exact brute baseline. ----
-    QueryDef(
-      "x_sim_index_update_lsh",
-      (s, d) => {
-        import s.implicits._
-        val emb = t(s, d, "embeddings")
-        val dim = dimOf(emb)
-        require(dim > 0, s"x_sim_index_update_lsh($d): empty embeddings corpus")
-        val planes = lshPlanesFor(dim)
-        val slice = pmod(col("vec_id"), lit(5L))
-        // same multi-consumer checkpointing as x_sim_index_update (r18)
-        val index0 = lshAssign(emb.where(slice >= 2), planes).localCheckpoint()
-        val merged = mergeLshIndex(index0, emb.where(slice === 1), planes)
-          .localCheckpoint()
-        val rebuilt = lshAssign(emb.where(slice =!= 0), planes).localCheckpoint()
-        val corpus = emb.where(slice =!= 0)
-        val q = queriesOf(emb)
-        val probeM = lshProbe(merged, corpus, planes, q, k = 5)
-        val contract = annRecallContract(probeM,
-          bruteForceTopK(corpus, q, 5), minRecall = 0.45)
-        val mismatch = merged.withColumn("m", lit(1))
-          .join(rebuilt.withColumn("r", lit(1)), Seq("vid", "t", "bucket"), "full")
-          .agg(coalesce(sum(when(col("m").isNull || col("r").isNull, 1)
-            .otherwise(0)), lit(0)).as("bad"))
-        contract.crossJoin(mismatch)
-          .select(col("n_queries"), (col("bad") === 0).as("converged"),
-            col("recall_ok"))
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-             |  true AS converged, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
+    // the standing LSH index hashes at the SELECTIVE 8-bit width
+    // (multi-probe touches ~28% of the corpus vs ~87% at the one-shot
+    // row's 6 bits), so its floor is lower: measured 0.62 sf0.01 /
+    // 0.70 sf0.1
+    probeRow("x_sim_index_probe_lsh", AnnFamily.Lsh, minRecall = 0.45),
+    updateRow("x_sim_index_update_lsh", AnnFamily.Lsh, minRecall = 0.45),
 
     // ---- IVF ANN top-5, recall-certified (density-scaled nlist AND
     // nprobe — the probed fraction stays ~26% at every density, see
@@ -2107,77 +1943,10 @@ object Similarity extends QueryRegistry {
           ivfTopK(emb, queriesOf(emb), k = 5, nlist = 0, nprobe = 0),
           bruteTopKFor(s, d, 5), minRecall = 0.55)
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
+      contractOracle("recall_ok")),
 
-    // ---- batch probe against the STANDING IVF index (build once, probe
-    // per batch — the production ANN shape, completing the dedup-index
-    // pattern for the similarity family): centroids + cell assignment
-    // are a pinned persisted artifact; this row times the PROBE path
-    // (|batch| × nprobe into cell-pruned postings + exact re-rank),
-    // while x_sim_topk_ivf keeps owning the full per-rep rebuild cost.
-    // Same recall contract and floor as the rebuild row — the index
-    // content is identical by construction. ----
-    QueryDef(
-      "x_sim_index_probe",
-      (s, d) => {
-        val emb = t(s, d, "embeddings")
-        annRecallContract(
-          ivfIndexProbe(s, d, queriesOf(emb), k = 5, nprobe = 0),
-          bruteTopKFor(s, d, 5), minRecall = 0.55)
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
-
-    // ---- IVF index MAINTENANCE (the ANN mirror of
-    // x_dedup_index_update, completing the ingest loop): standing
-    // corpus (vec_id %5 ∈ {2,3,4}) assigned under fixed centroids,
-    // slice %5==1 admitted + MERGED (append, no corpus re-assign, no
-    // retrain), then the query batch probes the merged index. Certifies
-    // BOTH halves: probe(merged) ≡ probe(rebuilt-from-combined-corpus)
-    // — the maintenance convergence contract — and recall vs the
-    // scenario-exact brute baseline over the indexed corpus. This row
-    // owns its whole scenario cost per rep (centroids + both
-    // assignments + both probes + the scenario brute baseline). ----
-    QueryDef(
-      "x_sim_index_update",
-      (s, d) => {
-        import s.implicits._
-        val emb = t(s, d, "embeddings")
-        // sized for the corpus the index will SERVE (the merged whole,
-        // known here) — with a fixed 16 the auto-nprobe saturates to
-        // nlist at sf1 and both probes degenerate to brute scans
-        val centroids = Similarity.trainCoarseQuantizer(
-          emb.select(col("embedding").cast("array<double>")),
-          Similarity.densityNlist(corpusRows(s, d, "embeddings")), normalize = false, seed = 42L)
-        val slice = pmod(col("vec_id"), lit(5L))
-        // standing/merged/rebuilt each feed multiple consumers (the
-        // auto-nprobe count, the probe plan, the convergence join) —
-        // checkpointed once per rep so the assignment passes run once,
-        // not once per consumer (r18; a production admit persists the
-        // merged state anyway)
-        val index0 = ivfAssign(emb.where(slice >= 2), centroids).localCheckpoint()
-        val merged = mergeIvfIndex(index0, emb.where(slice === 1), centroids)
-          .localCheckpoint()
-        val rebuilt = ivfAssign(emb.where(slice =!= 0), centroids).localCheckpoint()
-        val q = queriesOf(emb)
-        val probeM = ivfProbe(merged, centroids, q, k = 5, nprobe = 0)
-          .localCheckpoint()
-        val probeR = ivfProbe(rebuilt, centroids, q, k = 5, nprobe = 0)
-        val contract = annRecallContract(probeM,
-          bruteForceTopK(emb.where(slice =!= 0), q, 5), minRecall = 0.6)
-        val mismatch = probeM.select(col("qid"), col("vid")).withColumn("m", lit(1))
-          .join(probeR.select(col("qid"), col("vid")).withColumn("r", lit(1)),
-            Seq("qid", "vid"), "full")
-          .agg(coalesce(sum(when(col("m").isNull || col("r").isNull, 1)
-            .otherwise(0)), lit(0)).as("bad"))
-        contract.crossJoin(mismatch)
-          .select(col("n_queries"), (col("bad") === 0).as("converged"),
-            col("recall_ok"))
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-             |  true AS converged, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
+    probeRow("x_sim_index_probe", AnnFamily.Ivf, minRecall = 0.55),
+    updateRow("x_sim_index_update", AnnFamily.Ivf, minRecall = 0.6),
 
     // ---- PQ/ADC ANN top-5, recall-certified (r16: ksub 16 → 256 at
     // the SAME m — identical 8-byte codes and scan cost, 16× finer
@@ -2192,166 +1961,13 @@ object Similarity extends QueryRegistry {
           pqTopK(emb, queriesOf(emb), k = 5, m = 8, ksub = 256),
           bruteTopKFor(s, d, 5), minRecall = 0.8)
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
+      contractOracle("recall_ok")),
 
-    // ---- batch probe against the STANDING PQ codes table (the
-    // codebook half of the standing-index story): codebooks + the
-    // m-bytes-per-vector codes table are pinned persisted artifacts;
-    // this row times the per-batch path — one ADC scan over the codes
-    // + a shortlist re-rank — while x_sim_topk_pq keeps owning the
-    // train+encode rebuild cost. Same recall floor: identical model by
-    // construction. ----
-    QueryDef(
-      "x_sim_index_probe_pq",
-      (s, d) => {
-        val emb = t(s, d, "embeddings")
-        annRecallContract(
-          pqIndexProbe(s, d, queriesOf(emb), k = 5),
-          bruteTopKFor(s, d, 5), minRecall = 0.8)
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
-
-    // ---- PQ codes MAINTENANCE (mirror of x_sim_index_update for the
-    // codes table): standing codes over vec_id %5 ∈ {2,3,4} under fixed
-    // codebooks, slice %5==1 admitted + MERGED (encode-and-append, no
-    // corpus re-encode, no codebook retrain), query batch probes the
-    // merged codes. Certifies probe(merged) ≡ probe(rebuilt-from-
-    // combined-corpus) AND recall vs the scenario-exact brute baseline.
-    // Owns its whole scenario cost per rep. ----
-    QueryDef(
-      "x_sim_index_update_pq",
-      (s, d) => {
-        import s.implicits._
-        val emb = t(s, d, "embeddings")
-        val c = emb.select(col("vec_id").as("vid"),
-          col("embedding").cast("array<double>").as("cv"))
-        val sample = c.select(col("cv")).limit(2048).as[Array[Double]].collect()
-          .map(VecKernels.normalize)
-        val (codebooks, bounds) = Similarity.pqTrain(sample, 8, 256, seed = 42L)
-        val slice = pmod(col("vid"), lit(5L))
-        // same multi-consumer checkpointing as x_sim_index_update (r18)
-        val codes0 = Similarity.pqEncodeDf(c.where(slice >= 2), codebooks, bounds)
-          .localCheckpoint()
-        val merged = mergePqIndex(codes0, c.where(slice === 1), codebooks, bounds)
-          .localCheckpoint()
-        val rebuilt = Similarity.pqEncodeDf(c.where(slice =!= 0), codebooks, bounds)
-          .localCheckpoint()
-        val corpus = c.where(slice =!= 0)
-        val q = queriesOf(emb)
-        val probeM = Similarity.pqScan(merged, corpus, codebooks, bounds, q, 5, 256, 0)
-        val contract = annRecallContract(probeM,
-          bruteForceTopK(emb.where(pmod(col("vec_id"), lit(5L)) =!= 0), q, 5),
-          minRecall = 0.8)
-        // convergence = row-set identity of the CODES tables (encode is
-        // per-row deterministic under fixed codebooks, so this is exact;
-        // probe-output equality would ride ADC shortlist tie-breaks)
-        val mismatch = merged.withColumn("m", lit(1))
-          .join(rebuilt.withColumn("r", lit(1)), Seq("vid", "codes"), "full")
-          .agg(coalesce(sum(when(col("m").isNull || col("r").isNull, 1)
-            .otherwise(0)), lit(0)).as("bad"))
-        contract.crossJoin(mismatch)
-          .select(col("n_queries"), (col("bad") === 0).as("converged"),
-            col("recall_ok"))
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-             |  true AS converged, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
-
-    // ---- COLD-START probes (VERDICT r13 next-#1): build + SAVE the
-    // standing artifact (parquet + metadata sidecar) ONCE per
-    // application (saveOnce — the on-disk artifact IS the standing
-    // index, its write the amortized build; x_sim_index_rebuild owns
-    // the full write+swap cost class), then probe it in a FRESH session
-    // whose SessionMemo state is empty by construction — the restart
-    // half of "standing". Per-rep cost = warm probe + cold load+probe +
-    // the identity/recall certification joins; the contract certifies
-    // cold ≡ warm (row-set identity — assignments/buckets round-trip
-    // bit-exactly, model state rides the sidecar's exact decimal
-    // doubles) plus the family's recall floor. ----
-    QueryDef(
-      "x_sim_index_cold_probe",
-      (s, d) => {
-        val emb = t(s, d, "embeddings")
-        val q = queriesOf(emb)
-        val path = artifactPath(s, d, "ivf")
-        IndexStore.saveOnce(s, path)(saveIvfIndex(s, d, path))
-        val warm = ivfIndexProbe(s, d, q, k = 5, nprobe = 0)
-        val fresh = s.newSession()
-        val cold = ivfColdProbe(fresh, path, queriesOf(t(fresh, d, "embeddings")),
-          k = 5, nprobe = 0)
-        val coldW = IndexStore.recreate(s, cold)
-        val mismatch = coldW.withColumn("m", lit(1))
-          .join(warm.withColumn("r", lit(1)), Seq("qid", "vid", "cos"), "full")
-          .agg(coalesce(sum(when(col("m").isNull || col("r").isNull, 1)
-            .otherwise(0)), lit(0)).as("bad"))
-        annRecallContract(coldW, bruteTopKFor(s, d, 5), minRecall = 0.55)
-          .crossJoin(mismatch)
-          .select(col("n_queries"), (col("bad") === 0).as("cold_eq_warm"),
-            col("recall_ok"))
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-             |  true AS cold_eq_warm, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
-
-    // ---- PQ cold probe: codes-table round-trip certified by row-set
-    // identity (bit-exact through parquet); probe OUTPUT identity is
-    // deliberately not the contract — the shortlist heap is
-    // partition-local, so parquet vs checkpoint partitioning can ride
-    // ADC ties (the x_sim_index_update_pq lesson). ----
-    QueryDef(
-      "x_sim_index_cold_probe_pq",
-      (s, d) => {
-        val path = artifactPath(s, d, "pq")
-        IndexStore.saveOnce(s, path)(savePqIndex(s, d, path))
-        val fresh = s.newSession()
-        val embF = t(fresh, d, "embeddings")
-        val corpusF = embF.select(col("vec_id").as("vid"),
-          col("embedding").cast("array<double>").as("cv"))
-        val cold = pqColdProbe(fresh, path, corpusF, queriesOf(embF), k = 5)
-        val coldW = IndexStore.recreate(s, cold)
-        val mismatch = IndexStore.load(s, path).withColumn("m", lit(1))
-          .join(pqIndexFor(s, d).withColumn("r", lit(1)), Seq("vid", "codes"), "full")
-          .agg(coalesce(sum(when(col("m").isNull || col("r").isNull, 1)
-            .otherwise(0)), lit(0)).as("bad"))
-        annRecallContract(coldW, bruteTopKFor(s, d, 5), minRecall = 0.8)
-          .crossJoin(mismatch)
-          .select(col("n_queries"), (col("bad") === 0).as("codes_roundtrip_ok"),
-            col("recall_ok"))
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-             |  true AS codes_roundtrip_ok, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
-
-    // ---- LSH cold probe: planes rebuilt from the sidecar's
-    // (seed, tables, bits, dim) — the "seed rides the metadata file"
-    // promise made real; bucket table round-trips through the
-    // t-partitioned parquet. Cold ≡ warm row-set identity. ----
-    QueryDef(
-      "x_sim_index_cold_probe_lsh",
-      (s, d) => {
-        val emb = t(s, d, "embeddings")
-        val q = queriesOf(emb)
-        val path = artifactPath(s, d, "lsh")
-        IndexStore.saveOnce(s, path)(saveLshIndex(s, d, path))
-        val warm = lshIndexProbe(s, d, q, k = 5)
-        val fresh = s.newSession()
-        val embF = t(fresh, d, "embeddings")
-        val cold = lshColdProbe(fresh, path, embF, queriesOf(embF), k = 5)
-        val coldW = IndexStore.recreate(s, cold)
-        val mismatch = coldW.withColumn("m", lit(1))
-          .join(warm.withColumn("r", lit(1)), Seq("qid", "vid", "cos"), "full")
-          .agg(coalesce(sum(when(col("m").isNull || col("r").isNull, 1)
-            .otherwise(0)), lit(0)).as("bad"))
-        annRecallContract(coldW, bruteTopKFor(s, d, 5), minRecall = 0.45)
-          .crossJoin(mismatch)
-          .select(col("n_queries"), (col("bad") === 0).as("cold_eq_warm"),
-            col("recall_ok"))
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-             |  true AS cold_eq_warm, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
+    probeRow("x_sim_index_probe_pq", AnnFamily.Pq, minRecall = 0.8),
+    updateRow("x_sim_index_update_pq", AnnFamily.Pq, minRecall = 0.8),
+    coldRow("x_sim_index_cold_probe", AnnFamily.Ivf, minRecall = 0.55, "cold_eq_warm"),
+    coldRow("x_sim_index_cold_probe_pq", AnnFamily.Pq, minRecall = 0.8, "codes_roundtrip_ok"),
+    coldRow("x_sim_index_cold_probe_lsh", AnnFamily.Lsh, minRecall = 0.45, "cold_eq_warm"),
 
     // ---- composed IVF-PQ top-5, recall-certified: the rebuild row —
     // trains BOTH quantizers on one bounded normalized sample (r16:
@@ -2371,108 +1987,14 @@ object Similarity extends QueryRegistry {
           ivfPqTopK(emb, queriesOf(emb), k = 5),
           bruteTopKFor(s, d, 5), minRecall = 0.6)
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
+      contractOracle("recall_ok")),
 
-    // ---- batch probe against the STANDING composed index: per-batch
-    // cost is the cell-pruned m-byte scan + a shortlist re-rank — the
-    // two prunings multiply (nprobe/nlist of the rows × m/(4·dim) of
-    // the bytes), which is why this is THE shape a 100-TB ANN
-    // deployment materializes. x_sim_topk_ivfpq keeps owning the
-    // train+encode rebuild cost. ----
-    QueryDef(
-      "x_sim_index_probe_ivfpq",
-      (s, d) => {
-        val emb = t(s, d, "embeddings")
-        annRecallContract(
-          ivfPqIndexProbe(s, d, queriesOf(emb), k = 5),
-          bruteTopKFor(s, d, 5), minRecall = 0.6)
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
-
-    // ---- composed-index MAINTENANCE (the x_sim_index_update_pq
-    // pattern on the composed table): standing (vid, cell, codes) over
-    // vec_id %5 ∈ {2,3,4} under a fixed model, slice %5==1 admitted +
-    // MERGED (one assign+encode pass, no corpus re-encode, no
-    // retrain), query batch probes the merged index. Convergence =
-    // row-set identity of the composed tables on (vid, cell, codes) —
-    // exact, both halves per-row deterministic under a fixed model —
-    // plus recall vs the scenario-exact brute baseline. ----
-    QueryDef(
-      "x_sim_index_update_ivfpq",
-      (s, d) => {
-        import s.implicits._
-        val emb = t(s, d, "embeddings")
-        val c = emb.select(col("vec_id").as("vid"),
-          col("embedding").cast("array<double>").as("cv"))
-        require(!c.limit(1).isEmpty, s"x_sim_index_update_ivfpq($d): empty embeddings corpus")
-        // sized for the corpus the index will serve (the merged whole)
-        val (centroids, codebooks, bounds) = Similarity.ivfPqTrainAt(
-          c.select(col("cv")), Similarity.densityNlist(corpusRows(s, d, "embeddings")), 8, 256, seed = 42L)
-        val slice = pmod(col("vid"), lit(5L))
-        // same multi-consumer checkpointing as x_sim_index_update (r18)
-        val index0 = Similarity.ivfPqEncodeDf(c.where(slice >= 2), centroids, codebooks, bounds)
-          .localCheckpoint()
-        val merged = mergeIvfPqIndex(index0, c.where(slice === 1), centroids, codebooks, bounds)
-          .localCheckpoint()
-        val rebuilt = Similarity.ivfPqEncodeDf(c.where(slice =!= 0), centroids, codebooks, bounds)
-          .localCheckpoint()
-        val corpus = c.where(slice =!= 0)
-        val q = queriesOf(emb)
-        val probeM = Similarity.ivfPqScan(merged, corpus, centroids, codebooks, bounds,
-          q, 5, 256, 0, 0)
-        // floor 0.6 like the family's: the SLICED-corpus scenario
-        // measures 0.80 at sf0.01 / 0.7675 at sf0.1 under the full
-        // density-scaled triple (Probe `scenarios`, r17), and floors
-        // sit >= 0.15 under the worst measured scale per the jitter
-        // convention
-        val contract = annRecallContract(probeM,
-          bruteForceTopK(emb.where(pmod(col("vec_id"), lit(5L)) =!= 0), q, 5),
-          minRecall = 0.6)
-        val mismatch = merged.withColumn("m", lit(1))
-          .join(rebuilt.withColumn("r", lit(1)), Seq("vid", "cell", "codes"), "full")
-          .agg(coalesce(sum(when(col("m").isNull || col("r").isNull, 1)
-            .otherwise(0)), lit(0)).as("bad"))
-        contract.crossJoin(mismatch)
-          .select(col("n_queries"), (col("bad") === 0).as("converged"),
-            col("recall_ok"))
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-             |  true AS converged, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
-
-    // ---- composed-index COLD probe: model (centroids + codebooks +
-    // bounds) from the sidecar, codes from the CELL-PARTITIONED
-    // artifact — the cold probe's cell filter is dynamic partition
-    // pruning on the loaded layout. Certification = composed-table
-    // round-trip identity on (vid, cell, codes) + the recall floor
-    // (probe-output identity deliberately not the contract — ADC
-    // shortlist ties, the x_sim_index_update_pq lesson). ----
-    QueryDef(
-      "x_sim_index_cold_probe_ivfpq",
-      (s, d) => {
-        val path = artifactPath(s, d, "ivfpq")
-        IndexStore.saveOnce(s, path)(saveIvfPqIndex(s, d, path))
-        val fresh = s.newSession()
-        val embF = t(fresh, d, "embeddings")
-        val corpusF = embF.select(col("vec_id").as("vid"),
-          col("embedding").cast("array<double>").as("cv"))
-        val cold = ivfPqColdProbe(fresh, path, corpusF, queriesOf(embF), k = 5)
-        val coldW = IndexStore.recreate(s, cold)
-        val mismatch = IndexStore.load(s, path).withColumn("m", lit(1))
-          .join(ivfPqIndexFor(s, d).withColumn("r", lit(1)),
-            Seq("vid", "cell", "codes"), "full")
-          .agg(coalesce(sum(when(col("m").isNull || col("r").isNull, 1)
-            .otherwise(0)), lit(0)).as("bad"))
-        annRecallContract(coldW, bruteTopKFor(s, d, 5), minRecall = 0.6)
-          .crossJoin(mismatch)
-          .select(col("n_queries"), (col("bad") === 0).as("index_roundtrip_ok"),
-            col("recall_ok"))
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-             |  true AS index_roundtrip_ok, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
+    probeRow("x_sim_index_probe_ivfpq", AnnFamily.IvfPq, minRecall = 0.6),
+    // the SLICED-corpus scenario measures 0.80 at sf0.01 / 0.7675 at
+    // sf0.1 under the full density-scaled triple (Probe `scenarios`, r17)
+    updateRow("x_sim_index_update_ivfpq", AnnFamily.IvfPq, minRecall = 0.6),
+    coldRow("x_sim_index_cold_probe_ivfpq", AnnFamily.IvfPq, minRecall = 0.6,
+      "index_roundtrip_ok"),
 
     // ---- index DRIFT statistic (VERDICT r13 missing-#2, first half):
     // after N merges under STANDING centroids, how far has the incoming
@@ -2489,24 +2011,19 @@ object Similarity extends QueryRegistry {
     QueryDef(
       "x_sim_index_drift",
       (s, d) => {
-        import s.implicits._
-        val emb = t(s, d, "embeddings")
-        val slice = pmod(col("vec_id"), lit(5L))
-        val build = emb.where(slice >= 2)
-        val cvB = build.select(col("embedding").cast("array<double>"))
-        require(!cvB.limit(1).isEmpty, s"x_sim_index_drift($d): empty build corpus")
-        val centroids = Similarity.trainCoarseQuantizer(cvB,
-          Similarity.densityNlist(build.count()), normalize = false, seed = 42L)
+        val c = corpusOf(t(s, d, "embeddings"))
+        val slice = pmod(col("vid"), lit(5L))
+        val build = c.where(slice >= 2)
+        val ivf = AnnFamily.Ivf
+        val model = ivf.train(build, densityNlist(build.count()))
         // index0 is genuinely multi-consumer — the merge chain, the
         // new-rows anti-join, and BOTH tvDist histograms (self + batch)
         // read it from separate plan branches — so the checkpoint keeps
-        // the build assignment at one run per rep (r18; comment
-        // corrected r19: the merges reference it once each, the real
-        // fan-out is the anti-join + the two histograms)
-        val index0 = ivfAssign(build, centroids).localCheckpoint()
-        val merged = mergeIvfIndex(
-          mergeIvfIndex(index0, emb.where(slice === 1), centroids),
-          emb.where(slice === 0), centroids).localCheckpoint()
+        // the build assignment at one run per rep (r18)
+        val index0 = ivf.encode(build, model).localCheckpoint()
+        val merged = mergeIndex(ivf,
+          mergeIndex(ivf, index0, c.where(slice === 1), model),
+          c.where(slice === 0), model).localCheckpoint()
         val newRows = merged.join(index0.select("vid"), Seq("vid"), "left_anti")
         def tvDist(a: DataFrame, b: DataFrame): DataFrame = {
           val ha = a.groupBy("cell").agg(count(lit(1)).as("ca"))
@@ -2545,590 +2062,53 @@ object Similarity extends QueryRegistry {
     QueryDef(
       "x_sim_index_rebuild",
       (s, d) => {
-        import s.implicits._
         val emb = t(s, d, "embeddings")
-        val q = queriesOf(emb)
-        val slice = pmod(col("vec_id"), lit(5L))
-        val build = emb.where(slice >= 2)
-        val cvB = build.select(col("embedding").cast("array<double>"))
-        require(!cvB.limit(1).isEmpty, s"x_sim_index_rebuild($d): empty build corpus")
-        val cent0 = Similarity.trainCoarseQuantizer(cvB,
-          Similarity.densityNlist(build.count()), normalize = false, seed = 42L)
-        // the merge is union+dropDuplicates (one reference to the
-        // standing side) and the merged frame's only consumer is the
-        // save below — no checkpoint: it would be a pure extra
-        // materialization job (ADVICE r18; the r18 comment claiming a
-        // union+anti-join double reference was stale)
-        val merged = mergeIvfIndex(ivfAssign(build, cent0),
-          emb.where(slice < 2), cent0)
+        val c = corpusOf(emb)
+        val slice = pmod(col("vid"), lit(5L))
+        val build = c.where(slice >= 2)
+        val ivf = AnnFamily.Ivf
+        val model0 = ivf.train(build, densityNlist(build.count()))
+        // the merged frame's only consumer is the save below — no
+        // checkpoint: it would be a pure extra materialization job
         val live = artifactPath(s, d, "ivf_live")
-        IndexStore.save(merged, live, Map("kind" -> "ivf",
-          "nlist" -> cent0.length.toString), Seq("cell"),
-          aux = Map(IndexStore.ModelTable ->
-            IndexStore.modelDf(s, Map("centroids" -> cent0))))
+        writeIndex(ivf, mergeIndex(ivf, ivf.encode(build, model0), c.where(slice < 2), model0),
+          model0, live)
         // the offline refresh job: retrain on the full corpus, stage, swap
-        val cent1 = Similarity.trainCoarseQuantizer(
-          emb.select(col("embedding").cast("array<double>")),
-          Similarity.densityNlist(corpusRows(s, d, "embeddings")), normalize = false, seed = 42L)
+        val n = corpusRows(s, d, "embeddings")
+        val model1 = ivf.train(c, densityNlist(n))
         // feeds the staged save AND the direct probe of the convergence
-        // join — checkpointed once (r18; the auto-nprobe count consumer
-        // is gone in r19, the knob resolves from the corpus footer count)
-        val rebuilt = ivfAssign(emb, cent1).localCheckpoint()
+        // join — checkpointed once (r18)
+        val rebuilt = ivf.encode(c, model1).localCheckpoint()
         val staged = artifactPath(s, d, "ivf_staged")
-        IndexStore.save(rebuilt, staged, Map("kind" -> "ivf",
-          "nlist" -> cent1.length.toString), Seq("cell"),
-          aux = Map(IndexStore.ModelTable ->
-            IndexStore.modelDf(s, Map("centroids" -> cent1))))
+        writeIndex(ivf, rebuilt, model1, staged)
         IndexStore.swap(s, staged, live)
         val fresh = s.newSession()
-        val cold = ivfColdProbe(fresh, live, queriesOf(t(fresh, d, "embeddings")),
-          k = 5, nprobe = 0)
-        val coldW = IndexStore.recreate(s, cold)
-        // rebuilt covers the FULL corpus — explicit nprobe from the
-        // footer count (r19): same integer as the count job it replaces,
-        // same knob the cold probe resolves from its manifest total
-        val direct = ivfProbe(rebuilt, cent1, q, k = 5,
-          nprobe = densityNprobe(corpusRows(s, d, "embeddings"), cent1.length))
-        val mismatch = coldW.withColumn("m", lit(1))
-          .join(direct.withColumn("r", lit(1)), Seq("qid", "vid", "cos"), "full")
-          .agg(coalesce(sum(when(col("m").isNull || col("r").isNull, 1)
-            .otherwise(0)), lit(0)).as("bad"))
+        val embF = t(fresh, d, "embeddings")
+        val coldW = IndexStore.recreate(s,
+          coldProbe(fresh, live, ivf, corpusOf(embF), queriesOf(embF), k = 5))
+        // rebuilt covers the FULL corpus — knobs from the footer count
+        // (r19), the same integer the cold probe reads from its manifest
+        val direct = ivf.probe(rebuilt, c, model1, queriesOf(emb), k = 5, nprobe = 0,
+          shortlistFactor = 0)(n)
         annRecallContract(coldW, bruteTopKFor(s, d, 5), minRecall = 0.55)
-          .crossJoin(mismatch)
+          .crossJoin(mismatch(coldW, direct, Seq("qid", "vid", "cos")))
           .select(col("n_queries"), (col("bad") === 0).as("swapped_ok"),
             col("recall_ok"))
       },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-             |  true AS swapped_ok, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
+      contractOracle("swapped_ok", "recall_ok")),
 
-    // ---- DISK-LEVEL ingest loop (the on-artifact half of the merge
-    // contract every merge function's scaladoc promises): save the
-    // standing index as the partitioned artifact, APPEND the admitted
-    // batches' assignment files into the layout (zero shuffle of the
-    // standing data), then COMPACT — appends fragment one file per
-    // touched cell per batch; compaction rewrites each cell into one
-    // task's output and EXCHANGES it in. Certified end to end: a cold
-    // probe of the compacted artifact is row-set identical to a direct
-    // probe of the full rebuilt assignment (append ∪ save ≡ rebuild
-    // under fixed centroids), the data-file count does not grow (a
-    // strict drop on any fragmented layout; equality only when the
-    // fixture's save+append already landed the minimal layout), and
-    // the recall floor holds. ----
-    QueryDef(
-      "x_sim_index_disk_update",
-      (s, d) => {
-        import s.implicits._
-        val emb = t(s, d, "embeddings")
-        val slice = pmod(col("vec_id"), lit(5L))
-        val build = emb.where(slice >= 2)
-        val cvB = build.select(col("embedding").cast("array<double>"))
-        require(!cvB.limit(1).isEmpty, s"x_sim_index_disk_update($d): empty build corpus")
-        val centroids = Similarity.trainCoarseQuantizer(cvB,
-          Similarity.densityNlist(build.count()), normalize = false, seed = 42L)
-        val live = artifactPath(s, d, "ivf_disk")
-        IndexStore.save(ivfAssign(build, centroids), live, Map("kind" -> "ivf",
-          "nlist" -> centroids.length.toString), Seq("cell"),
-          aux = Map(IndexStore.ModelTable ->
-            IndexStore.modelDf(s, Map("centroids" -> centroids))))
-        IndexStore.append(ivfAssign(emb.where(slice < 2), centroids), live)
-        val before = IndexStore.dataFileCount(s, live)
-        IndexStore.compact(s, live)
-        val after = IndexStore.dataFileCount(s, live)
-        val fresh = s.newSession()
-        val cold = ivfColdProbe(fresh, live, queriesOf(t(fresh, d, "embeddings")),
-          k = 5, nprobe = 0)
-        val coldW = IndexStore.recreate(s, cold)
-        // the direct baseline probes the FULL-corpus assignment, so its
-        // auto-nprobe resolves from the corpus footer count (r19) — the
-        // same integer the count job on the assignment produced, and the
-        // same knob the cold probe derives from its manifest total; with
-        // the count gone the assignment has ONE consumer (the probe
-        // plan), so the r18 checkpoint goes too
-        val direct = ivfProbe(ivfAssign(emb, centroids), centroids,
-          queriesOf(emb), k = 5,
-          nprobe = densityNprobe(corpusRows(s, d, "embeddings"), centroids.length))
-        val mismatch = coldW.withColumn("m", lit(1))
-          .join(direct.withColumn("r", lit(1)), Seq("qid", "vid", "cos"), "full")
-          .agg(coalesce(sum(when(col("m").isNull || col("r").isNull, 1)
-            .otherwise(0)), lit(0)).as("bad"))
-        annRecallContract(coldW, bruteTopKFor(s, d, 5), minRecall = 0.55)
-          .crossJoin(mismatch)
-          .select(col("n_queries"), (col("bad") === 0).as("converged"),
-            lit(after <= before).as("compacted_ok"), col("recall_ok"))
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-             |  true AS converged, true AS compacted_ok, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
-
-    // ---- the LSH disk chain (VERDICT r15 follow-through: the certified
-    // save → append → compact → cold-probe chain covered IVF, bands and
-    // BM25; the bucket table is the remaining partitioned artifact an
-    // ingest loop appends): the admitted slice is hashed under the
-    // STANDING planes and its files APPENDED into the t-partitioned
-    // layout (disjoint vids ⇒ disjoint (vid, t) rows, so the raw file
-    // append is exactly mergeLshIndex's row set), then compacted. Cold
-    // probe of the compacted artifact ≡ a direct probe of the full
-    // rebuild — row-set IDENTITY (bucket keys and cosines are per-row
-    // deterministic under fixed planes, LimitBy's tie-break is total),
-    // file count does not grow, recall floor holds. ----
-    QueryDef(
-      "x_sim_index_disk_update_lsh",
-      (s, d) => {
-        val emb = t(s, d, "embeddings")
-        val dim = dimOf(emb)
-        require(dim > 0, s"x_sim_index_disk_update_lsh($d): empty embeddings corpus")
-        val planes = lshPlanesFor(dim)
-        val slice = pmod(col("vec_id"), lit(5L))
-        val live = artifactPath(s, d, "lsh_disk")
-        IndexStore.save(lshAssign(emb.where(slice >= 2), planes), live, Map(
-          "kind" -> "lsh", "seed" -> "42", "tables" -> lshTables.toString,
-          "bits" -> lshIndexBits.toString, "dim" -> dim.toString), Seq("t"))
-        IndexStore.append(lshAssign(emb.where(slice < 2), planes), live)
-        val before = IndexStore.dataFileCount(s, live)
-        IndexStore.compact(s, live)
-        val after = IndexStore.dataFileCount(s, live)
-        val fresh = s.newSession()
-        val embF = t(fresh, d, "embeddings")
-        val cold = lshColdProbe(fresh, live, embF, queriesOf(embF), k = 5)
-        val coldW = IndexStore.recreate(s, cold)
-        val direct = lshProbe(lshAssign(emb, planes), emb, planes, queriesOf(emb), k = 5)
-        val mismatch = coldW.withColumn("m", lit(1))
-          .join(direct.withColumn("r", lit(1)), Seq("qid", "vid", "cos"), "full")
-          .agg(coalesce(sum(when(col("m").isNull || col("r").isNull, 1)
-            .otherwise(0)), lit(0)).as("bad"))
-        annRecallContract(coldW, bruteTopKFor(s, d, 5), minRecall = 0.45)
-          .crossJoin(mismatch)
-          .select(col("n_queries"), (col("bad") === 0).as("converged"),
-            lit(after <= before).as("compacted_ok"), col("recall_ok"))
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-             |  true AS converged, true AS compacted_ok, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
-
-    // ---- the PQ disk chain — completing disk-level maintenance for
-    // every standing family (IVF/bands/BM25/LSH above): admitted codes
-    // (encoded under the STANDING codebooks) APPEND into the
-    // UNPARTITIONED codes layout — this row is the board's exercise of
-    // compact()'s byte-sized coalesce path (ceil(bytes/target), never a
-    // single file at scale). Convergence is CODES-table row-set identity
-    // vs encoding the combined corpus directly (per-row deterministic
-    // under fixed codebooks; probe-output identity is deliberately not
-    // the contract — the x_sim_index_update_pq ADC-tie lesson), plus the
-    // cold probe's recall floor through the compacted artifact. ----
-    QueryDef(
-      "x_sim_index_disk_update_pq",
-      (s, d) => {
-        import s.implicits._
-        val emb = t(s, d, "embeddings")
-        val c = emb.select(col("vec_id").as("vid"),
-          col("embedding").cast("array<double>").as("cv"))
-        val slice = pmod(col("vid"), lit(5L))
-        val sample = c.where(slice >= 2).select(col("cv")).limit(2048)
-          .as[Array[Double]].collect().map(VecKernels.normalize)
-        require(sample.nonEmpty, s"x_sim_index_disk_update_pq($d): empty build corpus")
-        val (codebooks, bounds) = pqTrain(sample, pqM, pqKsub, seed = 42L)
-        val live = artifactPath(s, d, "pq_disk")
-        IndexStore.save(pqEncodeDf(c.where(slice >= 2), codebooks, bounds), live, Map(
-          "kind" -> "pq", "m" -> pqM.toString, "ksub" -> pqKsub.toString,
-          "bounds" -> IndexStore.encodeInts(bounds)),
-          aux = Map(IndexStore.ModelTable ->
-            IndexStore.modelDf(s, Map.empty, Map("codebooks" -> codebooks))))
-        IndexStore.append(pqEncodeDf(c.where(slice < 2), codebooks, bounds), live)
-        val before = IndexStore.dataFileCount(s, live)
-        IndexStore.compact(s, live)
-        val after = IndexStore.dataFileCount(s, live)
-        val fresh = s.newSession()
-        val embF = t(fresh, d, "embeddings")
-        val corpusF = embF.select(col("vec_id").as("vid"),
-          col("embedding").cast("array<double>").as("cv"))
-        val cold = pqColdProbe(fresh, live, corpusF, queriesOf(embF), k = 5)
-        val coldW = IndexStore.recreate(s, cold)
-        val mismatch = IndexStore.load(s, live).withColumn("m", lit(1))
-          .join(pqEncodeDf(c, codebooks, bounds).withColumn("r", lit(1)),
-            Seq("vid", "codes"), "full")
-          .agg(coalesce(sum(when(col("m").isNull || col("r").isNull, 1)
-            .otherwise(0)), lit(0)).as("bad"))
-        annRecallContract(coldW, bruteTopKFor(s, d, 5), minRecall = 0.8)
-          .crossJoin(mismatch)
-          .select(col("n_queries"), (col("bad") === 0).as("converged"),
-            lit(after <= before).as("compacted_ok"), col("recall_ok"))
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-             |  true AS converged, true AS compacted_ok, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
-
-    // ---- the ANN ingest loop under the LIVE streaming engine (VERDICT
-    // r14 missing-#1: mergeIvfIndex was batch-only): 4 ordered
-    // micro-batches (vec_id pmod 4) through foreachBatch — the first
-    // builds the assignment under the standing centroids, each later
-    // batch first PROBES the index as it stood (probe-then-merge: the
-    // admit-time near-dup/similarity check a production loop runs), then
-    // is admitted via [[mergeIvfIndex]] with per-merge localCheckpoints
-    // (lineage truncation). In-engine requires pin streamed assignment ≡
-    // the direct whole-corpus assignment (row-set identity on
-    // (vid, cell) — per-row under fixed centroids, so identity is exact)
-    // and that the live probes ran. Certified output = the standard
-    // query batch probed through the streamed index under the recall
-    // contract vs the exact brute baseline. ----
-    QueryDef(
-      "x_stream_ivf_ingest",
-      (s, d) => {
-        import s.implicits._
-        val emb = t(s, d, "embeddings")
-        val cvE = emb.select(col("embedding").cast("array<double>"))
-        require(!cvE.limit(1).isEmpty, s"x_stream_ivf_ingest($d): empty embeddings corpus")
-        val centroids = Similarity.trainCoarseQuantizer(cvE,
-          Similarity.densityNlist(corpusRows(s, d, "embeddings")), normalize = false, seed = 42L)
-        val maintained = annStreamIngest(s, emb, "x_stream_ivf_ingest")(
-          build = b => ivfAssign(b, centroids),
-          probe = (cur, b) => ivfProbe(cur, centroids, b, k = 3, nprobe = 4).count(),
-          merge = (cur, b) => mergeIvfIndex(cur, b, centroids))
-        val direct = ivfAssign(emb, centroids)
-        val diverged = maintained.select("vid", "cell").withColumn("m", lit(1))
-          .join(direct.select("vid", "cell").withColumn("r", lit(1)),
-            Seq("vid", "cell"), "full")
-          .where(col("m").isNull || col("r").isNull).count()
-        require(diverged == 0,
-          s"streamed IVF assignment diverged from the direct build ($diverged rows)")
-        // maintained ≡ the whole corpus (the diverged==0 gate above)
-        // — knobs from the footer count, same integers as the count job
-        // on the maintained frame (r19)
-        annRecallContract(
-          ivfProbe(maintained, centroids, queriesOf(emb), k = 5,
-            nprobe = densityNprobe(corpusRows(s, d, "embeddings"), centroids.length)),
-          bruteTopKFor(s, d, 5), minRecall = 0.55)
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
-
-    // ---- the ANN ingest loop from a LIVE FILE source (the IVF mirror
-    // of x_stream_bm25_file_ingest — the production shape is "embedding
-    // shards land as parquet, the loop admits them"): slices land in a
-    // watched directory DURING a maxFilesPerTrigger-paced readStream —
-    // one backlog file, three landing between fences — driving the same
-    // probe-then-merge loop with NOTHING crossing the driver. In-engine
-    // requires pin >=4 discovered non-empty micro-batches (incremental
-    // discovery), live probes ran, and file-ingested assignment ≡ the
-    // direct whole-corpus assignment (row-set identity on (vid, cell),
-    // exact under fixed centroids). Certified output = the standard
-    // query batch probed through the ingested index under the family's
-    // recall contract. ----
-    QueryDef(
-      "x_stream_ivf_file_ingest",
-      (s, d) => {
-        import s.implicits._
-        val emb = t(s, d, "embeddings")
-        val cvE = emb.select(col("embedding").cast("array<double>"))
-        require(!cvE.limit(1).isEmpty, s"x_stream_ivf_file_ingest($d): empty embeddings corpus")
-        val centroids = Similarity.trainCoarseQuantizer(cvE,
-          Similarity.densityNlist(corpusRows(s, d, "embeddings")), normalize = false, seed = 42L)
-        val maintained = annFileIngest(s, emb, "x_stream_ivf_file_ingest")(
-          build = b => ivfAssign(b, centroids),
-          probe = (cur, b) => ivfProbe(cur, centroids, b, k = 3, nprobe = 4).count(),
-          merge = (cur, b) => mergeIvfIndex(cur, b, centroids))
-        val direct = ivfAssign(emb, centroids)
-        val diverged = maintained.select("vid", "cell").withColumn("m", lit(1))
-          .join(direct.select("vid", "cell").withColumn("r", lit(1)),
-            Seq("vid", "cell"), "full")
-          .where(col("m").isNull || col("r").isNull).count()
-        require(diverged == 0,
-          s"file-ingested IVF assignment diverged from the direct build ($diverged rows)")
-        // maintained ≡ the whole corpus (the diverged==0 gate above)
-        // — knobs from the footer count, same integers as the count job
-        // on the maintained frame (r19)
-        annRecallContract(
-          ivfProbe(maintained, centroids, queriesOf(emb), k = 5,
-            nprobe = densityNprobe(corpusRows(s, d, "embeddings"), centroids.length)),
-          bruteTopKFor(s, d, 5), minRecall = 0.55)
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
-
-    // ---- LSH ingest under the LIVE streaming engine — completing
-    // live ingest for every standing family (bands r14, IVF/BM25 r15):
-    // same probe-then-merge drive as x_stream_ivf_ingest, the admitted
-    // batch hashed under the STANDING planes by [[mergeLshIndex]].
-    // In-engine requires pin streamed bucket table ≡ the direct
-    // whole-corpus hash (row-set identity on (vid, t, bucket) — exact
-    // under fixed planes) and that the live probes ran. Certified
-    // output = the standard query batch probed through the streamed
-    // index under the recall contract. ----
-    QueryDef(
-      "x_stream_lsh_ingest",
-      (s, d) => {
-        val emb = t(s, d, "embeddings")
-        val dim = dimOf(emb)
-        require(dim > 0, s"x_stream_lsh_ingest($d): empty embeddings corpus")
-        val planes = lshPlanesFor(dim)
-        val maintained = annStreamIngest(s, emb, "x_stream_lsh_ingest")(
-          build = b => lshAssign(b, planes),
-          probe = (cur, b) => lshProbe(cur, emb, planes, b, k = 3).count(),
-          merge = (cur, b) => mergeLshIndex(cur, b, planes))
-        val direct = lshAssign(emb, planes)
-        val diverged = maintained.withColumn("m", lit(1))
-          .join(direct.withColumn("r", lit(1)), Seq("vid", "t", "bucket"), "full")
-          .where(col("m").isNull || col("r").isNull).count()
-        require(diverged == 0,
-          s"streamed LSH bucket table diverged from the direct build ($diverged rows)")
-        annRecallContract(
-          lshProbe(maintained, emb, planes, queriesOf(emb), k = 5),
-          bruteTopKFor(s, d, 5), minRecall = 0.45)
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
-
-    // ---- PQ ingest under the LIVE streaming engine — the codes-table
-    // family's live loop: the admitted batch is encoded under the
-    // STANDING codebooks by [[mergePqIndex]], each later batch first
-    // ADC-probes the codes as they stood. In-engine requires pin
-    // streamed codes ≡ encoding the whole corpus directly (row-set
-    // identity on (vid, codes) — per-row deterministic under fixed
-    // codebooks; the family's convention since x_sim_index_update_pq)
-    // and that the live probes ran. Certified output = the standard
-    // query batch ADC-probed through the streamed codes under the
-    // recall contract. ----
-    QueryDef(
-      "x_stream_pq_ingest",
-      (s, d) => {
-        import s.implicits._
-        val emb = t(s, d, "embeddings")
-        val c = emb.select(col("vec_id").as("vid"),
-          col("embedding").cast("array<double>").as("cv"))
-        val sample = c.select(col("cv")).limit(2048)
-          .as[Array[Double]].collect().map(VecKernels.normalize)
-        require(sample.nonEmpty, s"x_stream_pq_ingest($d): empty embeddings corpus")
-        val (codebooks, bounds) = pqTrain(sample, pqM, pqKsub, seed = 42L)
-        def asCorpus(b: DataFrame) = b.select(col("vec_id").as("vid"),
-          col("embedding").cast("array<double>").as("cv"))
-        val maintained = annStreamIngest(s, emb, "x_stream_pq_ingest")(
-          build = b => pqEncodeDf(asCorpus(b), codebooks, bounds),
-          probe = (cur, b) => pqScan(cur, c, codebooks, bounds, b, k = 3, pqKsub,
-            shortlistFactor = 4).count(),
-          merge = (cur, b) => mergePqIndex(cur, asCorpus(b), codebooks, bounds))
-        val direct = pqEncodeDf(c, codebooks, bounds)
-        val diverged = maintained.withColumn("m", lit(1))
-          .join(direct.withColumn("r", lit(1)), Seq("vid", "codes"), "full")
-          .where(col("m").isNull || col("r").isNull).count()
-        require(diverged == 0,
-          s"streamed PQ codes diverged from the direct encode ($diverged rows)")
-        // maintained ≡ the whole corpus (the diverged==0 gate above)
-        // — knobs from the footer count, same integers as the count job
-        // on the maintained frame (r19)
-        annRecallContract(
-          pqScan(maintained, c, codebooks, bounds, queriesOf(emb), k = 5,
-            pqKsub,
-            shortlistFactor = densityShortlistFactor(corpusRows(s, d, "embeddings"))),
-          bruteTopKFor(s, d, 5), minRecall = 0.8)
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
-
-    // ---- composed IVF-PQ ingest under the LIVE streaming engine —
-    // the new family joins the full lifecycle matrix on arrival: same
-    // probe-then-merge drive, the admitted batch cell-assigned AND
-    // encoded in ONE pass under the STANDING model by
-    // [[mergeIvfPqIndex]]. In-engine requires pin streamed composed
-    // table ≡ the direct whole-corpus encode (row-set identity on
-    // (vid, cell, codes) — both halves per-row deterministic under the
-    // fixed model) and that the live probes ran. Certified output =
-    // the standard query batch probed through the streamed index under
-    // the composed recall floor. ----
-    QueryDef(
-      "x_stream_ivfpq_ingest",
-      (s, d) => {
-        import s.implicits._
-        val emb = t(s, d, "embeddings")
-        val c = emb.select(col("vec_id").as("vid"),
-          col("embedding").cast("array<double>").as("cv"))
-        require(!c.limit(1).isEmpty, s"x_stream_ivfpq_ingest($d): empty embeddings corpus")
-        val (centroids, codebooks, bounds) = Similarity.ivfPqTrainAt(
-          c.select(col("cv")), Similarity.densityNlist(corpusRows(s, d, "embeddings")), pqM, pqKsub, seed = 42L)
-        def asCorpus(b: DataFrame) = b.select(col("vec_id").as("vid"),
-          col("embedding").cast("array<double>").as("cv"))
-        val maintained = annStreamIngest(s, emb, "x_stream_ivfpq_ingest")(
-          build = b => ivfPqEncodeDf(asCorpus(b), centroids, codebooks, bounds),
-          probe = (cur, b) => ivfPqScan(cur, c, centroids, codebooks, bounds,
-            b, k = 3, pqKsub, nprobe = 4, shortlistFactor = 4).count(),
-          merge = (cur, b) => mergeIvfPqIndex(cur, asCorpus(b), centroids, codebooks, bounds))
-        val direct = ivfPqEncodeDf(c, centroids, codebooks, bounds)
-        val diverged = maintained.withColumn("m", lit(1))
-          .join(direct.withColumn("r", lit(1)), Seq("vid", "cell", "codes"), "full")
-          .where(col("m").isNull || col("r").isNull).count()
-        require(diverged == 0,
-          s"streamed composed table diverged from the direct encode ($diverged rows)")
-        // maintained ≡ the whole corpus (the diverged==0 gate above)
-        // — knobs from the footer count, same integers as the count job
-        // on the maintained frame (r19)
-        annRecallContract(
-          ivfPqScan(maintained, c, centroids, codebooks, bounds, queriesOf(emb),
-            k = 5, pqKsub,
-            nprobe = densityNprobe(corpusRows(s, d, "embeddings"), centroids.length),
-            shortlistFactor = densityShortlistFactor(corpusRows(s, d, "embeddings"))),
-          bruteTopKFor(s, d, 5), minRecall = 0.6)
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
-
-    // ---- FILE-source ingest for the remaining ANN families (LSH, PQ,
-    // IVF-PQ — completing the file half of the lifecycle matrix the way
-    // r15 completed the MemoryStream half: every standing family's loop
-    // now admits from landing parquet shards). Same shared
-    // [[annFileIngest]] drive and gates as the IVF row: >=4 discovered
-    // paced micro-batches, live probes, file-ingested state ≡ the
-    // direct whole-corpus build on the family's stored key, certified
-    // probe under the family's recall floor. ----
-    QueryDef(
-      "x_stream_lsh_file_ingest",
-      (s, d) => {
-        val emb = t(s, d, "embeddings")
-        val dim = dimOf(emb)
-        require(dim > 0, s"x_stream_lsh_file_ingest($d): empty embeddings corpus")
-        val planes = lshPlanesFor(dim)
-        val maintained = annFileIngest(s, emb, "x_stream_lsh_file_ingest")(
-          build = b => lshAssign(b, planes),
-          probe = (cur, b) => lshProbe(cur, emb, planes, b, k = 3).count(),
-          merge = (cur, b) => mergeLshIndex(cur, b, planes))
-        val direct = lshAssign(emb, planes)
-        val diverged = maintained.withColumn("m", lit(1))
-          .join(direct.withColumn("r", lit(1)), Seq("vid", "t", "bucket"), "full")
-          .where(col("m").isNull || col("r").isNull).count()
-        require(diverged == 0,
-          s"file-ingested LSH bucket table diverged from the direct build ($diverged rows)")
-        annRecallContract(
-          lshProbe(maintained, emb, planes, queriesOf(emb), k = 5),
-          bruteTopKFor(s, d, 5), minRecall = 0.45)
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
-
-    QueryDef(
-      "x_stream_pq_file_ingest",
-      (s, d) => {
-        import s.implicits._
-        val emb = t(s, d, "embeddings")
-        val c = emb.select(col("vec_id").as("vid"),
-          col("embedding").cast("array<double>").as("cv"))
-        val sample = c.select(col("cv")).limit(2048)
-          .as[Array[Double]].collect().map(VecKernels.normalize)
-        require(sample.nonEmpty, s"x_stream_pq_file_ingest($d): empty embeddings corpus")
-        val (codebooks, bounds) = pqTrain(sample, pqM, pqKsub, seed = 42L)
-        def asCorpus(b: DataFrame) = b.select(col("vec_id").as("vid"),
-          col("embedding").cast("array<double>").as("cv"))
-        val maintained = annFileIngest(s, emb, "x_stream_pq_file_ingest")(
-          build = b => pqEncodeDf(asCorpus(b), codebooks, bounds),
-          probe = (cur, b) => pqScan(cur, c, codebooks, bounds, b, k = 3, pqKsub,
-            shortlistFactor = 4).count(),
-          merge = (cur, b) => mergePqIndex(cur, asCorpus(b), codebooks, bounds))
-        val direct = pqEncodeDf(c, codebooks, bounds)
-        val diverged = maintained.withColumn("m", lit(1))
-          .join(direct.withColumn("r", lit(1)), Seq("vid", "codes"), "full")
-          .where(col("m").isNull || col("r").isNull).count()
-        require(diverged == 0,
-          s"file-ingested PQ codes diverged from the direct encode ($diverged rows)")
-        // maintained ≡ the whole corpus (the diverged==0 gate above)
-        // — knobs from the footer count, same integers as the count job
-        // on the maintained frame (r19)
-        annRecallContract(
-          pqScan(maintained, c, codebooks, bounds, queriesOf(emb), k = 5,
-            pqKsub,
-            shortlistFactor = densityShortlistFactor(corpusRows(s, d, "embeddings"))),
-          bruteTopKFor(s, d, 5), minRecall = 0.8)
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
-
-    QueryDef(
-      "x_stream_ivfpq_file_ingest",
-      (s, d) => {
-        import s.implicits._
-        val emb = t(s, d, "embeddings")
-        val c = emb.select(col("vec_id").as("vid"),
-          col("embedding").cast("array<double>").as("cv"))
-        require(!c.limit(1).isEmpty, s"x_stream_ivfpq_file_ingest($d): empty embeddings corpus")
-        val (centroids, codebooks, bounds) = Similarity.ivfPqTrainAt(
-          c.select(col("cv")), Similarity.densityNlist(corpusRows(s, d, "embeddings")), pqM, pqKsub, seed = 42L)
-        def asCorpus(b: DataFrame) = b.select(col("vec_id").as("vid"),
-          col("embedding").cast("array<double>").as("cv"))
-        val maintained = annFileIngest(s, emb, "x_stream_ivfpq_file_ingest")(
-          build = b => ivfPqEncodeDf(asCorpus(b), centroids, codebooks, bounds),
-          probe = (cur, b) => ivfPqScan(cur, c, centroids, codebooks, bounds,
-            b, k = 3, pqKsub, nprobe = 4, shortlistFactor = 4).count(),
-          merge = (cur, b) => mergeIvfPqIndex(cur, asCorpus(b), centroids, codebooks, bounds))
-        val direct = ivfPqEncodeDf(c, centroids, codebooks, bounds)
-        val diverged = maintained.withColumn("m", lit(1))
-          .join(direct.withColumn("r", lit(1)), Seq("vid", "cell", "codes"), "full")
-          .where(col("m").isNull || col("r").isNull).count()
-        require(diverged == 0,
-          s"file-ingested composed table diverged from the direct encode ($diverged rows)")
-        // maintained ≡ the whole corpus (the diverged==0 gate above)
-        // — knobs from the footer count, same integers as the count job
-        // on the maintained frame (r19)
-        annRecallContract(
-          ivfPqScan(maintained, c, centroids, codebooks, bounds, queriesOf(emb),
-            k = 5, pqKsub,
-            nprobe = densityNprobe(corpusRows(s, d, "embeddings"), centroids.length),
-            shortlistFactor = densityShortlistFactor(corpusRows(s, d, "embeddings"))),
-          bruteTopKFor(s, d, 5), minRecall = 0.6)
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
-
-    // ---- composed IVF-PQ disk chain — save into the CELL-partitioned
-    // layout, append the admitted slice's composed rows (disjoint vids
-    // ⇒ the raw partitioned file append IS mergeIvfPqIndex's row set),
-    // compact, COLD probe through the compacted artifact. Convergence
-    // is composed-table row-set identity on (vid, cell, codes) vs
-    // encoding the combined corpus directly (probe-output identity is
-    // deliberately not the contract — the family's ADC-tie
-    // convention), plus the cold probe's recall floor. ----
-    QueryDef(
-      "x_sim_index_disk_update_ivfpq",
-      (s, d) => {
-        import s.implicits._
-        val emb = t(s, d, "embeddings")
-        val c = emb.select(col("vec_id").as("vid"),
-          col("embedding").cast("array<double>").as("cv"))
-        val slice = pmod(col("vid"), lit(5L))
-        require(!c.where(slice >= 2).limit(1).isEmpty,
-          s"x_sim_index_disk_update_ivfpq($d): empty build corpus")
-        // sized for the corpus the index will serve (the merged whole)
-        val (centroids, codebooks, bounds) = Similarity.ivfPqTrainAt(
-          c.where(slice >= 2).select(col("cv")),
-          Similarity.densityNlist(corpusRows(s, d, "embeddings")), pqM, pqKsub, seed = 42L)
-        val live = artifactPath(s, d, "ivfpq_disk")
-        IndexStore.save(
-          ivfPqEncodeDf(c.where(slice >= 2), centroids, codebooks, bounds), live, Map(
-            "kind" -> "ivfpq", "nlist" -> centroids.length.toString,
-            "m" -> pqM.toString, "ksub" -> pqKsub.toString, "by_residual" -> "true",
-            "bounds" -> IndexStore.encodeInts(bounds)),
-          Seq("cell"),
-          aux = Map(IndexStore.ModelTable -> IndexStore.modelDf(s,
-            Map("centroids" -> centroids), Map("codebooks" -> codebooks))))
-        IndexStore.append(
-          ivfPqEncodeDf(c.where(slice < 2), centroids, codebooks, bounds), live)
-        val before = IndexStore.dataFileCount(s, live)
-        IndexStore.compact(s, live)
-        val after = IndexStore.dataFileCount(s, live)
-        val fresh = s.newSession()
-        val embF = t(fresh, d, "embeddings")
-        val corpusF = embF.select(col("vec_id").as("vid"),
-          col("embedding").cast("array<double>").as("cv"))
-        val cold = ivfPqColdProbe(fresh, live, corpusF, queriesOf(embF), k = 5)
-        val coldW = IndexStore.recreate(s, cold)
-        val mismatch = IndexStore.load(s, live).withColumn("m", lit(1))
-          .join(ivfPqEncodeDf(c, centroids, codebooks, bounds).withColumn("r", lit(1)),
-            Seq("vid", "cell", "codes"), "full")
-          .agg(coalesce(sum(when(col("m").isNull || col("r").isNull, 1)
-            .otherwise(0)), lit(0)).as("bad"))
-        annRecallContract(coldW, bruteTopKFor(s, d, 5), minRecall = 0.6)
-          .crossJoin(mismatch)
-          .select(col("n_queries"), (col("bad") === 0).as("converged"),
-            lit(after <= before).as("compacted_ok"), col("recall_ok"))
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_queries,
-             |  true AS converged, true AS compacted_ok, true AS recall_ok
-             |FROM embeddings WHERE vec_id % 25 = 0""".stripMargin)),
+    diskRow("x_sim_index_disk_update", AnnFamily.Ivf, minRecall = 0.55, sizeToBuild = true),
+    diskRow("x_sim_index_disk_update_lsh", AnnFamily.Lsh, minRecall = 0.45),
+    diskRow("x_sim_index_disk_update_pq", AnnFamily.Pq, minRecall = 0.8),
+    ingestRow("x_stream_ivf_ingest", AnnFamily.Ivf, minRecall = 0.55, files = false),
+    ingestRow("x_stream_ivf_file_ingest", AnnFamily.Ivf, minRecall = 0.55, files = true),
+    ingestRow("x_stream_lsh_ingest", AnnFamily.Lsh, minRecall = 0.45, files = false),
+    ingestRow("x_stream_pq_ingest", AnnFamily.Pq, minRecall = 0.8, files = false),
+    ingestRow("x_stream_ivfpq_ingest", AnnFamily.IvfPq, minRecall = 0.6, files = false),
+    ingestRow("x_stream_lsh_file_ingest", AnnFamily.Lsh, minRecall = 0.45, files = true),
+    ingestRow("x_stream_pq_file_ingest", AnnFamily.Pq, minRecall = 0.8, files = true),
+    ingestRow("x_stream_ivfpq_file_ingest", AnnFamily.IvfPq, minRecall = 0.6, files = true),
+    diskRow("x_sim_index_disk_update_ivfpq", AnnFamily.IvfPq, minRecall = 0.6),
 
     // ---- embedding-cosine near-dup pairs, exact baseline ----
     QueryDef(

@@ -2134,13 +2134,11 @@ object TextOps extends QueryRegistry {
         // (standing + today's landings ≈ the full documents corpus);
         // the raw-corpus row count comes from the parquet footers
         // driver-side — same integer as emb.count(), no count job (r19)
-        val (cents, cbs, bds) = Similarity.ivfPqTrainAt(
-          standVec.select(col("cv")),
-          Similarity.densityNlist(
-            IndexStore.parquetRowCount(s, s"$d/embeddings.parquet")),
-          8, 256, seed = 42L)
+        val ivfPq = AnnFamily.IvfPq
+        val annModel = ivfPq.train(standVec,
+          Similarity.densityNlist(IndexStore.parquetRowCount(s, s"$d/embeddings.parquet")))
         val ann = new java.util.concurrent.atomic.AtomicReference[DataFrame](
-          Similarity.ivfPqEncodeDf(standVec, cents, cbs, bds).localCheckpoint())
+          ivfPq.encode(standVec, annModel).localCheckpoint())
         val standingKeys = standing
           .select(md5(canonOf.cast("binary")).as("ck")).distinct().localCheckpoint()
         val keys = new java.util.concurrent.atomic.AtomicReference[DataFrame](standingKeys)
@@ -2230,7 +2228,7 @@ object TextOps extends QueryRegistry {
               // of truth for "this batch added documents" (its anti-join
               // drops already-indexed doc_ids). A batch whose admitted
               // docs are all already BM25-indexed must not re-append
-              // their vectors either — mergeIvfPqIndex would dedup them
+              // their vectors either — mergeIndex would dedup them
               // anyway (idempotent on vid), so skipping is the same
               // final state minus a no-op merge.
               s.sparkContext.setJobDescription("pipe: append")
@@ -2241,7 +2239,7 @@ object TextOps extends QueryRegistry {
                   .join(admitted.select(col("doc_id").as("vec_id")), Seq("vec_id"))
                   .select(col("vec_id").as("vid"),
                     col("embedding").cast("array<double>").as("cv"))
-                ann.set(Similarity.mergeIvfPqIndex(ann.get(), admVec, cents, cbs, bds)
+                ann.set(Similarity.mergeIndex(ivfPq, ann.get(), admVec, annModel)
                   .localCheckpoint())
               }
               s.sparkContext.setJobDescription(null)
@@ -2311,7 +2309,7 @@ object TextOps extends QueryRegistry {
           ledger.where(col("verdict") === "admitted").select(col("doc_id").as("vec_id")),
           Seq("vec_id"))
           .select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("cv"))
-        val direct = Similarity.ivfPqEncodeDf(standVec.unionByName(admVecAll), cents, cbs, bds)
+        val direct = ivfPq.encode(standVec.unionByName(admVecAll), annModel)
         val annDiv = ann.get().withColumn("m", lit(1))
           .join(direct.withColumn("r", lit(1)), Seq("vid", "cell", "codes"), "full")
           .where(col("m").isNull || col("r").isNull).count()

@@ -104,10 +104,9 @@ class IndexStoreCrashSpec extends SparkSpec {
   private def slice = pmod(col("vid"), lit(5L))
 
   test("IVF disk append chain is crash-atomic at all three windows") {
-    val centroids = Similarity.trainCoarseQuantizer(
-      emb.select(col("embedding").cast("array<double>")),
-      Similarity.densityNlist(emb.count()), normalize = false, seed = 42L)
-    val assigned = Similarity.ivfAssign(emb, centroids)
+    val model = AnnFamily.Ivf.train(corpus, Similarity.densityNlist(emb.count()))
+    val centroids = model.centroids
+    val assigned = AnnFamily.Ivf.encode(corpus, model)
       .withColumn("s", pmod(col("vid"), lit(5L)))
     chainSurvivesCrashes("ivf",
       assigned.where(col("s") >= 2).drop("s"),
@@ -125,8 +124,7 @@ class IndexStoreCrashSpec extends SparkSpec {
 
   test("LSH disk append chain is crash-atomic at all three windows") {
     val dim = Similarity.dimOf(emb)
-    val planes = Similarity.lshPlanesFor(dim)
-    val hashed = Similarity.lshAssign(emb, planes)
+    val hashed = AnnFamily.Lsh.encode(corpus, AnnFamily.Lsh.train(corpus, 0))
       .withColumn("s", pmod(col("vid"), lit(5L)))
     chainSurvivesCrashes("lsh",
       hashed.where(col("s") >= 2).drop("s"),
@@ -135,11 +133,9 @@ class IndexStoreCrashSpec extends SparkSpec {
   }
 
   test("PQ disk append chain is crash-atomic at all three windows") {
-    import spark.implicits._
-    val sample = corpus.select("cv").limit(2048).as[Array[Double]].collect()
-      .map(VecKernels.normalize)
-    val (codebooks, bounds) = Similarity.pqTrain(sample, 8, 256, seed = 42L)
-    val codes = Similarity.pqEncodeDf(corpus, codebooks, bounds)
+    val model = AnnFamily.Pq.train(corpus, 0)
+    val (codebooks, bounds) = (model.codebooks, model.bounds)
+    val codes = AnnFamily.Pq.encode(corpus, model)
       .withColumn("s", pmod(col("vid"), lit(5L)))
     chainSurvivesCrashes("pq",
       codes.where(col("s") >= 2).drop("s"),
@@ -157,10 +153,9 @@ class IndexStoreCrashSpec extends SparkSpec {
   }
 
   test("composed IVF-PQ disk append chain is crash-atomic at all three windows") {
-    val (centroids, codebooks, bounds) = Similarity.ivfPqTrainAt(
-      corpus.select(col("cv")), Similarity.densityNlist(emb.count()),
-      8, 256, seed = 42L)
-    val encoded = Similarity.ivfPqEncodeDf(corpus, centroids, codebooks, bounds)
+    val model = AnnFamily.IvfPq.train(corpus, Similarity.densityNlist(emb.count()))
+    val AnnModel(centroids, codebooks, bounds, _) = model
+    val encoded = AnnFamily.IvfPq.encode(corpus, model)
       .withColumn("s", pmod(col("vid"), lit(5L)))
     chainSurvivesCrashes("ivfpq",
       encoded.where(col("s") >= 2).drop("s"),

@@ -92,18 +92,18 @@ class IndexStoreSpec extends SparkSpec {
   test("cold IVF probe from a fresh session equals the warm probe; no application guard fires") {
     val d = sf001
     val path = s"${IndexStore.tempRoot(spark)}/spec/ivf"
-    Similarity.saveIvfIndex(spark, d, path)
+    Similarity.saveIndex(spark, d, AnnFamily.Ivf, path)
     val emb = graft.Tables.t(spark, d, "embeddings")
     val q = emb.filter(col("vec_id") % 25 === 0)
-    val warm = Similarity.ivfIndexProbe(spark, d, q, k = 5, nprobe = 4)
+    val warm = Similarity.indexProbe(spark, d, AnnFamily.Ivf, q, k = 5, nprobe = 4)
     // a DIFFERENT session object: SessionMemo state empty by construction
     val fresh = spark.newSession()
     val embF = graft.Tables.t(fresh, d, "embeddings")
-    val cold = Similarity.ivfColdProbe(fresh, path,
+    val cold = Similarity.coldProbe(fresh, path, AnnFamily.Ivf, Similarity.corpusOf(embF),
       embF.filter(col("vec_id") % 25 === 0), k = 5, nprobe = 4)
     // cold path completed without the warm build ever running in `fresh`
-    // (the "must compute in this application before probing" guard lives
-    // only on the memoized path, which ivfColdProbe cannot reach)
+    // (the "must be built in this application" guard lives only on the
+    // memoized path, which coldProbe cannot reach)
     val coldRows = cold.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val warmRows = warm.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(coldRows.nonEmpty && coldRows == warmRows)
@@ -143,10 +143,10 @@ class IndexStoreSpec extends SparkSpec {
   test("cold probes scan the artifact from disk and never degenerate") {
     val d = sf001
     val path = s"${IndexStore.tempRoot(spark)}/spec/ivf_plan"
-    Similarity.saveIvfIndex(spark, d, path)
+    Similarity.saveIndex(spark, d, AnnFamily.Ivf, path)
     val fresh = spark.newSession()
     val embF = graft.Tables.t(fresh, d, "embeddings")
-    val plan = Similarity.ivfColdProbe(fresh, path,
+    val plan = Similarity.coldProbe(fresh, path, AnnFamily.Ivf, Similarity.corpusOf(embF),
       embF.filter(col("vec_id") % 25 === 0), k = 5, nprobe = 4)
       .queryExecution.executedPlan.toString
     // the index side is a genuine parquet file scan (the disk path), not

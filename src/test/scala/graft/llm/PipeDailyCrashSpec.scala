@@ -85,15 +85,13 @@ class PipeDailyCrashSpec extends SparkSpec {
     // restarted batch cannot double-insert vectors either
     val emb = graft.Tables.t(spark, sf0001, "embeddings")
     val c = emb.select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("cv"))
-    val (cents, cbs, bds) = Similarity.ivfPqTrainAt(
-      c.select(col("cv")), Similarity.densityNlist(emb.count()), 8, 256, seed = 42L)
-    val standingIdx = Similarity.ivfPqEncodeDf(
-      c.where(pmod(col("vid"), lit(5L)) =!= 0), cents, cbs, bds).localCheckpoint()
+    val ivfPq = AnnFamily.IvfPq
+    val model = ivfPq.train(c, Similarity.densityNlist(emb.count()))
+    val standingIdx = ivfPq.encode(c.where(pmod(col("vid"), lit(5L)) =!= 0), model)
+      .localCheckpoint()
     val admVec = c.where(pmod(col("vid"), lit(5L)) === 0)
-    val once = Similarity.mergeIvfPqIndex(standingIdx, admVec, cents, cbs, bds)
-      .localCheckpoint()
-    val twice = Similarity.mergeIvfPqIndex(once, admVec, cents, cbs, bds)
-      .localCheckpoint()
+    val once = Similarity.mergeIndex(ivfPq, standingIdx, admVec, model).localCheckpoint()
+    val twice = Similarity.mergeIndex(ivfPq, once, admVec, model).localCheckpoint()
     val diverged = twice.withColumn("m", lit(1))
       .join(once.withColumn("r", lit(1)), Seq("vid", "cell", "codes"), "full")
       .where(col("m").isNull || col("r").isNull).count()

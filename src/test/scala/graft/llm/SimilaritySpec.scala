@@ -34,8 +34,8 @@ class SimilaritySpec extends SparkSpec {
     // every probe, it IS a checkpointed materialization, and probing it
     // returns exactly what the per-rep rebuild path returns (kmeans is
     // deterministic: fixed seed + deterministic sample)
-    val i1 = Similarity.ivfIndexFor(spark, sf001)
-    val i2 = Similarity.ivfIndexFor(spark, sf001)
+    val i1 = Similarity.indexFor(spark, sf001, AnnFamily.Ivf)
+    val i2 = Similarity.indexFor(spark, sf001, AnnFamily.Ivf)
     assert(i1 eq i2, "IVF index was rebuilt on the second probe")
     val leaves = i1.queryExecution.analyzed.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
@@ -49,15 +49,16 @@ class SimilaritySpec extends SparkSpec {
       df.select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // nlist = 0 on the rebuild side: the standing index builds at the
     // density-scaled cell count, and equality needs identical centroids
-    val probe = topSet(Similarity.ivfIndexProbe(spark, sf001, queries, k = 5, nprobe = 4))
+    val probe = topSet(Similarity.indexProbe(spark, sf001, AnnFamily.Ivf, queries, k = 5,
+      nprobe = 4))
     val rebuild = topSet(Similarity.ivfTopK(emb, queries, 5, nlist = 0, nprobe = 4))
     assert(probe === rebuild,
       "standing-index probe must agree with the per-rep rebuild path")
   }
 
   test("standing PQ index: built once, probe agrees with the rebuild path") {
-    val c1 = Similarity.pqIndexFor(spark, sf001)
-    val c2 = Similarity.pqIndexFor(spark, sf001)
+    val c1 = Similarity.indexFor(spark, sf001, AnnFamily.Pq)
+    val c2 = Similarity.indexFor(spark, sf001, AnnFamily.Pq)
     assert(c1 eq c2, "PQ codes table was rebuilt on the second probe")
     val leaves = c1.queryExecution.analyzed.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
@@ -68,7 +69,7 @@ class SimilaritySpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") % 25 === 0)
     def topSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val probe = topSet(Similarity.pqIndexProbe(spark, sf001, queries, k = 5))
+    val probe = topSet(Similarity.indexProbe(spark, sf001, AnnFamily.Pq, queries, k = 5))
     val rebuild = topSet(Similarity.pqTopK(emb, queries, 5))
     assert(probe === rebuild,
       "standing-codes probe must agree with the per-rep rebuild path")
@@ -79,17 +80,19 @@ class SimilaritySpec extends SparkSpec {
     val emb = Tables.t(spark, sf001, "embeddings")
     val sample = emb.select(col("embedding").cast("array<double>"))
       .limit(2048).as[Array[Double]].collect()
-    val centroids = VecKernels.kmeans(sample, 16, iters = 8, seed = 42L)
-    val slice = pmod(col("vec_id"), lit(5L))
-    val index0 = Similarity.ivfAssign(emb.where(slice >= 2), centroids)
-    val merged = Similarity.mergeIvfIndex(index0, emb.where(slice === 1), centroids)
-    val rebuilt = Similarity.ivfAssign(emb.where(slice =!= 0), centroids)
+    val model = AnnModel(centroids = VecKernels.kmeans(sample, 16, iters = 8, seed = 42L))
+    val c = Similarity.corpusOf(emb)
+    val slice = pmod(col("vid"), lit(5L))
+    val ivf = AnnFamily.Ivf
+    val index0 = ivf.encode(c.where(slice >= 2), model)
+    val merged = Similarity.mergeIndex(ivf, index0, c.where(slice === 1), model)
+    val rebuilt = ivf.encode(c.where(slice =!= 0), model)
     def cells(df: org.apache.spark.sql.DataFrame): Map[Long, Int] =
       df.select("vid", "cell").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(cells(merged) === cells(rebuilt),
       "maintained assignment diverged from a full re-assign")
     // idempotence: replaying the admitted batch must not duplicate rows
-    val replayed = Similarity.mergeIvfIndex(merged, emb.where(slice === 1), centroids)
+    val replayed = Similarity.mergeIndex(ivf, merged, c.where(slice === 1), model)
     assert(replayed.count() === rebuilt.count(),
       "replaying an admitted batch duplicated assignment rows")
   }
@@ -101,16 +104,17 @@ class SimilaritySpec extends SparkSpec {
       col("embedding").cast("array<double>").as("cv"))
     val sample = c.select(col("cv")).limit(2048).as[Array[Double]].collect()
       .map(VecKernels.normalize)
-    val (codebooks, bounds) = Similarity.pqTrain(sample, 8, 256, seed = 42L)
+    val model = Similarity.flatPqModel(sample, 8, 256, seed = 42L)
     val slice = pmod(col("vid"), lit(5L))
-    val codes0 = Similarity.pqEncodeDf(c.where(slice >= 2), codebooks, bounds)
-    val merged = Similarity.mergePqIndex(codes0, c.where(slice === 1), codebooks, bounds)
-    val rebuilt = Similarity.pqEncodeDf(c.where(slice =!= 0), codebooks, bounds)
+    val pq = AnnFamily.Pq
+    val codes0 = pq.encode(c.where(slice >= 2), model)
+    val merged = Similarity.mergeIndex(pq, codes0, c.where(slice === 1), model)
+    val rebuilt = pq.encode(c.where(slice =!= 0), model)
     def codeMap(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Byte]] =
       df.collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
     assert(codeMap(merged) === codeMap(rebuilt),
       "maintained codes table diverged from a full re-encode")
-    val replayed = Similarity.mergePqIndex(merged, c.where(slice === 1), codebooks, bounds)
+    val replayed = Similarity.mergeIndex(pq, merged, c.where(slice === 1), model)
     assert(replayed.count() === rebuilt.count(),
       "replaying an admitted batch duplicated codes rows")
   }
@@ -127,8 +131,8 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("standing IVF-PQ index: built once, probe agrees with the rebuild path") {
-    val i1 = Similarity.ivfPqIndexFor(spark, sf001)
-    val i2 = Similarity.ivfPqIndexFor(spark, sf001)
+    val i1 = Similarity.indexFor(spark, sf001, AnnFamily.IvfPq)
+    val i2 = Similarity.indexFor(spark, sf001, AnnFamily.IvfPq)
     assert(i1 eq i2, "composed index was rebuilt on the second probe")
     val leaves = i1.queryExecution.analyzed.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
@@ -139,7 +143,7 @@ class SimilaritySpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") % 25 === 0)
     def topSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val probe = topSet(Similarity.ivfPqIndexProbe(spark, sf001, queries, k = 5))
+    val probe = topSet(Similarity.indexProbe(spark, sf001, AnnFamily.IvfPq, queries, k = 5))
     val rebuild = topSet(Similarity.ivfPqTopK(emb, queries, 5))
     assert(probe === rebuild,
       "standing composed probe must agree with the per-rep rebuild path")
@@ -154,18 +158,18 @@ class SimilaritySpec extends SparkSpec {
       .map(VecKernels.normalize)
     val (centroids, codebooks, bounds) =
       Similarity.ivfPqTrain(sample, 16, 8, 256, seed = 42L)
+    val model = AnnModel(centroids, codebooks, bounds)
     val slice = pmod(col("vid"), lit(5L))
-    val index0 = Similarity.ivfPqEncodeDf(c.where(slice >= 2), centroids, codebooks, bounds)
-    val merged = Similarity.mergeIvfPqIndex(index0, c.where(slice === 1),
-      centroids, codebooks, bounds)
-    val rebuilt = Similarity.ivfPqEncodeDf(c.where(slice =!= 0), centroids, codebooks, bounds)
+    val ivfPq = AnnFamily.IvfPq
+    val index0 = ivfPq.encode(c.where(slice >= 2), model)
+    val merged = Similarity.mergeIndex(ivfPq, index0, c.where(slice === 1), model)
+    val rebuilt = ivfPq.encode(c.where(slice =!= 0), model)
     def rowMap(df: org.apache.spark.sql.DataFrame): Map[Long, (Int, Seq[Byte])] =
       df.collect().map(r =>
         r.getLong(0) -> ((r.getInt(1), r.getAs[Array[Byte]](2).toSeq))).toMap
     assert(rowMap(merged) === rowMap(rebuilt),
       "maintained composed table diverged from a full re-encode")
-    val replayed = Similarity.mergeIvfPqIndex(merged, c.where(slice === 1),
-      centroids, codebooks, bounds)
+    val replayed = Similarity.mergeIndex(ivfPq, merged, c.where(slice === 1), model)
     assert(replayed.count() === rebuilt.count(),
       "replaying an admitted batch duplicated composed rows")
   }
@@ -184,23 +188,25 @@ class SimilaritySpec extends SparkSpec {
     // one centroid, so the composed score q·c0 + ADC(residual) is the
     // flat ADC over the SAME residual codes shifted by a per-query
     // CONSTANT — ranking, ties (vid asc) and the exact re-rank are all
-    // shift-invariant, so the composed kernel must return exactly what
-    // pqScan returns over those codes (pins heap logic, the cell→query
-    // routing, the best-first shortlist cut, and the re-rank)
+    // shift-invariant, so the composed scan must return exactly what the
+    // flat scan (no cell column, the all-zero centroid) returns over
+    // those codes (pins heap logic, the cell→query routing, the
+    // best-first shortlist cut, and the re-rank)
     val (c1, cb1, bd1) = Similarity.ivfPqTrain(sample, nlist = 1, 8, 256, seed = 42L)
     val index1 = Similarity.ivfPqEncodeDf(c, c1, cb1, bd1)
-    val composed = topSet(Similarity.ivfPqScan(index1, c, c1, cb1, bd1,
-      queries, 5, 256, nprobe = 1, shortlistFactor = 4))
-    val flat = topSet(Similarity.pqScan(index1.select("vid", "codes"), c,
-      cb1, bd1, queries, 5, 256, shortlistFactor = 4))
+    val composed = topSet(Similarity.ivfPqScan(index1, c, AnnModel(c1, cb1, bd1),
+      queries, 5, nprobe = 1, shortlistFactor = 4))
+    val zero = Array(new Array[Double](c1(0).length))
+    val flat = topSet(Similarity.ivfPqScan(index1.select("vid", "codes"), c,
+      AnnModel(zero, cb1, bd1), queries, 5, nprobe = 1, shortlistFactor = 4))
     assert(composed === flat,
       "single-cell composed scan diverged from the flat PQ scan on identical residual codes")
     // and the pruned probe's plan actually filters on cell (real model)
     val (centroids, codebooks, bounds) =
       Similarity.ivfPqTrain(sample, 16, 8, 256, seed = 42L)
     val index = Similarity.ivfPqEncodeDf(c, centroids, codebooks, bounds)
-    val prunedPlan = Similarity.ivfPqScan(index, c, centroids, codebooks, bounds,
-      queries, 5, 256, nprobe = 4, shortlistFactor = 4)
+    val prunedPlan = Similarity.ivfPqScan(index, c, AnnModel(centroids, codebooks, bounds),
+      queries, 5, nprobe = 4, shortlistFactor = 4)
       .queryExecution.executedPlan.toString
     assert(prunedPlan.contains("cell#") &&
         (prunedPlan.toLowerCase.contains("inset") || prunedPlan.toLowerCase.contains("in (")),
@@ -208,34 +214,54 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("ANN index deletion forgets exactly the requested vids; delete-then-admit round-trips") {
-    import spark.implicits._
     val emb = Tables.t(spark, sf001, "embeddings")
-    val sample = emb.select(col("embedding").cast("array<double>"))
-      .limit(2048).as[Array[Double]].collect()
-    val centroids = VecKernels.kmeans(sample, 16, iters = 8, seed = 42L)
-    val slice = pmod(col("vec_id"), lit(5L))
-    val full = Similarity.ivfAssign(emb, centroids)
-    val forgotten = emb.where(slice === 1).select("vec_id")
-    val shrunk = Similarity.deleteFromIndex(full, forgotten)
-    val rebuilt = Similarity.ivfAssign(emb.where(slice =!= 1), centroids)
-    def cells(df: org.apache.spark.sql.DataFrame): Map[Long, Int] =
-      df.select("vid", "cell").collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(cells(shrunk) === cells(rebuilt),
-      "deletion left different rows than a rebuild over the retained corpus")
-    // update = delete-then-admit round-trips to the full assignment
-    val readmitted = Similarity.mergeIvfIndex(shrunk, emb.where(slice === 1), centroids)
-    assert(cells(readmitted) === cells(full), "delete-then-admit did not round-trip")
+    val c = Similarity.corpusOf(emb)
+    val slice = pmod(col("vid"), lit(5L))
+    val forgotten = emb.where(pmod(col("vec_id"), lit(5L)) === 1).select("vec_id")
+    for (fam <- AnnFamily.all) {
+      val model = fam.train(c, nlist = 16)
+      // each family's stored key, codes compared by value
+      def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+        df.select(fam.storedKey.map(col): _*).collect().map(_.toSeq.map {
+          case b: Array[Byte] => b.toSeq
+          case v => v
+        }).toSet
+      val full = fam.encode(c, model)
+      val shrunk = Similarity.deleteFromIndex(full, forgotten)
+      assert(rows(shrunk) === rows(fam.encode(c.where(slice =!= 1), model)),
+        s"${fam.kind}: deletion left different rows than a rebuild over the retained corpus")
+      // update = delete-then-admit round-trips to the full table
+      val readmitted = Similarity.mergeIndex(fam, shrunk, c.where(slice === 1), model)
+      assert(rows(readmitted) === rows(full), s"${fam.kind}: delete-then-admit did not round-trip")
+    }
+  }
+
+  test("a cold probe refuses an artifact of another family, naming path and both kinds") {
+    // without the kind check an IVF artifact probed as IVF-PQ blamed a
+    // missing residual layout, and a PQ artifact probed as LSH died on a
+    // missing sidecar key
+    val emb = Tables.t(spark, sf001, "embeddings")
+    val q = emb.filter(col("vec_id") % 25 === 0)
+    for ((saved, probed) <- Seq(AnnFamily.Ivf -> AnnFamily.IvfPq, AnnFamily.Pq -> AnnFamily.Lsh)) {
+      val path = s"${IndexStore.tempRoot(spark)}/spec/kind_${saved.kind}"
+      Similarity.saveIndex(spark, sf001, saved, path)
+      val e = intercept[IllegalArgumentException] {
+        Similarity.coldProbe(spark, path, probed, Similarity.corpusOf(emb), q, k = 5)
+      }
+      assert(e.getMessage.contains(path) && e.getMessage.contains(s"'${saved.kind}'") &&
+        e.getMessage.contains(s"expected '${probed.kind}'"), e.getMessage)
+    }
   }
 
   test("standing LSH index: built once, probe agrees with the rebuild path") {
-    val b1 = Similarity.lshIndexFor(spark, sf001)
-    val b2 = Similarity.lshIndexFor(spark, sf001)
+    val b1 = Similarity.indexFor(spark, sf001, AnnFamily.Lsh)
+    val b2 = Similarity.indexFor(spark, sf001, AnnFamily.Lsh)
     assert(b1 eq b2, "bucket table was rebuilt on the second probe")
     val emb = Tables.t(spark, sf001, "embeddings")
     val queries = emb.filter(col("vec_id") % 25 === 0)
     def topSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val probe = topSet(Similarity.lshIndexProbe(spark, sf001, queries, k = 5))
+    val probe = topSet(Similarity.indexProbe(spark, sf001, AnnFamily.Lsh, queries, k = 5))
     // the standing index hashes at the SELECTIVE bit-width (8); the
     // rebuild comparison runs lshTopK at the same width — same planes,
     // same candidates, same re-rank
@@ -249,19 +275,20 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("LSH index maintenance: merged buckets converge; merge is idempotent") {
-    import spark.implicits._
     val emb = Tables.t(spark, sf001, "embeddings")
     val dim = emb.select(size(col("embedding")).as("d")).limit(1).collect()(0).getInt(0)
-    val planes = Similarity.lshPlanesFor(dim)
-    val slice = pmod(col("vec_id"), lit(5L))
-    val index0 = Similarity.lshAssign(emb.where(slice >= 2), planes)
-    val merged = Similarity.mergeLshIndex(index0, emb.where(slice === 1), planes)
-    val rebuilt = Similarity.lshAssign(emb.where(slice =!= 0), planes)
+    val model = AnnModel(planes = Similarity.lshPlanesFor(dim))
+    val c = Similarity.corpusOf(emb)
+    val slice = pmod(col("vid"), lit(5L))
+    val lsh = AnnFamily.Lsh
+    val index0 = lsh.encode(c.where(slice >= 2), model)
+    val merged = Similarity.mergeIndex(lsh, index0, c.where(slice === 1), model)
+    val rebuilt = lsh.encode(c.where(slice =!= 0), model)
     def buckets(df: org.apache.spark.sql.DataFrame): Set[(Long, Int, Int)] =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
     assert(buckets(merged) === buckets(rebuilt),
       "maintained bucket table diverged from a full re-hash")
-    val replayed = Similarity.mergeLshIndex(merged, emb.where(slice === 1), planes)
+    val replayed = Similarity.mergeIndex(lsh, merged, c.where(slice === 1), model)
     assert(replayed.count() === rebuilt.count(),
       "replaying an admitted batch duplicated bucket rows")
   }
@@ -577,7 +604,7 @@ class SimilaritySpec extends SparkSpec {
       spark.range(n.toLong).map { i =>
         val r = new java.util.Random(i)
         (i, Array.fill(dim)(r.nextGaussian()))
-      }.toDF("vec_id", "embedding"), cents)
+      }.toDF("vid", "cv"), cents)
     assert(assigned.select("cell").distinct().count() >= 12,
       "distributed quantizer left most cells empty")
   }
@@ -667,9 +694,10 @@ class SimilaritySpec extends SparkSpec {
     val vecs = (0L until 200L).map(i => (i, Array.fill(12)(rnd.nextGaussian())))
     val emb = vecs.toDF("vec_id", "embedding")
     val planes = Similarity.lshPlanesFor(12)
-    val index = Similarity.lshAssign(emb, planes)
+    val corpus = Similarity.corpusOf(emb)
+    val index = Similarity.lshAssign(corpus, planes)
     val queries = vecs.filter(_._1 % 25 == 0).toDF("vec_id", "embedding")
-    val got = Similarity.lshProbe(index, emb, planes, queries, k = 5)
+    val got = Similarity.lshProbe(index, corpus, planes, queries, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // the pre-r19 pipeline, probe-bucket dropDuplicates included — the
     // exchange the optimization removed must not have been load-bearing

@@ -71,7 +71,7 @@ class PlanAuditSpec extends SparkSpec {
     // re-rank join may shuffle — candidates scale with |batch|, not
     // corpus — but nothing may go cartesian
     val emb = graft.Tables.t(spark, sf0001, "embeddings")
-    val pl = graft.llm.Similarity.lshIndexProbe(spark, sf0001,
+    val pl = graft.llm.Similarity.indexProbe(spark, sf0001, graft.llm.AnnFamily.Lsh,
       emb.where(expr("vec_id % 25 = 0")), k = 5)
       .queryExecution.executedPlan.toString
     assert(pl.contains("BroadcastHashJoin"), s"lsh probe should broadcast:\n$pl")
@@ -90,7 +90,7 @@ class PlanAuditSpec extends SparkSpec {
     // driver-side LUT build / qid→vector map) would surface as a
     // LocalTableScan leaf; the only leaves must be scans and the codes
     // table's checkpoint RDD.
-    val pq = graft.llm.Similarity.pqIndexProbe(spark, sf0001,
+    val pq = graft.llm.Similarity.indexProbe(spark, sf0001, graft.llm.AnnFamily.Pq,
       emb.where(expr("vec_id % 25 = 0")), k = 5)
       .queryExecution.executedPlan.toString
     assert(!pq.contains("LocalTableScan"),
@@ -100,7 +100,7 @@ class PlanAuditSpec extends SparkSpec {
     // codes scan must carry the probed-cell filter (partition pruning on
     // the cell-partitioned standing artifact) and stay fully distributed
     // (no driver round-trip of the query batch), never cartesian
-    val pc = graft.llm.Similarity.ivfPqIndexProbe(spark, sf0001,
+    val pc = graft.llm.Similarity.indexProbe(spark, sf0001, graft.llm.AnnFamily.IvfPq,
       emb.where(expr("vec_id % 25 = 0")), k = 5)
       .queryExecution.executedPlan.toString
     assert(pc.contains("cell#") &&
