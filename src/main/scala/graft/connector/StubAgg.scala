@@ -22,7 +22,8 @@ private[connector] object StubAgg {
   def run(sql: String, colsPart: String, schema: StructType,
       rows: Vector[InternalRow]): Either[String, Array[Byte]] =
     try {
-      val items = splitTop(colsPart).map(parseItem(_, schema))
+      val items = graft.functions.SqlLexer.splitTopLevel(colsPart).map(_.trim).filter(_.nonEmpty)
+        .map(parseItem(_, schema))
       val groupIdx = items.collect { case GroupCol(i) => i }
       val outSchema = StructType(items.map {
         case GroupCol(i) => schema.fields(i)
@@ -51,18 +52,6 @@ private[connector] object StubAgg {
     case d: DecimalType => DecimalType(math.min(38, d.precision + 10), d.scale)
     case ByteType | ShortType | IntegerType | LongType => LongType
     case _ => DoubleType
-  }
-
-  private def splitTop(s: String): Seq[String] = {
-    val parts = Seq.newBuilder[String]
-    var depth = 0; var start = 0
-    s.zipWithIndex.foreach { case (c, i) =>
-      if (c == '(') depth += 1
-      if (c == ')') depth -= 1
-      if (c == ',' && depth == 0) { parts += s.substring(start, i); start = i + 1 }
-    }
-    parts += s.substring(start)
-    parts.result().map(_.trim).filter(_.nonEmpty)
   }
 
   private val aggRe = java.util.regex.Pattern.compile(

@@ -6,6 +6,7 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import graft.functions.SqlLexer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructType}
@@ -629,14 +630,13 @@ final class StubCHServer(tlsContext: Option[javax.net.ssl.SSLContext]) {
             // the real server's error-body shape — CHError.parse reads it
             Left(s"Code: 60. DB::Exception: Table $name doesn't exist. (UNKNOWN_TABLE)")
           case Some(data) =>
-            // the column list between SELECT and FROM
-            val colsPart = sql.substring(sql.toUpperCase.indexOf("SELECT") + 6,
-              sql.toUpperCase.indexOf(" FROM "))
+            val clauses = new StubCHServer.SelectClauses(sql)
+            val colsPart = clauses.body("SELECT")
             if (colsPart.toUpperCase.matches("(?s).*\\b(COUNT|MIN|MAX|SUM)\\s*\\(.*")) {
-              StubAgg.run(sql, colsPart, data.schema, matching(sql, data))
+              StubAgg.run(sql, colsPart, data.schema, matching(clauses, data))
             } else {
               val wanted: Array[Int] =
-                if (colsPart.trim == "*") data.schema.indices.toArray
+                if (colsPart == "*") data.schema.indices.toArray
                 else {
                   val m = java.util.regex.Pattern.compile(identRe).matcher(colsPart)
                   val names = Iterator.continually(m).takeWhile(_.find()).map(unescape).toSeq
@@ -644,20 +644,14 @@ final class StubCHServer(tlsContext: Option[javax.net.ssl.SSLContext]) {
                 }
               // pushed pagination: `LIMIT n [OFFSET m]` or `OFFSET m ROWS`
               // — OFFSET skips first (SQL semantics), LIMIT caps the rest
-              val limit = {
-                val m = java.util.regex.Pattern.compile("(?i)\\bLIMIT\\s+(\\d+)").matcher(sql)
-                if (m.find()) Some(m.group(1).toInt) else None
-              }
-              val offset = {
-                val m = java.util.regex.Pattern.compile("(?i)\\bOFFSET\\s+(\\d+)").matcher(sql)
-                if (m.find()) Some(m.group(1).toInt) else None
-              }
+              val limit = clauses.number("LIMIT")
+              val offset = clauses.number("OFFSET")
               val projSchema = StructType(wanted.toSeq.map(data.schema.fields))
               // a `LIMIT 0` schema probe never reads the rows
               val rows =
                 if (limit.contains(0)) Vector.empty[InternalRow]
                 else {
-                  val all = matching(sql, data)
+                  val all = matching(clauses, data)
                   val shifted = offset.map(all.drop).getOrElse(all)
                   limit.map(shifted.take).getOrElse(shifted)
                 }
@@ -672,22 +666,14 @@ final class StubCHServer(tlsContext: Option[javax.net.ssl.SSLContext]) {
 
   /** The table's rows that pass the SELECT's WHERE, in its ORDER BY order
     * — the stored vector itself when there is neither. */
-  private def matching(sql: String, data: TableData): Vector[InternalRow] = {
-    val where = java.util.regex.Pattern
-      .compile(
-        "(?i)\\sWHERE\\s(.*?)(?:\\s(?:LIMIT\\s+\\d+.*|OFFSET\\s+\\d+.*|ORDER\\s+BY\\s.*|GROUP\\s+BY\\s.*)\\s*$|$)",
-        java.util.regex.Pattern.DOTALL)
-      .matcher(sql)
+  private def matching(clauses: StubCHServer.SelectClauses, data: TableData): Vector[InternalRow] = {
+    val where = clauses.body("WHERE")
     val unsorted =
-      if (where.find()) data.rows.filter(StubWhere.compile(where.group(1), data.schema))
+      if (where.nonEmpty) data.rows.filter(StubWhere.compile(where, data.schema))
       else data.rows
     // pushed TopN arrives as ORDER BY ... LIMIT n — honor the sort
-    val order = java.util.regex.Pattern
-      .compile(
-        "(?i)\\sORDER\\s+BY\\s+(.*?)(?:\\s+LIMIT\\s+\\d+(?:\\s+OFFSET\\s+\\d+)?|\\s+OFFSET\\s+\\d+(?:\\s+ROWS?)?)?\\s*$",
-        java.util.regex.Pattern.DOTALL)
-      .matcher(sql)
-    if (order.find()) sortRows(unsorted, data.schema, order.group(1)) else unsorted
+    val order = clauses.body("ORDER")
+    if (order.nonEmpty) sortRows(unsorted, data.schema, order) else unsorted
   }
 
   /** Evaluate an `ORDER BY a [ASC|DESC] [NULLS FIRST|LAST], ...` clause —
@@ -951,6 +937,38 @@ final class StubCHServer(tlsContext: Option[javax.net.ssl.SSLContext]) {
 }
 
 object StubCHServer {
+  private val clauseWords = Set("SELECT", "FROM", "WHERE", "GROUP", "ORDER", "LIMIT", "OFFSET")
+
+  /** The top-level clauses of a pushed SELECT, found in one lexer walk:
+    * a keyword inside a string literal is text, never a clause. */
+  private final class SelectClauses(sql: String) {
+    private val starts = {
+      val found = scala.collection.mutable.LinkedHashMap.empty[String, (Int, Int)]
+      val w = new SqlLexer.Walk(sql)
+      while (w.nextCode()) if (w.depth == 0 && w.kind == SqlLexer.Word) {
+        val kw = w.upper
+        if (clauseWords(kw) && !found.contains(kw)) {
+          // GROUP BY / ORDER BY: the body starts after BY
+          val from =
+            if (kw == "GROUP" || kw == "ORDER") SqlLexer.nextWord(sql, w.end)._2
+            else w.end
+          found(kw) = (w.start, from)
+        }
+      }
+      found
+    }
+
+    /** The clause's text up to the next clause, trimmed; "" when absent. */
+    def body(kw: String): String = starts.get(kw).fold("") { case (_, from) =>
+      val end = starts.valuesIterator.map(_._1).filter(_ > from).foldLeft(sql.length)(math.min)
+      sql.substring(from, end).trim
+    }
+
+    /** The count a LIMIT / OFFSET clause starts with. */
+    def number(kw: String): Option[Int] =
+      Some(body(kw).takeWhile(Character.isDigit)).filter(_.nonEmpty).map(_.toInt)
+  }
+
   /** [[StubCHServer.load]] cap: sf1-fixture headroom, far below
     * driver-heap danger — the stub is a test harness, not an endpoint. */
   val MaxFixtureRows: Int = 2000000

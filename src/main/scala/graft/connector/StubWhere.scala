@@ -80,27 +80,20 @@ private[connector] object StubWhere {
       else parsePredicate()
     }
 
-    private def parseIdent(): Int = {
+    /** The `q`-quoted token at `pos` ([[CHSql]] backslash-escapes its
+      * quotes), unescaped. */
+    private def quoted(q: Char, what: String): String = {
       ws()
-      require(peek == '`', s"stub WHERE parser: expected ident at $pos in: $s")
-      pos += 1
-      val sb = new StringBuilder
-      while (s(pos) != '`') {
-        if (s(pos) == '\\') { sb += s(pos + 1); pos += 2 } else { sb += s(pos); pos += 1 }
-      }
-      pos += 1
-      schema.fieldIndex(sb.toString)
+      require(pos < s.length && s(pos) == q, s"stub WHERE parser: expected $what at $pos in: $s")
+      val end = graft.functions.SqlLexer.tokenEnd(s, pos)
+      val body = s.substring(pos + 1, end - 1)
+      pos = end
+      body.replaceAll("(?s)\\\\(.)", "$1")
     }
 
-    private def parseStringLit(): String = {
-      ws(); expect('\'')
-      val sb = new StringBuilder
-      while (s(pos) != '\'') {
-        if (s(pos) == '\\') { sb += s(pos + 1); pos += 2 } else { sb += s(pos); pos += 1 }
-      }
-      pos += 1
-      sb.toString
-    }
+    private def parseIdent(): Int = schema.fieldIndex(quoted('`', "ident"))
+
+    private def parseStringLit(): String = quoted('\'', "string")
 
     /** literal → comparable value normalized per column type */
     private def parseLiteral(): Any = {

@@ -110,8 +110,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *                                 (CH's own definition — the quoted unit
   *                                 never parses in Spark's datediff form)
   *
-  * All rewrites are textual but quote/comment-aware: content inside '…',
-  * "…", `…`, -- line comments and &#47;* block comments is never touched.
+  * All rewrites are textual, and [[SqlLexer]] is the one owner of their
+  * lexical rules: every rewrite finds its keywords, lists and clause ends
+  * through the lexer's token walk, so content inside '…', "…", `…`, --
+  * line comments and &#47;* block comments is never touched, and a
+  * fragment spliced into generated text carries no comment.
   */
 class ChSqlParser(delegate: ParserInterface) extends ParserInterface {
 
@@ -163,6 +166,8 @@ class ChSqlParser(delegate: ParserInterface) extends ParserInterface {
 }
 
 object ChSqlRewrite {
+  import SqlLexer.{Walk, isCode, lift, matchParen, nextWord, skipSpace, splitTopLevel, wordAt}
+
   /** name(P)(A) → name(A, P) */
   private val swapParam = Set("quantile", "quantileexact", "quantiletdigest", "uniqupto",
     "quantiledeterministic")
@@ -175,11 +180,6 @@ object ChSqlRewrite {
     "(?is)\\s+FORMAT\\s+[A-Za-z][A-Za-z0-9_]*\\s*$".r
   private val trailingSemi = "(?s)\\s*;\\s*$".r
 
-  /** Trailing `SETTINGS k = v [, ...]` (reference passes the clause
-    * through inside the query string, `src/query.rs:168-197`; typed
-    * registry `src/settings.rs:81-428`). Values: number/ident or
-    * '…'-quoted. Anchored at end-of-text, position re-checked against
-    * quote/comment state before use. */
   /** CH `INTO OUTFILE 'path' [AND STDOUT] [APPEND|TRUNCATE]` — writing
     * the result to a file is a CLIENT-side behavior in CH (the server
     * streams normally); here the result IS a DataFrame the caller
@@ -190,6 +190,10 @@ object ChSqlRewrite {
     ("(?is)\\s+INTO\\s+OUTFILE\\s+'(?:[^']|'')*'" +
       "(?:\\s+(?:AND\\s+STDOUT|APPEND|TRUNCATE))*\\s*$").r
 
+  /** Trailing `SETTINGS k = v [, ...]` (reference passes the clause
+    * through inside the query string, `src/query.rs:168-197`; typed
+    * registry `src/settings.rs:81-428`). Values: number/ident or
+    * '…'-quoted. Anchored at end-of-text; the match must start in code. */
   private val settingsValue = "'(?:[^']|'')*'|[A-Za-z0-9_.+-]+"
   private val settingsTail =
     ("(?is)\\s+SETTINGS\\s+([A-Za-z_][A-Za-z0-9_]*\\s*=\\s*(?:" + settingsValue +
@@ -213,6 +217,49 @@ object ChSqlRewrite {
       java.util.regex.Matcher.quoteReplacement(m.group(1) + mode)
     })
 
+
+  // ------------------------------------------------------------ drivers
+
+  /** The rewrite yielded at the first code token of `sql` where `at`
+    * yields one. */
+  private def firstSite(sql: String)(at: Walk => Option[String]): Option[String] = {
+    val w = new Walk(sql)
+    while (w.nextCode()) {
+      val r = at(w)
+      if (r.isDefined) return r
+    }
+    None
+  }
+
+  /** Applies `site` until it finds nothing left to rewrite: the one driver
+    * of every rewrite that splices text and rescans from the start. */
+  private def everySite(sql: String)(site: String => Option[String]): String = {
+    var cur = sql
+    var next = site(cur)
+    while (next.exists(_ != cur)) { cur = next.get; next = site(cur) }
+    cur
+  }
+
+  private def spliceAll(sql: String)(at: Walk => Option[String]): String =
+    everySite(sql)(firstSite(_)(at))
+
+  /** The parenthesized list right after `at` (past any space): its text,
+    * comments lifted out, and the index after its closer. */
+  private def parenAfter(s: String, at: Int): Option[(String, Int)] = {
+    val j = skipSpace(s, at)
+    if (j >= s.length || s.charAt(j) != '(') None
+    else {
+      val e = matchParen(s, j)
+      if (e < 0) None else Some((lift(s, j + 1, e - 1), e))
+    }
+  }
+
+  private def readNum(s: String, start: Int): (String, Int) = {
+    var i = start
+    while (i < s.length && Character.isDigit(s.charAt(i))) i += 1
+    (s.substring(start, i), i)
+  }
+
   // ------------------------------------------------------------ safe tier
 
   /** The always-on pass. ARRAY JOIN must live here, not in rescue: Spark
@@ -223,32 +270,16 @@ object ChSqlRewrite {
     * followed by a bare JOIN (`FROM t array JOIN u`), which the rewrite
     * would misread; every other rewrite here matches shapes no valid
     * Spark SQL can contain. */
-  def apply(sql: String): String = {
-    var cur = rewriteFinal(rewriteGlobal(
+  def apply(sql: String): String =
+    spliceAll(rewriteFinal(rewriteGlobal(
       rewriteAnyJoin(rewriteAsofJoin(rewriteNumbers(rewriteUntuple(
         rewriteArrayJoin(mapExplain(trailingSemi.replaceFirstIn(sql, ""))))))),
-      globalJoinWords))
-    var changed = true
-    var guard = 0
-    while (changed && guard < 1000) {
-      val next = rewriteOnce(cur)
-      changed = next ne cur
-      cur = next
-      guard += 1
-    }
-    cur
-  }
+      globalJoinWords)))(paramCallAt)
 
   // ---------------------------------------------------------- rescue tier
 
   final case class Rescued(sql: String, settings: Seq[(String, String)])
 
-  /** The parse-failure retry pass: CH clause forms (FORMAT / SETTINGS /
-    * SAMPLE / ARRAY JOIN) that share surface syntax with valid Spark SQL
-    * and therefore only run once Spark's parser has already rejected the
-    * text. Returns the rewritten SQL plus the captured SETTINGS pairs
-    * (minus `join_algorithm`, which becomes a join-strategy hint in the
-    * text itself — per-query, like CH). */
   /** CH `DROP DATABASE/TABLE … SYNC` (harvested: the reference's tests
     * issue `DROP DATABASE IF EXISTS my_db SYNC`) — SYNC forces CH to
     * wait for the drop instead of scheduling it; Spark drops are always
@@ -256,6 +287,12 @@ object ChSqlRewrite {
   private val dropSync =
     "(?is)^(\\s*DROP\\s+(?:DATABASE|SCHEMA|TABLE|VIEW)\\s+.+?)\\s+SYNC\\s*$".r
 
+  /** The parse-failure retry pass: CH clause forms (FORMAT / SETTINGS /
+    * SAMPLE / ARRAY JOIN) that share surface syntax with valid Spark SQL
+    * and therefore only run once Spark's parser has already rejected the
+    * text. Returns the rewritten SQL plus the captured SETTINGS pairs
+    * (minus `join_algorithm`, which becomes a join-strategy hint in the
+    * text itself — per-query, like CH). */
   def rescue(sqlText: String): Rescued = {
     val semi0 = trailingSemi.replaceFirstIn(sqlText, "")
     val semi = dropSync.replaceFirstIn(semi0, "$1")
@@ -321,56 +358,43 @@ object ChSqlRewrite {
 
   private def rewriteCreateTable(sql: String): Option[String] = {
     val n = sql.length
-    val (w1, a1) = readWord(sql, skipWs(sql, 0))
+    val (w1, a1) = nextWord(sql, 0)
     if (!w1.equalsIgnoreCase("CREATE")) return None
-    var j = skipWs(sql, a1)
-    var (w2, a2) = readWord(sql, j)
+    var (w2, a2) = nextWord(sql, a1)
     var orReplace = false
     if (w2.equalsIgnoreCase("OR")) {
-      val (w3, a3) = readWord(sql, skipWs(sql, a2))
+      val (w3, a3) = nextWord(sql, a2)
       if (!w3.equalsIgnoreCase("REPLACE")) return None
       orReplace = true
-      j = skipWs(sql, a3)
-      val t = readWord(sql, j); w2 = t._1; a2 = t._2
+      val t = nextWord(sql, a3); w2 = t._1; a2 = t._2
     }
     if (!w2.equalsIgnoreCase("TABLE")) return None
-    var k = skipWs(sql, a2)
+    var k = skipSpace(sql, a2)
     var ifNotExists = false
-    val (wIf, aIf) = readWord(sql, k)
+    val (wIf, aIf) = wordAt(sql, k)
     if (wIf.equalsIgnoreCase("IF")) {
-      val (wn, an) = readWord(sql, skipWs(sql, aIf))
-      val (we, ae) = readWord(sql, skipWs(sql, an))
+      val (wn, an) = nextWord(sql, aIf)
+      val (we, ae) = nextWord(sql, an)
       if (wn.equalsIgnoreCase("NOT") && we.equalsIgnoreCase("EXISTS")) {
-        ifNotExists = true; k = skipWs(sql, ae)
+        ifNotExists = true; k = skipSpace(sql, ae)
       } else return None
     }
-    // qualified, possibly backquoted table name (dot-joined segments)
-    var p = k
-    var nameOk = p < n
-    var nameDone = false
-    while (nameOk && !nameDone) {
-      if (p < n && (sql.charAt(p) == '`' || sql.charAt(p) == '"')) p = skipQuoted(sql, p)
-      else {
-        val (w, after) = readWord(sql, p)
-        if (w.isEmpty) nameOk = false else p = after
-      }
-      if (nameOk) { if (p < n && sql.charAt(p) == '.') p += 1 else nameDone = true }
-    }
-    if (!nameOk) return None
+    // qualified, possibly quoted table name
+    val p = SqlLexer.qualifiedName(sql, k).getOrElse(return None)._1
     val nameText = sql.substring(k, p).trim
-    if (nameText.isEmpty) return None
     // `ON CLUSTER x` (distributed DDL) sits between name and column
     // list; Spark's one-catalog DDL is cluster-wide by construction, so
     // the clause drops
-    var afterName = skipWs(sql, p)
-    val (wOn, aOn) = readWord(sql, afterName)
+    var afterName = skipSpace(sql, p)
+    val (wOn, aOn) = wordAt(sql, afterName)
     if (wOn.equalsIgnoreCase("ON")) {
-      val (wCl, aCl) = readWord(sql, skipWs(sql, aOn))
+      val (wCl, aCl) = nextWord(sql, aOn)
       if (!wCl.equalsIgnoreCase("CLUSTER")) return None
-      var c = skipWs(sql, aCl)
-      if (c < n && (sql.charAt(c) == '`' || sql.charAt(c) == '\'')) c = skipQuoted(sql, c)
-      else { val (wid, aid) = readWord(sql, c); if (wid.isEmpty) return None; c = aid }
-      afterName = skipWs(sql, c)
+      val c = skipSpace(sql, aCl)
+      val cEnd =
+        if (c < n && (sql.charAt(c) == '`' || sql.charAt(c) == '\'')) SqlLexer.tokenEnd(sql, c)
+        else { val (wid, aid) = wordAt(sql, c); if (wid.isEmpty) return None; aid }
+      afterName = skipSpace(sql, cEnd)
     }
     // column list is OPTIONAL: CH CTAS is `CREATE TABLE t ENGINE = … AS SELECT …`
     val (colsInsideOpt, tailStart) =
@@ -391,46 +415,33 @@ object ChSqlRewrite {
     var ctasBody: Option[String] = None
     // expression text from `at` to the next top-level DDL clause word
     def clauseExpr(at: Int): (String, Int) = {
-      var i = at
-      while (i < tail.length) {
-        val c = tail.charAt(i)
-        if (c == '\'' || c == '"' || c == '`') i = skipQuoted(tail, i)
-        else if (c == '(') { val e = matchParen(tail, i); if (e < 0) return (tail.substring(at, tail.length).trim, tail.length); i = e }
-        else if (Character.isJavaIdentifierStart(c)) {
-          val (w, aw) = readWord(tail, i)
-          if (ddlTailWords.contains(w.toUpperCase(java.util.Locale.ROOT)))
-            return (tail.substring(at, i).trim, i)
-          i = aw
-        } else i += 1
-      }
-      (tail.substring(at).trim, tail.length)
+      val (end, _) = SqlLexer.clauseEnd(tail, at, ddlTailWords)
+      (lift(tail, at, end).trim, end)
     }
-    var t0 = skipWs(tail, 0)
+    var t0 = skipSpace(tail, 0)
     while (t0 < tail.length) {
-      val (w, aw) = readWord(tail, t0)
+      val (w, aw) = wordAt(tail, t0)
       if (w.isEmpty) return None
       w.toUpperCase(java.util.Locale.ROOT) match {
         case "ENGINE" =>
-          var q = skipWs(tail, aw)
-          if (q < tail.length && tail.charAt(q) == '=') q = skipWs(tail, q + 1)
-          val (en, ae) = readWord(tail, q)
+          var q = skipSpace(tail, aw)
+          if (q < tail.length && tail.charAt(q) == '=') q = skipSpace(tail, q + 1)
+          val (en, ae) = wordAt(tail, q)
           if (en.isEmpty) return None
           engineName = Some(en)
           var after = ae
-          val qa = skipWs(tail, ae)
+          val qa = skipSpace(tail, ae)
           if (qa < tail.length && tail.charAt(qa) == '(') {
-            val e2 = matchParen(tail, qa)
-            if (e2 < 0) return None
-            engineArgs = splitTopLevel(tail.substring(qa + 1, e2 - 1))
-              .map(_.trim).filter(_.nonEmpty)
+            val (args, e2) = parenAfter(tail, qa).getOrElse(return None)
+            engineArgs = splitTopLevel(args).map(_.trim).filter(_.nonEmpty)
             after = e2
           }
-          t0 = skipWs(tail, after)
+          t0 = skipSpace(tail, after)
         case "ORDER" | "PRIMARY" | "PARTITION" | "SAMPLE" =>
-          val (kw2, a2b) = readWord(tail, skipWs(tail, aw))
+          val (kw2, a2b) = nextWord(tail, aw)
           val expected = if (w.equalsIgnoreCase("PRIMARY")) "KEY" else "BY"
           if (!kw2.equalsIgnoreCase(expected)) return None
-          val (expText, after) = clauseExpr(skipWs(tail, a2b))
+          val (expText, after) = clauseExpr(skipSpace(tail, a2b))
           if (expText.isEmpty) return None
           val unTupled = {
             val e = expText.trim
@@ -450,20 +461,19 @@ object ChSqlRewrite {
           }
           t0 = after
         case "SETTINGS" => // index_granularity etc. — storage knobs, drop
-          val (_, after) = clauseExpr(skipWs(tail, aw))
-          t0 = after
+          t0 = clauseExpr(skipSpace(tail, aw))._2
         case "COMMENT" =>
-          val q = skipWs(tail, aw)
+          val q = skipSpace(tail, aw)
           if (q >= tail.length || tail.charAt(q) != '\'') return None
-          val e = skipQuoted(tail, q)
+          val e = SqlLexer.tokenEnd(tail, q)
           tableComment = Some(tail.substring(q, e))
-          t0 = skipWs(tail, e)
+          t0 = skipSpace(tail, e)
         case "TTL" =>
           throw new IllegalArgumentException(
             "CH DDL: TTL has no Spark analog (no background expiry); run the " +
               "expiry as a maintenance DELETE/overwrite job instead")
         case "AS" => // CH CTAS: the rest is the populating query
-          ctasBody = Some(tail.substring(skipWs(tail, aw)))
+          ctasBody = Some(tail.substring(skipSpace(tail, aw)))
           t0 = tail.length
         case _ => return None // unknown tail — not CH DDL we understand
       }
@@ -478,7 +488,7 @@ object ChSqlRewrite {
 
     // ---- column list ----
     val cols = colsInsideOpt.toSeq.flatMap(inside =>
-      splitTopLevel(inside).map(_.trim).filter(_.nonEmpty).map(mapDdlColumn))
+      splitTopLevel(lift(inside)).map(_.trim).filter(_.nonEmpty).map(mapDdlColumn))
 
     // FINAL / SAMPLE registry wiring (the CH-DDL contract these rewrites document)
     val plainTable = {
@@ -514,32 +524,22 @@ object ChSqlRewrite {
     * drop per Spark support; MATERIALIZED/ALIAS/EPHEMERAL throw. */
   private def mapDdlColumn(cd: String): String = {
     val n = cd.length
-    var ci = 0
-    val name =
+    val (name, ci) =
       if (cd.charAt(0) == '`' || cd.charAt(0) == '"') {
-        val e = skipQuoted(cd, 0); ci = e; cd.substring(0, e)
+        val e = SqlLexer.tokenEnd(cd, 0); (cd.substring(0, e), e)
       } else {
-        val (nm, an) = readWord(cd, 0)
+        val (nm, an) = wordAt(cd, 0)
         if (nm.isEmpty)
           throw new IllegalArgumentException(s"CH DDL: unparseable column definition '$cd'")
-        ci = an; nm
+        (nm, an)
       }
-    // type text: up to the first TOP-LEVEL modifier keyword
-    var i = skipWs(cd, ci)
-    val typeStart = i
-    var typeEnd = n
-    var modAt = -1
-    while (i < n && modAt < 0) {
-      val c = cd.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(cd, i)
-      else if (c == '(') { val e = matchParen(cd, i); i = if (e < 0) n else e }
-      else if (Character.isJavaIdentifierStart(c)) {
-        val (w, aw) = readWord(cd, i)
-        if (ddlColModWords.contains(w.toUpperCase(java.util.Locale.ROOT)) && i > typeStart) {
-          modAt = i; typeEnd = i
-        } else i = aw
-      } else i += 1
-    }
+    // type text: up to the first TOP-LEVEL modifier keyword after its
+    // first token
+    val typeStart = skipSpace(cd, ci)
+    val typeEnd =
+      if (typeStart < n)
+        SqlLexer.clauseEnd(cd, SqlLexer.tokenEnd(cd, typeStart), ddlColModWords)._1
+      else n
     val typeText = cd.substring(typeStart, typeEnd).trim
     val sparkType =
       try {
@@ -548,45 +548,33 @@ object ChSqlRewrite {
       } catch { case scala.util.control.NonFatal(_) => typeText } // let Spark's parser judge
     val sb = new StringBuilder(name + " " + sparkType)
     // modifiers
-    var m = if (modAt < 0) n else modAt
+    var m = typeEnd
     while (m < n) {
-      val (w, aw) = readWord(cd, skipWs(cd, m))
+      val (w, aw) = nextWord(cd, m)
       if (w.isEmpty) { m = n }
       else w.toUpperCase(java.util.Locale.ROOT) match {
         case "NOT" =>
-          val (w2, a2) = readWord(cd, skipWs(cd, aw))
+          val (w2, a2) = nextWord(cd, aw)
           if (!w2.equalsIgnoreCase("NULL"))
             throw new IllegalArgumentException(s"CH DDL: unexpected NOT in '$cd'")
           sb ++= " NOT NULL"; m = a2
         case "NULL" => m = aw // CH explicit-nullable marker; Spark default
         case "DEFAULT" =>
           // expression until the next top-level modifier keyword
-          var e = skipWs(cd, aw)
-          var stop = -1
-          while (e < n && stop < 0) {
-            val c = cd.charAt(e)
-            if (c == '\'' || c == '"' || c == '`') e = skipQuoted(cd, e)
-            else if (c == '(') { val p2 = matchParen(cd, e); e = if (p2 < 0) n else p2 }
-            else if (Character.isJavaIdentifierStart(c)) {
-              val (w2, a2) = readWord(cd, e)
-              if (ddlColModWords.contains(w2.toUpperCase(java.util.Locale.ROOT)) &&
-                  !w2.equalsIgnoreCase("NULL")) stop = e
-              else e = a2
-            } else e += 1
-          }
-          val end = if (stop < 0) n else stop
-          sb ++= " DEFAULT " + cd.substring(skipWs(cd, aw), end).trim
+          val from = skipSpace(cd, aw)
+          val (end, _) = SqlLexer.clauseEnd(cd, from, ddlColModWords - "NULL")
+          sb ++= " DEFAULT " + cd.substring(from, end).trim
           m = end
         case "CODEC" => // per-column compression: storage knob, drop
-          val q = skipWs(cd, aw)
+          val q = skipSpace(cd, aw)
           m = if (q < n && cd.charAt(q) == '(') {
             val e = matchParen(cd, q); if (e < 0) n else e
           } else aw
         case "COMMENT" =>
-          val q = skipWs(cd, aw)
+          val q = skipSpace(cd, aw)
           if (q >= n || cd.charAt(q) != '\'')
             throw new IllegalArgumentException(s"CH DDL: COMMENT expects a string in '$cd'")
-          val e = skipQuoted(cd, q)
+          val e = SqlLexer.tokenEnd(cd, q)
           sb ++= " COMMENT " + cd.substring(q, e)
           m = e
         case bad @ ("MATERIALIZED" | "ALIAS" | "EPHEMERAL" | "TTL") =>
@@ -597,7 +585,7 @@ object ChSqlRewrite {
           throw new IllegalArgumentException(
             s"CH DDL: unsupported column modifier '$other' in '$cd'")
       }
-      m = skipWs(cd, m)
+      m = skipSpace(cd, m)
     }
     sb.toString
   }
@@ -688,110 +676,56 @@ object ChSqlRewrite {
       v.substring(1, v.length - 1).replace("''", "'")
     else v
 
-  /** Insert `/&#42;+ hint(relations…) &#42;/` after the first SELECT
-    * keyword outside quotes/comments. Join-strategy hints only take
-    * effect on NAMED relations (a parameterless hint wraps the whole
-    * plan and never reaches an inner join's sides), so the hint lists
-    * every table referenced after a FROM/JOIN token; names a relation
-    * doesn't match are ignored by Spark with a warning. */
+  /** Insert `/&#42;+ hint(relations…) &#42;/` after the first top-level
+    * SELECT keyword in code. Join-strategy hints only take effect on
+    * NAMED relations (a parameterless hint wraps the whole plan and
+    * never reaches an inner join's sides), so the hint lists every table
+    * referenced after a FROM/JOIN token; names a relation doesn't match
+    * are ignored by Spark with a warning. */
   private def injectHint(sql: String, hint: String): String = {
     val rels = collectRelationNames(sql)
     if (rels.isEmpty) return sql
     val hintText = s"$hint(${rels.mkString(", ")})"
-    val n = sql.length
-    var i = 0
-    var depth = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        // depth 0: a WITH-CTE query's first SELECT lives inside the CTE
-        // parens — the hint must land on the MAIN query's SELECT
-        if (depth == 0 && sql.substring(start, i).equalsIgnoreCase("SELECT"))
-          return sql.substring(0, i) + s" /*+ $hintText */" + sql.substring(i)
-      } else i += 1
-    }
-    sql
+    // depth 0: a WITH-CTE query's first SELECT lives inside the CTE
+    // parens — the hint must land on the MAIN query's SELECT
+    firstSite(sql) { w =>
+      if (w.depth == 0 && w.isWord("SELECT"))
+        Some(sql.substring(0, w.end) + s" /*+ $hintText */" + sql.substring(w.end))
+      else None
+    }.getOrElse(sql)
   }
 
   /** Unqualified table names following FROM/JOIN tokens (subqueries skip
     * the paren; their inner FROM is picked up as the scan continues). */
   private def collectRelationNames(sql: String): Seq[String] = {
     val out = scala.collection.mutable.LinkedHashSet.empty[String]
-    val n = sql.length
-    var i = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        val w = sql.substring(start, i)
-        if (w.equalsIgnoreCase("FROM") || w.equalsIgnoreCase("JOIN")) {
-          var p = skipWs(sql, i)
-          if (p < n && sql.charAt(p) != '(') {
-            var lastPart = ""
-            var done = false
-            while (!done) {
-              if (p < n && sql.charAt(p) == '`') {
-                val e = skipQuoted(sql, p)
-                lastPart = sql.substring(p + 1, e - 1); p = e
-              } else {
-                val (word, after) = readWord(sql, p)
-                if (word.isEmpty) done = true else { lastPart = word; p = after }
-              }
-              if (!done) { if (p < n && sql.charAt(p) == '.') p += 1 else done = true }
-            }
-            if (lastPart.nonEmpty) out += lastPart
-            i = p
-          }
-        }
-      } else i += 1
+    val w = new Walk(sql)
+    while (w.nextCode()) if (w.isWord("FROM") || w.isWord("JOIN")) {
+      val p = skipSpace(sql, w.end)
+      if (p < sql.length && sql.charAt(p) != '(')
+        SqlLexer.qualifiedName(sql, p).foreach { case (e, last) => out += last; w.jump(e) }
     }
     out.toSeq
   }
 
   /** Strip a trailing SETTINGS tail and return its (key, value) pairs
     * (values unquoted). The `$`-anchored match is re-checked to start
-    * outside any literal/comment before stripping. */
+    * in code before stripping. */
   private def stripSettings(sql: String): (String, Seq[(String, String)]) =
     settingsTail.findFirstMatchIn(sql) match {
-      case Some(m) if outsideLiterals(sql, m.start) =>
+      case Some(m) if isCode(sql, m.start) =>
         val pairs = settingsPair.findAllMatchIn(m.group(1)).map(p =>
           p.group(1) -> unquote(p.group(2))).toSeq
         (sql.substring(0, m.start), pairs)
       case _ => (sql, Nil)
     }
 
-  /** Regex strip guarded by the literal/comment scanner. */
+  /** Regex strip guarded by the lexer: the match must start in code. */
   private def stripIfOutside(sql: String, re: scala.util.matching.Regex): String =
     re.findFirstMatchIn(sql) match {
-      case Some(m) if outsideLiterals(sql, m.start) => sql.substring(0, m.start)
+      case Some(m) if isCode(sql, m.start) => sql.substring(0, m.start)
       case _ => sql
     }
-
-  /** True when `idx` is reachable outside every quote and comment. */
-  private def outsideLiterals(sql: String, idx: Int): Boolean = {
-    var i = 0
-    while (i < idx) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < sql.length && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < sql.length && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else i += 1
-    }
-    // a literal/comment opened before idx and spanning past it makes the
-    // scanner jump over idx (i > idx); landing exactly on it means outside
-    i == idx
-  }
 
   // ------------------------------------------------------------- SAMPLE k
 
@@ -817,63 +751,35 @@ object ChSqlRewrite {
       else None
     } else try Some(num.toDouble) catch { case _: NumberFormatException => None }
 
-  private def rewriteSample(sql: String): String = {
-    val n = sql.length
-    var i = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        if (sql.substring(start, i).equalsIgnoreCase("FROM")) {
-          // qualified, possibly backquoted table identifier
-          var p = skipWs(sql, i)
-          val identStart = p
-          var lastPart = ""
-          var ok = p < n
-          var done = false
-          while (ok && !done) {
-            if (p < n && sql.charAt(p) == '`') {
-              val e = skipQuoted(sql, p)
-              lastPart = sql.substring(p + 1, e - 1); p = e
-            } else {
-              val (w, after) = readWord(sql, p)
-              if (w.isEmpty) ok = false else { lastPart = w; p = after }
-            }
-            if (ok) { if (p < n && sql.charAt(p) == '.') p += 1 else done = true }
-          }
-          if (ok) {
-            val identEnd = p
-            val (w2, afterW2) = readWord(sql, skipWs(sql, p))
-            if (w2.equalsIgnoreCase("SAMPLE")) {
-              var r = skipWs(sql, afterW2)
-              val numStart = r
-              while (r < n && (Character.isDigit(sql.charAt(r)) ||
-                sql.charAt(r) == '.' || sql.charAt(r) == '/')) r += 1
-              val num = sql.substring(numStart, r)
-              parseFraction(num) match {
-                case Some(f) if f > 0 && f < 1 =>
-                  val tableSql = sql.substring(identStart, identEnd)
-                  val key = Option(sampleKeys.get(lastPart.toLowerCase(java.util.Locale.ROOT)))
-                    .getOrElse(throw new IllegalArgumentException(
-                      s"SAMPLE: no sampling key declared for table '$lastPart' — " +
-                        "register one with graft.functions.ChSqlRewrite.registerSampleKey" +
-                        "(table, keyExpr) (ClickHouse likewise requires SAMPLE BY in the DDL)"))
-                  val threshold = f"${math.floor(f * 65536).toInt}%04x"
-                  val repl = s"(SELECT * FROM $tableSql WHERE substring(md5(" +
-                    s"CAST($key AS STRING)), 1, 4) < '$threshold') $lastPart"
-                  return rewriteSample(sql.substring(0, identStart) + repl + sql.substring(r))
-                case _ => () // SAMPLE n (approx row count) unsupported: fail loudly
-              }
-            }
-          }
+
+  private def rewriteSample(sql: String): String = spliceAll(sql) { w =>
+    val s = w.s
+    lazy val identStart = skipSpace(s, w.end)
+    if (!w.isWord("FROM")) None
+    else SqlLexer.qualifiedName(s, identStart).flatMap { case (identEnd, lastPart) =>
+      val (w2, afterW2) = nextWord(s, identEnd)
+      if (!w2.equalsIgnoreCase("SAMPLE")) None
+      else {
+        val numStart = skipSpace(s, afterW2)
+        var r = numStart
+        while (r < s.length && (Character.isDigit(s.charAt(r)) ||
+          s.charAt(r) == '.' || s.charAt(r) == '/')) r += 1
+        parseFraction(s.substring(numStart, r)) match {
+          case Some(f) if f > 0 && f < 1 =>
+            val tableSql = s.substring(identStart, identEnd)
+            val key = Option(sampleKeys.get(lastPart.toLowerCase(java.util.Locale.ROOT)))
+              .getOrElse(throw new IllegalArgumentException(
+                s"SAMPLE: no sampling key declared for table '$lastPart' — " +
+                  "register one with graft.functions.ChSqlRewrite.registerSampleKey" +
+                  "(table, keyExpr) (ClickHouse likewise requires SAMPLE BY in the DDL)"))
+            val threshold = f"${math.floor(f * 65536).toInt}%04x"
+            val repl = s"(SELECT * FROM $tableSql WHERE substring(md5(" +
+              s"CAST($key AS STRING)), 1, 4) < '$threshold') $lastPart"
+            Some(s.substring(0, identStart) + repl + s.substring(r))
+          case _ => None // SAMPLE n (approx row count) unsupported: fail loudly
         }
-      } else i += 1
+      }
     }
-    sql
   }
 
   // ----------------------------------------------------------- ARRAY JOIN
@@ -896,104 +802,87 @@ object ChSqlRewrite {
     *     AMBIGUOUS_REFERENCE in Spark, so there is no faithful textual
     *     rewrite; spell `ARRAY JOIN arr AS arr_elem`.)
     */
-  private def rewriteArrayJoin(sql: String): String = {
-    val stops = Set("WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "OFFSET",
-      "SETTINGS", "FORMAT", "UNION", "INTERSECT", "EXCEPT", "WINDOW", "QUALIFY",
-      "JOIN", "LEFT", "RIGHT", "FULL", "INNER", "CROSS")
-    val asAlias = java.util.regex.Pattern
-      .compile("(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*|`[^`]+`)\\s*$")
-    val n = sql.length
-    var i = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        val w1 = sql.substring(start, i)
-        if (w1.equalsIgnoreCase("ARRAY") || w1.equalsIgnoreCase("LEFT")) {
-          var p = skipWs(sql, i)
-          var left = false
-          var ok = w1.equalsIgnoreCase("ARRAY")
-          if (w1.equalsIgnoreCase("LEFT")) {
-            val (word, after) = readWord(sql, p)
-            if (word.equalsIgnoreCase("ARRAY")) { left = true; ok = true; p = skipWs(sql, after) }
-          }
-          if (ok) {
-            val (join, afterJoin) = readWord(sql, p)
-            if (join.equalsIgnoreCase("JOIN")) {
-              // parse the comma-separated item list up to a depth-0 stop
-              var q = skipWs(sql, afterJoin)
-              val items = scala.collection.mutable.ListBuffer.empty[(String, String)]
-              var listEnd = -1
-              var bail = false
-              var more = true
-              while (more && !bail && q < n) {
-                val itemStart = q
-                var depth = 0
-                var itemEnd = -1
-                var comma = false
-                while (q < n && itemEnd < 0) {
-                  val ch = sql.charAt(q)
-                  if (ch == '\'' || ch == '"' || ch == '`') q = skipQuoted(sql, q)
-                  else if (ch == '(') { depth += 1; q += 1 }
-                  else if (ch == ')') {
-                    if (depth == 0) itemEnd = q else { depth -= 1; q += 1 }
-                  } else if (ch == ',' && depth == 0) { itemEnd = q; comma = true }
-                  else if (Character.isJavaIdentifierStart(ch) && depth == 0) {
-                    val ws = q
-                    while (q < n && Character.isJavaIdentifierPart(sql.charAt(q))) q += 1
-                    if (stops.contains(sql.substring(ws, q).toUpperCase)) itemEnd = ws
-                  } else q += 1
-                }
-                if (itemEnd < 0) itemEnd = q
-                val segment = sql.substring(itemStart, itemEnd).trim
-                val m = asAlias.matcher(segment)
-                if (m.matches()) items += (m.group(1) -> m.group(2))
-                else bail = true
-                if (!bail) {
-                  if (comma) q = skipWs(sql, itemEnd + 1)
-                  else { listEnd = itemEnd; more = false }
-                }
-              }
-              if (!bail && items.nonEmpty && listEnd >= 0) {
-                val repl =
-                  if (items.length == 1) {
-                    val (e0, a0) = items.head
-                    val fn = if (left) "explode_outer" else "explode"
-                    // CH ARRAY JOIN over a MAP: the element is a
-                    // (key, value) tuple read as `m.key`/`m.value`
-                    // (reference tests/arrow.rs map case). Spark's map
-                    // explode emits exactly those two columns — when
-                    // the query reads the alias THAT way, emit the bare
-                    // generator alias so key/value surface under it;
-                    // the bare-alias array reading keeps the AS form.
-                    val bare = a0.stripPrefix("`").stripSuffix("`")
-                    val usesKv = java.util.regex.Pattern.compile(
-                      "(?is)\\b" + java.util.regex.Pattern.quote(bare) +
-                        "\\s*\\.\\s*(key|value)\\b").matcher(sql).find()
-                    if (usesKv) s"LATERAL VIEW $fn($e0) $a0 "
-                    else s"LATERAL VIEW $fn($e0) ch_aj_ AS $a0 "
-                  } else {
-                    val (e0, a0) = items.head
-                    val fn = if (left) "posexplode_outer" else "posexplode"
-                    val head = s"LATERAL VIEW $fn($e0) ch_aj_0 AS ch_aj_pos_, $a0 "
-                    val rest = items.toList.zipWithIndex.drop(1).map { case ((e, a), j) =>
-                      s"LATERAL VIEW explode(array(get($e, ch_aj_pos_))) ch_aj_$j AS $a "
-                    }
-                    head + rest.mkString
-                  }
-                return rewriteArrayJoin(
-                  sql.substring(0, start) + repl + sql.substring(listEnd))
-              }
-            }
-          }
-        }
-      } else i += 1
+  private val arrayJoinStops = Set("WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "OFFSET",
+    "SETTINGS", "FORMAT", "UNION", "INTERSECT", "EXCEPT", "WINDOW", "QUALIFY",
+    "JOIN", "LEFT", "RIGHT", "FULL", "INNER", "CROSS")
+
+  /** `expr AS alias` — an ARRAY JOIN or star REPLACE item. */
+  private val asAlias = java.util.regex.Pattern
+    .compile("(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*|`[^`]+`)\\s*$")
+
+  private def rewriteArrayJoin(sql: String): String = spliceAll(sql)(arrayJoinAt)
+
+  private def arrayJoinAt(w: Walk): Option[String] = {
+    val sql = w.s
+    val left = w.isWord("LEFT")
+    if (!left && !w.isWord("ARRAY")) return None
+    var p = w.end
+    if (left) {
+      val (word, after) = nextWord(sql, p)
+      if (!word.equalsIgnoreCase("ARRAY")) return None
+      p = after
     }
-    sql
+    val (join, afterJoin) = nextWord(sql, p)
+    if (!join.equalsIgnoreCase("JOIN")) return None
+    // the comma-separated item list, up to a top-level stop word or the
+    // closer of the enclosing level
+    val items = scala.collection.mutable.ListBuffer.empty[(String, String)]
+    val it = new Walk(sql, afterJoin)
+    var itemStart = -1
+    var itemEnd = -1
+    var listEnd = -1
+    while (listEnd < 0) {
+      val more = it.nextCode()
+      val atEnd = !more || it.closesScope ||
+        (it.depth == 0 && it.kind == SqlLexer.Word && arrayJoinStops.contains(it.upper))
+      if (atEnd || (it.depth == 0 && it.isSym(','))) {
+        if (itemStart < 0) return None
+        val m = asAlias.matcher(lift(sql, itemStart, itemEnd).trim)
+        if (!m.matches()) return None
+        items += (m.group(1) -> m.group(2))
+        itemStart = -1
+        if (atEnd) listEnd = if (more) it.start else sql.length
+      } else {
+        if (itemStart < 0) itemStart = it.start
+        itemEnd = it.end
+      }
+    }
+    val repl =
+      if (items.length == 1) {
+        val (e0, a0) = items.head
+        val fn = if (left) "explode_outer" else "explode"
+        // CH ARRAY JOIN over a MAP: the element is a (key, value) tuple
+        // read as `m.key`/`m.value` (reference tests/arrow.rs map case).
+        // Spark's map explode emits exactly those two columns — when the
+        // query reads the alias THAT way, emit the bare generator alias
+        // so key/value surface under it; the bare-alias array reading
+        // keeps the AS form.
+        if (readsKeyValue(sql, a0.stripPrefix("`").stripSuffix("`")))
+          s"LATERAL VIEW $fn($e0) $a0 "
+        else s"LATERAL VIEW $fn($e0) ch_aj_ AS $a0 "
+      } else {
+        val (e0, a0) = items.head
+        val fn = if (left) "posexplode_outer" else "posexplode"
+        val head = s"LATERAL VIEW $fn($e0) ch_aj_0 AS ch_aj_pos_, $a0 "
+        val rest = items.toList.zipWithIndex.drop(1).map { case ((e, a), j) =>
+          s"LATERAL VIEW explode(array(get($e, ch_aj_pos_))) ch_aj_$j AS $a "
+        }
+        head + rest.mkString
+      }
+    Some(sql.substring(0, w.start) + repl + sql.substring(listEnd))
+  }
+
+  /** True when `alias.key` or `alias.value` appears in code. */
+  private def readsKeyValue(sql: String, alias: String): Boolean = {
+    val w = new Walk(sql)
+    while (w.nextCode()) if (w.isWord(alias)) {
+      val dot = skipSpace(sql, w.end)
+      if (dot < sql.length && sql.charAt(dot) == '.') {
+        val (field, _) = nextWord(sql, dot + 1)
+        if (field.equalsIgnoreCase("key") || field.equalsIgnoreCase("value")) return true
+      }
+    }
+    false
   }
 
   // ----------------------------------------------------------- ASOF JOIN
@@ -1016,45 +905,8 @@ object ChSqlRewrite {
     * fits the probe shape, a loud error when it doesn't — because CH
     * spellings mean what CH means here; rename such an alias to keep
     * Spark's reading. */
-  private def rewriteAsofJoin(sql: String): String = {
-    val n = sql.length
-    var i = 0
-    var prevIdent = "" // last plain identifier before the join phrase —
-    //                    the left relation's alias for the USING form
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        val w1 = sql.substring(start, i)
-        // accept ASOF [LEFT|INNER] JOIN and LEFT ASOF JOIN
-        var left = false
-        var joinAt = -1
-        if (w1.equalsIgnoreCase("ASOF")) {
-          val (w2, a2) = readWord(sql, skipWs(sql, i))
-          if (w2.equalsIgnoreCase("JOIN")) joinAt = a2
-          else if (w2.equalsIgnoreCase("LEFT") || w2.equalsIgnoreCase("INNER")) {
-            val (w3, a3) = readWord(sql, skipWs(sql, a2))
-            if (w3.equalsIgnoreCase("JOIN")) { left = w2.equalsIgnoreCase("LEFT"); joinAt = a3 }
-          }
-        } else if (w1.equalsIgnoreCase("LEFT")) {
-          val (w2, a2) = readWord(sql, skipWs(sql, i))
-          if (w2.equalsIgnoreCase("ASOF")) {
-            val (w3, a3) = readWord(sql, skipWs(sql, a2))
-            if (w3.equalsIgnoreCase("JOIN")) { left = true; joinAt = a3 }
-          }
-        }
-        if (joinAt > 0) {
-          return rewriteOneAsof(sql, start, joinAt, left, prevIdent)
-        }
-        prevIdent = w1
-      } else { if (!Character.isWhitespace(c)) prevIdent = ""; i += 1 }
-    }
-    sql
-  }
+  private def rewriteAsofJoin(sql: String): String =
+    everySite(sql)(lateralJoinSite(_, ordered = true))
 
   /** CH `[LEFT] ANY JOIN r ON equi-conds` (also `ANY LEFT JOIN`): at
     * most ONE right match per left row, the pick arbitrary — exactly a
@@ -1064,63 +916,53 @@ object ChSqlRewrite {
     * multiplying matched rows). `ANY RIGHT JOIN` (right-side
     * deduplication against the left) has no lateral analog and fails
     * loudly. */
-  private def rewriteAnyJoin(sql: String): String = {
-    val n = sql.length
-    var i = 0
-    var prevIdent = ""
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        val w1 = sql.substring(start, i)
+  private def rewriteAnyJoin(sql: String): String =
+    everySite(sql)(lateralJoinSite(_, ordered = false))
+
+  /** The first ASOF (`ordered`) or ANY join phrase of `sql`, rewritten:
+    * `KW [LEFT|INNER] JOIN` or `LEFT KW JOIN`. */
+  private def lateralJoinSite(sql: String, ordered: Boolean): Option[String] = {
+    val kw = if (ordered) "ASOF" else "ANY"
+    val w = new Walk(sql)
+    var prevIdent = "" // last plain identifier before the join phrase —
+    //                    the left relation's alias for the USING form
+    while (w.nextCode()) {
+      if (w.kind == SqlLexer.Word) {
         var left = false
         var joinAt = -1
-        if (w1.equalsIgnoreCase("ANY")) {
-          val (w2, a2) = readWord(sql, skipWs(sql, i))
+        if (w.isWord(kw)) {
+          val (w2, a2) = nextWord(sql, w.end)
           if (w2.equalsIgnoreCase("JOIN")) joinAt = a2
           else if (w2.equalsIgnoreCase("LEFT") || w2.equalsIgnoreCase("INNER")) {
-            val (w3, a3) = readWord(sql, skipWs(sql, a2))
+            val (w3, a3) = nextWord(sql, a2)
             if (w3.equalsIgnoreCase("JOIN")) { left = w2.equalsIgnoreCase("LEFT"); joinAt = a3 }
-          } else if (w2.equalsIgnoreCase("RIGHT")) {
-            val (w3, _) = readWord(sql, skipWs(sql, a2))
-            if (w3.equalsIgnoreCase("JOIN"))
-              throw new IllegalArgumentException(
-                "ANY RIGHT JOIN is not supported: spell it as a LEFT-side " +
-                  "ANY join from the other table")
-          }
-        } else if (w1.equalsIgnoreCase("LEFT")) {
-          val (w2, a2) = readWord(sql, skipWs(sql, i))
-          if (w2.equalsIgnoreCase("ANY")) {
-            val (w3, a3) = readWord(sql, skipWs(sql, a2))
+          } else if (!ordered && w2.equalsIgnoreCase("RIGHT") &&
+            nextWord(sql, a2)._1.equalsIgnoreCase("JOIN"))
+            throw new IllegalArgumentException(
+              "ANY RIGHT JOIN is not supported: spell it as a LEFT-side " +
+                "ANY join from the other table")
+        } else if (w.isWord("LEFT")) {
+          val (w2, a2) = nextWord(sql, w.end)
+          if (w2.equalsIgnoreCase(kw)) {
+            val (w3, a3) = nextWord(sql, a2)
             if (w3.equalsIgnoreCase("JOIN")) { left = true; joinAt = a3 }
           }
         }
-        if (joinAt > 0)
-          return rewriteOneLateralJoin(sql, start, joinAt, left,
-            ordered = false, leftAlias = prevIdent)
-        prevIdent = w1
-      } else { if (!Character.isWhitespace(c)) prevIdent = ""; i += 1 }
+        if (joinAt > 0) return Some(lateralJoin(sql, w.start, joinAt, left, ordered, prevIdent))
+        prevIdent = w.text
+      } else if (w.kind == SqlLexer.Symbol) prevIdent = ""
     }
-    sql
+    None
   }
 
-  /** Rewrite the single ASOF join whose JOIN keyword ends at `joinEnd`;
-    * `asofStart` is the first keyword of the join phrase. */
-  private def rewriteOneAsof(sql: String, asofStart: Int, joinEnd: Int,
-      left: Boolean, leftAlias: String): String =
-    rewriteOneLateralJoin(sql, asofStart, joinEnd, left, ordered = true, leftAlias)
-
-  /** Shared LATERAL-probe builder: `ordered = true` is ASOF (single
-    * inequality picks the ordering column + direction), `false` is ANY
-    * (arbitrary single match, no ORDER BY). `leftAlias` (the identifier
-    * directly before the join phrase) qualifies the left side of a
-    * USING list. */
-  private def rewriteOneLateralJoin(
-      sql: String, asofStart: Int, joinEnd: Int, left: Boolean,
+  /** Shared LATERAL-probe builder for the join phrase starting at
+    * `phraseStart` whose JOIN keyword ends at `joinEnd`: `ordered =
+    * true` is ASOF (single inequality picks the ordering column +
+    * direction), `false` is ANY (arbitrary single match, no ORDER BY).
+    * `leftAlias` (the identifier directly before the join phrase)
+    * qualifies the left side of a USING list. */
+  private def lateralJoin(
+      sql: String, phraseStart: Int, joinEnd: Int, left: Boolean,
       ordered: Boolean, leftAlias: String): String = {
     val n = sql.length
     def fail(why: String): Nothing =
@@ -1130,43 +972,32 @@ object ChSqlRewrite {
             "between the two sides' ordering columns`)"
         else s"ANY JOIN: $why")
     // ---- right relation: (subquery) or qualified ident, optional alias
-    var p = skipWs(sql, joinEnd)
-    val relStart = p
+    val relStart = skipSpace(sql, joinEnd)
     var lastPart = ""
-    if (p < n && sql.charAt(p) == '(') {
-      val e = matchParen(sql, p)
-      if (e < 0) fail("unbalanced parenthesis in the right relation")
-      p = e
-    } else {
-      var done = false
-      var ok = p < n
-      while (ok && !done) {
-        if (p < n && sql.charAt(p) == '`') {
-          val e = skipQuoted(sql, p)
-          lastPart = sql.substring(p + 1, e - 1); p = e
-        } else {
-          val (w, after) = readWord(sql, p)
-          if (w.isEmpty) ok = false else { lastPart = w; p = after }
-        }
-        if (ok) { if (p < n && sql.charAt(p) == '.') p += 1 else done = true }
+    val relNameEnd =
+      if (relStart < n && sql.charAt(relStart) == '(') {
+        val e = matchParen(sql, relStart)
+        if (e < 0) fail("unbalanced parenthesis in the right relation")
+        e
+      } else SqlLexer.qualifiedName(sql, relStart) match {
+        case Some((e, last)) => lastPart = last; e
+        case None => fail("could not read the right relation")
       }
-      if (!ok) fail("could not read the right relation")
-    }
     // optional [AS] alias
     var alias = lastPart
-    var relEnd = p
-    val (wa, aa) = readWord(sql, skipWs(sql, p))
+    var relEnd = relNameEnd
+    val (wa, aa) = nextWord(sql, relNameEnd)
     if (wa.equalsIgnoreCase("AS")) {
-      val (wb, ab) = readWord(sql, skipWs(sql, aa))
+      val (wb, ab) = nextWord(sql, aa)
       if (wb.isEmpty) fail("dangling AS after the right relation")
       alias = wb; relEnd = ab
     } else if (wa.nonEmpty && !wa.equalsIgnoreCase("ON")) {
       alias = wa; relEnd = aa
     }
     if (alias.isEmpty) fail("a subquery right side needs an alias")
-    val relText = sql.substring(relStart, relEnd)
+    val relText = lift(sql, relStart, relEnd)
     // ---- ON <cond>  |  USING (k1, ..., ts)
-    val (onWord, afterOn) = readWord(sql, skipWs(sql, relEnd))
+    val (onWord, afterOn) = nextWord(sql, relEnd)
     val (cond, condEnd): (String, Int) =
       if (onWord.equalsIgnoreCase("USING")) {
         // CH `ASOF JOIN r USING (k1, ..., ts)`: every column but the
@@ -1174,13 +1005,11 @@ object ChSqlRewrite {
         // (for ANY all are equalities). Both sides keep their columns
         // (CH merges USING columns — documented deviation; select
         // explicitly). Needs the left relation's alias to qualify.
-        val q = skipWs(sql, afterOn)
+        val q = skipSpace(sql, afterOn)
         if (q >= n || sql.charAt(q) != '(') fail("USING expects a column list")
-        val e = matchParen(sql, q)
-        if (e < 0) fail("unbalanced USING list")
-        val cols = sql.substring(q + 1, e - 1).split(",").map(_.trim)
-        if (cols.isEmpty || cols.exists(c => c.isEmpty ||
-          !c.forall(Character.isJavaIdentifierPart)))
+        val (list, e) = parenAfter(sql, q).getOrElse(fail("unbalanced USING list"))
+        val cols = splitTopLevel(list).map(_.trim)
+        if (cols.exists(c => c.isEmpty || !c.forall(Character.isJavaIdentifierPart)))
           fail("USING supports plain column names")
         if (leftAlias.isEmpty || joinStops.contains(
           leftAlias.toUpperCase(java.util.Locale.ROOT)))
@@ -1194,9 +1023,9 @@ object ChSqlRewrite {
         (terms.mkString(" AND "), e)
       } else {
         if (!onWord.equalsIgnoreCase("ON")) fail("expected ON or USING after the right relation")
-        val condStart = skipWs(sql, afterOn)
-        val (ce, _) = joinCondEnd(sql, condStart)
-        (sql.substring(condStart, ce).trim, ce)
+        val condStart = skipSpace(sql, afterOn)
+        val (ce, _) = SqlLexer.clauseEnd(sql, condStart, joinStops)
+        (lift(sql, condStart, ce).trim, ce)
       }
     if (cond.isEmpty) fail("empty join condition")
     // ---- ASOF: locate the single top-level inequality → ordering clause
@@ -1223,59 +1052,28 @@ object ChSqlRewrite {
     val repl = s"$joinKw LATERAL (SELECT * FROM $relText WHERE $cond " +
       s"${orderClause}LIMIT 1) $alias"
     val suffix = if (condEnd < n) " " + sql.substring(condEnd) else ""
-    val next = sql.substring(0, asofStart) + repl + suffix
-    if (ordered) rewriteAsofJoin(next) else rewriteAnyJoin(next)
+    sql.substring(0, phraseStart) + repl + suffix
   }
 
-  /** End of a join ON condition: first depth-0 clause stop or join
-    * keyword, or the `)` closing the enclosing scope. */
+  /** A join ON condition ends at the first top-level clause stop or join
+    * keyword, or at the `)` closing the enclosing scope. */
   // lazy: `clauseStops` is declared further down the object body
   private lazy val joinStops = clauseStops ++ Set("JOIN", "LEFT", "RIGHT", "FULL",
     "INNER", "CROSS", "ASOF", "ANY", "GLOBAL", "ARRAY", "LATERAL", "ANTI", "SEMI")
 
-  private def joinCondEnd(sql: String, from: Int): (Int, String) = {
-    val n = sql.length
-    var i = from
-    var depth = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') {
-        if (depth == 0) return (i, "") else { depth -= 1; i += 1 }
-      } else if (Character.isJavaIdentifierStart(c)) {
-        val ws = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        val w = sql.substring(ws, i).toUpperCase
-        if (depth == 0 && joinStops.contains(w)) return (ws, w)
-      } else i += 1
-    }
-    (n, "")
-  }
-
   /** Positions of depth-0 inequality operators (`>=`, `<=`, `>`, `<`) in
     * `cond`, excluding `<>`, `->` arrows, and shift-like contexts. */
   private def topLevelInequalities(cond: String): List[(Int, String)] = {
-    val n = cond.length
-    var i = 0
-    var depth = 0
     val out = scala.collection.mutable.ListBuffer.empty[(Int, String)]
-    while (i < n) {
-      val c = cond.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(cond, i)
-      else if (c == '-' && i + 1 < n && cond.charAt(i + 1) == '-') i = skipLine(cond, i)
-      else if (c == '/' && i + 1 < n && cond.charAt(i + 1) == '*') i = skipBlock(cond, i)
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (depth == 0 && (c == '>' || c == '<')) {
-        val prev = if (i > 0) cond.charAt(i - 1) else ' '
-        val next = if (i + 1 < n) cond.charAt(i + 1) else ' '
-        if (prev == '-' || (c == '<' && next == '>')) i += (if (next == '>') 2 else 1)
-        else if (next == '=') { out += ((i, s"$c=")); i += 2 }
-        else { out += ((i, s"$c")); i += 1 }
-      } else i += 1
+    val w = new Walk(cond)
+    while (w.nextCode()) if (w.depth == 0 && (w.isSym('>') || w.isSym('<'))) {
+      val i = w.start
+      val c = w.char
+      val prev = if (i > 0) cond.charAt(i - 1) else ' '
+      val next = if (i + 1 < cond.length) cond.charAt(i + 1) else ' '
+      if (prev == '-' || (c == '<' && next == '>')) { if (next == '>') w.next() }
+      else if (next == '=') { out += ((i, s"$c=")); w.next() }
+      else out += ((i, s"$c"))
     }
     out.toList
   }
@@ -1284,29 +1082,19 @@ object ChSqlRewrite {
     * identifier equal to `alias` immediately followed by `.` — not a
     * raw-substring hit (alias `p` must not match inside `leap.ts`). */
   private def refersToAlias(term: String, alias: String): Boolean = {
-    val n = term.length
-    var i = 0
-    while (i < n) {
-      val c = term.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(term, i)
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(term.charAt(i))) i += 1
-        if (term.substring(start, i).equalsIgnoreCase(alias)) {
-          val p = skipWs(term, i)
-          // a qualifier is preceded by nothing ident-like (handled by the
-          // token scan) and followed by a dot
-          if (p < n && term.charAt(p) == '.' &&
-            (start == 0 || term.charAt(start - 1) != '.')) return true
-        }
-        // skip a following qualified chain so `a.p.x` never re-enters at `p`
-        while (i < n && term.charAt(i) == '.') {
-          i += 1
-          if (i < n && Character.isJavaIdentifierStart(term.charAt(i))) {
-            while (i < n && Character.isJavaIdentifierPart(term.charAt(i))) i += 1
-          }
-        }
-      } else i += 1
+    val w = new Walk(term)
+    while (w.nextCode()) if (w.kind == SqlLexer.Word) {
+      if (w.isWord(alias)) {
+        val p = skipSpace(term, w.end)
+        // a qualifier is preceded by nothing ident-like (handled by the
+        // token walk) and followed by a dot
+        if (p < term.length && term.charAt(p) == '.' &&
+          (w.start == 0 || term.charAt(w.start - 1) != '.')) return true
+      }
+      // skip a following qualified chain so `a.p.x` never re-enters at `p`
+      var i = w.end
+      while (i < term.length && term.charAt(i) == '.') i = wordAt(term, i + 1)._2
+      w.jump(i)
     }
     false
   }
@@ -1314,25 +1102,12 @@ object ChSqlRewrite {
   /** The two operand texts of the inequality at `opStart`, delimited by
     * the nearest top-level `AND`s (or the condition's ends). */
   private def splitIneqTerm(cond: String, opStart: Int, op: String): (String, String) = {
-    // find AND boundaries at depth 0
-    val n = cond.length
-    var i = 0
-    var depth = 0
     var termStart = 0
-    var termEnd = n
-    while (i < n) {
-      val c = cond.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(cond, i)
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (Character.isJavaIdentifierStart(c)) {
-        val ws = i
-        while (i < n && Character.isJavaIdentifierPart(cond.charAt(i))) i += 1
-        if (depth == 0 && cond.substring(ws, i).equalsIgnoreCase("AND")) {
-          if (i <= opStart) termStart = i
-          else if (ws >= opStart && termEnd == n) termEnd = ws
-        }
-      } else i += 1
+    var termEnd = cond.length
+    val w = new Walk(cond)
+    while (w.nextCode()) if (w.depth == 0 && w.isWord("AND")) {
+      if (w.end <= opStart) termStart = w.end
+      else if (w.start >= opStart && termEnd == cond.length) termEnd = w.start
     }
     (cond.substring(termStart, opStart).trim,
       cond.substring(opStart + op.length, termEnd).trim)
@@ -1350,6 +1125,15 @@ object ChSqlRewrite {
   private val globalWideWords =
     globalJoinWords ++ Set("IN", "NOT", "ANY", "ALL", "ASOF", "SEMI", "ANTI")
 
+  private def rewriteGlobal(sql: String, followers: Set[String]): String =
+    spliceAll(sql) { w =>
+      lazy val p = skipSpace(w.s, w.end)
+      lazy val next = wordAt(w.s, p)._1
+      if (w.isWord("GLOBAL") && next.nonEmpty && followers.contains(next.toUpperCase))
+        Some(w.s.substring(0, w.start) + w.s.substring(p))
+      else None
+    }
+
   // ----------------------------------------------------------- dateDiff
 
   /** CH `dateDiff('unit', s, e)` / `date_diff('unit', s, e)`: the quoted
@@ -1360,70 +1144,25 @@ object ChSqlRewrite {
     * in ChDialect — the rewrite is CH-faithful by construction. A 2-arg
     * Spark `datediff(a, b)` inside otherwise-failing text is untouched
     * (the first arg must be a quoted unit literal). */
-  private def rewriteDateDiff(sql: String): String = {
-    val units = Map(
-      "second" -> "Second", "minute" -> "Minute", "hour" -> "Hour",
-      "day" -> "Day", "week" -> "Week", "month" -> "Month",
-      "quarter" -> "Quarter", "year" -> "Year")
-    val n = sql.length
-    var i = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        val lower = sql.substring(start, i).toLowerCase(java.util.Locale.ROOT)
-        if (lower == "datediff" || lower == "date_diff") {
-          val j = skipWs(sql, i)
-          if (j < n && sql.charAt(j) == '(') {
-            val e = matchParen(sql, j)
-            if (e > 0) {
-              val args = splitTopLevel(sql.substring(j + 1, e - 1))
-              if (args.length == 3) {
-                val u = args.head.trim
-                if (u.length >= 3 && u.head == '\'' && u.last == '\'') {
-                  units.get(u.substring(1, u.length - 1)
-                      .toLowerCase(java.util.Locale.ROOT)).foreach { cu =>
-                    return rewriteDateDiff(
-                      sql.substring(0, start) +
-                        s"(toRelative${cu}Num(${args(2).trim}) - " +
-                        s"toRelative${cu}Num(${args(1).trim}))" +
-                        sql.substring(e))
-                  }
-                }
-              }
-            }
-          }
-        }
-      } else i += 1
-    }
-    sql
-  }
+  private val dateDiffUnits = Map(
+    "second" -> "Second", "minute" -> "Minute", "hour" -> "Hour",
+    "day" -> "Day", "week" -> "Week", "month" -> "Month",
+    "quarter" -> "Quarter", "year" -> "Year")
 
-  /** Split an argument list at top-level commas (quote/paren aware). */
-  private def splitTopLevel(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val n = s.length
-    var i = 0
-    var depth = 0
-    var last = 0
-    while (i < n) {
-      val c = s.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(s, i)
-      else if (c == '-' && i + 1 < n && s.charAt(i + 1) == '-') i = skipLine(s, i)
-      else if (c == '/' && i + 1 < n && s.charAt(i + 1) == '*') i = skipBlock(s, i)
-      else {
-        if (c == '(' || c == '[') depth += 1
-        else if (c == ')' || c == ']') depth -= 1
-        else if (c == ',' && depth == 0) { out += s.substring(last, i); last = i + 1 }
-        i += 1
-      }
+  private def rewriteDateDiff(sql: String): String = spliceAll(sql) { w =>
+    if (!w.isWord("datediff") && !w.isWord("date_diff")) None
+    else parenAfter(w.s, w.end).flatMap { case (inside, e) =>
+      val args = splitTopLevel(inside)
+      val u = args.head.trim
+      if (args.length != 3 || u.length < 3 || u.head != '\'' || u.last != '\'') None
+      else dateDiffUnits.get(u.substring(1, u.length - 1).toLowerCase(java.util.Locale.ROOT))
+        .map { cu =>
+          w.s.substring(0, w.start) +
+            s"(toRelative${cu}Num(${args(2).trim}) - " +
+            s"toRelative${cu}Num(${args(1).trim}))" +
+            w.s.substring(e)
+        }
     }
-    out += s.substring(last)
-    out.result()
   }
 
   // -------------------------------------------------------- FETCH FIRST
@@ -1433,13 +1172,13 @@ object ChSqlRewrite {
     * `LIMIT m [OFFSET o]`. Rescue-tier; `WITH TIES` fails loudly (no
     * faithful LIMIT form — use the rank()<=n window, b_lim3). */
   private def rewriteFetchFirst(sql: String): String = {
-    if (!hasKeywordOutside(sql, "FETCH")) return sql
+    if (!SqlLexer.hasWord(sql, "FETCH", topLevel = false)) return sql
     fetchTail.findFirstMatchIn(sql) match {
       // The regex is end-anchored, but the matched tail could still sit
       // inside a trailing comment/string while a real FETCH token exists
-      // elsewhere — confirm the match region with the scanner before
-      // splicing (unmatched FETCH then fails loudly in Spark's parser).
-      case Some(m) if !outsideQuotesComments(sql, m.start) => sql
+      // elsewhere — confirm the match starts in code before splicing
+      // (unmatched FETCH then fails loudly in Spark's parser).
+      case Some(m) if !isCode(sql, m.start) => sql
       case Some(m) =>
         if (m.group("ties") != null)
           throw new org.apache.spark.sql.AnalysisException(
@@ -1448,7 +1187,7 @@ object ChSqlRewrite {
               ("graft: FETCH FIRST ... WITH TIES has no faithful LIMIT " +
                 "rewrite; use the rank()<=n window form (b_lim3)")))
         val off = Option(m.group("off")).map(o => s" OFFSET $o").getOrElse("")
-        sql.substring(0, m.start).replaceAll("\\s+$", "") +
+        lift(sql, 0, m.start).replaceAll("\\s+$", "") +
           s" LIMIT ${m.group("m")}$off"
       case None => sql
     }
@@ -1468,123 +1207,37 @@ object ChSqlRewrite {
     * inside a subquery, a TOP combined with an existing LIMIT, or CH's
     * `TOP n WITH TIES` fail loudly rather than guess placement (use
     * LIMIT / the b_lim3 window form). */
-  private def rewriteTop(sql: String): String = {
-    val n = sql.length
-    var i = 0
-    var depth = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        if (sql.substring(start, i).equalsIgnoreCase("SELECT")) {
-          var p = skipWs(sql, i)
-          val (w1, e1) = readWord(sql, p)
-          if (w1.equalsIgnoreCase("DISTINCT") || w1.equalsIgnoreCase("ALL"))
-            p = skipWs(sql, e1)
-          val (w2, e2) = readWord(sql, p)
-          if (w2.equalsIgnoreCase("TOP")) {
-            val q = skipWs(sql, e2)
-            var e3 = q
-            while (e3 < n && Character.isDigit(sql.charAt(e3))) e3 += 1
-            if (e3 > q) {
-              val limit = sql.substring(q, e3)
-              val after = skipWs(sql, e3)
-              val (w4, e4) = readWord(sql, after)
-              if (w4.equalsIgnoreCase("WITH")) {
-                val (w5, _) = readWord(sql, skipWs(sql, e4))
-                if (w5.equalsIgnoreCase("TIES"))
-                  throw new org.apache.spark.sql.AnalysisException(
-                    errorClass = "_LEGACY_ERROR_TEMP_3100",
-                    messageParameters = Map("message" ->
-                      ("graft: TOP n WITH TIES has no faithful LIMIT rewrite; " +
-                        "use the rank()<=n window form (b_lim3)")))
-              }
-              if (depth > 0)
-                throw new org.apache.spark.sql.AnalysisException(
-                  errorClass = "_LEGACY_ERROR_TEMP_3100",
-                  messageParameters = Map("message" ->
-                    "graft: TOP inside a subquery is not supported; use LIMIT"))
-              // a set operation makes "append LIMIT at the end" wrong:
-              // CH scopes TOP to its own SELECT arm, the appended LIMIT
-              // would cap the whole union — refuse rather than mis-scope
-              if (Seq("UNION", "INTERSECT", "EXCEPT").exists(hasTopLevelKeyword(sql, _)))
-                throw new org.apache.spark.sql.AnalysisException(
-                  errorClass = "_LEGACY_ERROR_TEMP_3100",
-                  messageParameters = Map("message" ->
-                    "graft: TOP in a set-operation arm is not supported; use LIMIT on the arm"))
-              // only a TOP-LEVEL limit conflicts; a derived table's LIMIT
-              // (or a quoted 'limit') must not trip this
-              if (hasTopLevelKeyword(sql, "LIMIT"))
-                throw new org.apache.spark.sql.AnalysisException(
-                  errorClass = "_LEGACY_ERROR_TEMP_3100",
-                  messageParameters = Map("message" ->
-                    "graft: TOP cannot combine with LIMIT (same as ClickHouse)"))
-              return sql.substring(0, p) + sql.substring(skipWs(sql, e3)) +
-                s" LIMIT $limit"
-            }
-          }
-        }
-      } else i += 1
-    }
-    sql
-  }
+  private def rewriteTop(sql: String): String = firstSite(sql)(topAt).getOrElse(sql)
 
-  /** True when `word` appears as a bare keyword outside quotes/comments. */
-  private def hasKeywordOutside(sql: String, word: String): Boolean =
-    hasKeywordScan(sql, word, topLevelOnly = false)
-
-  /** Like [[hasKeywordOutside]] but also outside any parentheses — a
-    * keyword inside a derived table or function call does not count. */
-  private def hasTopLevelKeyword(sql: String, word: String): Boolean =
-    hasKeywordScan(sql, word, topLevelOnly = true)
-
-  private def hasKeywordScan(sql: String, word: String, topLevelOnly: Boolean): Boolean = {
-    val n = sql.length
-    var i = 0
-    var depth = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        if ((!topLevelOnly || depth == 0) &&
-          sql.substring(start, i).equalsIgnoreCase(word)) return true
-      } else i += 1
-    }
-    false
-  }
-
-  private def rewriteGlobal(sql: String, followers: Set[String]): String = {
-    val n = sql.length
-    var i = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        if (sql.substring(start, i).equalsIgnoreCase("GLOBAL")) {
-          val p = skipWs(sql, i)
-          val (next, _) = readWord(sql, p)
-          if (next.nonEmpty && followers.contains(next.toUpperCase))
-            return rewriteGlobal(sql.substring(0, start) + sql.substring(p), followers)
-        }
-      } else i += 1
-    }
-    sql
+  private def topAt(w: Walk): Option[String] = {
+    if (!w.isWord("SELECT")) return None
+    val sql = w.s
+    def refuse(why: String): Nothing =
+      throw new org.apache.spark.sql.AnalysisException(
+        errorClass = "_LEGACY_ERROR_TEMP_3100",
+        messageParameters = Map("message" -> s"graft: $why"))
+    var p = skipSpace(sql, w.end)
+    val (w1, e1) = wordAt(sql, p)
+    if (w1.equalsIgnoreCase("DISTINCT") || w1.equalsIgnoreCase("ALL")) p = skipSpace(sql, e1)
+    val (w2, e2) = wordAt(sql, p)
+    if (!w2.equalsIgnoreCase("TOP")) return None
+    val (limit, e3) = readNum(sql, skipSpace(sql, e2))
+    if (limit.isEmpty) return None
+    val (w4, e4) = nextWord(sql, e3)
+    if (w4.equalsIgnoreCase("WITH") && nextWord(sql, e4)._1.equalsIgnoreCase("TIES"))
+      refuse("TOP n WITH TIES has no faithful LIMIT rewrite; " +
+        "use the rank()<=n window form (b_lim3)")
+    if (w.depth > 0) refuse("TOP inside a subquery is not supported; use LIMIT")
+    // a set operation makes "append LIMIT at the end" wrong: CH scopes
+    // TOP to its own SELECT arm, the appended LIMIT would cap the whole
+    // union — refuse rather than mis-scope
+    if (Seq("UNION", "INTERSECT", "EXCEPT").exists(SqlLexer.hasWord(sql, _, topLevel = true)))
+      refuse("TOP in a set-operation arm is not supported; use LIMIT on the arm")
+    // only a TOP-LEVEL limit conflicts; a derived table's LIMIT (or a
+    // quoted 'limit') must not trip this
+    if (SqlLexer.hasWord(sql, "LIMIT", topLevel = true))
+      refuse("TOP cannot combine with LIMIT (same as ClickHouse)")
+    Some(lift(sql.substring(0, p) + sql.substring(skipSpace(sql, e3))) + s" LIMIT $limit")
   }
 
   // --------------------------------------------------------------- FINAL
@@ -1603,54 +1256,24 @@ object ChSqlRewrite {
   def registerFinalKey(table: String, partitionCols: String, versionOrder: String): Unit =
     finalKeys.put(table.toLowerCase(java.util.Locale.ROOT), (partitionCols, versionOrder))
 
-  private def rewriteFinal(sql: String): String = {
-    val n = sql.length
-    var i = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        if (sql.substring(start, i).equalsIgnoreCase("FROM")) {
-          var p = skipWs(sql, i)
-          val identStart = p
-          var lastPart = ""
-          var ok = p < n
-          var done = false
-          while (ok && !done) {
-            if (p < n && sql.charAt(p) == '`') {
-              val e = skipQuoted(sql, p)
-              lastPart = sql.substring(p + 1, e - 1); p = e
-            } else {
-              val (w, after) = readWord(sql, p)
-              if (w.isEmpty) ok = false else { lastPart = w; p = after }
-            }
-            if (ok) { if (p < n && sql.charAt(p) == '.') p += 1 else done = true }
-          }
-          if (ok) {
-            val identEnd = p
-            val (w2, afterW2) = readWord(sql, skipWs(sql, p))
-            if (w2.equalsIgnoreCase("FINAL")) {
-              val keys = finalKeys.get(lastPart.toLowerCase(java.util.Locale.ROOT))
-              if (keys != null) {
-                val (parts, ord) = keys
-                val tableSql = sql.substring(identStart, identEnd)
-                val repl = s"(SELECT * EXCEPT (ch_fin_rn_) FROM (SELECT *, " +
-                  s"row_number() OVER (PARTITION BY $parts ORDER BY $ord) " +
-                  s"AS ch_fin_rn_ FROM $tableSql) ch_fin_i_ " +
-                  s"WHERE ch_fin_rn_ = 1) $lastPart"
-                return rewriteFinal(
-                  sql.substring(0, identStart) + repl + sql.substring(afterW2))
-              }
-            }
-          }
-        }
-      } else i += 1
+  private def rewriteFinal(sql: String): String = spliceAll(sql) { w =>
+    val s = w.s
+    lazy val identStart = skipSpace(s, w.end)
+    if (!w.isWord("FROM")) None
+    else SqlLexer.qualifiedName(s, identStart).flatMap { case (identEnd, lastPart) =>
+      val (w2, afterW2) = nextWord(s, identEnd)
+      val keys =
+        if (w2.equalsIgnoreCase("FINAL")) finalKeys.get(lastPart.toLowerCase(java.util.Locale.ROOT))
+        else null
+      Option(keys).map { case (parts, ord) =>
+        val tableSql = s.substring(identStart, identEnd)
+        val repl = s"(SELECT * EXCEPT (ch_fin_rn_) FROM (SELECT *, " +
+          s"row_number() OVER (PARTITION BY $parts ORDER BY $ord) " +
+          s"AS ch_fin_rn_ FROM $tableSql) ch_fin_i_ " +
+          s"WHERE ch_fin_rn_ = 1) $lastPart"
+        s.substring(0, identStart) + repl + s.substring(afterW2)
+      }
     }
-    sql
   }
 
   // ------------------------------------------------------------- PREWHERE
@@ -1659,65 +1282,25 @@ object ChSqlRewrite {
     "OFFSET", "SETTINGS", "FORMAT", "UNION", "INTERSECT", "EXCEPT", "WINDOW",
     "QUALIFY")
 
-  /** End of the clause expression starting at `from`: the first stop
-    * keyword at the starting paren depth, or the `)` that closes it.
-    * Returns (endIndex, stopWordUppercased — "" when depth/EOT ended). */
-  private def clauseEnd(sql: String, from: Int): (Int, String) = {
-    val n = sql.length
-    var i = from
-    var depth = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') {
-        if (depth == 0) return (i, "") else { depth -= 1; i += 1 }
-      } else if (Character.isJavaIdentifierStart(c)) {
-        val ws = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        val w = sql.substring(ws, i).toUpperCase
-        if (depth == 0 && clauseStops.contains(w)) return (ws, w)
-      } else i += 1
-    }
-    (n, "")
-  }
-
   /** CH `PREWHERE c` is a scan-order optimization whose observable
     * semantics are a plain conjunction with WHERE (ClickHouse docs;
     * Catalyst's predicate pushdown already plays the physical role).
     * `PREWHERE c WHERE d` → `WHERE (c) AND (d)`; alone → `WHERE c`. */
-  private def rewritePrewhere(sql: String): String = {
-    val n = sql.length
-    var i = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        if (sql.substring(start, i).equalsIgnoreCase("PREWHERE")) {
-          val condStart = skipWs(sql, i)
-          val (condEnd, stop) = clauseEnd(sql, condStart)
-          if (stop == "WHERE") {
-            val pre = sql.substring(condStart, condEnd).trim
-            val (_, afterW) = readWord(sql, condEnd)
-            val wStart = skipWs(sql, afterW)
-            val (wEnd, _) = clauseEnd(sql, wStart)
-            val w = sql.substring(wStart, wEnd).trim
-            val sep = if (wEnd < n) " " else ""
-            return rewritePrewhere(sql.substring(0, start) +
-              s"WHERE ($pre) AND ($w)$sep" + sql.substring(wEnd))
-          } else
-            return rewritePrewhere(
-              sql.substring(0, start) + "WHERE" + sql.substring(i))
-        }
-      } else i += 1
+  private def rewritePrewhere(sql: String): String = spliceAll(sql) { w =>
+    val s = w.s
+    if (!w.isWord("PREWHERE")) None
+    else {
+      val condStart = skipSpace(s, w.end)
+      val (condEnd, stop) = SqlLexer.clauseEnd(s, condStart, clauseStops)
+      if (stop == "WHERE") {
+        val pre = lift(s, condStart, condEnd).trim
+        val wStart = skipSpace(s, wordAt(s, condEnd)._2)
+        val (wEnd, _) = SqlLexer.clauseEnd(s, wStart, clauseStops)
+        val cond = lift(s, wStart, wEnd).trim
+        val sep = if (wEnd < s.length) " " else ""
+        Some(s.substring(0, w.start) + s"WHERE ($pre) AND ($cond)$sep" + s.substring(wEnd))
+      } else Some(s.substring(0, w.start) + "WHERE" + s.substring(w.end))
     }
-    sql
   }
 
   // ---------------------------------------------------------- WITH TOTALS
@@ -1726,54 +1309,25 @@ object ChSqlRewrite {
     * ())`: the grand-total row CH appends out-of-band becomes an in-band
     * row with NULL keys (the convention `b_agg11_with_totals`
     * established). Deviation (documented): a HAVING filters the totals
-    * row too, where CH's default totals_mode recomputes it. */
-  private def rewriteWithTotals(sql: String): String = {
-    val n = sql.length
-    var i = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        val (by, afterBy) = readWord(sql, skipWs(sql, i))
-        if (sql.substring(start, i).equalsIgnoreCase("GROUP") &&
-          by.equalsIgnoreCase("BY")) {
-          val listStart = skipWs(sql, afterBy)
-          // walk the grouping list at its own depth, looking for WITH TOTALS
-          var q = listStart
-          var depth = 0
-          var found = -1
-          var afterTotals = -1
-          while (q < n && found < 0) {
-            val ch = sql.charAt(q)
-            if (ch == '\'' || ch == '"' || ch == '`') q = skipQuoted(sql, q)
-            else if (ch == '-' && q + 1 < n && sql.charAt(q + 1) == '-') q = skipLine(sql, q)
-            else if (ch == '/' && q + 1 < n && sql.charAt(q + 1) == '*') q = skipBlock(sql, q)
-            else if (ch == '(') { depth += 1; q += 1 }
-            else if (ch == ')') { if (depth == 0) q = n else { depth -= 1; q += 1 } }
-            else if (Character.isJavaIdentifierStart(ch)) {
-              val ws = q
-              while (q < n && Character.isJavaIdentifierPart(sql.charAt(q))) q += 1
-              val w = sql.substring(ws, q)
-              if (depth == 0 && w.equalsIgnoreCase("WITH")) {
-                val (w2, aw2) = readWord(sql, skipWs(sql, q))
-                if (w2.equalsIgnoreCase("TOTALS")) { found = ws; afterTotals = aw2 }
-                else q = n // WITH ROLLUP/CUBE — valid Spark, leave alone
-              } else if (depth == 0 && clauseStops.contains(w.toUpperCase)) q = n
-            } else q += 1
-          }
-          if (found >= 0) {
-            val list = sql.substring(listStart, found).trim
-            return rewriteWithTotals(sql.substring(0, start) +
-              s"GROUP BY GROUPING SETS (($list), ())" + sql.substring(afterTotals))
-          }
-        }
-      } else i += 1
+    * row too, where CH's default totals_mode recomputes it. The grouping
+    * list ends at a top-level WITH (WITH ROLLUP/CUBE is valid Spark and
+    * stays) or clause stop. */
+  private val totalsStops = clauseStops + "WITH"
+
+  private def rewriteWithTotals(sql: String): String = spliceAll(sql) { w =>
+    val s = w.s
+    if (!w.isWord("GROUP")) None
+    else {
+      val (by, afterBy) = nextWord(s, w.end)
+      val listStart = skipSpace(s, afterBy)
+      val (found, stop) =
+        if (by.equalsIgnoreCase("BY")) SqlLexer.clauseEnd(s, listStart, totalsStops) else (-1, "")
+      val (totals, afterTotals) = if (stop == "WITH") nextWord(s, found + 4) else ("", -1)
+      if (!totals.equalsIgnoreCase("TOTALS")) None
+      else Some(s.substring(0, w.start) +
+        s"GROUP BY GROUPING SETS ((${lift(s, listStart, found).trim}), ())" +
+        s.substring(afterTotals))
     }
-    sql
   }
 
   // ----------------------------------------------------------- numbers(N)
@@ -1785,6 +1339,32 @@ object ChSqlRewrite {
     * on the session catalog NOT having a function named `numbers`
     * ([[userNumbersTvf]]): built-in Spark has no such TVF, but a user
     * Python UDTF registered under that name must win. */
+  private def rewriteNumbers(sql: String): String = spliceAll(sql) { w =>
+    val s = w.s
+    if (!w.isWord("FROM") && !w.isWord("JOIN")) None
+    else {
+      val p = skipSpace(s, w.end)
+      val (name, afterName) = wordAt(s, p)
+      if (!name.equalsIgnoreCase("numbers") || userNumbersTvf) None
+      else parenAfter(s, afterName).map { case (inside, e) =>
+        // numbers(N) | numbers(offset, N)
+        val parts = splitTopLevel(inside.trim)
+        val rangeArgs =
+          if (parts.length == 1) s"(${parts.head})"
+          else s"(${parts.head}), (${parts.head}) + (${parts.tail.mkString(",")})"
+        // keep a user-supplied alias; otherwise alias as `numbers`
+        val (after, _) = nextWord(s, e)
+        val hasUserAlias = after.nonEmpty &&
+          !joinStops.contains(after.toUpperCase) &&
+          !after.equalsIgnoreCase("ON") && !after.equalsIgnoreCase("USING") &&
+          !after.equalsIgnoreCase("SAMPLE")
+        val ownAlias = if (hasUserAlias) "" else " numbers"
+        s.substring(0, p) + s"(SELECT id AS number FROM range($rangeArgs))$ownAlias" +
+          s.substring(e)
+      }
+    }
+  }
+
   /** The rewrite's "Spark has no SQL TVFs" premise has one exception:
     * Python UDTFs (registrable since 3.5) are callable in FROM. If the
     * active session has a function named `numbers` registered, the
@@ -1803,111 +1383,24 @@ object ChSqlRewrite {
     * SYNTAX, not a function, so no injectFunction mapping can express
     * it; and `untuple(x)` PARSES fine as a call (dying only at
     * analysis), so the rewrite must be always-on, like ARRAY JOIN.
-    * Only a bare or dot-qualified identifier argument rewrites; any
-    * other argument shape (CH allows arbitrary tuple expressions) is
-    * left verbatim and still fails loudly — Spark cannot star-expand a
+    * Only a bare or dot-qualified name argument rewrites; any other
+    * argument shape (CH allows arbitrary tuple expressions) is left
+    * verbatim and still fails loudly — Spark cannot star-expand a
     * computed expression. */
-  private def rewriteUntuple(sql: String): String = {
-    val n = sql.length
-    val out = new StringBuilder(n)
-    var i = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        val j = skipQuoted(sql, i); out.append(sql.substring(i, j)); i = j
-      } else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') {
-        val j = skipLine(sql, i); out.append(sql.substring(i, j)); i = j
-      } else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
-        val j = skipBlock(sql, i); out.append(sql.substring(i, j)); i = j
-      } else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        val w = sql.substring(start, i)
-        var rewritten = false
-        if (w.equalsIgnoreCase("untuple")) {
-          var j = i
-          while (j < n && Character.isWhitespace(sql.charAt(j))) j += 1
-          if (j < n && sql.charAt(j) == '(') {
-            j += 1
-            while (j < n && Character.isWhitespace(sql.charAt(j))) j += 1
-            val argStart = j
-            if (j < n && Character.isJavaIdentifierStart(sql.charAt(j))) {
-              while (j < n && (Character.isJavaIdentifierPart(sql.charAt(j)) || sql.charAt(j) == '.')) j += 1
-              val argEnd = j
-              while (j < n && Character.isWhitespace(sql.charAt(j))) j += 1
-              if (j < n && sql.charAt(j) == ')' && sql.charAt(argEnd - 1) != '.') {
-                out.append(sql.substring(argStart, argEnd)).append(".*")
-                i = j + 1
-                rewritten = true
-              }
-            }
-          }
-        }
-        if (!rewritten) out.append(w)
-      } else { out.append(c); i += 1 }
+  private def rewriteUntuple(sql: String): String = spliceAll(sql) { w =>
+    val s = w.s
+    lazy val open = skipSpace(s, w.end)
+    if (!w.isWord("untuple") || open >= s.length || s.charAt(open) != '(') None
+    else {
+      val argStart = skipSpace(s, open + 1)
+      SqlLexer.qualifiedName(s, argStart).flatMap { case (argEnd, _) =>
+        val close = skipSpace(s, argEnd)
+        if (close < s.length && s.charAt(close) == ')')
+          Some(s.substring(0, w.start) + s.substring(argStart, argEnd) + ".*" +
+            s.substring(close + 1))
+        else None
+      }
     }
-    out.toString
-  }
-
-  private def rewriteNumbers(sql: String): String = {
-    val n = sql.length
-    var i = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        val w = sql.substring(start, i)
-        if (w.equalsIgnoreCase("FROM") || w.equalsIgnoreCase("JOIN")) {
-          val p = skipWs(sql, i)
-          val (name, afterName) = readWord(sql, p)
-          if (name.equalsIgnoreCase("numbers") && !userNumbersTvf) {
-            val q = skipWs(sql, afterName)
-            if (q < n && sql.charAt(q) == '(') {
-              val e = matchParen(sql, q)
-              if (e > 0) {
-                val args = sql.substring(q + 1, e - 1).trim
-                // split top-level comma: numbers(N) | numbers(offset, N)
-                val parts = {
-                  var d2 = 0
-                  var cut = -1
-                  var r = 0
-                  while (r < args.length && cut < 0) {
-                    val ch = args.charAt(r)
-                    if (ch == '\'' || ch == '"' || ch == '`') r = skipQuoted(args, r)
-                    else {
-                      if (ch == '(') d2 += 1
-                      else if (ch == ')') d2 -= 1
-                      else if (ch == ',' && d2 == 0) cut = r
-                      r += 1
-                    }
-                  }
-                  if (cut < 0) Seq(args) else Seq(args.substring(0, cut), args.substring(cut + 1))
-                }
-                val rangeArgs = parts match {
-                  case Seq(cnt) => s"($cnt)"
-                  case Seq(off, cnt) => s"($off), ($off) + ($cnt)"
-                }
-                // keep a user-supplied alias; otherwise alias as `numbers`
-                val (after, _) = readWord(sql, skipWs(sql, e))
-                val hasUserAlias = after.nonEmpty &&
-                  !joinStops.contains(after.toUpperCase) &&
-                  !after.equalsIgnoreCase("ON") && !after.equalsIgnoreCase("USING") &&
-                  !after.equalsIgnoreCase("SAMPLE")
-                val ownAlias = if (hasUserAlias) "" else " numbers"
-                val repl = s"(SELECT id AS number FROM range($rangeArgs))$ownAlias"
-                return rewriteNumbers(
-                  sql.substring(0, p) + repl + sql.substring(e))
-              }
-            }
-          }
-        }
-      } else i += 1
-    }
-    sql
   }
 
   // ------------------------------------------------------------ * REPLACE
@@ -1917,77 +1410,35 @@ object ChSqlRewrite {
     * `* EXCEPT (existing ++ replaced-names), (expr) AS col, ...` —
     * replaced columns move to the END of the projection (documented
     * deviation, like INTERPOLATE; reference columns by name). */
-  private val replaceItem = java.util.regex.Pattern
-    .compile("(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*|`[^`]+`)\\s*$")
-
-  private def rewriteStarReplace(sql: String): String = {
-    val n = sql.length
-    var i = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (c == '*') {
-        val starAt = i
-        i += 1
-        // optional EXCEPT (cols)
-        var exceptCols = Seq.empty[String]
-        var cursor = i
-        val (w1, a1) = readWord(sql, skipWs(sql, cursor))
-        var afterExcept = cursor
-        if (w1.equalsIgnoreCase("EXCEPT")) {
-          val q = skipWs(sql, a1)
-          if (q < n && sql.charAt(q) == '(') {
-            val e = matchParen(sql, q)
-            if (e > 0) {
-              exceptCols = sql.substring(q + 1, e - 1).split(",").map(_.trim).toSeq
-              afterExcept = e
-            }
-          }
+  private def rewriteStarReplace(sql: String): String = spliceAll(sql) { w =>
+    val s = w.s
+    if (!w.isSym('*')) None
+    else {
+      val (exceptCols, afterExcept) = starExcept(s, w.end)
+      val (w2, a2) = nextWord(s, afterExcept)
+      if (!w2.equalsIgnoreCase("REPLACE")) None
+      else parenAfter(s, a2).flatMap { case (inner, e) =>
+        replaceItems(inner).map { items =>
+          val names = exceptCols ++ items.map(_._2)
+          s.substring(0, w.start) + s"* EXCEPT (${names.mkString(", ")}), " +
+            items.map { case (ex, nm) => s"($ex) AS $nm" }.mkString(", ") + s.substring(e)
         }
-        val (w2, a2) = readWord(sql, skipWs(sql, afterExcept))
-        if (w2.equalsIgnoreCase("REPLACE")) {
-          val q = skipWs(sql, a2)
-          if (q < n && sql.charAt(q) == '(') {
-            val e = matchParen(sql, q)
-            if (e > 0) {
-              // split items on top-level commas
-              val inner = sql.substring(q + 1, e - 1)
-              val items = scala.collection.mutable.ListBuffer.empty[(String, String)]
-              var ok = true
-              var s0 = 0
-              var d2 = 0
-              var r = 0
-              def take(endAt: Int): Unit = {
-                val seg = inner.substring(s0, endAt).trim
-                val m = replaceItem.matcher(seg)
-                if (m.matches()) items += (m.group(1) -> m.group(2)) else ok = false
-              }
-              while (r < inner.length && ok) {
-                val ch = inner.charAt(r)
-                if (ch == '\'' || ch == '"' || ch == '`') r = skipQuoted(inner, r)
-                else {
-                  if (ch == '(') d2 += 1
-                  else if (ch == ')') d2 -= 1
-                  else if (ch == ',' && d2 == 0) { take(r); s0 = r + 1 }
-                  r += 1
-                }
-              }
-              if (ok) take(inner.length)
-              if (ok && items.nonEmpty) {
-                val names = exceptCols ++ items.map(_._2)
-                val repl = s"* EXCEPT (${names.mkString(", ")}), " +
-                  items.map { case (ex, nm) => s"($ex) AS $nm" }.mkString(", ")
-                return rewriteStarReplace(
-                  sql.substring(0, starAt) + repl + sql.substring(e))
-              }
-            }
-          }
-        }
-      } else i += 1
+      }
     }
-    sql
+  }
+
+  /** The `EXCEPT (cols)` right after a star ending at `at`: its columns and
+    * the index after it, or (Nil, at). */
+  private def starExcept(s: String, at: Int): (Seq[String], Int) = {
+    val (w1, a1) = nextWord(s, at)
+    val list = if (w1.equalsIgnoreCase("EXCEPT")) parenAfter(s, a1) else None
+    list.fold((Seq.empty[String], at)) { case (cols, e) => (splitTopLevel(cols).map(_.trim), e) }
+  }
+
+  /** The `expr AS col` items of a REPLACE list, or None when one is not. */
+  private def replaceItems(inner: String): Option[Seq[(String, String)]] = {
+    val ms = splitTopLevel(inner).map(it => asAlias.matcher(it.trim))
+    if (ms.forall(_.matches())) Some(ms.map(m => m.group(1) -> m.group(2))) else None
   }
 
   // -------------------------------------------------------------- * APPLY
@@ -2005,114 +1456,56 @@ object ChSqlRewrite {
     * (documented): columns keep their ORIGINAL names, not CH's
     * `f(col)`, and replaced columns move to the end like REPLACE.
     * Lambda APPLY (`APPLY (x -> …)`) stays a loud parse failure. */
-  private def rewriteStarApply(sql: String): String = {
-    val n = sql.length
-    var i = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (c == '*') {
-        val starAt = i
-        i += 1
-        // a dotted qualifier sits IMMEDIATELY before the star (`t.*`)
-        var qs = starAt
-        if (qs > 0 && sql.charAt(qs - 1) == '.') {
-          qs -= 1
-          while (qs > 0 && (sql.charAt(qs - 1) == '.' || sql.charAt(qs - 1) == '`' ||
-            Character.isJavaIdentifierPart(sql.charAt(qs - 1)))) qs -= 1
-        }
-        val qual = sql.substring(qs, starAt)
-        // optional EXCEPT (cols)
-        var exceptCols = Seq.empty[String]
-        var cursor = starAt + 1
-        val (w1, a1) = readWord(sql, skipWs(sql, cursor))
-        if (w1.equalsIgnoreCase("EXCEPT")) {
-          val q = skipWs(sql, a1)
-          if (q < n && sql.charAt(q) == '(') {
-            val e = matchParen(sql, q)
-            if (e > 0) {
-              exceptCols = sql.substring(q + 1, e - 1).split(",").map(_.trim).toSeq
-              cursor = e
-            }
-          }
-        }
-        // optional REPLACE (expr AS col, …) — consumed only when an
-        // APPLY follows (REPLACE alone belongs to rewriteStarReplace)
-        var replaceItems = Seq.empty[(String, String)]
-        val (w2, a2) = readWord(sql, skipWs(sql, cursor))
-        var afterReplace = cursor
-        if (w2.equalsIgnoreCase("REPLACE")) {
-          val q = skipWs(sql, a2)
-          if (q < n && sql.charAt(q) == '(') {
-            val e = matchParen(sql, q)
-            if (e > 0) {
-              val inner = sql.substring(q + 1, e - 1)
-              val items = scala.collection.mutable.ListBuffer.empty[(String, String)]
-              var ok = true
-              var s0 = 0
-              var d2 = 0
-              var r = 0
-              def take(endAt: Int): Unit = {
-                val seg = inner.substring(s0, endAt).trim
-                val m = replaceItem.matcher(seg)
-                if (m.matches()) items += (m.group(1) -> m.group(2)) else ok = false
-              }
-              while (r < inner.length && ok) {
-                val ch = inner.charAt(r)
-                if (ch == '\'' || ch == '"' || ch == '`') r = skipQuoted(inner, r)
-                else {
-                  if (ch == '(') d2 += 1
-                  else if (ch == ')') d2 -= 1
-                  else if (ch == ',' && d2 == 0) { take(r); s0 = r + 1 }
-                  r += 1
-                }
-              }
-              if (ok) take(inner.length)
-              if (ok && items.nonEmpty) {
-                replaceItems = items.toSeq
-                afterReplace = e
-              }
-            }
-          }
-        }
-        // one or more APPLY (fname)
-        var fns = Seq.empty[String]
-        var cur2 = afterReplace
-        var more = true
-        while (more) {
-          val (wa, aa) = readWord(sql, skipWs(sql, cur2))
-          more = false
-          if (wa.equalsIgnoreCase("APPLY")) {
-            val q = skipWs(sql, aa)
-            if (q < n && sql.charAt(q) == '(') {
-              val e = matchParen(sql, q)
-              if (e > 0) {
-                val fn = sql.substring(q + 1, e - 1).trim
-                if (fn.nonEmpty && fn.forall(ch => Character.isJavaIdentifierPart(ch))) {
-                  fns = fns :+ fn
-                  cur2 = e
-                  more = true
-                }
-              }
-            }
-          }
-        }
-        if (fns.nonEmpty) {
-          val dropped = exceptCols ++ replaceItems.map(_._2)
-          def chain(e: String) = fns.foldLeft(e)((acc, f) => s"$f($acc)")
-          val marker = s"ch_star_apply('${fns.mkString(",")}', " +
-            s"'${dropped.mkString(",")}', $qual*)"
-          val trailing = replaceItems.map { case (ex, nm) =>
-            s"${chain(s"($ex)")} AS $nm"
-          }
-          val repl = (marker +: trailing).mkString(", ")
-          return rewriteStarApply(sql.substring(0, qs) + repl + sql.substring(cur2))
-        }
-      } else i += 1
+  private def rewriteStarApply(sql: String): String = everySite(sql) { s =>
+    val w = new Walk(s)
+    // start of the dotted name (words and `…` parts) the walk is in: a
+    // qualifier sits IMMEDIATELY before the star (`t.*`, `` `my t`.* ``)
+    var chain = -1
+    var site: Option[String] = None
+    while (site.isEmpty && w.next()) {
+      val dotted = chain >= 0 && s.charAt(w.start - 1) == '.'
+      if (w.isSym('*')) site = starApplyAt(s, if (dotted) chain else w.start, w.start)
+      chain =
+        if (w.kind == SqlLexer.Word || (w.kind == SqlLexer.Literal && w.char == '`'))
+          if (dotted) chain else w.start
+        else if (w.isSym('.') && chain >= 0) chain
+        else -1
     }
-    sql
+    site
+  }
+
+  private def starApplyAt(s: String, qs: Int, starAt: Int): Option[String] = {
+    val qual = s.substring(qs, starAt)
+    val (exceptCols, afterExcept) = starExcept(s, starAt + 1)
+    // optional REPLACE (expr AS col, …) — consumed only when an APPLY
+    // follows (REPLACE alone belongs to rewriteStarReplace)
+    var replace = Seq.empty[(String, String)]
+    var cur = afterExcept
+    val (w2, a2) = nextWord(s, afterExcept)
+    if (w2.equalsIgnoreCase("REPLACE"))
+      parenAfter(s, a2).foreach { case (inner, e) =>
+        replaceItems(inner).foreach { items => replace = items; cur = e }
+      }
+    // one or more APPLY (fname)
+    var fns = Seq.empty[String]
+    var more = true
+    while (more) {
+      more = false
+      val (wa, aa) = nextWord(s, cur)
+      if (wa.equalsIgnoreCase("APPLY")) parenAfter(s, aa).foreach { case (fn0, e) =>
+        val fn = fn0.trim
+        if (fn.nonEmpty && fn.forall(ch => Character.isJavaIdentifierPart(ch))) {
+          fns = fns :+ fn; cur = e; more = true
+        }
+      }
+    }
+    if (fns.isEmpty) return None
+    val dropped = exceptCols ++ replace.map(_._2)
+    def chain(e: String) = fns.foldLeft(e)((acc, f) => s"$f($acc)")
+    val marker = s"ch_star_apply('${fns.mkString(",")}', " +
+      s"'${dropped.mkString(",")}', $qual*)"
+    val trailing = replace.map { case (ex, nm) => s"${chain(s"($ex)")} AS $nm" }
+    Some(s.substring(0, qs) + (marker +: trailing).mkString(", ") + s.substring(cur))
   }
 
   // ----------------------------------------------------------- scalar WITH
@@ -2124,91 +1517,46 @@ object ChSqlRewrite {
     * t`, so every alias resolves unqualified at zero cost (a 1-row
     * broadcast side). Real CTEs (`name AS (subquery)`) and mixed forms
     * bail untouched — Spark owns those. Top-level queries only. */
+  private val scalarWithStops = Set("AS", "SELECT")
+
   private def rewriteScalarWith(sql: String): String = {
     val n = sql.length
-    val s0 = skipWs(sql, 0)
-    val (w0, afterW0) = readWord(sql, s0)
+    val (w0, afterW0) = nextWord(sql, 0)
     if (!w0.equalsIgnoreCase("WITH")) return sql
-    var p = skipWs(sql, afterW0)
+    var p = skipSpace(sql, afterW0)
     val items = scala.collection.mutable.ListBuffer.empty[(String, String)]
     var selectAt = -1
-    var bail = false
-    var more = true
-    while (more && !bail) {
-      // expr runs to the first depth-0 AS
-      val exprStart = p
-      var q = p
-      var depth = 0
-      var asAt = -1
-      var asEnd = -1
-      while (q < n && asAt < 0 && !bail) {
-        val ch = sql.charAt(q)
-        if (ch == '\'' || ch == '"' || ch == '`') q = skipQuoted(sql, q)
-        else if (ch == '-' && q + 1 < n && sql.charAt(q + 1) == '-') q = skipLine(sql, q)
-        else if (ch == '/' && q + 1 < n && sql.charAt(q + 1) == '*') q = skipBlock(sql, q)
-        else if (ch == '(') { depth += 1; q += 1 }
-        else if (ch == ')') { depth -= 1; q += 1 }
-        else if (Character.isJavaIdentifierStart(ch)) {
-          val ws = q
-          while (q < n && Character.isJavaIdentifierPart(sql.charAt(q))) q += 1
-          val w = sql.substring(ws, q)
-          if (depth == 0 && w.equalsIgnoreCase("AS")) { asAt = ws; asEnd = q }
-          else if (depth == 0 && w.equalsIgnoreCase("SELECT")) bail = true
-        } else q += 1
-      }
-      if (asAt < 0) bail = true
-      if (!bail) {
-        val expr = sql.substring(exprStart, asAt).trim
-        val q2 = skipWs(sql, asEnd)
-        if (expr.isEmpty || (q2 < n && sql.charAt(q2) == '(')) bail = true // real CTE
-        else {
-          val (name, afterName) = readWord(sql, q2)
-          if (name.isEmpty) bail = true
-          else {
-            items += (expr -> name)
-            val q3 = skipWs(sql, afterName)
-            if (q3 < n && sql.charAt(q3) == ',') p = skipWs(sql, q3 + 1)
-            else {
-              val (sel, _) = readWord(sql, q3)
-              if (sel.equalsIgnoreCase("SELECT")) { selectAt = q3; more = false }
-              else bail = true
-            }
-          }
-        }
-      }
+    while (selectAt < 0) {
+      // expr runs to the first top-level AS
+      val (asAt, stop) = SqlLexer.clauseEnd(sql, p, scalarWithStops)
+      if (stop != "AS") return sql
+      val expr = lift(sql, p, asAt).trim
+      val q2 = skipSpace(sql, asAt + 2)
+      if (expr.isEmpty || (q2 < n && sql.charAt(q2) == '(')) return sql // real CTE
+      val (name, afterName) = wordAt(sql, q2)
+      if (name.isEmpty) return sql
+      items += (expr -> name)
+      val q3 = skipSpace(sql, afterName)
+      if (q3 < n && sql.charAt(q3) == ',') p = skipSpace(sql, q3 + 1)
+      else if (wordAt(sql, q3)._1.equalsIgnoreCase("SELECT")) selectAt = q3
+      else return sql
     }
-    if (bail || items.isEmpty || selectAt < 0) return sql
     val itemSql = items.map { case (e, a) => s"($e) AS $a" }.mkString(", ")
     val rest = sql.substring(selectAt)
     // inject after the main query's first depth-0 FROM; for a FROM-less
     // select, the one-row relation goes BEFORE the first trailing clause
     // (`WITH 5 AS x SELECT x LIMIT 1` must not end `... LIMIT 1 FROM …`)
-    val m = rest.length
-    var i = 0
-    var depth = 0
     var clauseAt = -1
-    while (i < m) {
-      val c = rest.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(rest, i)
-      else if (c == '-' && i + 1 < m && rest.charAt(i + 1) == '-') i = skipLine(rest, i)
-      else if (c == '/' && i + 1 < m && rest.charAt(i + 1) == '*') i = skipBlock(rest, i)
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (Character.isJavaIdentifierStart(c)) {
-        val ws = i
-        while (i < m && Character.isJavaIdentifierPart(rest.charAt(i))) i += 1
-        val w = rest.substring(ws, i)
-        if (depth == 0 && w.equalsIgnoreCase("FROM"))
-          return rest.substring(0, i) +
-            s" (SELECT $itemSql) ch_with_ CROSS JOIN" + rest.substring(i)
-        if (depth == 0 && clauseAt < 0 && clauseStops.contains(w.toUpperCase))
-          clauseAt = ws
-      } else i += 1
+    val w = new Walk(rest)
+    while (w.nextCode()) if (w.depth == 0 && w.kind == SqlLexer.Word) {
+      if (w.isWord("FROM"))
+        return rest.substring(0, w.end) +
+          s" (SELECT $itemSql) ch_with_ CROSS JOIN" + rest.substring(w.end)
+      if (clauseAt < 0 && clauseStops.contains(w.upper)) clauseAt = w.start
     }
     // no FROM at all: a pure expression SELECT gains the one-row relation
-    val at = if (clauseAt < 0) m else clauseAt
-    rest.substring(0, at).stripTrailing() +
-      s" FROM (SELECT $itemSql) ch_with_ " + rest.substring(at)
+    val at = if (clauseAt < 0) rest.length else clauseAt
+    lift(rest, 0, at).stripTrailing() + s" FROM (SELECT $itemSql) ch_with_ " + rest.substring(at)
   }
 
   // ------------------------------------------------------- CH types in CAST
@@ -2218,80 +1566,45 @@ object ChSqlRewrite {
     * Rescue-only: an unknown type name is a PARSE error in Spark, and
     * every valid Spark type spelling stays untouched (the CH parser
     * rejects it or maps it to itself). */
-  private def rewriteChCasts(sql: String): String = {
-    def chTypeToSpark(text: String): Option[String] =
-      try {
-        val t = graft.types.CHType.parse(text)
-        Some(graft.types.CHType.toSpark(t)._1.sql)
-      } catch { case scala.util.control.NonFatal(_) => None }
-    val n = sql.length
-    var i = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (c == ':' && i + 1 < n && sql.charAt(i + 1) == ':') {
-        // x::Type — capture ident + optional (...) suffix
-        val tStart = skipWs(sql, i + 2)
-        val (tw, afterT) = readWord(sql, tStart)
-        if (tw.nonEmpty) {
-          var tEnd = afterT
-          val q = skipWs(sql, afterT)
-          if (q < n && sql.charAt(q) == '(') {
-            val e = matchParen(sql, q)
-            if (e > 0) tEnd = e
-          }
-          val typeText = sql.substring(tStart, tEnd)
-          chTypeToSpark(typeText) match {
-            case Some(spark) if spark != typeText =>
-              return rewriteChCasts(
-                sql.substring(0, tStart) + spark + sql.substring(tEnd))
-            case _ => i = tEnd
-          }
-        } else i += 2
-      } else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        if (sql.substring(start, i).equalsIgnoreCase("CAST")) {
-          val j = skipWs(sql, i)
-          if (j < n && sql.charAt(j) == '(') {
-            val e = matchParen(sql, j)
-            if (e > 0) {
-              val inside = sql.substring(j + 1, e - 1)
-              // last top-level ` AS ` splits expression from type text
-              var r = 0
-              var d2 = 0
-              var asAt = -1
-              var asEnd = -1
-              while (r < inside.length) {
-                val ch = inside.charAt(r)
-                if (ch == '\'' || ch == '"' || ch == '`') r = skipQuoted(inside, r)
-                else if (ch == '(') { d2 += 1; r += 1 }
-                else if (ch == ')') { d2 -= 1; r += 1 }
-                else if (Character.isJavaIdentifierStart(ch)) {
-                  val ws = r
-                  while (r < inside.length && Character.isJavaIdentifierPart(inside.charAt(r))) r += 1
-                  if (d2 == 0 && inside.substring(ws, r).equalsIgnoreCase("AS")) {
-                    asAt = ws; asEnd = r
-                  }
-                } else r += 1
-              }
-              if (asAt > 0) {
-                val typeText = inside.substring(asEnd).trim
-                chTypeToSpark(typeText) match {
-                  case Some(spark) if spark != typeText =>
-                    return rewriteChCasts(sql.substring(0, j) + "(" +
-                      inside.substring(0, asEnd) + s" $spark)" + sql.substring(e))
-                  case _ => () // valid Spark or unknown: leave for the parser
-                }
-              }
-            }
+  private def chTypeToSpark(text: String): Option[String] =
+    try {
+      val t = graft.types.CHType.parse(text)
+      Some(graft.types.CHType.toSpark(t)._1.sql)
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  private def rewriteChCasts(sql: String): String = spliceAll(sql) { w =>
+    val s = w.s
+    if (w.isSym(':') && w.end < s.length && s.charAt(w.end) == ':') {
+      // x::Type — the type word plus an optional (...) suffix
+      val tStart = skipSpace(s, w.end + 1)
+      val (tw, afterT) = wordAt(s, tStart)
+      val q = skipSpace(s, afterT)
+      val e = if (q < s.length && s.charAt(q) == '(') matchParen(s, q) else -1
+      val tEnd = if (e > 0) e else afterT
+      val typeText = s.substring(tStart, tEnd)
+      chTypeToSpark(typeText).filter(spark => tw.nonEmpty && spark != typeText) match {
+        case Some(spark) => Some(s.substring(0, tStart) + spark + s.substring(tEnd))
+        case None => w.jump(if (tw.isEmpty) w.end + 1 else tEnd); None
+      }
+    } else if (w.isWord("CAST")) {
+      val j = skipSpace(s, w.end)
+      val e = if (j < s.length && s.charAt(j) == '(') matchParen(s, j) else -1
+      if (e < 0) None
+      else {
+        val inside = s.substring(j + 1, e - 1)
+        // the last top-level AS splits the expression from the type text
+        var asAt = -1
+        val iw = new Walk(inside)
+        while (iw.nextCode()) if (iw.depth == 0 && iw.isWord("AS")) asAt = iw.start
+        if (asAt <= 0) None
+        else {
+          val typeText = lift(inside, asAt + 2, inside.length).trim
+          chTypeToSpark(typeText).filter(_ != typeText).map { spark =>
+            s.substring(0, j) + "(" + inside.substring(0, asAt + 2) + s" $spark)" + s.substring(e)
           }
         }
-      } else i += 1
-    }
-    sql
+      }
+    } else None
   }
 
   // ------------------------------------------------------------ WITH FILL
@@ -2317,208 +1630,154 @@ object ChSqlRewrite {
     * original stay NULL (type-default deviation above). Single plain
     * sort column only; an interpolation expression over OTHER columns
     * fails loudly (use the windowed API shape b_fil2). */
-  private def rewriteWithFill(sql: String): String = {
+  private val fillStops = Set("TO", "STEP", "INTERPOLATE", "LIMIT", "OFFSET",
+    "SETTINGS", "FORMAT", "UNION")
+
+  private def rewriteWithFill(sql: String): String = firstSite(sql)(withFillAt).getOrElse(sql)
+
+  private def withFillAt(w: Walk): Option[String] = {
+    if (w.depth != 0 || !w.isWord("ORDER")) return None
+    val sql = w.s
     val n = sql.length
-    var i = 0
-    var depth = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        if (depth == 0 && sql.substring(start, i).equalsIgnoreCase("ORDER")) {
-          val (by, afterBy) = readWord(sql, skipWs(sql, i))
-          if (by.equalsIgnoreCase("BY")) {
-            // single plain sort column, then WITH FILL
-            val (col, afterCol) = readWord(sql, skipWs(sql, afterBy))
-            var p = afterCol
-            val (maybeAsc, afterAsc) = readWord(sql, skipWs(sql, p))
-            var desc = false
-            if (maybeAsc.equalsIgnoreCase("ASC")) p = afterAsc
-            else if (maybeAsc.equalsIgnoreCase("DESC")) { desc = true; p = afterAsc }
-            val (w1, a1) = readWord(sql, skipWs(sql, p))
-            val (w2, a2) = readWord(sql, skipWs(sql, a1))
-            if (col.nonEmpty && w1.equalsIgnoreCase("WITH") && w2.equalsIgnoreCase("FILL")) {
-              def fail(why: String): Nothing = throw new IllegalArgumentException(
-                s"WITH FILL: $why")
-              // FROM/TO/STEP expression tail
-              val fillStops = Set("TO", "STEP", "INTERPOLATE", "LIMIT", "OFFSET",
-                "SETTINGS", "FORMAT", "UNION")
-              def readExpr(from: Int): (String, Int, String) = {
-                var q = from
-                var d2 = 0
-                while (q < n) {
-                  val ch = sql.charAt(q)
-                  if (ch == '\'' || ch == '"' || ch == '`') q = skipQuoted(sql, q)
-                  else if (ch == '(') { d2 += 1; q += 1 }
-                  else if (ch == ')') { d2 -= 1; q += 1 }
-                  else if (Character.isJavaIdentifierStart(ch)) {
-                    val ws = q
-                    while (q < n && Character.isJavaIdentifierPart(sql.charAt(q))) q += 1
-                    val w = sql.substring(ws, q).toUpperCase
-                    if (d2 == 0 && fillStops.contains(w))
-                      return (sql.substring(from, ws).trim, ws, w)
-                  } else q += 1
-                }
-                (sql.substring(from, n).trim, n, "")
-              }
-              var cur = a2
-              var fromE = ""
-              var toE = ""
-              var stepE = if (desc) "-1" else "1"
-              // (column, kind, payload, payload2): kind ∈ carry | affine
-              // (payload = +|-|*, payload2 = numeric literal) | const
-              // (payload = the constant expression)
-              var interp = Seq.empty[(String, String, String, String)]
-              var done = false
-              var tailStart = n
-              while (!done) {
-                val (kw, akw) = readWord(sql, skipWs(sql, cur))
-                kw.toUpperCase match {
-                  case "FROM" =>
-                    val (e, end, _) = readExpr(skipWs(sql, akw)); fromE = e; cur = end
-                  case "TO" =>
-                    val (e, end, _) = readExpr(skipWs(sql, akw)); toE = e; cur = end
-                  case "STEP" =>
-                    val (e, end, _) = readExpr(skipWs(sql, akw)); stepE = e; cur = end
-                  case "INTERPOLATE" =>
-                    val q2 = skipWs(sql, akw)
-                    if (q2 >= n || sql.charAt(q2) != '(')
-                      fail("INTERPOLATE expects a parenthesized list")
-                    val e2 = matchParen(sql, q2)
-                    if (e2 < 0) fail("unbalanced INTERPOLATE list")
-                    val items = sql.substring(q2 + 1, e2 - 1).split(",").map(_.trim)
-                    val itemRe = "(?is)^([A-Za-z_][A-Za-z0-9_]*)(?:\\s+AS\\s+(.+))?$".r
-                    val numRe = "-?[0-9]+(?:\\.[0-9]+)?"
-                    interp = items.toSeq.map {
-                      case itemRe(cn, null) => (cn, "carry", "", "")
-                      case itemRe(cn, ex0) =>
-                        val ex = ex0.trim
-                        val affRe = ("(?is)^" + java.util.regex.Pattern.quote(cn) +
-                          "\\s*([+*-])\\s*(" + numRe + ")$").r
-                        ex match {
-                          case e if e.equalsIgnoreCase(cn) => (cn, "carry", "", "")
-                          case affRe(op, lit) => (cn, "affine", op, lit)
-                          case e if e.matches(s"(?is)^(?:$numRe|NULL|'[^']*')$$") =>
-                            (cn, "const", e, "")
-                          case _ => fail(
-                            s"INTERPOLATE ($cn AS $ex): only self-affine " +
-                              "expressions (col ± k, col * k) and constants " +
-                              "have a faithful closed-form rewrite; use the " +
-                              "windowed API shape (b_fil2) for general exprs")
-                        }
-                      case it => fail(s"INTERPOLATE item '$it' is not " +
-                        "`col` or `col AS expr`")
-                    }
-                    cur = e2
-                  case _ =>
-                    tailStart = if (kw.isEmpty) n else skipWs(sql, cur)
-                    done = true
-                }
-              }
-              if (fromE.isEmpty != toE.isEmpty)
-                fail("FROM and TO must be given together (or both omitted " +
-                  "to derive bounds from the result)")
-              val body = sql.substring(0, start).trim
-              val tail = if (tailStart < n) " " + sql.substring(tailStart) else ""
-              // axis: ascending fills upward with TO exclusive above;
-              // descending fills downward with TO exclusive below
-              val toCmp = if (desc) ">" else "<"
-              val axis =
-                if (fromE.nonEmpty)
-                  s"SELECT ch_fill_x_ AS $col FROM (SELECT explode(sequence(" +
-                    s"($fromE), ($toE), ($stepE))) AS ch_fill_x_) " +
-                    s"WHERE ch_fill_x_ $toCmp ($toE)"
-                else if (desc)
-                  s"SELECT explode(sequence(ch_fill_t_, ch_fill_f_, ($stepE))) " +
-                    s"AS $col FROM (SELECT min($col) AS ch_fill_f_, " +
-                    s"max($col) AS ch_fill_t_ FROM ($body) ch_fill_mm_)"
-                else
-                  s"SELECT explode(sequence(ch_fill_f_, ch_fill_t_, ($stepE))) " +
-                    s"AS $col FROM (SELECT min($col) AS ch_fill_f_, " +
-                    s"max($col) AS ch_fill_t_ FROM ($body) ch_fill_mm_)"
-              val dir = if (desc) " DESC" else ""
-              if (interp.isEmpty)
-                return s"SELECT * FROM ($axis) ch_fill_ax_ " +
-                  s"FULL OUTER JOIN ($body) ch_fill_src_ USING ($col) " +
-                  s"ORDER BY $col$dir$tail"
-              // INTERPOLATE: fill rows (marker NULL) derive from the last
-              // ORIGINAL row in output order; original rows keep their own
-              // values. Affine forms need the fill DISTANCE (rows since
-              // that original), so a row_number layer is added on demand.
-              val w = s"OVER (ORDER BY $col$dir ROWS BETWEEN UNBOUNDED " +
-                "PRECEDING AND CURRENT ROW)"
-              def lastOrig(e: String) =
-                s"last(CASE WHEN ch_fill_orig_ IS NOT NULL THEN $e END, true) $w"
-              val needRn = interp.exists(_._2 == "affine")
-              val kDist = s"(ch_fill_rn_ - ${lastOrig("ch_fill_rn_")})"
-              val carried = interp.map { case (cn, kind, p1, p2) =>
-                val fillVal = kind match {
-                  case "carry" => lastOrig(cn)
-                  case "const" => p1
-                  case "affine" => p1 match {
-                    case "+" => s"${lastOrig(cn)} + $kDist * ($p2)"
-                    case "-" => s"${lastOrig(cn)} - $kDist * ($p2)"
-                    case _ => s"${lastOrig(cn)} * pow(($p2), $kDist)"
-                  }
-                }
-                s"CASE WHEN ch_fill_orig_ IS NOT NULL THEN $cn ELSE " +
-                  s"$fillVal END AS $cn"
-              }.mkString(", ")
-              val joined = s"SELECT * FROM ($axis) ch_fill_ax_ " +
-                s"FULL OUTER JOIN (SELECT *, true AS ch_fill_orig_ FROM ($body) " +
-                s"ch_fill_b_) ch_fill_src_ USING ($col)"
-              val (src, extraExcept) =
-                if (needRn)
-                  (s"SELECT *, row_number() OVER (ORDER BY $col$dir) " +
-                    s"AS ch_fill_rn_ FROM ($joined) ch_fill_j0_", ", ch_fill_rn_")
-                else (joined, "")
-              return s"SELECT * EXCEPT (${interp.map(_._1).mkString(", ")}, " +
-                s"ch_fill_orig_$extraExcept), " +
-                s"$carried FROM ($src) ch_fill_j_ " +
-                s"ORDER BY $col$dir$tail"
-            }
-          }
-        }
-      } else i += 1
+    val (by, afterBy) = nextWord(sql, w.end)
+    if (!by.equalsIgnoreCase("BY")) return None
+    // single plain sort column, then WITH FILL
+    val (col, afterCol) = nextWord(sql, afterBy)
+    var p = afterCol
+    val (maybeAsc, afterAsc) = nextWord(sql, p)
+    var desc = false
+    if (maybeAsc.equalsIgnoreCase("ASC")) p = afterAsc
+    else if (maybeAsc.equalsIgnoreCase("DESC")) { desc = true; p = afterAsc }
+    val (w1, a1) = nextWord(sql, p)
+    val (w2, a2) = nextWord(sql, a1)
+    if (col.isEmpty || !w1.equalsIgnoreCase("WITH") || !w2.equalsIgnoreCase("FILL")) return None
+    def fail(why: String): Nothing = throw new IllegalArgumentException(s"WITH FILL: $why")
+    // FROM/TO/STEP expression tail
+    def readExpr(from: Int): (String, Int) = {
+      val (end, _) = SqlLexer.clauseEnd(sql, from, fillStops)
+      (lift(sql, from, end).trim, end)
     }
-    sql
+    var cur = a2
+    var fromE = ""
+    var toE = ""
+    var stepE = if (desc) "-1" else "1"
+    // (column, kind, payload, payload2): kind ∈ carry | affine
+    // (payload = +|-|*, payload2 = numeric literal) | const
+    // (payload = the constant expression)
+    var interp = Seq.empty[(String, String, String, String)]
+    var done = false
+    var tailStart = n
+    while (!done) {
+      val (kw, akw) = nextWord(sql, cur)
+      kw.toUpperCase match {
+        case "FROM" => val (e, end) = readExpr(skipSpace(sql, akw)); fromE = e; cur = end
+        case "TO" => val (e, end) = readExpr(skipSpace(sql, akw)); toE = e; cur = end
+        case "STEP" => val (e, end) = readExpr(skipSpace(sql, akw)); stepE = e; cur = end
+        case "INTERPOLATE" =>
+          val q2 = skipSpace(sql, akw)
+          if (q2 >= n || sql.charAt(q2) != '(')
+            fail("INTERPOLATE expects a parenthesized list")
+          val (list, e2) = parenAfter(sql, q2).getOrElse(fail("unbalanced INTERPOLATE list"))
+          val itemRe = "(?is)^([A-Za-z_][A-Za-z0-9_]*)(?:\\s+AS\\s+(.+))?$".r
+          val numRe = "-?[0-9]+(?:\\.[0-9]+)?"
+          interp = splitTopLevel(list).map(_.trim).map {
+            case itemRe(cn, null) => (cn, "carry", "", "")
+            case itemRe(cn, ex0) =>
+              val ex = ex0.trim
+              val affRe = ("(?is)^" + java.util.regex.Pattern.quote(cn) +
+                "\\s*([+*-])\\s*(" + numRe + ")$").r
+              ex match {
+                case e if e.equalsIgnoreCase(cn) => (cn, "carry", "", "")
+                case affRe(op, lit) => (cn, "affine", op, lit)
+                case e if e.matches(s"(?is)^(?:$numRe|NULL|'[^']*')$$") =>
+                  (cn, "const", e, "")
+                case _ => fail(
+                  s"INTERPOLATE ($cn AS $ex): only self-affine " +
+                    "expressions (col ± k, col * k) and constants " +
+                    "have a faithful closed-form rewrite; use the " +
+                    "windowed API shape (b_fil2) for general exprs")
+              }
+            case it => fail(s"INTERPOLATE item '$it' is not " +
+              "`col` or `col AS expr`")
+          }
+          cur = e2
+        case _ =>
+          tailStart = if (kw.isEmpty) n else skipSpace(sql, cur)
+          done = true
+      }
+    }
+    if (fromE.isEmpty != toE.isEmpty)
+      fail("FROM and TO must be given together (or both omitted " +
+        "to derive bounds from the result)")
+    val body = lift(sql, 0, w.start).trim
+    val tail = if (tailStart < n) " " + sql.substring(tailStart) else ""
+    // axis: ascending fills upward with TO exclusive above;
+    // descending fills downward with TO exclusive below
+    val toCmp = if (desc) ">" else "<"
+    val axis =
+      if (fromE.nonEmpty)
+        s"SELECT ch_fill_x_ AS $col FROM (SELECT explode(sequence(" +
+          s"($fromE), ($toE), ($stepE))) AS ch_fill_x_) " +
+          s"WHERE ch_fill_x_ $toCmp ($toE)"
+      else if (desc)
+        s"SELECT explode(sequence(ch_fill_t_, ch_fill_f_, ($stepE))) " +
+          s"AS $col FROM (SELECT min($col) AS ch_fill_f_, " +
+          s"max($col) AS ch_fill_t_ FROM ($body) ch_fill_mm_)"
+      else
+        s"SELECT explode(sequence(ch_fill_f_, ch_fill_t_, ($stepE))) " +
+          s"AS $col FROM (SELECT min($col) AS ch_fill_f_, " +
+          s"max($col) AS ch_fill_t_ FROM ($body) ch_fill_mm_)"
+    val dir = if (desc) " DESC" else ""
+    if (interp.isEmpty)
+      return Some(s"SELECT * FROM ($axis) ch_fill_ax_ " +
+        s"FULL OUTER JOIN ($body) ch_fill_src_ USING ($col) " +
+        s"ORDER BY $col$dir$tail")
+    // INTERPOLATE: fill rows (marker NULL) derive from the last ORIGINAL
+    // row in output order; original rows keep their own values. Affine
+    // forms need the fill DISTANCE (rows since that original), so a
+    // row_number layer is added on demand.
+    val win = s"OVER (ORDER BY $col$dir ROWS BETWEEN UNBOUNDED " +
+      "PRECEDING AND CURRENT ROW)"
+    def lastOrig(e: String) =
+      s"last(CASE WHEN ch_fill_orig_ IS NOT NULL THEN $e END, true) $win"
+    val needRn = interp.exists(_._2 == "affine")
+    val kDist = s"(ch_fill_rn_ - ${lastOrig("ch_fill_rn_")})"
+    val carried = interp.map { case (cn, kind, p1, p2) =>
+      val fillVal = kind match {
+        case "carry" => lastOrig(cn)
+        case "const" => p1
+        case "affine" => p1 match {
+          case "+" => s"${lastOrig(cn)} + $kDist * ($p2)"
+          case "-" => s"${lastOrig(cn)} - $kDist * ($p2)"
+          case _ => s"${lastOrig(cn)} * pow(($p2), $kDist)"
+        }
+      }
+      s"CASE WHEN ch_fill_orig_ IS NOT NULL THEN $cn ELSE " +
+        s"$fillVal END AS $cn"
+    }.mkString(", ")
+    val joined = s"SELECT * FROM ($axis) ch_fill_ax_ " +
+      s"FULL OUTER JOIN (SELECT *, true AS ch_fill_orig_ FROM ($body) " +
+      s"ch_fill_b_) ch_fill_src_ USING ($col)"
+    val (src, extraExcept) =
+      if (needRn)
+        (s"SELECT *, row_number() OVER (ORDER BY $col$dir) " +
+          s"AS ch_fill_rn_ FROM ($joined) ch_fill_j0_", ", ch_fill_rn_")
+      else (joined, "")
+    Some(s"SELECT * EXCEPT (${interp.map(_._1).mkString(", ")}, " +
+      s"ch_fill_orig_$extraExcept), " +
+      s"$carried FROM ($src) ch_fill_j_ " +
+      s"ORDER BY $col$dir$tail")
   }
 
   // ------------------------------------------------------------- LIMIT BY
 
-  private def readNum(s: String, start: Int): (String, Int) = {
-    var i = start
-    while (i < s.length && Character.isDigit(s.charAt(i))) i += 1
-    (s.substring(start, i), i)
-  }
-
   /** Last top-level `ORDER BY` of `body`: (orderTokenStart, listStart). */
   private def lastOrderBy(body: String): Option[(Int, Int)] = {
-    val n = body.length
-    var i = 0
-    var depth = 0
     var res: Option[(Int, Int)] = None
-    while (i < n) {
-      val c = body.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(body, i)
-      else if (c == '-' && i + 1 < n && body.charAt(i + 1) == '-') i = skipLine(body, i)
-      else if (c == '/' && i + 1 < n && body.charAt(i + 1) == '*') i = skipBlock(body, i)
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(body.charAt(i))) i += 1
-        if (depth == 0 && body.substring(start, i).equalsIgnoreCase("ORDER")) {
-          val (by, afterBy) = readWord(body, skipWs(body, i))
-          if (by.equalsIgnoreCase("BY")) res = Some((start, skipWs(body, afterBy)))
-        }
-      } else i += 1
+    val w = new Walk(body)
+    while (w.nextCode()) if (w.depth == 0 && w.isWord("ORDER")) {
+      val (by, afterBy) = nextWord(body, w.end)
+      if (by.equalsIgnoreCase("BY")) res = Some((w.start, skipSpace(body, afterBy)))
     }
     res
   }
@@ -2531,6 +1790,73 @@ object ChSqlRewrite {
     * (`LimitBy.limitBy`) is the two-phase scale shape; this textual
     * form is the compatibility path. Top-level queries only: a LIMIT BY
     * inside a subquery keeps the original (loud) parse failure. */
+  private val limitByStops = Set("LIMIT", "SETTINGS", "FORMAT", "UNION", "INTERSECT", "EXCEPT")
+
+  private def rewriteLimitBy(sql: String): String = firstSite(sql)(limitByAt).getOrElse(sql)
+
+  private def limitByAt(w: Walk): Option[String] = {
+    if (w.depth != 0 || !w.isWord("LIMIT")) return None
+    val sql = w.s
+    val n = sql.length
+    val (num1, p1) = readNum(sql, skipSpace(sql, w.end))
+    if (num1.isEmpty) return None
+    var k = -1L
+    var off = 0L
+    var afterBy = -1
+    val q = skipSpace(sql, p1)
+    if (q < n && sql.charAt(q) == ',') {
+      val (num2, p2) = readNum(sql, skipSpace(sql, q + 1))
+      val (by, aw) = nextWord(sql, p2)
+      if (num2.nonEmpty && by.equalsIgnoreCase("BY")) {
+        off = num1.toLong; k = num2.toLong; afterBy = aw
+      }
+    } else {
+      val (w2, aw) = wordAt(sql, q)
+      if (w2.equalsIgnoreCase("BY")) { k = num1.toLong; afterBy = aw }
+      else if (w2.equalsIgnoreCase("OFFSET")) {
+        val (num2, p2) = readNum(sql, skipSpace(sql, aw))
+        val (by, aw2) = nextWord(sql, p2)
+        if (num2.nonEmpty && by.equalsIgnoreCase("BY")) {
+          k = num1.toLong; off = num2.toLong; afterBy = aw2
+        }
+      }
+    }
+    if (k < 0) return None
+    // the grouping expressions run to the next top-level clause
+    val colsStart = skipSpace(sql, afterBy)
+    val (colsEnd, _) = SqlLexer.clauseEnd(sql, colsStart, limitByStops)
+    val cols = lift(sql, colsStart, colsEnd).trim
+    val tail = sql.substring(colsEnd)
+    val body = lift(sql, 0, w.start)
+    val (bodyCore, sorts, outerOrder) = lastOrderBy(body) match {
+      case Some((os, ls)) =>
+        val s0 = body.substring(ls).trim
+        (body.substring(0, os), s0, s"ORDER BY $s0 ")
+      case None => (body, cols, "")
+    }
+    // ordinal sort/partition items (ORDER BY 2) are only ordinal-resolved
+    // at the TOP level of a query — inside the window spec they'd become
+    // constant literals and the per-group pick would turn arbitrary.
+    // Keep the loud parse failure instead of a silent wrong answer.
+    if (hasOrdinalItem(sorts) || hasOrdinalItem(cols)) return Some(sql)
+    Some(s"SELECT * EXCEPT (ch_lb_rn_) FROM (SELECT *, " +
+      s"row_number() OVER (PARTITION BY $cols ORDER BY $sorts) " +
+      s"AS ch_lb_rn_ FROM ($bodyCore) ch_lb_src_) ch_lb_ " +
+      s"WHERE ch_lb_rn_ BETWEEN ${off + 1} AND ${off + k} " +
+      outerOrder + tail)
+  }
+
+  /** True when any top-level comma-separated item of an ORDER BY /
+    * PARTITION BY list is a bare integer ordinal (optionally with
+    * direction / null-placement suffixes). */
+  private val ordinalItem =
+    "(?is)^\\s*\\d+\\s*(?:ASC|DESC)?\\s*(?:NULLS\\s+(?:FIRST|LAST))?\\s*$".r
+
+  private def hasOrdinalItem(list: String): Boolean =
+    splitTopLevel(list).exists(it => ordinalItem.pattern.matcher(it).matches())
+
+  // ------------------------------------------------------ bracket arrays
+
   /** CH bracket ARRAY LITERALS (`[1, 2, 3]`, `[[1], [2]]`, `['a']` —
     * pervasive in CH SQL) → `array(...)`. Spark parses `expr[i]`
     * INDEXING but not bracket literals, so this is rescue-tier: a
@@ -2540,7 +1866,7 @@ object ChSqlRewrite {
     * keyword, `)`, or `]`, the bracket indexes; after start-of-text,
     * `(`, `,`, an operator, a keyword (SELECT/WHERE/IN/THEN/…), or
     * another literal `[`, it opens a literal. Nested literals work via
-    * the per-bracket decision stack; `[]` becomes `array()`.
+    * the per-bracket primary stack; `[]` becomes `array()`.
     */
   private val bracketLiteralKeywords = Set(
     "SELECT", "DISTINCT", "ALL", "WHERE", "AND", "OR", "NOT", "IN", "IS",
@@ -2553,13 +1879,13 @@ object ChSqlRewrite {
     // are keywords, never array bases being indexed
     "WITH", "GROUP", "UNION", "INTERSECT", "EXCEPT", "REPLACE", "APPLY",
     "PREWHERE", "QUALIFY", "SAMPLE")
+
   private def rewriteBracketArrays(sql: String): String = {
     if (!sql.contains('[')) return sql
-    val n = sql.length
-    val out = new StringBuilder(n + 16)
-    // per-open-bracket: 0 = index, 1 = array literal, 2 = IN-list
-    // (CH `x IN [1,2]` — a bracketed TUPLE: emit plain parens, Spark's IN
-    // wants `(…)`, `IN array(…)` never parses).
+    val out = new java.lang.StringBuilder(sql.length + 16)
+    // A literal bracket emits `array(`; an IN-list bracket (CH `x IN
+    // [1,2]` — a bracketed TUPLE) emits plain parens, since Spark's IN
+    // wants `(…)` and `IN array(…)` never parses.
     // INDEX brackets rewrite to `try_element_at(base, idx)` because CH
     // indexing is 1-BASED (and negative counts from the end) while
     // Spark's bracket is 0-based — keeping the bracket would silently
@@ -2569,7 +1895,6 @@ object ChSqlRewrite {
     // expression's output start is tracked (`prim` + a stack restored at
     // every close) so the wrap inserts before `arr`, `t.arr`, `f(x)`,
     // `(expr)`, a string literal, or a chained `…[i]` alike.
-    var stack = List.empty[Int]
     var primStack = List.empty[Int]
     var prim = 0 // output index where the current primary expression starts
     // preceding significant token kind: 0 = opener/operator/start (literal
@@ -2580,85 +1905,54 @@ object ChSqlRewrite {
     // identifier — including the callable keywords array/if/range/
     // replace — or a close) vs a grouping paren that starts its own
     var callable = false
-    var i = 0
     def popPrim(): Unit = primStack match {
       case h :: t => prim = h; primStack = t
       case Nil => ()
     }
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        val e = skipQuoted(sql, i)
+    val w = new Walk(sql)
+    while (w.next()) w.kind match {
+      case SqlLexer.Space | SqlLexer.Comment => out.append(sql, w.start, w.end)
+      case SqlLexer.Literal =>
         prim = out.length
-        out.append(sql.substring(i, e)); i = e; prev = 1; callable = false
-      } else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') {
-        val e = skipLine(sql, i); out.append(sql.substring(i, e)); i = e
-      } else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
-        val e = skipBlock(sql, i); out.append(sql.substring(i, e)); i = e
-      } else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        val w = sql.substring(start, i)
+        out.append(sql, w.start, w.end); prev = 1; callable = false
+      case SqlLexer.Word =>
         // a dotted continuation (t.col) keeps the chain's primary start
         if (out.isEmpty || out.charAt(out.length - 1) != '.') prim = out.length
-        out.append(w)
-        val u = w.toUpperCase(java.util.Locale.ROOT)
-        prev = if (u == "IN") 2
-        else if (bracketLiteralKeywords.contains(u)) 0
-        else 1
+        out.append(sql, w.start, w.end)
+        val u = w.upper
+        prev = if (u == "IN") 2 else if (bracketLiteralKeywords.contains(u)) 0 else 1
         callable = !bracketLiteralKeywords.contains(u) ||
           u == "ARRAY" || u == "IF" || u == "RANGE" || u == "REPLACE"
-      } else if (c == '[') {
-        val kind = if (prev == 2) 2 else if (prev == 0) 1 else 0
-        stack = kind :: stack
-        kind match {
-          case 1 =>
-            primStack = out.length :: primStack
-            prim = out.length
-            out.append("array(")
-          case 2 =>
-            primStack = out.length :: primStack
-            prim = out.length
-            out.append("(")
-          case _ =>
+      case _ => w.char match {
+        case '[' =>
+          if (prev == 1) {
             // wrap the base: BASE[ → try_element_at(BASE,
             primStack = prim :: primStack
             out.insert(prim, "try_element_at(")
             out.append(", ")
-        }
-        prev = 0
-        callable = false
-        i += 1
-      } else if (c == ']') {
-        val kind = stack.headOption.getOrElse(0)
-        if (stack.nonEmpty) stack = stack.tail
-        out.append(")")
-        popPrim()
-        prev = 1
-        callable = true
-        i += 1
-      } else if (c == '(') {
-        // a call keeps the callee's primary start; grouping starts its own
-        if (callable) primStack = prim :: primStack
-        else { primStack = out.length :: primStack; prim = out.length }
-        out.append(c)
-        prev = 0
-        callable = false
-        i += 1
-      } else if (c == ')') {
-        out.append(c)
-        popPrim()
-        prev = 1
-        callable = true
-        i += 1
-      } else {
-        out.append(c)
-        if (!Character.isWhitespace(c)) { prev = 0; callable = false }
-        i += 1
+          } else {
+            primStack = out.length :: primStack
+            prim = out.length
+            out.append(if (prev == 2) "(" else "array(")
+          }
+          prev = 0; callable = false
+        case ']' =>
+          out.append(")"); popPrim(); prev = 1; callable = true
+        case '(' =>
+          // a call keeps the callee's primary start; grouping starts its own
+          if (callable) primStack = prim :: primStack
+          else { primStack = out.length :: primStack; prim = out.length }
+          out.append('('); prev = 0; callable = false
+        case ')' =>
+          out.append(')'); popPrim(); prev = 1; callable = true
+        case c =>
+          out.append(c); prev = 0; callable = false
       }
     }
     out.toString
   }
+
+  // -------------------------------------------------------------- QUALIFY
 
   /** CH `QUALIFY` (post-window filter, may reference SELECT aliases and
     * window expressions; ClickHouse evaluates it after the select list's
@@ -2682,152 +1976,35 @@ object ChSqlRewrite {
     * a predicate using a named window from the body's WINDOW clause
     * (out of scope in the outer projection).
     */
-  private def rewriteQualify(sql: String): String = {
-    val n = sql.length
-    var i = 0
-    var depth = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        if (depth == 0 && sql.substring(start, i).equalsIgnoreCase("QUALIFY")) {
-          val predStart = skipWs(sql, i)
-          val (predEnd, _) = clauseEnd(sql, predStart)
-          val pred = sql.substring(predStart, predEnd).trim
-          val body = sql.substring(0, start).trim
-          val tail = sql.substring(predEnd)
-          if (pred.isEmpty || body.isEmpty) return sql
-          // a top-level set operator BEFORE this QUALIFY means the clause
-          // binds to the union's LAST branch in CH, but wrapping `body`
-          // would filter the whole union — bail to the loud parse
-          // failure instead of a silently different result. (EXCEPT only
-          // counts when followed by SELECT/ALL/DISTINCT — `* EXCEPT (…)`
-          // is the star modifier, not a set op.)
-          if (hasTopLevelKeyword(body, "UNION") ||
-            hasTopLevelKeyword(body, "INTERSECT") ||
-            "(?is)\\bEXCEPT\\s+(?:SELECT|ALL|DISTINCT)\\b".r
-              .findFirstIn(body).isDefined) return sql
-          return s"SELECT * EXCEPT (ch_q_ok_) FROM (SELECT *, ($pred) AS ch_q_ok_ " +
-            s"FROM ($body) ch_q_src_) ch_q_i_ WHERE ch_q_ok_ " + tail
-        }
-      } else i += 1
+  private def rewriteQualify(sql: String): String = firstSite(sql) { w =>
+    if (w.depth != 0 || !w.isWord("QUALIFY")) None
+    else {
+      val predStart = skipSpace(sql, w.end)
+      val (predEnd, _) = SqlLexer.clauseEnd(sql, predStart, clauseStops)
+      val pred = lift(sql, predStart, predEnd).trim
+      val body = lift(sql, 0, w.start).trim
+      // a top-level set operator BEFORE this QUALIFY means the clause
+      // binds to the union's LAST branch in CH, but wrapping `body` would
+      // filter the whole union — bail to the loud parse failure instead
+      // of a silently different result. (EXCEPT only counts when followed
+      // by SELECT/ALL/DISTINCT — `* EXCEPT (…)` is the star modifier,
+      // not a set op.)
+      if (pred.isEmpty || body.isEmpty || SqlLexer.hasWord(body, "UNION", topLevel = true) ||
+        SqlLexer.hasWord(body, "INTERSECT", topLevel = true) || exceptSetOp(body)) Some(sql)
+      else Some(s"SELECT * EXCEPT (ch_q_ok_) FROM (SELECT *, ($pred) AS ch_q_ok_ " +
+        s"FROM ($body) ch_q_src_) ch_q_i_ WHERE ch_q_ok_ " + sql.substring(predEnd))
     }
-    sql
-  }
+  }.getOrElse(sql)
 
-  private def rewriteLimitBy(sql: String): String = {
-    val n = sql.length
-    var i = 0
-    var depth = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (c == '(') { depth += 1; i += 1 }
-      else if (c == ')') { depth -= 1; i += 1 }
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        if (depth == 0 && sql.substring(start, i).equalsIgnoreCase("LIMIT")) {
-          val (num1, p1) = readNum(sql, skipWs(sql, i))
-          if (num1.nonEmpty) {
-            var k = -1L
-            var off = 0L
-            var afterBy = -1
-            val q = skipWs(sql, p1)
-            if (q < n && sql.charAt(q) == ',') {
-              val (num2, p2) = readNum(sql, skipWs(sql, q + 1))
-              val (w, aw) = readWord(sql, skipWs(sql, p2))
-              if (num2.nonEmpty && w.equalsIgnoreCase("BY")) {
-                off = num1.toLong; k = num2.toLong; afterBy = aw
-              }
-            } else {
-              val (w, aw) = readWord(sql, q)
-              if (w.equalsIgnoreCase("BY")) { k = num1.toLong; afterBy = aw }
-              else if (w.equalsIgnoreCase("OFFSET")) {
-                val (num2, p2) = readNum(sql, skipWs(sql, aw))
-                val (w2, aw2) = readWord(sql, skipWs(sql, p2))
-                if (num2.nonEmpty && w2.equalsIgnoreCase("BY")) {
-                  k = num1.toLong; off = num2.toLong; afterBy = aw2
-                }
-              }
-            }
-            if (k >= 0) {
-              // the grouping expressions run to the next top-level clause
-              val colsStart = skipWs(sql, afterBy)
-              var r = colsStart
-              var d2 = 0
-              var colsEnd = -1
-              while (r < n && colsEnd < 0) {
-                val ch = sql.charAt(r)
-                if (ch == '\'' || ch == '"' || ch == '`') r = skipQuoted(sql, r)
-                else if (ch == '(') { d2 += 1; r += 1 }
-                else if (ch == ')') { d2 -= 1; r += 1 }
-                else if (Character.isJavaIdentifierStart(ch)) {
-                  val ws = r
-                  while (r < n && Character.isJavaIdentifierPart(sql.charAt(r))) r += 1
-                  val w = sql.substring(ws, r).toUpperCase
-                  if (d2 == 0 && (w == "LIMIT" || w == "SETTINGS" || w == "FORMAT" ||
-                    w == "UNION" || w == "INTERSECT" || w == "EXCEPT")) colsEnd = ws
-                } else r += 1
-              }
-              if (colsEnd < 0) colsEnd = n
-              val cols = sql.substring(colsStart, colsEnd).trim
-              val tail = sql.substring(colsEnd)
-              val body = sql.substring(0, start)
-              val (bodyCore, sorts, outerOrder) = lastOrderBy(body) match {
-                case Some((os, ls)) =>
-                  val s0 = body.substring(ls).trim
-                  (body.substring(0, os), s0, s"ORDER BY $s0 ")
-                case None => (body, cols, "")
-              }
-              // ordinal sort/partition items (ORDER BY 2) are only
-              // ordinal-resolved at the TOP level of a query — inside
-              // the window spec they'd become constant literals and the
-              // per-group pick would turn arbitrary. Keep the loud
-              // parse failure instead of a silent wrong answer.
-              if (hasOrdinalItem(sorts) || hasOrdinalItem(cols)) return sql
-              return s"SELECT * EXCEPT (ch_lb_rn_) FROM (SELECT *, " +
-                s"row_number() OVER (PARTITION BY $cols ORDER BY $sorts) " +
-                s"AS ch_lb_rn_ FROM ($bodyCore) ch_lb_src_) ch_lb_ " +
-                s"WHERE ch_lb_rn_ BETWEEN ${off + 1} AND ${off + k} " +
-                outerOrder + tail
-            }
-          }
-        }
-      } else i += 1
+  /** True when `EXCEPT SELECT|ALL|DISTINCT` (the set operation) appears
+    * in code. */
+  private def exceptSetOp(sql: String): Boolean = {
+    val w = new Walk(sql)
+    while (w.nextCode()) if (w.isWord("EXCEPT")) {
+      val next = nextWord(sql, w.end)._1.toUpperCase(java.util.Locale.ROOT)
+      if (next == "SELECT" || next == "ALL" || next == "DISTINCT") return true
     }
-    sql
-  }
-
-  /** True when any top-level comma-separated item of an ORDER BY /
-    * PARTITION BY list is a bare integer ordinal (optionally with
-    * direction / null-placement suffixes). */
-  private def hasOrdinalItem(list: String): Boolean = {
-    val items = scala.collection.mutable.ArrayBuffer.empty[String]
-    var d = 0
-    var s = 0
-    var i = 0
-    while (i < list.length) {
-      val ch = list.charAt(i)
-      if (ch == '\'' || ch == '"' || ch == '`') i = skipQuoted(list, i)
-      else {
-        if (ch == '(') d += 1
-        else if (ch == ')') d -= 1
-        else if (ch == ',' && d == 0) { items += list.substring(s, i); s = i + 1 }
-        i += 1
-      }
-    }
-    items += list.substring(s)
-    val ordinal = "(?is)^\\s*\\d+\\s*(?:ASC|DESC)?\\s*(?:NULLS\\s+(?:FIRST|LAST))?\\s*$".r
-    items.exists(it => ordinal.pattern.matcher(it).matches())
+    false
   }
 
   /** CH/MySQL `LIMIT offset, count` → `LIMIT count OFFSET offset`.
@@ -2835,146 +2012,72 @@ object ChSqlRewrite {
     * nesting depth — the replacement is purely local. A trailing `BY`
     * belongs to [[rewriteLimitBy]] (which runs first in the chain), so
     * that shape is left untouched here. */
-  private def rewriteLimitComma(sql: String): String = {
-    val n = sql.length
-    var i = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        if (sql.substring(start, i).equalsIgnoreCase("LIMIT")) {
-          val (num1, p1) = readNum(sql, skipWs(sql, i))
-          if (num1.nonEmpty) {
-            val q = skipWs(sql, p1)
-            if (q < n && sql.charAt(q) == ',') {
-              val (num2, p2) = readNum(sql, skipWs(sql, q + 1))
-              val (w, _) = readWord(sql, skipWs(sql, p2))
-              if (num2.nonEmpty && !w.equalsIgnoreCase("BY")) {
-                // restart: the spliced site no longer matches (no comma)
-                return rewriteLimitComma(sql.substring(0, start) +
-                  s"LIMIT $num2 OFFSET $num1" + sql.substring(p2))
-              }
-            }
-          }
-        }
-      } else i += 1
+  private def rewriteLimitComma(sql: String): String = spliceAll(sql) { w =>
+    val s = w.s
+    val (num1, p1) = if (w.isWord("LIMIT")) readNum(s, skipSpace(s, w.end)) else ("", -1)
+    val q = if (num1.nonEmpty) skipSpace(s, p1) else s.length
+    if (q >= s.length || s.charAt(q) != ',') None
+    else {
+      val (num2, p2) = readNum(s, skipSpace(s, q + 1))
+      if (num2.isEmpty || nextWord(s, p2)._1.equalsIgnoreCase("BY")) None
+      else Some(s.substring(0, w.start) + s"LIMIT $num2 OFFSET $num1" + s.substring(p2))
     }
-    sql
   }
 
-  private def readWord(s: String, start: Int): (String, Int) = {
-    var i = start
-    if (i < s.length && Character.isJavaIdentifierStart(s.charAt(i))) {
-      while (i < s.length && Character.isJavaIdentifierPart(s.charAt(i))) i += 1
-      (s.substring(start, i), i)
-    } else ("", start)
-  }
+  // ------------------------------------------------ parameterized calls
 
-  /** Rewrites the FIRST parameterized call found, or returns `sql` (eq). */
-  private def rewriteOnce(sql: String): String = {
-    val n = sql.length
-    var i = 0
-    while (i < n) {
-      val c = sql.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(sql, i)
-      else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') i = skipLine(sql, i)
-      else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') i = skipBlock(sql, i)
-      else if (Character.isJavaIdentifierStart(c)) {
-        val start = i
-        while (i < n && Character.isJavaIdentifierPart(sql.charAt(i))) i += 1
-        val lower = sql.substring(start, i).toLowerCase
-        if (lower == "count") {
-          // CH's zero-arg `count()` — never analyzes in Spark, so the
-          // rewrite cannot touch a working query
-          val j = skipWs(sql, i)
-          if (j < n && sql.charAt(j) == '(') {
-            val e = skipWs(sql, j + 1)
-            if (e < n && sql.charAt(e) == ')')
-              return sql.substring(0, j) + "(*" + sql.substring(e)
-          }
+  private val paramAggs = swapParam ++ Set("quantiles", "quantilesexact",
+    "quantilestdigest", "uniqcombined", "uniqcombined64")
+
+  /** The always-on call rewrites, at the word `w`: `count()`, CH's
+    * 3/4-arg `transform` and `name(P)(A)` parameterized aggregates. */
+  private def paramCallAt(w: Walk): Option[String] = {
+    if (w.kind != SqlLexer.Word) return None
+    val sql = w.s
+    val lower = w.text.toLowerCase(java.util.Locale.ROOT)
+    if (lower == "count") {
+      // CH's zero-arg `count()` — never analyzes in Spark, so the
+      // rewrite cannot touch a working query
+      val j = skipSpace(sql, w.end)
+      val e = if (j < sql.length && sql.charAt(j) == '(') skipSpace(sql, j + 1) else sql.length
+      if (e < sql.length && sql.charAt(e) == ')')
+        Some(sql.substring(0, j) + "(*" + sql.substring(e))
+      else None
+    } else if (lower == "transform") {
+      // CH transform(x, from, to[, default]): dimension decode over
+      // parallel literal arrays. Spark OWNS `transform` (the 2-arg array
+      // HOF), so no registry alias is possible — but the 3/4-arg CH
+      // shape only fails at ANALYSIS (wrong arity), making this
+      // always-on rewrite safe: a working Spark query can never contain
+      // it. Unmatched (incl. NULL under a default) maps via
+      // try_element_at → coalesce, matching CH's unmatched→x /
+      // unmatched→default semantics.
+      parenAfter(sql, w.end).flatMap { case (inside, e) =>
+        val parts = splitTopLevel(inside).map(_.trim)
+        if (parts.length != 3 && parts.length != 4) None
+        else {
+          val x = parts(0); val from = parts(1); val to = parts(2)
+          val dflt = if (parts.length == 4) parts(3) else x
+          Some(sql.substring(0, w.start) +
+            s"coalesce(try_element_at(map_from_arrays(($from), ($to)), ($x)), ($dflt))" +
+            sql.substring(e))
         }
-        if (lower == "transform") {
-          // CH transform(x, from, to[, default]): dimension decode over
-          // parallel literal arrays. Spark OWNS `transform` (the 2-arg
-          // array HOF), so no registry alias is possible — but the 3/4-
-          // arg CH shape only fails at ANALYSIS (wrong arity), making
-          // this always-on rewrite safe: a working Spark query can
-          // never contain it. Unmatched (incl. NULL under a default)
-          // maps via try_element_at → coalesce, matching CH's
-          // unmatched→x / unmatched→default semantics.
-          val j = skipWs(sql, i)
-          if (j < n && sql.charAt(j) == '(') {
-            val e = matchParen(sql, j)
-            if (e > 0) {
-              val parts = splitTopLevel(sql.substring(j + 1, e - 1)).map(_.trim)
-              if (parts.length == 3 || parts.length == 4) {
-                val x = parts(0); val from = parts(1); val to = parts(2)
-                val dflt = if (parts.length == 4) parts(3) else x
-                val repl = s"coalesce(try_element_at(map_from_arrays(($from), ($to)), ($x)), ($dflt))"
-                return sql.substring(0, start) + repl + sql.substring(e)
-              }
-            }
-          }
+      }
+    } else if (paramAggs.contains(lower)) {
+      parenAfter(sql, w.end).flatMap { case (params, e1) =>
+        parenAfter(sql, e1).map { case (args, e2) =>
+          val name = w.text
+          val repl =
+            if (lower == "quantiles" || lower == "quantilesexact")
+              s"percentile($args, array($params))"
+            else if (lower == "quantilestdigest")
+              s"approx_percentile($args, array($params))"
+            else if (lower == "uniqcombined" || lower == "uniqcombined64") s"$name($args)"
+            else s"$name($args, $params)"
+          sql.substring(0, w.start) + repl + sql.substring(e2)
         }
-        if (swapParam.contains(lower) || lower == "quantiles" ||
-            lower == "quantilesexact" || lower == "quantilestdigest" ||
-            lower == "uniqcombined" || lower == "uniqcombined64") {
-          val j = skipWs(sql, i)
-          if (j < n && sql.charAt(j) == '(') {
-            val e1 = matchParen(sql, j)
-            val k = if (e1 > 0) skipWs(sql, e1) else n
-            if (e1 > 0 && k < n && sql.charAt(k) == '(') {
-              val e2 = matchParen(sql, k)
-              if (e2 > 0) {
-                val name = sql.substring(start, i)
-                val params = sql.substring(j + 1, e1 - 1)
-                val args = sql.substring(k + 1, e2 - 1)
-                val repl =
-                  if (lower == "quantiles" || lower == "quantilesexact")
-                    s"percentile($args, array($params))"
-                  else if (lower == "quantilestdigest")
-                    s"approx_percentile($args, array($params))"
-                  else if (lower == "uniqcombined" || lower == "uniqcombined64") s"$name($args)"
-                  else s"$name($args, $params)"
-                return sql.substring(0, start) + repl + sql.substring(e2)
-              }
-            }
-          }
-        }
-      } else i += 1
-    }
-    sql
-  }
-
-  /** Index just past the closing quote; '' / "" / \-escapes stay inside. */
-  private def skipQuoted(s: String, start: Int): Int = {
-    val q = s.charAt(start)
-    var i = start + 1
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && q != '`') i += 2
-      else if (c == q) {
-        if (i + 1 < s.length && s.charAt(i + 1) == q) i += 2 // doubled quote
-        else return i + 1
-      } else i += 1
-    }
-    i
-  }
-
-  private def skipLine(s: String, start: Int): Int = {
-    var i = start
-    while (i < s.length && s.charAt(i) != '\n') i += 1
-    i
-  }
-
-  private def skipBlock(s: String, start: Int): Int = {
-    var i = start + 2
-    while (i + 1 < s.length && !(s.charAt(i) == '*' && s.charAt(i + 1) == '/')) i += 1
-    math.min(i + 2, s.length)
+      }
+    } else None
   }
 
   // ------------------------------------------------ {name:Type} params
@@ -2990,85 +2093,24 @@ object ChSqlRewrite {
     * become a value binding — CH substitutes identifiers CLIENT-side —
     * so it must pre-substitute through `graft.settings.Params.sql`;
     * one reaching this rewrite un-substituted fails loudly with that
-    * pointer. Quote/comment-aware; a braced form without `name:Type`
-    * shape (string formatting remnants like `{table}`) is left alone. */
-  private def rewriteBraceParams(sql: String): String = {
-    val n = sql.length
-    val sb = new StringBuilder(n)
-    var i = 0
-    var changed = false
-    while (i < n) {
-      val c = sql.charAt(i)
-      val e =
-        if (c == '\'' || c == '"' || c == '`') skipQuoted(sql, i)
-        else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') skipLine(sql, i)
-        else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') skipBlock(sql, i)
-        else -1
-      if (e >= 0) { sb.append(sql.substring(i, e)); i = e }
-      else if (c == '{') {
-        val close = sql.indexOf('}', i)
-        val m = if (close > i) braceInner.matcher(sql.substring(i + 1, close)) else null
-        if (m != null && m.matches()) {
-          if (m.group(2).equalsIgnoreCase("Identifier"))
-            throw new org.apache.spark.sql.AnalysisException(
-              errorClass = "_LEGACY_ERROR_TEMP_3100",
-              messageParameters = Map("message" ->
-                (s"graft: {${m.group(1)}:Identifier} substitutes client-side " +
-                  "in ClickHouse — run the statement through " +
-                  "graft.settings.Params.sql, which binds identifier params " +
-                  "into the text before value binding")))
-          sb.append(':').append(m.group(1))
-          i = close + 1
-          changed = true
-        } else { sb.append(c); i += 1 }
-      } else { sb.append(c); i += 1 }
+    * pointer. Only markers in code rewrite; a braced form without
+    * `name:Type` shape (string formatting remnants like `{table}`) is
+    * left alone. */
+  private def rewriteBraceParams(sql: String): String = spliceAll(sql) { w =>
+    val s = w.s
+    val close = if (w.isSym('{')) s.indexOf('}', w.start) else -1
+    val m = if (close > w.start) braceInner.matcher(s.substring(w.start + 1, close)) else null
+    if (m == null || !m.matches()) None
+    else {
+      if (m.group(2).equalsIgnoreCase("Identifier"))
+        throw new org.apache.spark.sql.AnalysisException(
+          errorClass = "_LEGACY_ERROR_TEMP_3100",
+          messageParameters = Map("message" ->
+            (s"graft: {${m.group(1)}:Identifier} substitutes client-side " +
+              "in ClickHouse — run the statement through " +
+              "graft.settings.Params.sql, which binds identifier params " +
+              "into the text before value binding")))
+      Some(s.substring(0, w.start) + ":" + m.group(1) + s.substring(close + 1))
     }
-    if (changed) sb.toString else sql
-  }
-
-  /** True when index `pos` lies outside every quoted literal and comment
-    * (scanned from the start with the same skip rules as the keyword
-    * scanner). */
-  private def outsideQuotesComments(s: String, pos: Int): Boolean = {
-    val n = s.length
-    var i = 0
-    while (i < n && i <= pos) {
-      val c = s.charAt(i)
-      val e =
-        if (c == '\'' || c == '"' || c == '`') skipQuoted(s, i)
-        else if (c == '-' && i + 1 < n && s.charAt(i + 1) == '-') skipLine(s, i)
-        else if (c == '/' && i + 1 < n && s.charAt(i + 1) == '*') skipBlock(s, i)
-        else -1
-      if (e >= 0) {
-        if (pos >= i && pos < e) return false
-        i = e
-      } else i += 1
-    }
-    true
-  }
-
-  private def skipWs(s: String, start: Int): Int = {
-    var i = start
-    while (i < s.length && Character.isWhitespace(s.charAt(i))) i += 1
-    i
-  }
-
-  /** `s(open) == '('`; returns index just past the matching ')' or -1.
-    * Quote/comment-aware so parens inside literals don't count. */
-  private def matchParen(s: String, open: Int): Int = {
-    var depth = 0
-    var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') i = skipQuoted(s, i)
-      else if (c == '-' && i + 1 < s.length && s.charAt(i + 1) == '-') i = skipLine(s, i)
-      else if (c == '/' && i + 1 < s.length && s.charAt(i + 1) == '*') i = skipBlock(s, i)
-      else {
-        if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth == 0) return i + 1 }
-        i += 1
-      }
-    }
-    -1
   }
 }

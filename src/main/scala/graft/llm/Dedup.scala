@@ -470,14 +470,14 @@ object Dedup extends QueryRegistry {
     * rebuilding the pair graph. `localCheckpoint` stores it on executor
     * local disk — the same place the shuffle for it would land anyway.
     */
-  // pin = true: the pair core's FULL build cost is owned on the board by
+  // Pinned: the pair core's FULL build cost is owned on the board by
   // x_dedup_ngram_jaccard, which computes it directly (ngramJaccardPairs
   // bypasses this memo); the derived rows (containment, minhash/simhash
   // certification guards, CC, incremental) measure their own marginal
   // work over the standing core — the library-path semantics, and each
   // cost class appears on the board exactly once instead of five rows
   // re-reporting the same rebuild.
-  private val coreCache = new SessionMemo[String](pin = true)
+  private val coreCache = new SessionMemo[String]
 
   private def pairCoreFor(s: SparkSession, d: String): DataFrame =
     coreCache.getOrCompute(s, d) {
@@ -504,10 +504,10 @@ object Dedup extends QueryRegistry {
     * recomputing the whole inverted-index graph from scratch (the
     * round-4 #2-slowest query was exactly that recompute).
     */
-  // pin = true: the label-propagation cost is owned by x_dedup_cc_clusters
+  // Pinned: the label-propagation cost is owned by x_dedup_cc_clusters
   // (computes connectedComponents directly every rep); cc_keepers rides
   // the standing clusters.
-  private val ccCache = new SessionMemo[String](pin = true)
+  private val ccCache = new SessionMemo[String]
 
   private def ccClustersFor(s: SparkSession, d: String): DataFrame =
     ccCache.getOrCompute(s, d)(connectedComponents(jaccardPairsFor(s, d, 0.5)))
@@ -532,13 +532,13 @@ object Dedup extends QueryRegistry {
     * empty set). */
   private val batchMod = 5
 
-  // pin = true: a STANDING index probed by every batch is the operator's
+  // Pinned: a STANDING index probed by every batch is the operator's
   // documented contract ("the corpus contributes only the one-time index
   // build, amortized over every future batch") — a bench sweep that
   // rebuilds it per rep times the anti-shape. The full corpus-banding
   // cost class stays owned on the board by x_dedup_minhash, which bands
   // the whole corpus directly every rep.
-  private val bandIndexCache = new SessionMemo[String](pin = true)
+  private val bandIndexCache = new SessionMemo[String]
 
   /** The persisted corpus-side band index, built ONCE per (session,
     * fixture dir). Both `x_dedup_incremental` reps and any other caller

@@ -30,8 +30,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * recomputes when any has been dropped, instead of handing back a
   * poisoned frame.
   */
-/** RDD-id registry for `pin = true` memos, consulted by external
-  * hygiene sweeps (graft.Bench): a pinned memo's checkpoint blocks are
+/** RDD-id registry of every memo's frames, consulted by external
+  * hygiene sweeps (graft.Bench): a memo's checkpoint blocks are
   * CONTRACT BASELINES or STANDING INDEXES whose amortization is the
   * measured operator's documented semantics — sweeping them between
   * bench reps would charge the baseline's build cost to every query
@@ -64,7 +64,7 @@ object SessionMemo {
   private def unregister(df: DataFrame): Unit = keysOf(df).foreach(pinnedIds.remove(_))
 }
 
-final class SessionMemo[K](pin: Boolean = false) {
+final class SessionMemo[K] {
   private val perSession =
     new java.util.WeakHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[K, DataFrame]]()
@@ -104,9 +104,9 @@ final class SessionMemo[K](pin: Boolean = false) {
     mapFor(s).compute(key, (_, prev) =>
       if (prev != null && alive(prev)) prev
       else {
-        if (prev != null && pin) SessionMemo.unregister(prev)
+        if (prev != null) SessionMemo.unregister(prev)
         val df = compute
-        if (pin) SessionMemo.register(df)
+        SessionMemo.register(df)
         df
       })
 }

@@ -1259,14 +1259,14 @@ object Similarity extends QueryRegistry {
     * measures the APPROXIMATE path after run 1 — the quadratic baseline
     * cost lands on the queries that declare it (`x_sim_topk_brute`,
     * `x_dedup_embed`), not on every contract that compares against it. */
-  private val bruteCache = new SessionMemo[(String, Int)](pin = true)
+  private val bruteCache = new SessionMemo[(String, Int)]
   private def bruteTopKFor(s: SparkSession, d: String, k: Int): DataFrame =
     bruteCache.getOrCompute(s, (d, k)) {
       val emb = t(s, d, "embeddings")
       bruteForceTopK(emb, queriesOf(emb), k).localCheckpoint()
     }
 
-  private val exactPairCache = new SessionMemo[String](pin = true)
+  private val exactPairCache = new SessionMemo[String]
   private def exactPairsFor(s: SparkSession, d: String): DataFrame =
     exactPairCache.getOrCompute(s, d) {
       embedDupPairsExact(t(s, d, "embeddings"), tau = 0.4).localCheckpoint()
@@ -1292,7 +1292,7 @@ object Similarity extends QueryRegistry {
   // build is amortized over every future batch. The per-rep rebuild
   // cost classes stay owned on the board by the `x_sim_topk_*` rows.
 
-  private val standing = new SessionMemo[(String, AnnFamily)](pin = true)
+  private val standing = new SessionMemo[(String, AnnFamily)]
   // models keyed by (applicationId, dir, family), written inside the
   // memo's per-key compute so they always correspond to the live table;
   // training is deterministic (fixed seed, deterministic sample), so a

@@ -234,8 +234,8 @@ object TextOps extends QueryRegistry {
   // caches keyed by (dir, corpus variant): "raw" = the documents table
   // as-is; "zipf" = the derived realistic-vocabulary corpus (below) the
   // probe/rebuild separation pair runs on (VERDICT r13 next-#4)
-  private val bm25PostingsCache = new SessionMemo[(String, String)](pin = true)
-  private val bm25StatsCache = new SessionMemo[(String, String)](pin = true)
+  private val bm25PostingsCache = new SessionMemo[(String, String)]
+  private val bm25StatsCache = new SessionMemo[(String, String)]
   private val bm25ScalarsCache =
     new java.util.concurrent.ConcurrentHashMap[(String, String, String), (Long, Long)]()
 
@@ -653,13 +653,13 @@ object TextOps extends QueryRegistry {
         round(col("base_chars") / col("bpe_tokens").cast("double"), 6).as("compression"))
   }
 
-  // pin = true: the learned vocabulary is the standing artifact a real
+  // Pinned: the learned vocabulary is the standing artifact a real
   // tokenizer deployment builds once and encodes every batch against;
   // the learn COST CLASS is owned on the board by x_text_bpe_learn,
   // which runs the full (larger, 8-merge) learn directly every rep.
   // Derived rows (x_text_bpe_encode, x_pack_sequences_bpe) measure the
   // encode/pack work over the standing vocab — the library-path split.
-  private val vocabCache = new SessionMemo[(String, Int)](pin = true)
+  private val vocabCache = new SessionMemo[(String, Int)]
 
   /** Memoized final per-word symbol frame for (fixture dir, nMerges) —
     * vocab-sized (distinct words, sub-linear in corpus), localCheckpoint
@@ -818,14 +818,14 @@ object TextOps extends QueryRegistry {
       .select(col("doc_id"), col("y"), col("margin"),
         when(col("margin") > 0, 1).otherwise(-1).as("pred"))
 
-  // pin = true: the trained weight frame is the standing artifact a
+  // Pinned: the trained weight frame is the standing artifact a
   // production filter deploys once and scores every incoming batch
   // against (the BPE learn-once/encode-every-batch split). The training
   // cost class is owned on the board by x_qual_classifier, which runs
   // the full corpus-wide training loop directly every rep; the standing
   // weights here train on the 4/5 standing-corpus slice — the same cost
   // class at a strictly lower price.
-  private val qualWeightsCache = new SessionMemo[String](pin = true)
+  private val qualWeightsCache = new SessionMemo[String]
 
   /** Standing-corpus classifier weights for the ingest split (train on
     * doc_id % 5 != 0, score the % 5 == 0 batch) — built once per

@@ -1,5 +1,6 @@
 package graft.settings
 
+import graft.functions.SqlLexer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session settings + bound query parameters (SURVEY.md §2.1 A15;
@@ -69,22 +70,31 @@ object Params {
     * binding through the rescue rewrite. */
   private def bindIdentifiers(
       sqlText: String, args: Map[String, Any]): (String, Map[String, Any]) = {
-    val m = identParam.matcher(sqlText)
     val used = scala.collection.mutable.Set.empty[String]
-    val sb = new StringBuffer
-    while (m.find()) {
-      val k = m.group(1)
-      val v = args.getOrElse(k, throw new IllegalArgumentException(
-        s"Params: no value bound for identifier param {$k:Identifier}")).toString
-      val quoted = v.split('.').map { part =>
-        require(part.nonEmpty && !part.contains('`'),
-          s"Params: invalid identifier '$v' for {$k:Identifier}")
-        s"`$part`"
-      }.mkString(".")
-      m.appendReplacement(sb, java.util.regex.Matcher.quoteReplacement(quoted))
-      used += k
+    val sb = new java.lang.StringBuilder
+    var copied = 0
+    // markers in code only: a `{t:Identifier}` inside a literal or a
+    // comment is text, not a parameter
+    val w = new SqlLexer.Walk(sqlText)
+    while (w.nextCode()) if (w.isSym('{')) {
+      val close = sqlText.indexOf('}', w.start)
+      val m = if (close < 0) null else identParam.matcher(sqlText.substring(w.start, close + 1))
+      if (m != null && m.matches()) {
+        val k = m.group(1)
+        val v = args.getOrElse(k, throw new IllegalArgumentException(
+          s"Params: no value bound for identifier param {$k:Identifier}")).toString
+        val quoted = v.split('.').map { part =>
+          require(part.nonEmpty && !part.contains('`'),
+            s"Params: invalid identifier '$v' for {$k:Identifier}")
+          s"`$part`"
+        }.mkString(".")
+        sb.append(sqlText, copied, w.start).append(quoted)
+        copied = close + 1
+        w.jump(copied)
+        used += k
+      }
     }
-    m.appendTail(sb)
+    sb.append(sqlText, copied, sqlText.length)
     (sb.toString, args -- used)
   }
 
@@ -112,8 +122,9 @@ object Params {
   * eviction UNPERSISTS, so executor storage never accumulates beyond
   * `capacity` results (the round-2 `Limited` leak, learned from).
   *
-  * Normalization is whitespace-collapse only (same contract as CH: the
-  * cache keys on the AST of the text, not semantic equivalence).
+  * Normalization is whitespace-collapse in code only (same contract as
+  * CH: the cache keys on the AST of the text, not semantic equivalence):
+  * literals and comments stay verbatim, and the caller's own text runs.
   */
 final class QueryCache(spark: SparkSession, capacity: Int = 32) {
 
@@ -130,15 +141,13 @@ final class QueryCache(spark: SparkSession, capacity: Int = 32) {
       }
     }
 
-  private def normalize(sql: String): String = sql.trim.replaceAll("\\s+", " ")
-
   /** Run (or replay) a SQL query through the cache. */
   def sql(query: String): DataFrame = synchronized {
-    val key = normalize(query)
+    val key = SqlLexer.collapseSpace(query)
     entries.get(key) match {
       case null =>
         missCount += 1
-        val df = spark.sql(key)
+        val df = spark.sql(query)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         entries.put(key, df)
         df

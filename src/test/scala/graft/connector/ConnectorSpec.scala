@@ -276,6 +276,21 @@ class ConnectorSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("quoted text in pushed SQL is text to the stub: literals and escaped names") {
+    val srv = freshServer()
+    try {
+      srv.load("kw", Seq((1, "x LIMIT 5", 10), (2, "a ORDER BY b", 20), (3, "plain", 30))
+        .toDF("id", "s", "n`m"))
+      val df = spark.read.format("graft-ch").option("url", srv.url).option("table", "kw").load()
+      def ids(v: String) = df.filter(col("s") === v).collect().map(_.getInt(0)).toSeq
+      assert(ids("x LIMIT 5") === Seq(1))
+      assert(ids("a ORDER BY b") === Seq(2))
+      // CHSql escapes the backtick in a name as \`
+      assert(df.filter(col("id") > 1).select("`n``m`").collect().map(_.getInt(0)).toSet ===
+        Set(20, 30))
+    } finally srv.stop()
+  }
+
   test("TopN (ORDER BY + LIMIT) pushes to the server and returns the true top rows") {
     val srv = freshServer()
     try {

