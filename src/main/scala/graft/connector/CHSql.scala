@@ -61,29 +61,39 @@ object CHSql {
   private def likeLit(fragment: String, prefix: String, suffix: String): String =
     stringLit(prefix + fragment.replace("\\", "\\\\").replace("%", "\\%").replace("_", "\\_") + suffix)
 
+  /** The CH column a V1 filter attribute names. Spark hands the name over
+    * as SQL text: backtick-quoted when it is not plain `[A-Za-z0-9_]`, and
+    * dotted for a nested field (`s.x`, `v.variant_type`), which has no
+    * one-identifier CH spelling (None). */
+  private def column(attr: String): Option[String] =
+    try org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseMultipartIdentifier(attr) match {
+      case Seq(name) => Some(ident(name))
+      case _ => None
+    } catch { case _: org.apache.spark.sql.catalyst.parser.ParseException => None }
+
+  private def col(attr: String): String = column(attr).get
+
   /** Compile one Spark filter to a CH WHERE fragment; None = not
     * pushable (stays a Spark-side residual only). */
   def compileFilter(f: Filter): Option[String] = f match {
-    // nested-field refs (struct members, `v.variant_type`) arrive dotted;
-    // quoting them as one identifier would be wrong CH SQL — leave those
-    // filters Spark-side as residuals
-    case _ if f.references.exists(_.contains(".")) => None
-    case EqualTo(a, v) => litOpt(v).map(l => s"${ident(a)} = $l")
-    case EqualNullSafe(a, null) => Some(s"${ident(a)} IS NULL")
-    case EqualNullSafe(a, v) => litOpt(v).map(l => s"${ident(a)} IS NOT NULL AND ${ident(a)} = $l")
-    case GreaterThan(a, v) => litOpt(v).map(l => s"${ident(a)} > $l")
-    case GreaterThanOrEqual(a, v) => litOpt(v).map(l => s"${ident(a)} >= $l")
-    case LessThan(a, v) => litOpt(v).map(l => s"${ident(a)} < $l")
-    case LessThanOrEqual(a, v) => litOpt(v).map(l => s"${ident(a)} <= $l")
+    // a nested-field filter stays Spark-side as a residual
+    case _ if f.references.exists(column(_).isEmpty) => None
+    case EqualTo(a, v) => litOpt(v).map(l => s"${col(a)} = $l")
+    case EqualNullSafe(a, null) => Some(s"${col(a)} IS NULL")
+    case EqualNullSafe(a, v) => litOpt(v).map(l => s"${col(a)} IS NOT NULL AND ${col(a)} = $l")
+    case GreaterThan(a, v) => litOpt(v).map(l => s"${col(a)} > $l")
+    case GreaterThanOrEqual(a, v) => litOpt(v).map(l => s"${col(a)} >= $l")
+    case LessThan(a, v) => litOpt(v).map(l => s"${col(a)} < $l")
+    case LessThanOrEqual(a, v) => litOpt(v).map(l => s"${col(a)} <= $l")
     case In(a, vs) if vs.nonEmpty =>
       val ls = vs.map(litOpt)
       if (ls.exists(_.isEmpty)) None
-      else Some(s"${ident(a)} IN (${ls.map(_.get).mkString(", ")})")
-    case IsNull(a) => Some(s"${ident(a)} IS NULL")
-    case IsNotNull(a) => Some(s"${ident(a)} IS NOT NULL")
-    case StringStartsWith(a, v) => Some(s"${ident(a)} LIKE ${likeLit(v, "", "%")}")
-    case StringEndsWith(a, v) => Some(s"${ident(a)} LIKE ${likeLit(v, "%", "")}")
-    case StringContains(a, v) => Some(s"${ident(a)} LIKE ${likeLit(v, "%", "%")}")
+      else Some(s"${col(a)} IN (${ls.map(_.get).mkString(", ")})")
+    case IsNull(a) => Some(s"${col(a)} IS NULL")
+    case IsNotNull(a) => Some(s"${col(a)} IS NOT NULL")
+    case StringStartsWith(a, v) => Some(s"${col(a)} LIKE ${likeLit(v, "", "%")}")
+    case StringEndsWith(a, v) => Some(s"${col(a)} LIKE ${likeLit(v, "%", "")}")
+    case StringContains(a, v) => Some(s"${col(a)} LIKE ${likeLit(v, "%", "%")}")
     case And(l, r) =>
       for (cl <- compileFilter(l); cr <- compileFilter(r)) yield s"($cl AND $cr)"
     case Or(l, r) =>

@@ -1731,16 +1731,14 @@ object ChDialect {
         Seq(Cast(a.head, StringType), Cast(a(1), StringType)),
         Seq(StringType, StringType)) }) ++ emptyArrays
 
-  /** CH `emptyArray<Type>()` constructors — typed empty-array literals
-    * (the §1.2 widening: UInt8→short, UInt32→long, UInt64→decimal(20,0)). */
+  /** CH `emptyArray<Type>()` constructors — typed empty-array literals,
+    * the element type from the §1.2 mapping ([[graft.types.CHType.toSpark]]:
+    * UInt8→short, UInt32→long, UInt64→decimal(20,0), …). */
   private def emptyArrays
       : Seq[(FunctionIdentifier, org.apache.spark.sql.catalyst.expressions.ExpressionInfo, FunctionBuilder)] =
-    Seq(
-      "UInt8" -> ShortType, "UInt16" -> IntegerType, "UInt32" -> LongType,
-      "UInt64" -> DecimalType(20, 0), "Int8" -> ByteType, "Int16" -> ShortType,
-      "Int32" -> IntegerType, "Int64" -> LongType, "Float32" -> FloatType,
-      "Float64" -> DoubleType, "String" -> StringType, "Date" -> DateType,
-      "DateTime" -> TimestampType).map { case (chName, t) =>
+    Seq("UInt8", "UInt16", "UInt32", "UInt64", "Int8", "Int16", "Int32", "Int64",
+      "Float32", "Float64", "String", "Date", "DateTime").map { chName =>
+      val t = graft.types.CHType.toSpark(graft.types.CHType.parse(chName))._1
       fn(s"emptyArray$chName", 0) { _ =>
         Literal.create(Seq.empty[Any], ArrayType(t)) }
     }

@@ -111,9 +111,12 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *                                 never parses in Spark's datediff form)
   *
   * All rewrites are textual, and [[SqlLexer]] is the one owner of their
-  * lexical rules: every rewrite finds its keywords, lists and clause ends
-  * through the lexer's token walk, so content inside '…', "…", `…`, --
-  * line comments and &#47;* block comments is never touched, and a
+  * lexical rules: every rewrite finds its keywords, numbers, lists and
+  * clause ends through the lexer's tokens, and the head and tail clauses
+  * (EXPLAIN, DROP … SYNC, `;`, FORMAT, INTO OUTFILE, SETTINGS, FETCH) are
+  * read from a text's first and last top-level code tokens. So content
+  * inside '…', "…", `…`, -- line comments and &#47;* block comments is
+  * never touched, a comment next to a clause never hides it, and a
   * fragment spliced into generated text carries no comment.
   */
 class ChSqlParser(delegate: ParserInterface) extends ParserInterface {
@@ -166,57 +169,28 @@ class ChSqlParser(delegate: ParserInterface) extends ParserInterface {
 }
 
 object ChSqlRewrite {
-  import SqlLexer.{Walk, isCode, lift, matchParen, nextWord, skipSpace, splitTopLevel, wordAt}
+  import SqlLexer.{Code, Walk, lift, matchParen, nextWord, skipSpace, splitTopLevel, topLevel, wordAt}
 
   /** name(P)(A) → name(A, P) */
   private val swapParam = Set("quantile", "quantileexact", "quantiletdigest", "uniqupto",
     "quantiledeterministic")
 
-  /** CH queries routinely end `... FORMAT JSONEachRow;` — the output
-    * format is a CLIENT concern in CH (a DataFrame here). Rescue-only:
-    * `SELECT * FROM t ORDER BY format DESC` is valid Spark SQL that this
-    * pattern matches, so the strip never runs on text Spark accepted. */
-  private val trailingFormat =
-    "(?is)\\s+FORMAT\\s+[A-Za-z][A-Za-z0-9_]*\\s*$".r
-  private val trailingSemi = "(?s)\\s*;\\s*$".r
-
-  /** CH `INTO OUTFILE 'path' [AND STDOUT] [APPEND|TRUNCATE]` — writing
-    * the result to a file is a CLIENT-side behavior in CH (the server
-    * streams normally); here the result IS a DataFrame the caller
-    * writes, so the clause strips like FORMAT. Rescue-only and
-    * end-anchored (it follows the query body; FORMAT tails strip
-    * first). */
-  private val intoOutfile =
-    ("(?is)\\s+INTO\\s+OUTFILE\\s+'(?:[^']|'')*'" +
-      "(?:\\s+(?:AND\\s+STDOUT|APPEND|TRUNCATE))*\\s*$").r
-
-  /** Trailing `SETTINGS k = v [, ...]` (reference passes the clause
-    * through inside the query string, `src/query.rs:168-197`; typed
-    * registry `src/settings.rs:81-428`). Values: number/ident or
-    * '…'-quoted. Anchored at end-of-text; the match must start in code. */
-  private val settingsValue = "'(?:[^']|'')*'|[A-Za-z0-9_.+-]+"
-  private val settingsTail =
-    ("(?is)\\s+SETTINGS\\s+([A-Za-z_][A-Za-z0-9_]*\\s*=\\s*(?:" + settingsValue +
-      ")(?:\\s*,\\s*[A-Za-z_][A-Za-z0-9_]*\\s*=\\s*(?:" + settingsValue + "))*)\\s*$").r
-  private val settingsPair =
-    ("([A-Za-z_][A-Za-z0-9_]*)\\s*=\\s*(" + settingsValue + ")").r
-
   /** CH EXPLAIN operations (reference `explain.rs`) → the nearest Spark
     * EXPLAIN mode: AST/SYNTAX → EXTENDED (parsed + rewritten plans),
     * PLAN/PIPELINE → FORMATTED (logical/physical), ESTIMATE → COST. */
-  private val chExplain =
-    "(?is)^(\\s*EXPLAIN\\s+)(AST|SYNTAX|PLAN|PIPELINE|ESTIMATE)\\b".r
+  private val explainModes = Map("AST" -> "EXTENDED", "SYNTAX" -> "EXTENDED",
+    "PLAN" -> "FORMATTED", "PIPELINE" -> "FORMATTED", "ESTIMATE" -> "COST")
 
-  private def mapExplain(sql: String): String =
-    chExplain.replaceAllIn(sql, m => {
-      val mode = m.group(2).toUpperCase match {
-        case "AST" | "SYNTAX" => "EXTENDED"
-        case "PLAN" | "PIPELINE" => "FORMATTED"
-        case "ESTIMATE" => "COST"
-      }
-      java.util.regex.Matcher.quoteReplacement(m.group(1) + mode)
-    })
-
+  /** `sql` as one statement: a trailing `;` cut, the CH EXPLAIN mode in
+    * its first tokens mapped to Spark's. */
+  private def statement(sql: String): String = {
+    val c = topLevel(sql)
+    val semi = if (c.isSym(c.size - 1, ';')) c.size - 1 else c.size
+    val stmt = c.cut(semi)
+    (if (c.isWord(0, "EXPLAIN") && semi > 1)
+      explainModes.get(c.text(1).toUpperCase(java.util.Locale.ROOT)) else None)
+      .fold(stmt)(mode => stmt.substring(0, c.start(1)) + mode + stmt.substring(c.end(1)))
+  }
 
   // ------------------------------------------------------------ drivers
 
@@ -232,7 +206,10 @@ object ChSqlRewrite {
   }
 
   /** Applies `site` until it finds nothing left to rewrite: the one driver
-    * of every rewrite that splices text and rescans from the start. */
+    * of every rewrite that splices text and rescans from the start. Sites
+    * nest (a subquery's PREWHERE inside an outer PREWHERE's condition), so
+    * restarting after each splice is simpler than emitting every splice
+    * of one pass at once. */
   private def everySite(sql: String)(site: String => Option[String]): String = {
     var cur = sql
     var next = site(cur)
@@ -254,12 +231,6 @@ object ChSqlRewrite {
     }
   }
 
-  private def readNum(s: String, start: Int): (String, Int) = {
-    var i = start
-    while (i < s.length && Character.isDigit(s.charAt(i))) i += 1
-    (s.substring(start, i), i)
-  }
-
   // ------------------------------------------------------------ safe tier
 
   /** The always-on pass. ARRAY JOIN must live here, not in rescue: Spark
@@ -273,19 +244,25 @@ object ChSqlRewrite {
   def apply(sql: String): String =
     spliceAll(rewriteFinal(rewriteGlobal(
       rewriteAnyJoin(rewriteAsofJoin(rewriteNumbers(rewriteUntuple(
-        rewriteArrayJoin(mapExplain(trailingSemi.replaceFirstIn(sql, ""))))))),
+        rewriteArrayJoin(statement(sql)))))),
       globalJoinWords)))(paramCallAt)
 
   // ---------------------------------------------------------- rescue tier
 
   final case class Rescued(sql: String, settings: Seq[(String, String)])
 
-  /** CH `DROP DATABASE/TABLE … SYNC` (harvested: the reference's tests
-    * issue `DROP DATABASE IF EXISTS my_db SYNC`) — SYNC forces CH to
-    * wait for the drop instead of scheduling it; Spark drops are always
-    * synchronous, so the modifier strips. Rescue-only, end-anchored. */
-  private val dropSync =
-    "(?is)^(\\s*DROP\\s+(?:DATABASE|SCHEMA|TABLE|VIEW)\\s+.+?)\\s+SYNC\\s*$".r
+  private val dropKinds = Seq("DATABASE", "SCHEMA", "TABLE", "VIEW")
+
+  /** `sql` without its trailing `;` and, after CH `DROP DATABASE/TABLE …
+    * SYNC` (harvested: the reference's tests issue `DROP DATABASE IF
+    * EXISTS my_db SYNC`), without the SYNC — it makes CH wait for the
+    * drop instead of scheduling it; Spark drops are always synchronous. */
+  private def rescueHead(sql: String): String = {
+    val c = topLevel(sql)
+    val last = if (c.isSym(c.size - 1, ';')) c.size - 2 else c.size - 1
+    c.cut(if (last >= 3 && c.isWord(0, "DROP") && dropKinds.exists(c.isWord(1, _)) &&
+      c.isWord(last, "SYNC")) last else last + 1)
+  }
 
   /** The parse-failure retry pass: CH clause forms (FORMAT / SETTINGS /
     * SAMPLE / ARRAY JOIN) that share surface syntax with valid Spark SQL
@@ -294,17 +271,15 @@ object ChSqlRewrite {
     * (minus `join_algorithm`, which becomes a join-strategy hint in the
     * text itself — per-query, like CH). */
   def rescue(sqlText: String): Rescued = {
-    val semi0 = trailingSemi.replaceFirstIn(sqlText, "")
-    val semi = dropSync.replaceFirstIn(semi0, "$1")
+    val stmt = rescueHead(sqlText)
     // CH DDL routes exclusively: its SETTINGS tail is storage knobs
     // (index_granularity …), never session confs, and the SELECT-oriented
     // rewrites below have no business inside a column list
-    rewriteCreateTable(semi) match {
+    rewriteCreateTable(stmt) match {
       case Some(ddl) => return Rescued(ddl, Nil)
       case None => ()
     }
-    val noFmt = stripIfOutside(stripIfOutside(semi, trailingFormat), intoOutfile)
-    val (noSet, kvs) = stripSettings(noFmt)
+    val (noSet, kvs) = stripTail(stmt)
     val hinted = kvs.collectFirst {
       case (k, v) if k.equalsIgnoreCase("join_algorithm") => joinHintFor(v)
     }.flatten match {
@@ -358,44 +333,26 @@ object ChSqlRewrite {
 
   private def rewriteCreateTable(sql: String): Option[String] = {
     val n = sql.length
-    val (w1, a1) = nextWord(sql, 0)
-    if (!w1.equalsIgnoreCase("CREATE")) return None
-    var (w2, a2) = nextWord(sql, a1)
-    var orReplace = false
-    if (w2.equalsIgnoreCase("OR")) {
-      val (w3, a3) = nextWord(sql, a2)
-      if (!w3.equalsIgnoreCase("REPLACE")) return None
-      orReplace = true
-      val t = nextWord(sql, a3); w2 = t._1; a2 = t._2
-    }
-    if (!w2.equalsIgnoreCase("TABLE")) return None
-    var k = skipSpace(sql, a2)
-    var ifNotExists = false
-    val (wIf, aIf) = wordAt(sql, k)
-    if (wIf.equalsIgnoreCase("IF")) {
-      val (wn, an) = nextWord(sql, aIf)
-      val (we, ae) = nextWord(sql, an)
-      if (wn.equalsIgnoreCase("NOT") && we.equalsIgnoreCase("EXISTS")) {
-        ifNotExists = true; k = skipSpace(sql, ae)
-      } else return None
-    }
+    // CREATE [OR REPLACE] TABLE [IF NOT EXISTS]
+    val h = topLevel(sql, 0, 8)
+    val orReplace = h.isWord(1, "OR") && h.isWord(2, "REPLACE")
+    val t = if (orReplace) 3 else 1
+    val ifNotExists = h.isWord(t + 1, "IF") && h.isWord(t + 2, "NOT") && h.isWord(t + 3, "EXISTS")
+    if (!h.isWord(0, "CREATE") || !h.isWord(t, "TABLE") || (h.isWord(1, "OR") && !orReplace) ||
+      (h.isWord(t + 1, "IF") && !ifNotExists)) return None
     // qualified, possibly quoted table name
-    val p = SqlLexer.qualifiedName(sql, k).getOrElse(return None)._1
-    val nameText = sql.substring(k, p).trim
+    val k = h.at(if (ifNotExists) t + 4 else t + 1)
+    val (p, plainTable) = SqlLexer.qualifiedName(sql, k).getOrElse(return None)
+    val nameText = sql.substring(k, p)
     // `ON CLUSTER x` (distributed DDL) sits between name and column
     // list; Spark's one-catalog DDL is cluster-wide by construction, so
     // the clause drops
-    var afterName = skipSpace(sql, p)
-    val (wOn, aOn) = wordAt(sql, afterName)
-    if (wOn.equalsIgnoreCase("ON")) {
-      val (wCl, aCl) = nextWord(sql, aOn)
-      if (!wCl.equalsIgnoreCase("CLUSTER")) return None
-      val c = skipSpace(sql, aCl)
-      val cEnd =
-        if (c < n && (sql.charAt(c) == '`' || sql.charAt(c) == '\'')) SqlLexer.tokenEnd(sql, c)
-        else { val (wid, aid) = wordAt(sql, c); if (wid.isEmpty) return None; aid }
-      afterName = skipSpace(sql, cEnd)
-    }
+    val on = topLevel(sql, p, 3)
+    val afterName =
+      if (!on.isWord(0, "ON")) skipSpace(sql, p)
+      else if (on.isWord(1, "CLUSTER") &&
+        (on.isWord(2) || on.isQuoted(2, '`') || on.isQuoted(2, '\''))) skipSpace(sql, on.end(2))
+      else return None
     // column list is OPTIONAL: CH CTAS is `CREATE TABLE t ENGINE = … AS SELECT …`
     val (colsInsideOpt, tailStart) =
       if (afterName < n && sql.charAt(afterName) == '(') {
@@ -491,13 +448,6 @@ object ChSqlRewrite {
       splitTopLevel(lift(inside)).map(_.trim).filter(_.nonEmpty).map(mapDdlColumn))
 
     // FINAL / SAMPLE registry wiring (the CH-DDL contract these rewrites document)
-    val plainTable = {
-      val segs = nameText.split('.')
-      val last = segs.last.trim
-      if (last.startsWith("`") && last.endsWith("`") && last.length >= 2)
-        last.substring(1, last.length - 1)
-      else last
-    }
     if (engineName.exists(_.equalsIgnoreCase("ReplacingMergeTree")) && engineArgs.nonEmpty)
       orderCols.foreach { oc =>
         registerFinalKey(plainTable, oc, engineArgs.head + " DESC")
@@ -524,15 +474,10 @@ object ChSqlRewrite {
     * drop per Spark support; MATERIALIZED/ALIAS/EPHEMERAL throw. */
   private def mapDdlColumn(cd: String): String = {
     val n = cd.length
-    val (name, ci) =
-      if (cd.charAt(0) == '`' || cd.charAt(0) == '"') {
-        val e = SqlLexer.tokenEnd(cd, 0); (cd.substring(0, e), e)
-      } else {
-        val (nm, an) = wordAt(cd, 0)
-        if (nm.isEmpty)
-          throw new IllegalArgumentException(s"CH DDL: unparseable column definition '$cd'")
-        (nm, an)
-      }
+    val h = topLevel(cd, 0, 1)
+    if (!h.isWord(0) && !h.isQuoted(0, '`') && !h.isQuoted(0, '"'))
+      throw new IllegalArgumentException(s"CH DDL: unparseable column definition '$cd'")
+    val (name, ci) = (h.text(0), h.end(0))
     // type text: up to the first TOP-LEVEL modifier keyword after its
     // first token
     val typeStart = skipSpace(cd, ci)
@@ -708,24 +653,57 @@ object ChSqlRewrite {
     out.toSeq
   }
 
-  /** Strip a trailing SETTINGS tail and return its (key, value) pairs
-    * (values unquoted). The `$`-anchored match is re-checked to start
-    * in code before stripping. */
-  private def stripSettings(sql: String): (String, Seq[(String, String)]) =
-    settingsTail.findFirstMatchIn(sql) match {
-      case Some(m) if isCode(sql, m.start) =>
-        val pairs = settingsPair.findAllMatchIn(m.group(1)).map(p =>
-          p.group(1) -> unquote(p.group(2))).toSeq
-        (sql.substring(0, m.start), pairs)
-      case _ => (sql, Nil)
-    }
+  /** The client-side tail clauses of a query, read from its last top-level
+    * tokens and cut with the comments around them; returns the rest and
+    * the SETTINGS pairs (values unquoted). From the end:
+    *  - `FORMAT name` — the output format is a CLIENT concern in CH (a
+    *    DataFrame here);
+    *  - `INTO OUTFILE 'path' [AND STDOUT] [APPEND|TRUNCATE]` — file output
+    *    is client-side in CH too (the server streams normally); the
+    *    caller writes the DataFrame;
+    *  - `SETTINGS k = v [, …]` (the reference passes the clause inside the
+    *    query string, `src/query.rs:168-197`; typed registry
+    *    `src/settings.rs:81-428`); a value is one '…' literal or a run of
+    *    touching words, numbers, `.`, `+` and `-`.
+    * Rescue-only: `SELECT * FROM t ORDER BY format DESC` is valid Spark
+    * SQL with a FORMAT-shaped tail, so no strip runs on text Spark
+    * accepted. */
+  private def stripTail(sql: String): (String, Seq[(String, String)]) = {
+    val c = topLevel(sql)
+    var last = c.size - 1
+    if (last >= 2 && c.isWord(last - 1, "FORMAT") && c.isWord(last)) last -= 2
+    var o = last
+    while (c.isWord(o, "APPEND") || c.isWord(o, "TRUNCATE") ||
+      (c.isWord(o, "STDOUT") && c.isWord(o - 1, "AND")))
+      o -= (if (c.isWord(o, "STDOUT")) 2 else 1)
+    if (o >= 3 && c.isQuoted(o, '\'') && c.isWord(o - 1, "OUTFILE") && c.isWord(o - 2, "INTO"))
+      last = o - 3
+    (1 until last).iterator.filter(c.isWord(_, "SETTINGS"))
+      .map(i => i -> settingsPairs(c, i + 1, last)).collectFirst { case (i, Some(kvs)) =>
+        (c.cut(i), kvs)
+      }.getOrElse((c.cut(last + 1), Nil))
+  }
 
-  /** Regex strip guarded by the lexer: the match must start in code. */
-  private def stripIfOutside(sql: String, re: scala.util.matching.Regex): String =
-    re.findFirstMatchIn(sql) match {
-      case Some(m) if isCode(sql, m.start) => sql.substring(0, m.start)
-      case _ => sql
+  /** `k = v [, …]` spanning exactly tokens `from` to `last`. */
+  private def settingsPairs(c: Code, from: Int, last: Int): Option[Seq[(String, String)]] = {
+    def valuePart(i: Int) = c.isWord(i) || c.isNumber(i) ||
+      c.isSym(i, '.') || c.isSym(i, '+') || c.isSym(i, '-')
+    val out = Seq.newBuilder[(String, String)]
+    var k = from
+    while (k + 2 <= last && c.isWord(k) && c.isSym(k + 1, '=')) {
+      val v = k + 2
+      var e = v + 1
+      if (!c.isQuoted(v, '\'')) {
+        if (!valuePart(v)) return None
+        while (e <= last && valuePart(e) && c.adjacent(e - 1)) e += 1
+      }
+      out += c.text(k) -> unquote(c.s.substring(c.start(v), c.end(e - 1)))
+      if (e > last) return Some(out.result())
+      if (!c.isSym(e, ',')) return None
+      k = e + 1
     }
+    None
+  }
 
   // ------------------------------------------------------------- SAMPLE k
 
@@ -806,9 +784,15 @@ object ChSqlRewrite {
     "SETTINGS", "FORMAT", "UNION", "INTERSECT", "EXCEPT", "WINDOW", "QUALIFY",
     "JOIN", "LEFT", "RIGHT", "FULL", "INNER", "CROSS")
 
-  /** `expr AS alias` — an ARRAY JOIN or star REPLACE item. */
-  private val asAlias = java.util.regex.Pattern
-    .compile("(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*|`[^`]+`)\\s*$")
+  /** `expr AS alias` — an ARRAY JOIN or star REPLACE item: (expr, alias)
+    * when its last top-level tokens are AS and a word or `…` name. */
+  private def asAlias(item: String): Option[(String, String)] = {
+    val c = topLevel(item)
+    val n = c.size
+    if (n >= 3 && c.isWord(n - 2, "AS") && (c.isWord(n - 1) || c.isQuoted(n - 1, '`')))
+      Some(item.substring(c.start(0), c.end(n - 3)) -> c.text(n - 1))
+    else None
+  }
 
   private def rewriteArrayJoin(sql: String): String = spliceAll(sql)(arrayJoinAt)
 
@@ -837,9 +821,7 @@ object ChSqlRewrite {
         (it.depth == 0 && it.kind == SqlLexer.Word && arrayJoinStops.contains(it.upper))
       if (atEnd || (it.depth == 0 && it.isSym(','))) {
         if (itemStart < 0) return None
-        val m = asAlias.matcher(lift(sql, itemStart, itemEnd).trim)
-        if (!m.matches()) return None
-        items += (m.group(1) -> m.group(2))
+        items += asAlias(lift(sql, itemStart, itemEnd)).getOrElse(return None)
         itemStart = -1
         if (atEnd) listEnd = if (more) it.start else sql.length
       } else {
@@ -876,11 +858,8 @@ object ChSqlRewrite {
   private def readsKeyValue(sql: String, alias: String): Boolean = {
     val w = new Walk(sql)
     while (w.nextCode()) if (w.isWord(alias)) {
-      val dot = skipSpace(sql, w.end)
-      if (dot < sql.length && sql.charAt(dot) == '.') {
-        val (field, _) = nextWord(sql, dot + 1)
-        if (field.equalsIgnoreCase("key") || field.equalsIgnoreCase("value")) return true
-      }
+      val c = topLevel(sql, w.end, 2)
+      if (c.isSym(0, '.') && (c.isWord(1, "key") || c.isWord(1, "value"))) return true
     }
     false
   }
@@ -928,29 +907,22 @@ object ChSqlRewrite {
     //                    the left relation's alias for the USING form
     while (w.nextCode()) {
       if (w.kind == SqlLexer.Word) {
-        var left = false
-        var joinAt = -1
-        if (w.isWord(kw)) {
-          val (w2, a2) = nextWord(sql, w.end)
-          if (w2.equalsIgnoreCase("JOIN")) joinAt = a2
-          else if (w2.equalsIgnoreCase("LEFT") || w2.equalsIgnoreCase("INNER")) {
-            val (w3, a3) = nextWord(sql, a2)
-            if (w3.equalsIgnoreCase("JOIN")) { left = w2.equalsIgnoreCase("LEFT"); joinAt = a3 }
-          } else if (!ordered && w2.equalsIgnoreCase("RIGHT") &&
-            nextWord(sql, a2)._1.equalsIgnoreCase("JOIN"))
+        if (w.isWord(kw) || w.isWord("LEFT")) {
+          val c = topLevel(sql, w.start, 3)
+          if (!ordered && c.isWord(0, kw) && c.isWord(1, "RIGHT") && c.isWord(2, "JOIN"))
             throw new IllegalArgumentException(
               "ANY RIGHT JOIN is not supported: spell it as a LEFT-side " +
                 "ANY join from the other table")
-        } else if (w.isWord("LEFT")) {
-          val (w2, a2) = nextWord(sql, w.end)
-          if (w2.equalsIgnoreCase(kw)) {
-            val (w3, a3) = nextWord(sql, a2)
-            if (w3.equalsIgnoreCase("JOIN")) { left = true; joinAt = a3 }
-          }
+          val join =
+            if (c.isWord(0, kw) && c.isWord(1, "JOIN")) 1
+            else if (c.isWord(2, "JOIN") && ((c.isWord(0, "LEFT") && c.isWord(1, kw)) ||
+              (c.isWord(0, kw) && (c.isWord(1, "LEFT") || c.isWord(1, "INNER"))))) 2
+            else -1
+          val left = c.isWord(0, "LEFT") || c.isWord(1, "LEFT")
+          if (join > 0) return Some(lateralJoin(sql, w.start, c.end(join), left, ordered, prevIdent))
         }
-        if (joinAt > 0) return Some(lateralJoin(sql, w.start, joinAt, left, ordered, prevIdent))
         prevIdent = w.text
-      } else if (w.kind == SqlLexer.Symbol) prevIdent = ""
+      } else if (w.kind != SqlLexer.Literal) prevIdent = ""
     }
     None
   }
@@ -1083,18 +1055,10 @@ object ChSqlRewrite {
     * raw-substring hit (alias `p` must not match inside `leap.ts`). */
   private def refersToAlias(term: String, alias: String): Boolean = {
     val w = new Walk(term)
-    while (w.nextCode()) if (w.kind == SqlLexer.Word) {
-      if (w.isWord(alias)) {
-        val p = skipSpace(term, w.end)
-        // a qualifier is preceded by nothing ident-like (handled by the
-        // token walk) and followed by a dot
-        if (p < term.length && term.charAt(p) == '.' &&
-          (w.start == 0 || term.charAt(w.start - 1) != '.')) return true
-      }
-      // skip a following qualified chain so `a.p.x` never re-enters at `p`
-      var i = w.end
-      while (i < term.length && term.charAt(i) == '.') i = wordAt(term, i + 1)._2
-      w.jump(i)
+    var afterDot = false // a part inside `a.p.x` is no qualifier
+    while (w.nextCode()) {
+      if (!afterDot && w.isWord(alias) && topLevel(term, w.end, 1).isSym(0, '.')) return true
+      afterDot = w.isSym('.')
     }
     false
   }
@@ -1170,33 +1134,29 @@ object ChSqlRewrite {
   /** Standard-SQL fetch clause, which CH accepts and Spark does not:
     * `[OFFSET o ROW[S]] FETCH FIRST|NEXT m ROW[S] ONLY` (query tail) →
     * `LIMIT m [OFFSET o]`. Rescue-tier; `WITH TIES` fails loudly (no
-    * faithful LIMIT form — use the rank()<=n window, b_lim3). */
+    * faithful LIMIT form — use the rank()<=n window, b_lim3). The clause
+    * is the text's last top-level tokens; the cut takes the comments
+    * around it along, so the appended LIMIT is never commented out. */
   private def rewriteFetchFirst(sql: String): String = {
-    if (!SqlLexer.hasWord(sql, "FETCH", topLevel = false)) return sql
-    fetchTail.findFirstMatchIn(sql) match {
-      // The regex is end-anchored, but the matched tail could still sit
-      // inside a trailing comment/string while a real FETCH token exists
-      // elsewhere — confirm the match starts in code before splicing
-      // (unmatched FETCH then fails loudly in Spark's parser).
-      case Some(m) if !isCode(sql, m.start) => sql
-      case Some(m) =>
-        if (m.group("ties") != null)
-          throw new org.apache.spark.sql.AnalysisException(
-            errorClass = "_LEGACY_ERROR_TEMP_3100",
-            messageParameters = Map("message" ->
-              ("graft: FETCH FIRST ... WITH TIES has no faithful LIMIT " +
-                "rewrite; use the rank()<=n window form (b_lim3)")))
-        val off = Option(m.group("off")).map(o => s" OFFSET $o").getOrElse("")
-        lift(sql, 0, m.start).replaceAll("\\s+$", "") +
-          s" LIMIT ${m.group("m")}$off"
-      case None => sql
-    }
+    val c = topLevel(sql)
+    val ties = c.isWord(c.size - 2, "WITH") && c.isWord(c.size - 1, "TIES")
+    val rows = if (ties) c.size - 3 else if (c.isWord(c.size - 1, "ONLY")) c.size - 2 else -1
+    def isRows(i: Int) = c.isWord(i, "ROW") || c.isWord(i, "ROWS")
+    val fetch = rows - 3
+    if (!isRows(rows) || !c.isInt(rows - 1) ||
+      !(c.isWord(rows - 2, "FIRST") || c.isWord(rows - 2, "NEXT")) || !c.isWord(fetch, "FETCH"))
+      return sql
+    if (ties)
+      throw new org.apache.spark.sql.AnalysisException(
+        errorClass = "_LEGACY_ERROR_TEMP_3100",
+        messageParameters = Map("message" ->
+          ("graft: FETCH FIRST ... WITH TIES has no faithful LIMIT " +
+            "rewrite; use the rank()<=n window form (b_lim3)")))
+    val offset = isRows(fetch - 1) && c.isInt(fetch - 2) && c.isWord(fetch - 3, "OFFSET")
+    val cut = if (offset) fetch - 3 else fetch
+    lift(sql, 0, c.cutBefore(cut)) + s" LIMIT ${c.text(rows - 1)}" +
+      (if (offset) s" OFFSET ${c.text(fetch - 2)}" else "")
   }
-
-  private val fetchTail =
-    ("""(?is)(?:\bOFFSET\s+(?<off>\d+)\s+ROWS?\s+)?""" +
-      """\bFETCH\s+(?:FIRST|NEXT)\s+(?<m>\d+)\s+ROWS?\s+""" +
-      """(?:ONLY|(?<ties>WITH\s+TIES))\s*$""").r
 
   // ----------------------------------------------------------------- TOP
 
@@ -1216,15 +1176,10 @@ object ChSqlRewrite {
       throw new org.apache.spark.sql.AnalysisException(
         errorClass = "_LEGACY_ERROR_TEMP_3100",
         messageParameters = Map("message" -> s"graft: $why"))
-    var p = skipSpace(sql, w.end)
-    val (w1, e1) = wordAt(sql, p)
-    if (w1.equalsIgnoreCase("DISTINCT") || w1.equalsIgnoreCase("ALL")) p = skipSpace(sql, e1)
-    val (w2, e2) = wordAt(sql, p)
-    if (!w2.equalsIgnoreCase("TOP")) return None
-    val (limit, e3) = readNum(sql, skipSpace(sql, e2))
-    if (limit.isEmpty) return None
-    val (w4, e4) = nextWord(sql, e3)
-    if (w4.equalsIgnoreCase("WITH") && nextWord(sql, e4)._1.equalsIgnoreCase("TIES"))
+    val c = topLevel(sql, w.end, 5)
+    val t = if (c.isWord(0, "DISTINCT") || c.isWord(0, "ALL")) 1 else 0
+    if (!c.isWord(t, "TOP") || !c.isInt(t + 1)) return None
+    if (c.isWord(t + 2, "WITH") && c.isWord(t + 3, "TIES"))
       refuse("TOP n WITH TIES has no faithful LIMIT rewrite; " +
         "use the rank()<=n window form (b_lim3)")
     if (w.depth > 0) refuse("TOP inside a subquery is not supported; use LIMIT")
@@ -1237,7 +1192,7 @@ object ChSqlRewrite {
     // quoted 'limit') must not trip this
     if (SqlLexer.hasWord(sql, "LIMIT", topLevel = true))
       refuse("TOP cannot combine with LIMIT (same as ClickHouse)")
-    Some(lift(sql.substring(0, p) + sql.substring(skipSpace(sql, e3))) + s" LIMIT $limit")
+    Some(lift(sql.substring(0, c.start(t)) + sql.substring(c.at(t + 2))) + s" LIMIT ${c.text(t + 1)}")
   }
 
   // --------------------------------------------------------------- FINAL
@@ -1437,8 +1392,8 @@ object ChSqlRewrite {
 
   /** The `expr AS col` items of a REPLACE list, or None when one is not. */
   private def replaceItems(inner: String): Option[Seq[(String, String)]] = {
-    val ms = splitTopLevel(inner).map(it => asAlias.matcher(it.trim))
-    if (ms.forall(_.matches())) Some(ms.map(m => m.group(1) -> m.group(2))) else None
+    val items = splitTopLevel(inner).map(asAlias)
+    if (items.forall(_.isDefined)) Some(items.flatten) else None
   }
 
   // -------------------------------------------------------------- * APPLY
@@ -1520,25 +1475,20 @@ object ChSqlRewrite {
   private val scalarWithStops = Set("AS", "SELECT")
 
   private def rewriteScalarWith(sql: String): String = {
-    val n = sql.length
     val (w0, afterW0) = nextWord(sql, 0)
     if (!w0.equalsIgnoreCase("WITH")) return sql
     var p = skipSpace(sql, afterW0)
     val items = scala.collection.mutable.ListBuffer.empty[(String, String)]
     var selectAt = -1
     while (selectAt < 0) {
-      // expr runs to the first top-level AS
+      // expr runs to the first top-level AS; a `(` after AS is a real CTE
       val (asAt, stop) = SqlLexer.clauseEnd(sql, p, scalarWithStops)
-      if (stop != "AS") return sql
       val expr = lift(sql, p, asAt).trim
-      val q2 = skipSpace(sql, asAt + 2)
-      if (expr.isEmpty || (q2 < n && sql.charAt(q2) == '(')) return sql // real CTE
-      val (name, afterName) = wordAt(sql, q2)
-      if (name.isEmpty) return sql
-      items += (expr -> name)
-      val q3 = skipSpace(sql, afterName)
-      if (q3 < n && sql.charAt(q3) == ',') p = skipSpace(sql, q3 + 1)
-      else if (wordAt(sql, q3)._1.equalsIgnoreCase("SELECT")) selectAt = q3
+      val c = topLevel(sql, asAt + 2, 2)
+      if (stop != "AS" || expr.isEmpty || !c.isWord(0)) return sql
+      items += (expr -> c.text(0))
+      if (c.isSym(1, ',')) p = skipSpace(sql, c.end(1))
+      else if (c.isWord(1, "SELECT")) selectAt = c.start(1)
       else return sql
     }
     val itemSql = items.map { case (e, a) => s"($e) AS $a" }.mkString(", ")
@@ -1639,25 +1589,20 @@ object ChSqlRewrite {
     if (w.depth != 0 || !w.isWord("ORDER")) return None
     val sql = w.s
     val n = sql.length
-    val (by, afterBy) = nextWord(sql, w.end)
-    if (!by.equalsIgnoreCase("BY")) return None
-    // single plain sort column, then WITH FILL
-    val (col, afterCol) = nextWord(sql, afterBy)
-    var p = afterCol
-    val (maybeAsc, afterAsc) = nextWord(sql, p)
-    var desc = false
-    if (maybeAsc.equalsIgnoreCase("ASC")) p = afterAsc
-    else if (maybeAsc.equalsIgnoreCase("DESC")) { desc = true; p = afterAsc }
-    val (w1, a1) = nextWord(sql, p)
-    val (w2, a2) = nextWord(sql, a1)
-    if (col.isEmpty || !w1.equalsIgnoreCase("WITH") || !w2.equalsIgnoreCase("FILL")) return None
+    // BY, a single plain sort column, [ASC|DESC], then WITH FILL
+    val c = topLevel(sql, w.end, 5)
+    val desc = c.isWord(2, "DESC")
+    val f = if (desc || c.isWord(2, "ASC")) 3 else 2
+    if (!c.isWord(0, "BY") || !c.isWord(1) || !c.isWord(f, "WITH") || !c.isWord(f + 1, "FILL"))
+      return None
+    val col = c.text(1)
     def fail(why: String): Nothing = throw new IllegalArgumentException(s"WITH FILL: $why")
     // FROM/TO/STEP expression tail
     def readExpr(from: Int): (String, Int) = {
       val (end, _) = SqlLexer.clauseEnd(sql, from, fillStops)
       (lift(sql, from, end).trim, end)
     }
-    var cur = a2
+    var cur = c.end(f + 1)
     var fromE = ""
     var toE = ""
     var stepE = if (desc) "-1" else "1"
@@ -1678,28 +1623,7 @@ object ChSqlRewrite {
           if (q2 >= n || sql.charAt(q2) != '(')
             fail("INTERPOLATE expects a parenthesized list")
           val (list, e2) = parenAfter(sql, q2).getOrElse(fail("unbalanced INTERPOLATE list"))
-          val itemRe = "(?is)^([A-Za-z_][A-Za-z0-9_]*)(?:\\s+AS\\s+(.+))?$".r
-          val numRe = "-?[0-9]+(?:\\.[0-9]+)?"
-          interp = splitTopLevel(list).map(_.trim).map {
-            case itemRe(cn, null) => (cn, "carry", "", "")
-            case itemRe(cn, ex0) =>
-              val ex = ex0.trim
-              val affRe = ("(?is)^" + java.util.regex.Pattern.quote(cn) +
-                "\\s*([+*-])\\s*(" + numRe + ")$").r
-              ex match {
-                case e if e.equalsIgnoreCase(cn) => (cn, "carry", "", "")
-                case affRe(op, lit) => (cn, "affine", op, lit)
-                case e if e.matches(s"(?is)^(?:$numRe|NULL|'[^']*')$$") =>
-                  (cn, "const", e, "")
-                case _ => fail(
-                  s"INTERPOLATE ($cn AS $ex): only self-affine " +
-                    "expressions (col ± k, col * k) and constants " +
-                    "have a faithful closed-form rewrite; use the " +
-                    "windowed API shape (b_fil2) for general exprs")
-              }
-            case it => fail(s"INTERPOLATE item '$it' is not " +
-              "`col` or `col AS expr`")
-          }
+          interp = splitTopLevel(list).map(_.trim).map(interpolateItem(_, fail))
           cur = e2
         case _ =>
           tailStart = if (kw.isEmpty) n else skipSpace(sql, cur)
@@ -1769,6 +1693,36 @@ object ChSqlRewrite {
       s"ORDER BY $col$dir$tail")
   }
 
+  /** One INTERPOLATE item, `col` or `col AS expr`: (column, kind, payload,
+    * payload2) as [[withFillAt]] reads them. */
+  private def interpolateItem(item: String, fail: String => Nothing)
+      : (String, String, String, String) = {
+    val c = topLevel(item)
+    if (!c.isWord(0) || (c.size > 1 && !(c.isWord(1, "AS") && c.size > 2)))
+      fail(s"INTERPOLATE item '$item' is not `col` or `col AS expr`")
+    val cn = c.text(0)
+    if (c.size == 1) return (cn, "carry", "", "")
+    val ex = item.substring(c.start(2)).trim
+    val e = topLevel(ex)
+    // `-?digits[.digits]` from token i to the end
+    def decimalFrom(i: Int): Boolean = {
+      val j = if (e.isSym(i, '-') && e.isNumber(i + 1) && e.adjacent(i)) i + 1 else i
+      e.size == j + 1 && e.isNumber(j) && !e.text(j).exists(ch => ch == 'e' || ch == 'E')
+    }
+    if (ex.equalsIgnoreCase(cn)) (cn, "carry", "", "")
+    else if (e.isWord(0, cn) && (e.isSym(1, '+') || e.isSym(1, '-') || e.isSym(1, '*')) &&
+      decimalFrom(2))
+      (cn, "affine", e.text(1), ex.substring(e.start(2)))
+    else if (decimalFrom(0) || (e.size == 1 && (e.isWord(0, "NULL") ||
+      (e.isQuoted(0, '\'') && e.text(0).indexOf('\'', 1) == e.text(0).length - 1))))
+      (cn, "const", ex, "")
+    else fail(
+      s"INTERPOLATE ($cn AS $ex): only self-affine " +
+        "expressions (col ± k, col * k) and constants " +
+        "have a faithful closed-form rewrite; use the " +
+        "windowed API shape (b_fil2) for general exprs")
+  }
+
   // ------------------------------------------------------------- LIMIT BY
 
   /** Last top-level `ORDER BY` of `body`: (orderTokenStart, listStart). */
@@ -1797,33 +1751,16 @@ object ChSqlRewrite {
   private def limitByAt(w: Walk): Option[String] = {
     if (w.depth != 0 || !w.isWord("LIMIT")) return None
     val sql = w.s
-    val n = sql.length
-    val (num1, p1) = readNum(sql, skipSpace(sql, w.end))
-    if (num1.isEmpty) return None
-    var k = -1L
-    var off = 0L
-    var afterBy = -1
-    val q = skipSpace(sql, p1)
-    if (q < n && sql.charAt(q) == ',') {
-      val (num2, p2) = readNum(sql, skipSpace(sql, q + 1))
-      val (by, aw) = nextWord(sql, p2)
-      if (num2.nonEmpty && by.equalsIgnoreCase("BY")) {
-        off = num1.toLong; k = num2.toLong; afterBy = aw
-      }
-    } else {
-      val (w2, aw) = wordAt(sql, q)
-      if (w2.equalsIgnoreCase("BY")) { k = num1.toLong; afterBy = aw }
-      else if (w2.equalsIgnoreCase("OFFSET")) {
-        val (num2, p2) = readNum(sql, skipSpace(sql, aw))
-        val (by, aw2) = nextWord(sql, p2)
-        if (num2.nonEmpty && by.equalsIgnoreCase("BY")) {
-          k = num1.toLong; off = num2.toLong; afterBy = aw2
-        }
-      }
-    }
-    if (k < 0) return None
+    // n BY | o, n BY | n OFFSET o BY
+    val c = topLevel(sql, w.end, 4)
+    val (k, off, by) =
+      if (c.isInt(0) && c.isWord(1, "BY")) (c.text(0).toLong, 0L, 1)
+      else if (!c.isInt(0) || !c.isInt(2) || !c.isWord(3, "BY")) return None
+      else if (c.isSym(1, ',')) (c.text(2).toLong, c.text(0).toLong, 3)
+      else if (c.isWord(1, "OFFSET")) (c.text(0).toLong, c.text(2).toLong, 3)
+      else return None
     // the grouping expressions run to the next top-level clause
-    val colsStart = skipSpace(sql, afterBy)
+    val colsStart = skipSpace(sql, c.end(by))
     val (colsEnd, _) = SqlLexer.clauseEnd(sql, colsStart, limitByStops)
     val cols = lift(sql, colsStart, colsEnd).trim
     val tail = sql.substring(colsEnd)
@@ -1849,11 +1786,13 @@ object ChSqlRewrite {
   /** True when any top-level comma-separated item of an ORDER BY /
     * PARTITION BY list is a bare integer ordinal (optionally with
     * direction / null-placement suffixes). */
-  private val ordinalItem =
-    "(?is)^\\s*\\d+\\s*(?:ASC|DESC)?\\s*(?:NULLS\\s+(?:FIRST|LAST))?\\s*$".r
-
-  private def hasOrdinalItem(list: String): Boolean =
-    splitTopLevel(list).exists(it => ordinalItem.pattern.matcher(it).matches())
+  private def hasOrdinalItem(list: String): Boolean = splitTopLevel(list).exists { it =>
+    val c = topLevel(it)
+    var i = 1
+    if (c.isWord(i, "ASC") || c.isWord(i, "DESC")) i += 1
+    if (c.isWord(i, "NULLS") && (c.isWord(i + 1, "FIRST") || c.isWord(i + 1, "LAST"))) i += 2
+    c.isInt(0) && c.size == i
+  }
 
   // ------------------------------------------------------ bracket arrays
 
@@ -1915,6 +1854,8 @@ object ChSqlRewrite {
       case SqlLexer.Literal =>
         prim = out.length
         out.append(sql, w.start, w.end); prev = 1; callable = false
+      case SqlLexer.Number =>
+        out.append(sql, w.start, w.end); prev = 0; callable = false
       case SqlLexer.Word =>
         // a dotted continuation (t.col) keeps the chain's primary start
         if (out.isEmpty || out.charAt(out.length - 1) != '.') prim = out.length
@@ -2013,15 +1954,11 @@ object ChSqlRewrite {
     * belongs to [[rewriteLimitBy]] (which runs first in the chain), so
     * that shape is left untouched here. */
   private def rewriteLimitComma(sql: String): String = spliceAll(sql) { w =>
-    val s = w.s
-    val (num1, p1) = if (w.isWord("LIMIT")) readNum(s, skipSpace(s, w.end)) else ("", -1)
-    val q = if (num1.nonEmpty) skipSpace(s, p1) else s.length
-    if (q >= s.length || s.charAt(q) != ',') None
-    else {
-      val (num2, p2) = readNum(s, skipSpace(s, q + 1))
-      if (num2.isEmpty || nextWord(s, p2)._1.equalsIgnoreCase("BY")) None
-      else Some(s.substring(0, w.start) + s"LIMIT $num2 OFFSET $num1" + s.substring(p2))
-    }
+    lazy val c = topLevel(w.s, w.end, 4)
+    if (!w.isWord("LIMIT") || !c.isInt(0) || !c.isSym(1, ',') || !c.isInt(2) || c.isWord(3, "BY"))
+      None
+    else Some(w.s.substring(0, w.start) + s"LIMIT ${c.text(2)} OFFSET ${c.text(0)}" +
+      w.s.substring(c.end(2)))
   }
 
   // ------------------------------------------------ parameterized calls
@@ -2082,9 +2019,6 @@ object ChSqlRewrite {
 
   // ------------------------------------------------ {name:Type} params
 
-  private val braceInner =
-    java.util.regex.Pattern.compile("(?s)^\\s*([A-Za-z_]\\w*)\\s*:\\s*(\\S[^}]*?)\\s*$")
-
   /** CH's parameter marker `{name:Type}` — the reference's PRIMARY bind
     * spelling (`src/query.rs:71-166`, e.g. `WHERE id = {id:UInt64}`,
     * `{ids:Array(Int32)} IN`) → Spark's named marker `:name`. The type
@@ -2098,19 +2032,16 @@ object ChSqlRewrite {
     * left alone. */
   private def rewriteBraceParams(sql: String): String = spliceAll(sql) { w =>
     val s = w.s
-    val close = if (w.isSym('{')) s.indexOf('}', w.start) else -1
-    val m = if (close > w.start) braceInner.matcher(s.substring(w.start + 1, close)) else null
-    if (m == null || !m.matches()) None
-    else {
-      if (m.group(2).equalsIgnoreCase("Identifier"))
+    (if (w.isSym('{')) SqlLexer.braceParam(s, w.start) else None).map { p =>
+      if (p.isIdentifier)
         throw new org.apache.spark.sql.AnalysisException(
           errorClass = "_LEGACY_ERROR_TEMP_3100",
           messageParameters = Map("message" ->
-            (s"graft: {${m.group(1)}:Identifier} substitutes client-side " +
+            (s"graft: {${p.name}:Identifier} substitutes client-side " +
               "in ClickHouse — run the statement through " +
               "graft.settings.Params.sql, which binds identifier params " +
               "into the text before value binding")))
-      Some(s.substring(0, w.start) + ":" + m.group(1) + s.substring(close + 1))
+      s.substring(0, w.start) + ":" + p.name + s.substring(p.end)
     }
   }
 }

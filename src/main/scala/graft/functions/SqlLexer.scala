@@ -14,11 +14,15 @@ package graft.functions
   *  - comments: `--` up to (not including) the next newline, and
   *    `/* … */` (unterminated: to the end of the text);
   *  - words: a Java identifier start followed by identifier parts;
+  *  - numbers: digits, then an optional `.` and digits, then an optional
+  *    exponent (`e` or `E`, an optional sign, digits) — `1.5e-3` is one
+  *    token, `t.1` a word, a `.` and a number;
   *  - runs of whitespace;
   *  - every other character is a one-character symbol. `(` and `[` open
   *    a nesting level, `)` and `]` close one.
   *
-  * Literals, words and symbols are code; whitespace and comments are not.
+  * Literals, words, numbers and symbols are code; whitespace and comments
+  * are not.
   */
 private[graft] object SqlLexer {
   final val Word = 0
@@ -26,6 +30,7 @@ private[graft] object SqlLexer {
   final val Comment = 2
   final val Space = 3
   final val Symbol = 4
+  final val Number = 5
 
   /** A forward walk over the tokens of `s` from `from`. After each
     * successful `next`, [`start`, `end`) is the token, `kind` its kind,
@@ -50,7 +55,7 @@ private[graft] object SqlLexer {
       true
     }
 
-    /** Advances to the next code token (literal, word or symbol). */
+    /** Advances to the next code token (literal, word, number or symbol). */
     def nextCode(): Boolean = {
       while (next()) if (kind != Space && kind != Comment) return true
       false
@@ -75,8 +80,17 @@ private[graft] object SqlLexer {
     if (c == '\'' || c == '"' || c == '`') Literal
     else if (opensComment(s, i)) Comment
     else if (Character.isJavaIdentifierStart(c)) Word
+    else if (isDigit(c)) Number
     else if (Character.isWhitespace(c)) Space
     else Symbol
+  }
+
+  private def isDigit(c: Char): Boolean = c >= '0' && c <= '9'
+
+  private def digitsEnd(s: String, i: Int): Int = {
+    var j = i
+    while (j < s.length && isDigit(s.charAt(j))) j += 1
+    j
   }
 
   private def opensComment(s: String, i: Int): Boolean =
@@ -110,6 +124,14 @@ private[graft] object SqlLexer {
       var j = i + 1
       while (j < n && Character.isJavaIdentifierPart(s.charAt(j))) j += 1
       j
+    } else if (isDigit(c)) {
+      var j = digitsEnd(s, i)
+      if (j + 1 < n && s.charAt(j) == '.' && isDigit(s.charAt(j + 1))) j = digitsEnd(s, j + 1)
+      if (j + 1 < n && (s.charAt(j) == 'e' || s.charAt(j) == 'E')) {
+        val k = if (s.charAt(j + 1) == '+' || s.charAt(j + 1) == '-') j + 2 else j + 1
+        if (k < n && isDigit(s.charAt(k))) j = digitsEnd(s, k)
+      }
+      j
     } else if (Character.isWhitespace(c)) {
       var j = i + 1
       while (j < n && Character.isWhitespace(s.charAt(j))) j += 1
@@ -135,6 +157,80 @@ private[graft] object SqlLexer {
   /** The first code token after `i`, when it is a word: ("", j) otherwise,
     * where `j` is that token's start. */
   def nextWord(s: String, i: Int): (String, Int) = wordAt(s, skipSpace(s, i))
+
+  /** The first `max` code tokens at the top level of `s` from `from`, in
+    * order: every literal, word, number and symbol outside parentheses
+    * and brackets, and the opener and closer of each top-level group (a
+    * stray closer stays at the top level). Comments and whitespace never
+    * count, so a clause reads the same whatever comments sit around it;
+    * indices outside [0, `size`) match nothing. */
+  final class Code private[SqlLexer] (val s: String, from: Int, max: Int) {
+    private val bounds = {
+      val b = Array.newBuilder[Int]
+      val w = new Walk(s, from)
+      var depth = 0
+      var n = 0
+      while (n < max && w.nextCode()) {
+        if (depth > 0 && (w.isSym(')') || w.isSym(']'))) depth -= 1
+        if (depth == 0) { b += w.start; b += w.end; n += 1 }
+        if (w.isSym('(') || w.isSym('[')) depth += 1
+      }
+      b.result()
+    }
+    val size: Int = bounds.length / 2
+
+    def start(i: Int): Int = bounds(2 * i)
+    def end(i: Int): Int = bounds(2 * i + 1)
+    def text(i: Int): String = s.substring(start(i), end(i))
+    /** Where token `i` starts, or the text's end when there is none. */
+    def at(i: Int): Int = if (i < size) start(i) else s.length
+    private def is(i: Int, k: Int): Boolean = i >= 0 && i < size && kindOf(s, start(i)) == k
+    def isWord(i: Int): Boolean = is(i, Word)
+    def isWord(i: Int, w: String): Boolean =
+      is(i, Word) && end(i) - start(i) == w.length && s.regionMatches(true, start(i), w, 0, w.length)
+    def isSym(i: Int, c: Char): Boolean = is(i, Symbol) && s.charAt(start(i)) == c
+    /** A literal opened by `q` (`'`, `"` or `` ` ``). */
+    def isQuoted(i: Int, q: Char): Boolean = is(i, Literal) && s.charAt(start(i)) == q
+    def isNumber(i: Int): Boolean = is(i, Number)
+    /** An unsigned integer: a number of digits only. */
+    def isInt(i: Int): Boolean = is(i, Number) && digitsEnd(s, start(i)) == end(i)
+    /** Tokens `i` and `i + 1` touch: no space or comment between them. */
+    def adjacent(i: Int): Boolean = end(i) == start(i + 1)
+    /** Where the text ends when it is cut before token `i`: just after the
+      * code token before it, so the space and comments between go too. */
+    def cutBefore(i: Int): Int = if (i > 0) end(i - 1) else 0
+    /** The text cut before token `i`; all of it when `i` is past the last. */
+    def cut(i: Int): String = if (i >= size) s else s.substring(0, cutBefore(i))
+  }
+
+  def topLevel(s: String, from: Int = 0, max: Int = Int.MaxValue): Code = new Code(s, from, max)
+
+  /** A `{name:Type}` parameter marker: its name, its type's text and the
+    * index after its `}`. */
+  final case class BraceParam(name: String, tpe: String, end: Int) {
+    /** `{name:Identifier}`, in any letter case. */
+    def isIdentifier: Boolean = tpe.equalsIgnoreCase("Identifier")
+  }
+
+  /** The `{name:Type}` marker whose `{` is the code token at `open`: a
+    * ClickHouse bare name (`[A-Za-z_][A-Za-z0-9_]*`), `:`, then the type's
+    * tokens up to the first `}`; None when the braces hold another shape. */
+  def braceParam(s: String, open: Int): Option[BraceParam] = {
+    val w = new Walk(s, open)
+    if (!(w.nextCode() && w.isSym('{') && w.nextCode() && w.kind == Word)) return None
+    val name = w.text
+    if (!name.forall(c => c < 128 && (Character.isLetterOrDigit(c) || c == '_'))) return None
+    if (!(w.nextCode() && w.isSym(':'))) return None
+    var typeStart = -1
+    var typeEnd = -1
+    while (w.nextCode()) {
+      if (w.isSym('}'))
+        return if (typeStart < 0) None else Some(BraceParam(name, s.substring(typeStart, typeEnd), w.end))
+      if (typeStart < 0) typeStart = w.start
+      typeEnd = w.end
+    }
+    None
+  }
 
   /** The dot-joined name starting at `i`, each part a word or a `…` or
     * "…" identifier: (index after it, its last part unquoted), or None
@@ -197,13 +293,6 @@ private[graft] object SqlLexer {
     val w = new Walk(s)
     while (w.nextCode()) if (w.isWord(word) && (!topLevel || w.depth == 0)) return true
     false
-  }
-
-  /** True when `pos` lies in code: not inside a literal or a comment. */
-  def isCode(s: String, pos: Int): Boolean = {
-    val w = new Walk(s)
-    while (w.next()) if (pos < w.end) return w.kind != Literal && w.kind != Comment
-    true
   }
 
   /** `s(from until to)` made safe to splice into generated text: each

@@ -59,12 +59,11 @@ object GraftSettings {
   * `src/query.rs:71-166`, Spark-native form). */
 object Params {
 
-  private val identParam =
-    java.util.regex.Pattern.compile("(?s)\\{\\s*([A-Za-z_]\\w*)\\s*:\\s*Identifier\\s*\\}")
-
-  /** CH `{name:Identifier}` params substitute CLIENT-side (the reference
-    * binds identifiers into the text, `src/query.rs` — a server value
-    * binding cannot name a table/column). Substituted here: validated,
+  /** CH `{name:Identifier}` params (`Identifier` in any letter case, read
+    * by [[SqlLexer.braceParam]] like the dialect's markers) substitute
+    * CLIENT-side (the reference binds identifiers into the text,
+    * `src/query.rs` — a server value binding cannot name a table/column).
+    * Substituted here: validated,
     * backtick-quoted per dot-part, and removed from the value-binding
     * map; the remaining `{name:Type}` value params ride to the engine
     * binding through the rescue rewrite. */
@@ -76,23 +75,21 @@ object Params {
     // markers in code only: a `{t:Identifier}` inside a literal or a
     // comment is text, not a parameter
     val w = new SqlLexer.Walk(sqlText)
-    while (w.nextCode()) if (w.isSym('{')) {
-      val close = sqlText.indexOf('}', w.start)
-      val m = if (close < 0) null else identParam.matcher(sqlText.substring(w.start, close + 1))
-      if (m != null && m.matches()) {
-        val k = m.group(1)
+    while (w.nextCode()) if (w.isSym('{')) SqlLexer.braceParam(sqlText, w.start) match {
+      case Some(p) if p.isIdentifier =>
+        val k = p.name
         val v = args.getOrElse(k, throw new IllegalArgumentException(
-          s"Params: no value bound for identifier param {$k:Identifier}")).toString
+          s"Params: no value bound for identifier param {$k:${p.tpe}}")).toString
         val quoted = v.split('.').map { part =>
           require(part.nonEmpty && !part.contains('`'),
             s"Params: invalid identifier '$v' for {$k:Identifier}")
           s"`$part`"
         }.mkString(".")
         sb.append(sqlText, copied, w.start).append(quoted)
-        copied = close + 1
+        copied = p.end
         w.jump(copied)
         used += k
-      }
+      case _ => ()
     }
     sb.append(sqlText, copied, sqlText.length)
     (sb.toString, args -- used)

@@ -291,6 +291,21 @@ class ConnectorSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("filters on names Spark quotes push down: a space, a backtick and a dot") {
+    val srv = freshServer()
+    try {
+      srv.load("qn", Seq((1, "x", "p", "u"), (2, "y", "q", "v")).toDF("id", "my col", "a`b", "a.b"))
+      val df = spark.read.format("graft-ch").option("url", srv.url).option("table", "qn").load()
+      def ids(c: String, v: String) = df.filter(col(c) === v).collect().map(_.getInt(0)).toSeq
+      assert(ids("`my col`", "x") === Seq(1))
+      assert(ids("`a``b`", "q") === Seq(2))
+      assert(ids("`a.b`", "v") === Seq(2))
+      val pushed = srv.queries.filter(_.startsWith("SELECT `"))
+      for (where <- Seq("`my col` = 'x'", "`a\\`b` = 'q'", "`a.b` = 'v'"))
+        assert(pushed.exists(_.contains(where)), s"$where not pushed: $pushed")
+    } finally srv.stop()
+  }
+
   test("TopN (ORDER BY + LIMIT) pushes to the server and returns the true top rows") {
     val srv = freshServer()
     try {

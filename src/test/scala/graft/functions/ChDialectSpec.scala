@@ -397,6 +397,50 @@ class ChDialectSpec extends SparkSpec {
     for ((ch, twin) <- cases) assert(plan(ch) === plan(twin), ch)
   }
 
+  test("a comment next to a head or tail clause reads like its comment-free twin") {
+    (1 to 5).toDF("a").createOrReplaceTempView("chcmt")
+    // (form, its text with `%s` where a comment goes, once before the
+    // clause and once after it, and whether it is a tail clause, whose
+    // rescued text must then equal the twin's)
+    val forms = Seq(
+      ("trailing ;", Seq("SELECT a FROM chcmt %s;", "SELECT a FROM chcmt;%s"), true),
+      ("FORMAT", Seq("SELECT a FROM chcmt %s FORMAT JSONEachRow",
+        "SELECT a FROM chcmt FORMAT JSONEachRow %s"), true),
+      ("INTO OUTFILE", Seq("SELECT a FROM chcmt %s INTO OUTFILE 'o.csv' APPEND",
+        "SELECT a FROM chcmt INTO OUTFILE 'o.csv' APPEND %s"), true),
+      ("SETTINGS", Seq("SELECT a FROM chcmt %s SETTINGS max_threads = 3, max_block_size = 64",
+        "SELECT a FROM chcmt SETTINGS max_threads = 3, max_block_size = 64 %s"), true),
+      ("OFFSET … FETCH", Seq("SELECT a FROM chcmt ORDER BY a %s OFFSET 1 ROWS FETCH FIRST 3 ROWS ONLY",
+        "SELECT a FROM chcmt ORDER BY a OFFSET 1 ROWS FETCH FIRST 3 ROWS ONLY %s"), true),
+      ("EXPLAIN AST", Seq("%s EXPLAIN AST SELECT a FROM chcmt",
+        "EXPLAIN AST %s SELECT a FROM chcmt"), false),
+      ("DROP … SYNC", Seq("%s DROP TABLE IF EXISTS chcmt_d SYNC",
+        "DROP TABLE IF EXISTS chcmt_d SYNC %s"), false))
+    def plan(sql: String) =
+      spark.sessionState.sqlParser.parsePlan(sql).treeString.replaceAll("#\\d+", "#")
+    val prior = spark.conf.get("spark.sql.shuffle.partitions")
+    val wrong = try for {
+      (form, shapes, tail) <- forms
+      shape <- shapes
+      comment <- Seq("-- c", "/* c */")
+      text = shape.format(if (shape.endsWith("%s")) comment else comment + "\n")
+      twin = shape.format("").replace("  ", " ").trim
+      same = scala.util.Try {
+        val (r, t) = (ChSqlRewrite.rescue(text), ChSqlRewrite.rescue(twin))
+        plan(text) == plan(twin) && r.settings == t.settings && (!tail || r.sql == t.sql)
+      }
+      if !same.getOrElse(false)
+    } yield s"$form: $text" finally {
+      ChSqlRewrite.drainPendingSettings(spark)
+      spark.conf.set("spark.sql.shuffle.partitions", prior)
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+    assert(ChSqlRewrite.rescue("SELECT a FROM chcmt SETTINGS max_threads = 3 -- c").settings ===
+      Seq("max_threads" -> "3"))
+    assert(spark.sql("SELECT a FROM chcmt ORDER BY a FETCH FIRST 3 ROWS ONLY -- c")
+      .collect().map(_.getInt(0)).toSeq === Seq(1, 2, 3))
+  }
+
   test("always-on pass is identity on marker-ADJACENT valid Spark SQL (generated)") {
     // names that CONTAIN rewrite-trigger substrings without being them:
     // the scanners must match whole tokens/shapes only. 2k generated
@@ -2107,6 +2151,13 @@ class ChDialectSpec extends SparkSpec {
     assert(one("SELECT element_at(mapUpdate(map('a', 1), map('a', CAST(NULL AS INT))), 'a')") === null)
     assert(one("SELECT size(emptyArrayInt32())") === 0)
     assert(one("SELECT size(emptyArrayString())") === 0)
+    // element types follow the CH→Spark type mapping
+    import org.apache.spark.sql.types.{ArrayType, DecimalType, ShortType, TimestampType}
+    def emptyElem(f: String) =
+      spark.sql(s"SELECT $f() AS r").schema("r").dataType.asInstanceOf[ArrayType].elementType
+    assert(emptyElem("emptyArrayUInt64") === DecimalType(20, 0))
+    assert(emptyElem("emptyArrayDateTime") === TimestampType)
+    assert(emptyElem("emptyArrayUInt8") === ShortType)
     // javaHash: 31*h + signed UTF-8 byte (CH JavaHashImpl). Agrees with
     // String.hashCode on ASCII; diverges on multi-byte chars.
     assert(one("SELECT javaHash('abc')") === 96354)

@@ -107,6 +107,13 @@ class SettingsSpec extends SparkSpec {
     assert(commented.collect().map(_.getInt(0)).toSeq === Seq(1))
   }
 
+  test("identifier params take `Identifier` in any letter case, as the dialect does") {
+    Seq(1).toDF("k").createOrReplaceTempView("pid_case_v")
+    for (t <- Seq("Identifier", "identifier", "IDENTIFIER"))
+      assert(Params.sql(spark, s"SELECT k FROM {t:$t}", Map("t" -> "pid_case_v"))
+        .collect().map(_.getInt(0)).toSeq === Seq(1), t)
+  }
+
   test("query cache: LRU eviction unpersists, capacity bounds storage") {
     Tables.t(spark, sf001, "region").createOrReplaceTempView("qc_region")
     val qc = new QueryCache(spark, capacity = 2)
