@@ -4,11 +4,9 @@
 # counts when it is neither blank nor comment-only (`//`, `/*`, `*`), in
 # .scala and .java files; untracked files count, ignored ones do not.
 #
-# src/main is further split into library and certification-harness
-# lines. Harness lines are the counted lines inside each
-# `val defs: Seq[QueryDef] = Seq(` ... `)` block (the declared-query
-# closures), the block's end found by balancing parentheses on counted
-# lines; library lines are the rest.
+# src/main is further split by file into library and certification
+# harness: the harness is the `*Queries.scala` files (the declared-query
+# rows and the helpers only they use); the library is every other file.
 #
 # usage: scripts/loc.sh <base-ref>
 set -e
@@ -20,37 +18,30 @@ git rev-parse --verify --quiet "$base^{commit}" >/dev/null ||
 
 code_lines() { grep -Ev '^[[:space:]]*($|//|/\*|\*)' | wc -l; }
 
-harness_lines() {
-  grep -Ev '^[[:space:]]*($|//|/\*|\*)' | awk '
-    function parens(s,   o, c) { o = gsub(/\(/, "(", s); c = gsub(/\)/, ")", s); return o - c }
-    !inside && /val defs: Seq\[QueryDef\] = Seq\(/ {
-      inside = 1; n++; depth = parens(substr($0, index($0, "val defs")))
-      if (depth <= 0) inside = 0
-      next
-    }
-    inside { n++; depth += parens($0); if (depth <= 0) inside = 0 }
-    END { print n + 0 }'
-}
-
+# at_base <dir> <glob>...: the matching files of <dir> at the base ref
 at_base() {
-  git archive "$base" -- "$1" 2>/dev/null | tar -xO --wildcards '*.scala' '*.java' 2>/dev/null
+  local dir=$1; shift
+  git archive "$base" -- "$dir" 2>/dev/null | tar -xO --wildcards "$@" 2>/dev/null || true
 }
 
+# in_tree <dir> <glob>...: the matching files of <dir> in the working tree
 in_tree() {
-  git ls-files -z --cached --others --exclude-standard -- "$1/*.scala" "$1/*.java" |
+  local dir=$1; shift
+  local specs=()
+  for g in "$@"; do specs+=("$dir/$g"); done
+  git ls-files -z --cached --others --exclude-standard -- "${specs[@]}" |
     while IFS= read -r -d '' f; do [ -f "$f" ] && cat "$f"; done
 }
 
 row() { printf '%-14s %7d -> %7d  net %+d\n' "$1" "$2" "$3" "$(($3 - $2))"; }
 
 for dir in src/main src/test; do
-  before=$(at_base "$dir" | code_lines)
-  after=$(in_tree "$dir" | code_lines)
-  row "$dir" "$before" "$after"
+  row "$dir" "$(at_base "$dir" '*.scala' '*.java' | code_lines)" \
+    "$(in_tree "$dir" '*.scala' '*.java' | code_lines)"
 done
-hb=$(at_base src/main | harness_lines)
-ha=$(in_tree src/main | harness_lines)
-lb=$(($(at_base src/main | code_lines) - hb))
-la=$(($(in_tree src/main | code_lines) - ha))
+hb=$(at_base src/main '*Queries.scala' | code_lines)
+ha=$(in_tree src/main '*Queries.scala' | code_lines)
+lb=$(($(at_base src/main '*.scala' '*.java' | code_lines) - hb))
+la=$(($(in_tree src/main '*.scala' '*.java' | code_lines) - ha))
 row "  library" "$lb" "$la"
 row "  harness" "$hb" "$ha"

@@ -279,7 +279,7 @@ def cold_index_probe():
     from pyspark.sql import DataFrame
 
     jvm = spark._jvm
-    path = jvm.graft.llm.IndexStore.tempRoot(spark._jsparkSession) + "/pysmoke/ivf"
+    path = jvm.graft.llm.ArtifactQueries.tempRoot(spark._jsparkSession) + "/pysmoke/ivf"
     jvm.graft.llm.Similarity.saveIndex(spark._jsparkSession, SF_DIR, ann_family("ivf"), path)
     fresh = spark._jsparkSession.newSession()
     emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))

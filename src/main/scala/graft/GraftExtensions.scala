@@ -30,7 +30,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // LATERAL best-match probes (the ASOF/ANY JOIN text shape) rewritten
     // into join + per-left-row argmax BEFORE Spark's decorrelation turns
     // the inequality correlation into a domain nested-loop join
-    ext.injectPostHocResolutionRule(session => new plans.AsofLateralRule(session))
+    ext.injectPostHocResolutionRule(_ => new plans.AsofLateralRule)
     // CH `* APPLY(f)` star modifier: the rescue tier wraps the star in a
     // ch_star_apply marker; this rule re-expands it per resolved column
     ext.injectFunction(plans.ChStarApply.registration)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local stand-in for the driver's t1 smoke: `entry` on sf0.001 must
   * return rows. */
 object Smoke {

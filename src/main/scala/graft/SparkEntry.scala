@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -12,28 +11,28 @@ object SparkEntry {
 
   /** Registry modules in SURVEY.md §2 order. */
   def registries: Seq[QueryRegistry] = Seq(
-    operators.Relational,
-    operators.Aggregates,
-    operators.Windows,
-    operators.ChExtras,
-    operators.Analytics,
-    operators.Reshape,
-    operators.Subqueries,
-    operators.Enrich,
-    operators.Bucketed,
-    functions.Functions,
-    functions.FnExtras,
+    operators.RelationalQueries,
+    operators.AggregatesQueries,
+    operators.WindowsQueries,
+    operators.ChExtrasQueries,
+    operators.AnalyticsQueries,
+    operators.ReshapeQueries,
+    operators.SubqueriesQueries,
+    operators.EnrichQueries,
+    operators.BucketedQueries,
+    functions.FunctionsQueries,
+    functions.FnExtrasQueries,
     functions.ValueQueries,
-    streaming.StreamingBatch,
-    streaming.MatView,
+    streaming.StreamingBatchQueries,
+    streaming.MatViewQueries,
     connector.ConnectorQueries,
-    sources.Formats,
+    sources.FormatsQueries,
     settings.SettingsQueries,
-    llm.Dedup,
-    llm.Similarity,
-    llm.TextOps,
-    llm.Curation,
-    llm.Multimodal)
+    llm.DedupQueries,
+    llm.SimilarityQueries,
+    llm.TextOpsQueries,
+    llm.CurationQueries,
+    llm.MultimodalQueries)
 
   def allDefs: Seq[QueryDef] = {
     val defs = registries.flatMap(_.defs)

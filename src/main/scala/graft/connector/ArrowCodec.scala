@@ -153,9 +153,6 @@ object ArrowCodec {
     }
   }
 
-  def toArrowSchema(schema: StructType): ArrowSchema =
-    new ArrowSchema(schema.fields.map(toArrowField).toList.asJava)
-
   /** Arrow → Spark (the header-block direction: the server's schema is
     * authoritative, mirroring `client/reader.rs:58`). */
   def fromArrowField(f: Field): StructField = {
@@ -223,7 +220,7 @@ object ArrowCodec {
         ArrayType(elem.dataType, elem.nullable)
       case _: ArrowType.Struct =>
         StructType(f.getChildren.asScala.map(fromArrowField).toSeq)
-      case fsb: ArrowType.FixedSizeBinary => BinaryType
+      case _: ArrowType.FixedSizeBinary => BinaryType
       case u: ArrowType.Union =>
         // CH `Variant(...)` wire form (reference `arrow/types.rs:483-499`):
         // dense union, child NAME = the CH type name, type code = branch
@@ -252,9 +249,6 @@ object ArrowCodec {
     }
     StructField(f.getName, dt, f.isNullable, mb.build())
   }
-
-  def fromArrowSchema(s: ArrowSchema): StructType =
-    StructType(s.getFields.asScala.map(fromArrowField).toSeq)
 
   // ------------------------------------------------------------- encoding
 

@@ -49,7 +49,7 @@ object CHHttp {
   private def open(
       url: String, sql: String, codec: String = NoCodec,
       settings: Seq[(String, String)] = Nil,
-      auth: CHAuth = CHAuth.none): HttpURLConnection = {
+      auth: CHAuth): HttpURLConnection = {
     val q = URLEncoder.encode(sql, StandardCharsets.UTF_8)
     val compressParam = if (codec == NoCodec) "" else "&enable_http_compression=1"
     // per-query server settings ride as URL params — the ClickHouse HTTP
@@ -98,7 +98,7 @@ object CHHttp {
         case e: CHServerException if e.retryable && tries < maxRetries =>
           tries += 1
           Thread.sleep(50L * tries)
-        case e: java.net.ConnectException if tries < maxRetries =>
+        case _: java.net.ConnectException if tries < maxRetries =>
           tries += 1
           Thread.sleep(50L * tries)
       }
@@ -263,7 +263,7 @@ object CHHttp {
   def listDatabases(url: String, auth: CHAuth = CHAuth.none): Seq[String] =
     singleTextColumn(url, "SHOW DATABASES", auth)
 
-  private def singleTextColumn(url: String, sql: String, auth: CHAuth = CHAuth.none): Seq[String] = {
+  private def singleTextColumn(url: String, sql: String, auth: CHAuth): Seq[String] = {
     val in = queryArrow(url, sql, auth = auth)
     try {
       val (_, rows) = ArrowCodec.decode(in.readAllBytes())

@@ -1,7 +1,6 @@
 package graft.connector
 
 import java.util
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
@@ -64,7 +63,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     val schema =
       try CHHttp.fetchSchema(url, ident.name(), db(ident), auth)
       catch {
-        case e: java.io.IOException =>
+        case _: java.io.IOException =>
           throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
             Seq(catalogName) ++ ident.namespace() :+ ident.name())
       }

@@ -19,7 +19,7 @@ private[connector] object StubAgg {
   private final case class GroupCol(idx: Int) extends Item
   private final case class Agg(fn: String, idx: Int) extends Item // idx -1 = *
 
-  def run(sql: String, colsPart: String, schema: StructType,
+  def run(colsPart: String, schema: StructType,
       rows: Vector[InternalRow]): Either[String, Array[Byte]] =
     try {
       val items = graft.functions.SqlLexer.splitTopLevel(colsPart).map(_.trim).filter(_.nonEmpty)

@@ -633,7 +633,7 @@ final class StubCHServer(tlsContext: Option[javax.net.ssl.SSLContext]) {
             val clauses = new StubCHServer.SelectClauses(sql)
             val colsPart = clauses.body("SELECT")
             if (colsPart.toUpperCase.matches("(?s).*\\b(COUNT|MIN|MAX|SUM)\\s*\\(.*")) {
-              StubAgg.run(sql, colsPart, data.schema, matching(clauses, data))
+              StubAgg.run(colsPart, data.schema, matching(clauses, data))
             } else {
               val wanted: Array[Int] =
                 if (colsPart == "*") data.schema.indices.toArray

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *  - arrays are emitted as joined strings (list VALUES are compared, not
   *    engine-specific list ordering/typing)
   */
-object Functions extends QueryRegistry {
+object FunctionsQueries extends QueryRegistry {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.t(s, d, n)
 

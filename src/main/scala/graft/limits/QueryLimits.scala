@@ -1,7 +1,6 @@
 package graft.limits
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Result limiting with truncation stats (SURVEY.md §2.1 A11; reference:
   * `clickhouse-arrow/src/limits.rs:84-130` `QueryLimits`, `:255-330`

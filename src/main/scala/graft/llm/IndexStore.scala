@@ -2,13 +2,14 @@ package graft.llm
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 
 /** Cross-application persistence for the standing indexes — the half of
   * "standing" that survives a restart (VERDICT r13 next-#1).
   *
   * Layout (format 3 — every mutation commits through ONE atomic pointer
-  * flip; appends, compactions, saves and swaps alike):
+  * flip; saves, saves over a live artifact, appends and compactions
+  * alike):
   *
   * {{{
   * <path>/
@@ -85,13 +86,13 @@ object IndexStore {
     * [[appendHookAfterPool]] fires after an append's pool segment is
     * written but before its generation commits (the window the pre-r18
     * in-place append left a partial batch visible in);
-    * [[swapHookBeforeFlip]] fires in EVERY commit (save/append/compact/
-    * swap) after the new generation is fully staged but before the
-    * pointer flips; [[swapHookMidFlip]] fires inside the pointer flip,
+    * [[commitHookBeforeFlip]] fires in EVERY commit (save/append/
+    * compact) after the new generation is fully staged but before the
+    * pointer flips; [[commitHookMidFlip]] fires inside the pointer flip,
     * between deleting the old pointer and renaming the new one in. */
   @volatile private[llm] var appendHookAfterPool: () => Unit = () => ()
-  @volatile private[llm] var swapHookBeforeFlip: () => Unit = () => ()
-  @volatile private[llm] var swapHookMidFlip: () => Unit = () => ()
+  @volatile private[llm] var commitHookBeforeFlip: () => Unit = () => ()
+  @volatile private[llm] var commitHookMidFlip: () => Unit = () => ()
 
   /** One manifest row: a pool segment, the rows committed in it, and —
     * when the sidecar names a `key` column — that column's (min, max)
@@ -264,62 +265,12 @@ object IndexStore {
     }
     writeManifestFile(s, s"$gen/$ManifestTable", manifest)
     writeMeta(s, s"$gen/_index_meta.json", meta ++ Map("format" -> FormatVersion))
-    swapHookBeforeFlip()
-    flipPointer(fs, root, next, swapHookMidFlip)
+    commitHookBeforeFlip()
+    flipPointer(fs, root, next, commitHookMidFlip)
     versionsOf(fs, root).foreach { case (n, dir) =>
       if (n != next) fs.delete(dir, true)
     }
     sweepPool(fs, root, keep = (manifest.map(_.dir) ++ prevSegs).toSet)
-  }
-
-  /** EXCHANGE the artifact at `live` with the one staged at `staged` —
-    * the refresh/rebuild commit (VERDICT r14 wrong-#3 lineage: readers
-    * must never see a no-live-artifact window). The staged artifact's
-    * pool segments move into the live pool first (renames of
-    * not-yet-referenced dirs — invisible), its generation dir renames
-    * in as `live/v<N>` (still invisible), and only then does the
-    * pointer flip — one atomic create-temp+rename. At every crash point
-    * [[resolveDir]] serves one complete artifact: before the flip the
-    * pointer still names the old generation; inside the flip's
-    * delete→rename window resolution falls back to the highest complete
-    * generation — the new one, already fully renamed in. */
-  def swap(s: SparkSession, staged: String, live: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val liveRoot = new Path(live)
-    val fs = liveRoot.getFileSystem(conf)
-    if (!fs.exists(liveRoot)) fs.mkdirs(liveRoot)
-    val prevSegs = prevManifestSegs(s, fs, liveRoot, live)
-    val stagedDir = new Path(resolveDir(s, staged))
-    // move the staged pool segments into the live pool (collision-free:
-    // segment ids are fresh uuids; a clash gets a suffixed name and the
-    // staged manifest — still invisible — is rewritten to match)
-    val entries = manifestEntriesAt(s, stagedDir.toString)
-    fs.mkdirs(new Path(liveRoot, "pool"))
-    var renamed = false
-    val moved = entries.map { e =>
-      val seg = e.dir
-      val from = new Path(s"$staged/$seg")
-      val toSeg =
-        if (!fs.exists(new Path(s"$live/$seg"))) seg
-        else { renamed = true; s"${seg}_${segId()}" }
-      val to = new Path(s"$live/$toSeg")
-      require(fs.rename(from, to),
-        s"index swap: cannot move staged segment $from -> $to")
-      e.copy(dir = toSeg)
-    }
-    if (renamed)
-      writeManifestFile(s, s"$stagedDir/$ManifestTable", moved)
-    val next = versionsOf(fs, liveRoot).map(_._1).foldLeft(0L)(math.max) + 1
-    val gen = new Path(liveRoot, s"v$next")
-    require(fs.rename(stagedDir, gen),
-      s"index swap: cannot stage generation: $stagedDir -> $gen")
-    fs.delete(new Path(staged), true)
-    swapHookBeforeFlip()
-    flipPointer(fs, liveRoot, next, swapHookMidFlip)
-    versionsOf(fs, liveRoot).foreach { case (n, dir) =>
-      if (n != next) fs.delete(dir, true)
-    }
-    sweepPool(fs, liveRoot, keep = (moved.map(_.dir) ++ prevSegs).toSet)
   }
 
   /** Delete pool segments named by no retained manifest (the
@@ -409,14 +360,6 @@ object IndexStore {
     (rows, if (statsOk && rows > 0) Some((lo, hi)) else None)
   }
 
-  /** Exact row count of the parquet files under `dir`, summed from the
-    * FOOTERS' record counts driver-side — identical to a Spark
-    * `count()` of the same files without the scan job (r19: density
-    * knobs over raw fixture corpora resolve through this; production
-    * reads the same number from its table format's snapshot metadata). */
-  private[llm] def parquetRowCount(s: SparkSession, dir: String): Long =
-    segmentRows(s, dir)
-
   /** Total rows of the live artifact, from the manifest's per-segment
     * counts (r19): [[load]] reads exactly the manifest's segments, so
     * this is the same integer as `load(s, path).count()` with no scan
@@ -433,15 +376,18 @@ object IndexStore {
     case Some(key) =>
       val (rows, range) = parquetLongStats(s, s"$path/$seg", key)
       Segment(seg, rows, range)
-    case None => Segment(seg, segmentRows(s, s"$path/$seg"), None)
+    case None => Segment(seg, parquetRowCount(s, s"$path/$seg"), None)
   }
 
-  /** Rows actually committed in a segment — read back from disk (the
-    * parquet FOOTERS' record counts, summed on the driver — metadata
-    * only, no scan job; r18 optimization: the read-plan + count job this
-    * used to launch per save/append/compact was pure overhead), so the
-    * manifest records what IS there, not what the frame promised. */
-  private def segmentRows(s: SparkSession, dir: String): Long = {
+  /** Exact row count of the parquet files under `dir`, summed from the
+    * FOOTERS' record counts driver-side — identical to a Spark `count()`
+    * of the same files without the scan job. A segment's committed rows
+    * are read back this way (r18: the read-plan + count job this used to
+    * launch per save/append/compact was pure overhead), so the manifest
+    * records what IS there, not what the frame promised; density knobs
+    * over raw fixture corpora resolve through it too (r19; production
+    * reads the same number from its table format's snapshot metadata). */
+  private[llm] def parquetRowCount(s: SparkSession, dir: String): Long = {
     val conf = s.sparkContext.hadoopConfiguration
     parquetFiles(s, dir).map { f =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -546,10 +492,33 @@ object IndexStore {
   }
 
   /** The segment entries of the CURRENT generation's manifest, sorted
-    * for deterministic read planning. The collect is bounded by the
-    * append count between compactions. */
-  private[llm] def manifestEntries(s: SparkSession, path: String): Seq[Segment] =
-    manifestEntriesAt(s, resolveDir(s, path))
+    * for deterministic read planning, read as driver-side parquet record
+    * iteration (metadata-sized by contract — one row per live segment,
+    * bounded by the append count between compactions; r18 optimization:
+    * a Spark read of the tiny table cost a full job per call, and
+    * [[load]]/[[append]]/[[compact]]/probes all call this). The table
+    * stays an ordinary parquet table — Spark reads it fine (the
+    * crash-injection specs do). */
+  private[llm] def manifestEntries(s: SparkSession, path: String): Seq[Segment] = {
+    val conf = s.sparkContext.hadoopConfiguration
+    val out = Seq.newBuilder[Segment]
+    parquetFiles(s, s"${resolveDir(s, path)}/$ManifestTable").foreach { f =>
+      val reader = org.apache.parquet.hadoop.ParquetReader
+        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), f)
+        .withConf(conf).build()
+      try {
+        var g = reader.read()
+        while (g != null) {
+          val range =
+            if (g.getFieldRepetitionCount("key_min") == 0) None
+            else Some((g.getLong("key_min", 0), g.getLong("key_max", 0)))
+          out += Segment(g.getString("dir", 0), g.getLong("rows", 0), range)
+          g = reader.read()
+        }
+      } finally reader.close()
+    }
+    out.result().toIndexedSeq.sortBy(_.dir)
+  }
 
   /** The manifest segments a read scoped to the key values `ids` must
     * open: a segment whose recorded key range holds none of them is
@@ -578,33 +547,6 @@ object IndexStore {
     else try manifestEntries(s, path).map(_.dir)
     catch { case _: Exception => Nil }
 
-  /** Manifest read as driver-side parquet record iteration (metadata-
-    * sized by contract — one row per live segment; r18 optimization: a
-    * Spark read of the tiny table cost a full job per call, and
-    * [[load]]/[[append]]/[[compact]]/probes all call this). The table
-    * stays an ordinary parquet table — Spark reads it fine (the
-    * crash-injection specs do). */
-  private def manifestEntriesAt(s: SparkSession, gen: String): Seq[Segment] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val out = Seq.newBuilder[Segment]
-    parquetFiles(s, s"$gen/$ManifestTable").foreach { f =>
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), f)
-        .withConf(conf).build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          val range =
-            if (g.getFieldRepetitionCount("key_min") == 0) None
-            else Some((g.getLong("key_min", 0), g.getLong("key_max", 0)))
-          out += Segment(g.getString("dir", 0), g.getLong("rows", 0), range)
-          g = reader.read()
-        }
-      } finally reader.close()
-    }
-    out.result().toIndexedSeq.sortBy(_.dir)
-  }
-
   /** Pool segments the current generation does NOT reference — crashed
     * appends' leftovers plus segments inside their one-generation
     * grace. A partial append is DETECTABLE, never servable: its segment
@@ -626,7 +568,7 @@ object IndexStore {
     * append can never trip this: its segment is unreferenced.) */
   def verifyManifest(s: SparkSession, path: String): Unit =
     manifestEntries(s, path).foreach { case Segment(seg, rows, _) =>
-      val actual = segmentRows(s, s"$path/$seg")
+      val actual = parquetRowCount(s, s"$path/$seg")
       require(actual == rows,
         s"index artifact at $path: segment $seg holds $actual rows, " +
           s"manifest recorded $rows — the segment is damaged; restore it " +
@@ -666,7 +608,7 @@ object IndexStore {
     * does not overwrite); the delete→rename window is covered by the
     * max-generation fallback in [[resolveDir]]. */
   private def flipPointer(fs: org.apache.hadoop.fs.FileSystem,
-      root: Path, next: Long, midHook: () => Unit = () => ()): Unit = {
+      root: Path, next: Long, midHook: () => Unit): Unit = {
     val tmp = new Path(root, PointerFile + ".tmp")
     val out = fs.create(tmp, true)
     try out.write(s"v$next".getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -675,7 +617,7 @@ object IndexStore {
     if (fs.exists(ptr)) fs.delete(ptr, false)
     midHook()
     require(fs.rename(tmp, ptr),
-      s"index swap: cannot flip pointer to v$next at $root")
+      s"index commit: cannot flip pointer to v$next at $root")
   }
 
   /** Generation directories `v<N>` under an artifact root. */
@@ -726,24 +668,6 @@ object IndexStore {
           .map(_._2.toString).getOrElse(path)
     }
   }
-
-  /** Per-application scratch root for certification artifacts (the
-    * rows own their save+load cost; reps overwrite in place). */
-  def tempRoot(s: SparkSession): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_idx_${s.sparkContext.applicationId}"
-
-  private val savedOnce =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
-
-  /** Run `save` once per (application, path): the on-disk artifact IS
-    * the standing index, so writing it is the amortized one-time build
-    * — cold-probe rows then measure the marginal restart path (load +
-    * probe), the same cost convention the warm probes follow with their
-    * pinned frames. The full artifact-write cost class has a dedicated
-    * owner (`x_sim_index_rebuild` writes two complete artifacts + swap
-    * every rep). */
-  def saveOnce(s: SparkSession, path: String)(save: => Unit): Unit =
-    if (savedOnce.add((s.sparkContext.applicationId, path))) save
 
   private[llm] def partitionsOf(meta: Map[String, String]): Seq[String] =
     meta.getOrElse("partitions", "").split(",").toSeq.filter(_.nonEmpty)
@@ -915,50 +839,10 @@ object IndexStore {
     }.toArray
   }
 
-  // ---- exact numeric codecs for SCALAR-SIZED sidecar values (bounds
-  // arrays, seeds); matrices and codebooks ride [[modelDf]] ----
-
-  def encodeVec(v: Array[Double]): String = v.map(_.toString).mkString(",")
-  def decodeVec(s: String): Array[Double] =
-    if (s.isEmpty) Array.empty else s.split(",", -1).map(java.lang.Double.parseDouble)
-
-  def encodeMatrix(m: Array[Array[Double]]): String = m.map(encodeVec).mkString(";")
-  def decodeMatrix(s: String): Array[Array[Double]] =
-    if (s.isEmpty) Array.empty else s.split(";", -1).map(decodeVec)
-
-  def encodeCube(c: Array[Array[Array[Double]]]): String = c.map(encodeMatrix).mkString("|")
-  def decodeCube(s: String): Array[Array[Array[Double]]] =
-    if (s.isEmpty) Array.empty else s.split("\\|", -1).map(decodeMatrix)
+  // ---- exact integer codec for SCALAR-SIZED sidecar values (the
+  // IVF-PQ subspace bounds); matrices and codebooks ride [[modelDf]] ----
 
   def encodeInts(v: Array[Int]): String = v.mkString(",")
   def decodeInts(s: String): Array[Int] =
     if (s.isEmpty) Array.empty else s.split(",", -1).map(_.toInt)
-
-  /** Rebuild a SMALL result frame inside another session of the same
-    * context (cold-probe certification joins a fresh-session result
-    * against warm-session baselines; plans from different sessions must
-    * not mix in one tree). Bounded by the certification contract — probe
-    * outputs are |queries| × k, candidate sets fixture-bounded. */
-  /** Largest frame [[recreate]] may collect — certification results are
-    * |queries| × k probe outputs or fixture-bounded candidate sets, so a
-    * breach means a corpus-sized frame was handed to a certification
-    * helper by mistake. */
-  private[llm] val maxRecreateRows: Long = 1L << 20
-
-  def recreate(target: SparkSession, df: DataFrame): DataFrame = {
-    // budget the collect loudly, in ONE execution: collect at most
-    // budget+1 rows — a breach still dies with the contract named and
-    // never OOMs the driver, but the certification pipeline (often a
-    // whole cold probe) is not run twice for a count (review finding:
-    // the count()-then-collect() form doubled every cold row's cost)
-    val bounded = df.limit((maxRecreateRows + 1).toInt).collect()
-    require(bounded.length <= maxRecreateRows,
-      s"IndexStore.recreate: frame carries at least ${maxRecreateRows + 1} " +
-        s"rows, over maxRecreateRows ($maxRecreateRows; the one-execution " +
-        "probe stops counting at budget+1) — recreate is for " +
-        "certification-sized probe outputs, not corpus-scale frames")
-    val rows = new java.util.ArrayList[Row]()
-    bounded.foreach(rows.add)
-    target.createDataFrame(rows, df.schema)
-  }
 }

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{QueryDef, QueryRegistry, Tables}
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * quality scoring, token counting, rolling-hash fingerprinting. All
   * declarative DataFrame programs.
   */
-object TextOps extends QueryRegistry {
+object TextOps {
 
   /** Multinomial naive-Bayes language ID. Profiles (per-(word,lang)
     * Laplace-smoothed log-probs) are learned from the labeled slice
@@ -30,7 +30,6 @@ object TextOps extends QueryRegistry {
     * TextOpsSpec validates accuracy on a corpus with real signal.
     */
   def languageId(docs: DataFrame, maxFeatures: Int = 1 << 18): DataFrame = {
-    val spark = docs.sparkSession
     // ONE tokenize pass: the corpus explodes into per-(doc, word) counts
     // once and materializes (executor-local disk); the profile learn (5
     // aggregations over the train slice) and both scoring passes
@@ -165,8 +164,6 @@ object TextOps extends QueryRegistry {
     */
   def bm25TopK(docs: DataFrame, isQuery: org.apache.spark.sql.Column, k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
     // the postings subtree appears three times in the one scoring plan
     // (df shuffle, query-term slice, scoring join) and Catalyst does
     // not share subtrees across branches — checkpointed so the rebuild
@@ -416,14 +413,14 @@ object TextOps extends QueryRegistry {
     val stats = bm25TermStatsFor(s, d, variant) // also populates the scalar cache
     val scalars = bm25ScalarsCache.get((s.sparkContext.applicationId, d, variant))
     require(scalars != null, s"saveBm25Index($d): corpus scalars missing")
-    saveBm25State(s, path, postings, stats, scalars._1, scalars._2)
+    saveBm25State(path, postings, stats, scalars._1, scalars._2)
   }
 
   /** Persist EXPLICIT BM25 state — the entry the disk-level ingest chain
     * uses when the state under maintenance is not the per-session cached
     * full-corpus index. The full-rebuild path: one IndexStore save, so
     * saving over an existing artifact is itself one atomic flip. */
-  def saveBm25State(s: SparkSession, path: String, postings: DataFrame,
+  def saveBm25State(path: String, postings: DataFrame,
       stats: DataFrame, n: Long, sumDl: Long): Unit =
     IndexStore.save(postings, s"$path/state", Map("kind" -> "bm25", "key" -> "doc_id",
       "n" -> n.toString, "sumDl" -> sumDl.toString), aux = Map("dfs" -> stats))
@@ -669,66 +666,6 @@ object TextOps extends QueryRegistry {
       learnBpe(t(s, d, "documents"), nMerges)._2.localCheckpoint()
     }
 
-  /** DuckDB replay of [[learnBpe]]: `nMerges` chained MATERIALIZED CTE
-    * stages (pair-count -> argmax -> literal replace), sharing the
-    * double-space encoding so every merge step is replayed exactly.
-    * MATERIALIZED is load-bearing: each stage references its predecessor
-    * four times, so inlined CTEs would re-evaluate the corpus scan
-    * exponentially.
-    */
-  private[llm] def bpeOracleCtes(nMerges: Int, withDocs: Boolean): String = {
-    val base =
-      if (withDocs)
-        """wd AS MATERIALIZED (
-          |  SELECT doc_id, word, count(*) AS k FROM (
-          |    SELECT doc_id, unnest(str_split_regex(
-          |      lower(regexp_replace(text, '[^a-z ]', ' ', 'g')), ' +')) AS word
-          |    FROM documents)
-          |  WHERE word <> '' GROUP BY 1, 2),
-          |wc AS MATERIALIZED (SELECT word, sum(k) AS cnt FROM wd GROUP BY 1),
-          |v0 AS MATERIALIZED (
-          |  SELECT word, ' ' || array_to_string(str_split(word, ''), '  ') || ' ' AS seq, cnt FROM wc)""".stripMargin
-      else
-        """wc AS MATERIALIZED (
-          |  SELECT word, count(*) AS cnt FROM (
-          |    SELECT unnest(str_split_regex(
-          |      lower(regexp_replace(text, '[^a-z ]', ' ', 'g')), ' +')) AS word
-          |    FROM documents)
-          |  WHERE word <> '' GROUP BY word),
-          |v0 AS MATERIALIZED (
-          |  SELECT word, ' ' || array_to_string(str_split(word, ''), '  ') || ' ' AS seq, cnt FROM wc)""".stripMargin
-    val stages = (0 until nMerges).map { i =>
-      s"""p$i AS MATERIALIZED (
-         |  SELECT pr[1] AS l, pr[2] AS r, sum(cnt) AS c FROM (
-         |    SELECT unnest(list_zip(syms[1:len(syms)-1], syms[2:len(syms)])) AS pr, cnt FROM (
-         |      SELECT str_split_regex(trim(seq), '  ') AS syms, cnt FROM v$i))
-         |  GROUP BY 1, 2),
-         |b$i AS MATERIALIZED (SELECT l, r, c FROM p$i ORDER BY c DESC, l ASC, r ASC LIMIT 1),
-         |v${i + 1} AS MATERIALIZED (
-         |  SELECT word, replace(seq,
-         |    ' ' || (SELECT l FROM b$i) || '  ' || (SELECT r FROM b$i) || ' ',
-         |    ' ' || (SELECT l FROM b$i) || (SELECT r FROM b$i) || ' ') AS seq, cnt FROM v$i)""".stripMargin
-    }
-    "WITH " + (base +: stages).mkString(",\n")
-  }
-
-  private def bpeLearnOracle(nMerges: Int): String =
-    bpeOracleCtes(nMerges, withDocs = false) + "\n" +
-      (0 until nMerges).map { i =>
-        s"""SELECT ${i + 1} AS rank, l AS left_sym, r AS right_sym,
-           |  l || r AS merged, CAST(c AS BIGINT) AS pair_count FROM b$i""".stripMargin
-      }.mkString(" UNION ALL ") + " ORDER BY rank"
-
-  private[llm] def bpeEncodeOracle(nMerges: Int): String =
-    bpeOracleCtes(nMerges, withDocs = true) +
-      s""",
-         |nsym AS (SELECT word, CAST(len(str_split_regex(trim(seq), '  ')) AS BIGINT) AS n_sym FROM v$nMerges)
-         |SELECT wd.doc_id,
-         |  CAST(sum(wd.k * nsym.n_sym) AS BIGINT) AS bpe_tokens,
-         |  CAST(sum(wd.k * length(wd.word)) AS BIGINT) AS base_chars,
-         |  round(sum(wd.k * length(wd.word)) / CAST(sum(wd.k * nsym.n_sym) AS DOUBLE), 6) AS compression
-         |FROM wd JOIN nsym USING (word) GROUP BY 1""".stripMargin
-
   private def t(s: SparkSession, d: String, n: String) = Tables.t(s, d, n)
 
   // ------------------------------------------- trained quality filter
@@ -743,7 +680,7 @@ object TextOps extends QueryRegistry {
     * (measured 0.59 vs 1.00 accuracy at 3 iterations on the planted
     * fixture) — presence features are also what fastText's default
     * word-ngram pipeline feeds. Everything stays integer. */
-  private def qualFeatures(labeled: DataFrame): DataFrame = {
+  private[llm] def qualFeatures(labeled: DataFrame): DataFrame = {
     val words = labeled
       .select(col("doc_id"), col("y"), explode(split(col("text"), " ")).as("w"))
       .where(col("w") =!= "")
@@ -785,7 +722,7 @@ object TextOps extends QueryRegistry {
     * ≤257-entry weight map. `init` non-empty = CONTINUATION training
     * (the model-maintenance path): iteration 1 margins against the
     * standing weights instead of zero. */
-  private def perceptronWeights(xb: DataFrame, iters: Int,
+  private[llm] def perceptronWeights(xb: DataFrame, iters: Int,
       init: Map[String, Long] = Map.empty): Map[String, Long] = {
     val spark = xb.sparkSession
     var w = init
@@ -803,7 +740,7 @@ object TextOps extends QueryRegistry {
     w
   }
 
-  private def weightsFrame(spark: SparkSession, w: Map[String, Long]): DataFrame = {
+  private[llm] def weightsFrame(spark: SparkSession, w: Map[String, Long]): DataFrame = {
     import spark.implicits._
     w.toSeq.toDF("b", "w")
   }
@@ -811,7 +748,7 @@ object TextOps extends QueryRegistry {
   /** Score a feature frame against a (b, w) weight frame: one broadcast
     * join + one doc-level aggregate — the INFERENCE path, linear in the
     * batch with no training state touched. */
-  private def scoreMargins(xb: DataFrame, weights: DataFrame): DataFrame =
+  private[llm] def scoreMargins(xb: DataFrame, weights: DataFrame): DataFrame =
     xb.join(broadcast(weights), Seq("b"), "left")
       .groupBy("doc_id", "y")
       .agg(sum(col("c") * coalesce(col("w"), lit(0L))).as("margin"))
@@ -872,7 +809,7 @@ object TextOps extends QueryRegistry {
 
   /** The planted-and-labeled corpus shared by x_qual_classifier (full
     * corpus) and the x_qual_apply ingest split. */
-  private def labeledDocs(docs: DataFrame): DataFrame =
+  private[llm] def labeledDocs(docs: DataFrame): DataFrame =
     docs.select(
       col("doc_id"),
       when(col("lang") === "en", 1).otherwise(-1).as("y"),
@@ -884,1586 +821,16 @@ object TextOps extends QueryRegistry {
     * per labeled language first — shared by `x_text_langid` (replaces
     * the text) and `x_qual_classifier` (concatenates: signal amid the
     * fixture's shared random-word noise). */
-  private val langPhrases = Seq(
+  private[llm] val langPhrases = Seq(
     "en" -> "the quick brown fox jumps over the lazy dog and runs away today",
     "de" -> "der schnelle braune fuchs springt ueber den faulen hund und laeuft heute weg",
     "es" -> "el rapido zorro marron salta sobre el perro perezoso y se escapa hoy mismo",
     "fr" -> "le renard brun rapide saute par dessus le chien paresseux et il part",
     "zh" -> "敏捷 的 棕色 狐狸 跳过 懒狗 然后 跑 开 了 今天")
 
-  private def plantedPhrase: org.apache.spark.sql.Column =
+  private[llm] def plantedPhrase: org.apache.spark.sql.Column =
     element_at(
       map(langPhrases.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*),
       col("lang"))
 
-  /** DuckDB replay of the perceptron quality filter: the planted
-    * corpus, the hashed feature frame, then `iters` chained
-    * weight-update stages (margins → misclassified set → integer
-    * gradient → weight merge) over the `trainCond` slice, finally
-    * scoring the `scoreCond` slice. Iteration 1 is folded: at w=0
-    * every margin is 0, y·0 ≤ 0 marks every doc misclassified, so w1
-    * is the training slice's Σ y·x. `x_qual_classifier` trains and
-    * scores the full corpus; `x_qual_apply` trains on the standing
-    * corpus (doc_id % 5 != 0) and scores the ingest batch. */
-  private def qualClassifierOracle(iters: Int,
-      trainCond: String = "true", scoreCond: String = "true",
-      contCond: Option[String] = None, contIters: Int = 0): String = {
-    val phraseCase = langPhrases
-      .map { case (k, v) => s"WHEN '$k' THEN '$v'" }.mkString(" ")
-    val contCte = contCond
-      .map(c => s",\nxc AS MATERIALIZED (SELECT * FROM xb WHERE $c)")
-      .getOrElse("")
-    val base =
-      s"""WITH pl AS MATERIALIZED (
-         |  SELECT doc_id, CASE WHEN lang = 'en' THEN 1 ELSE -1 END AS y,
-         |    concat_ws(' ', text, CASE lang $phraseCase ELSE NULL END) AS text
-         |  FROM documents),
-         |xb AS MATERIALIZED (
-         |  SELECT doc_id, y, b, CAST(1 AS BIGINT) AS c FROM (
-         |    SELECT DISTINCT doc_id, y, substring(md5(w), 1, 2) AS b FROM (
-         |      SELECT doc_id, y, unnest(str_split(text, ' ')) AS w FROM pl)
-         |    WHERE w <> '')
-         |  UNION ALL SELECT doc_id, y, '!!', 1 FROM pl),
-         |xt AS MATERIALIZED (SELECT * FROM xb WHERE $trainCond)$contCte,
-         |w1 AS MATERIALIZED (
-         |  SELECT b, CAST(sum(y * c) AS BIGINT) AS w FROM xt GROUP BY b)""".stripMargin
-    // one margin→gradient→update stage over feature frame `f` vs w(i-1)
-    def stage(i: Int, f: String) =
-      s"""m$i AS MATERIALIZED (
-         |  SELECT $f.doc_id, $f.y, CAST(sum($f.c * coalesce(t.w, 0)) AS BIGINT) AS m
-         |  FROM $f LEFT JOIN w${i - 1} t USING (b) GROUP BY 1, 2),
-         |g$i AS (SELECT b, CAST(sum(y * c) AS BIGINT) AS g FROM $f
-         |  WHERE doc_id IN (SELECT doc_id FROM m$i WHERE y * m <= 0) GROUP BY b),
-         |w$i AS MATERIALIZED (SELECT coalesce(a.b, g$i.b) AS b,
-         |  CAST(coalesce(a.w, 0) + coalesce(g$i.g, 0) AS BIGINT) AS w
-         |  FROM w${i - 1} a FULL JOIN g$i ON a.b = g$i.b)""".stripMargin
-    val stages = (2 to iters).map(stage(_, "xt")) ++
-      (iters + 1 to iters + contIters).map(stage(_, "xc"))
-    val wFinal = iters + contIters
-    (base +: stages).mkString(",\n") +
-      s"""
-         |SELECT xs.doc_id, xs.y,
-         |  CAST(sum(xs.c * coalesce(t.w, 0)) AS BIGINT) AS margin,
-         |  CASE WHEN sum(xs.c * coalesce(t.w, 0)) > 0 THEN 1 ELSE -1 END AS pred
-         |FROM (SELECT * FROM xb WHERE $scoreCond) xs
-         |LEFT JOIN w$wFinal t USING (b) GROUP BY 1, 2""".stripMargin
-  }
-
-  private val stopwords = Seq("the", "a", "of", "and", "to", "in")
-  private val stopListSql = stopwords.map(w => s"'$w'").mkString("array(", ", ", ")")
-  private val stopListDuck = stopwords.map(w => s"'$w'").mkString("[", ", ", "]")
-
-  /** Shared oracle for the Zipf-fixture retrieval family: DuckDB derives
-    * the SAME corpus with the same integer arithmetic, then replays BM25
-    * top-5 end to end. `//` is DuckDB's integer division (≡ Spark `DIV`
-    * on the all-positive operands here); `<<` its bit shift.
-    * `corpusCond` restricts the INDEXED corpus (the disk-chain twin
-    * indexes slices 1–4); queries always come from the full fixture —
-    * the %50 query docs are %5==0, outside every restricted corpus. */
-  private def zipfBm25OracleFor(corpusCond: String): String =
-    s"""WITH base AS (SELECT doc_id, len(str_split(text, ' ')) AS nw FROM documents),
-      |corp AS (SELECT doc_id, list_transform(
-      |    list_transform(range(nw), i -> (doc_id * 2654435761 + i * 40503 + 12345) % 1048576),
-      |    h -> 't' || CAST((h // 12) % (CAST(1 AS BIGINT) << (h % 12)) AS VARCHAR)) AS toks
-      |  FROM base WHERE $corpusCond),
-      |toks AS (SELECT doc_id, unnest(toks) AS term FROM corp),
-      |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-      |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
-      |tids AS (SELECT doc_id, list_transform(
-      |    list_transform(range(nw), i -> (doc_id * 2654435761 + i * 40503 + 12345) % 1048576),
-      |    h -> (h // 12) % (CAST(1 AS BIGINT) << (h % 12))) AS ts
-      |  FROM base WHERE doc_id % 50 = 0 AND doc_id < 5000),
-      |q AS (SELECT DISTINCT doc_id AS query_id, term FROM
-      |  (SELECT doc_id, unnest(list_transform(
-      |     list_reverse(list_sort(list_distinct(ts)))[1:4],
-      |     t -> 't' || CAST(t AS VARCHAR))) AS term FROM tids)),
-      |scored AS (
-      |  SELECT q.query_id, tf.doc_id,
-      |    round(sum(ln(1 + (s.n - dft.df + 0.5) / (dft.df + 0.5)) *
-      |      (tf.tf * 2.2) /
-      |      (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 6) AS score
-      |  FROM q JOIN tf ON q.term = tf.term AND tf.doc_id <> q.query_id
-      |  JOIN dft ON dft.term = q.term
-      |  JOIN dl ON dl.doc_id = tf.doc_id
-      |  CROSS JOIN stats s
-      |  GROUP BY 1, 2)
-      |SELECT query_id, doc_id, score,
-      |  CAST(row_number() OVER (PARTITION BY query_id
-      |    ORDER BY score DESC, doc_id) AS BIGINT) AS rank
-      |FROM scored
-      |QUALIFY rank <= 5""".stripMargin
-
-  private val zipfBm25Oracle = zipfBm25OracleFor("TRUE")
-
-  val defs: Seq[QueryDef] = Seq(
-
-    // ---- language ID, recovery-certified. The fixture text carries NO
-    // language signal (probe-measured per-lang accuracy ≈ chance), so —
-    // like x_text_redact plants PII before redacting — the query plants
-    // a known phrase per labeled language and the classifier must
-    // recover the planted label on the held-out docs (languageId trains
-    // on the doc_id%5==0 slice). Per-lang doc counts are recomputed
-    // independently by the oracle; the flag is the accuracy contract. ----
-    QueryDef(
-      "x_text_langid",
-      (s, d) => {
-        val planted = t(s, d, "documents")
-          .select(col("doc_id"), col("lang"),
-            coalesce(plantedPhrase, col("text")).as("text"))
-        languageId(planted)
-          .groupBy(col("true_lang"))
-          .agg(
-            count(lit(1)).as("n_docs"),
-            avg(when(col("pred_lang") === col("true_lang"), 1.0)
-              .otherwise(0.0)).as("acc"))
-          .select(col("true_lang"), col("n_docs"),
-            (col("acc") >= lit(0.9)).as("acc_ok"))
-          .orderBy(col("true_lang"))
-      },
-      Some("""SELECT lang AS true_lang, CAST(count(*) AS BIGINT) AS n_docs,
-             |  true AS acc_ok
-             |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
-
-    // ---- quality scoring: length/punctuation/stopword/word-shape ----
-    QueryDef(
-      "x_text_quality",
-      (s, d) =>
-        t(s, d, "documents")
-          .withColumn("ws", split(col("text"), " "))
-          .select(
-            col("doc_id"),
-            length(col("text")).cast("long").as("n_chars_m"),
-            size(col("ws")).cast("long").as("n_words"),
-            round(length(regexp_replace(col("text"), "[A-Za-z0-9 ]", "")) / length(col("text")).cast("double"), 6).as("punct_ratio"),
-            round(expr(s"size(filter(ws, w -> array_contains($stopListSql, w)))") / size(col("ws")).cast("double"), 6).as("stop_ratio"),
-            round(length(regexp_replace(col("text"), " ", "")) / size(col("ws")).cast("double"), 6).as("avg_word_len"),
-            round(
-              least(length(col("text")) / 500.0, lit(1.0)) * 0.5 +
-                expr(s"size(filter(ws, w -> array_contains($stopListSql, w)))") / size(col("ws")).cast("double") * 0.3 +
-                (lit(1.0) - length(regexp_replace(col("text"), "[A-Za-z0-9 ]", "")) / length(col("text")).cast("double")) * 0.2,
-              6).as("quality")),
-      Some(s"""SELECT doc_id,
-              |  CAST(length(text) AS BIGINT) AS n_chars_m,
-              |  CAST(len(str_split(text, ' ')) AS BIGINT) AS n_words,
-              |  round(length(regexp_replace(text, '[A-Za-z0-9 ]', '', 'g')) / CAST(length(text) AS DOUBLE), 6) AS punct_ratio,
-              |  round(len(list_filter(str_split(text, ' '), w -> list_contains($stopListDuck, w))) / CAST(len(str_split(text, ' ')) AS DOUBLE), 6) AS stop_ratio,
-              |  round(length(replace(text, ' ', '')) / CAST(len(str_split(text, ' ')) AS DOUBLE), 6) AS avg_word_len,
-              |  round(least(length(text) / 500.0, 1.0) * 0.5
-              |    + len(list_filter(str_split(text, ' '), w -> list_contains($stopListDuck, w))) / CAST(len(str_split(text, ' ')) AS DOUBLE) * 0.3
-              |    + (1.0 - length(regexp_replace(text, '[A-Za-z0-9 ]', '', 'g')) / CAST(length(text) AS DOUBLE)) * 0.2, 6) AS quality
-              |FROM documents""".stripMargin)),
-
-    // ---- per-source quality calibration: percentile rank of the
-    // quality proxy WITHIN each source, so one global keep-threshold is
-    // comparable across heterogeneous sources (a web source's 0.8 and a
-    // books source's 0.8 mean different things; their 80th percentiles
-    // don't). The window partitions on the source key — bounded groups,
-    // never a global sort. ----
-    QueryDef(
-      "x_text_quality_calibrated",
-      (s, d) => {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("source")).orderBy(col("score"), col("doc_id"))
-        t(s, d, "documents")
-          .select(col("doc_id"), col("source"),
-            round(least(length(col("text")) / 500.0, lit(1.0)), 6).as("score"))
-          .withColumn("q_rank", round(percent_rank().over(w), 6))
-      },
-      Some("""SELECT doc_id, source, score,
-             |  round(percent_rank() OVER (
-             |    PARTITION BY source ORDER BY score, doc_id), 6) AS q_rank
-             |FROM (SELECT doc_id, source,
-             |        round(least(length(text) / 500.0, 1.0), 6) AS score
-             |      FROM documents)""".stripMargin)),
-
-    // ---- TRAINED quality filter: batch perceptron over hashed
-    // unigram buckets (the fastText/CCNet pipeline stage: keep crawl
-    // text that looks like the reference corpus — here, y=+1 for the
-    // target-language docs, the DSIR target). The language phrase is
-    // CONCATENATED onto the fixture text, so the model must find the
-    // separating vocabulary among the shared random-word noise.
-    // Integer arithmetic end to end: the oracle replays all three
-    // training iterations as chained CTEs and margins must match
-    // exactly. TextOpsSpec pins the accuracy contract (planted signal
-    // recovered) and the zero-gradient fixpoint. ----
-    QueryDef(
-      "x_qual_classifier",
-      (s, d) => trainQualityClassifier(labeledDocs(t(s, d, "documents")), iters = 3),
-      Some(qualClassifierOracle(3))),
-
-    // ---- the INFERENCE half of the production split (the BPE
-    // learn-once/encode-every-batch precedent): standing weights are
-    // trained ONCE on the standing corpus (doc_id % 5 != 0, memoized +
-    // pinned), and each ingest batch is scored with one broadcast join
-    // + one aggregate — no training state is touched, the per-batch
-    // cost is linear in the batch. The oracle replays the standing
-    // training chain AND the batch scoring. ----
-    QueryDef(
-      "x_qual_apply",
-      (s, d) => {
-        val batch = labeledDocs(
-          t(s, d, "documents").where(col("doc_id") % 5 === 0))
-        scoreMargins(qualFeatures(batch), qualWeightsFor(s, d))
-      },
-      Some(qualClassifierOracle(3,
-        trainCond = "doc_id % 5 <> 0", scoreCond = "doc_id % 5 = 0"))),
-
-    // ---- COLD-START inference (the model-family mirror of the index
-    // cold probes): standing weights persisted once, then a FRESH
-    // session loads them from disk and scores the ingest batch — the
-    // restarted-filter path. Integer weights and margins make cold ≡
-    // warm value-exact (in-engine require); the certified output is the
-    // COLD scores, which the oracle replays end to end. ----
-    QueryDef(
-      "x_qual_cold_apply",
-      (s, d) => {
-        val path =
-          s"${IndexStore.tempRoot(s)}/${java.lang.Integer.toHexString(d.hashCode)}/qualw"
-        IndexStore.saveOnce(s, path)(saveQualWeights(s, d, path))
-        val batchSel = col("doc_id") % 5 === 0
-        val warm = scoreMargins(
-          qualFeatures(labeledDocs(t(s, d, "documents").where(batchSel))),
-          qualWeightsFor(s, d))
-        val fresh = s.newSession()
-        val cold = qualColdApply(fresh, path,
-          labeledDocs(t(fresh, d, "documents").where(batchSel)))
-        val coldW = IndexStore.recreate(s, cold)
-        val bad = coldW.withColumn("m", lit(1))
-          .join(warm.withColumn("r", lit(1)),
-            Seq("doc_id", "y", "margin", "pred"), "full")
-          .where(col("m").isNull || col("r").isNull).count()
-        require(bad == 0, s"cold quality-filter scoring diverged ($bad rows)")
-        coldW
-      },
-      Some(qualClassifierOracle(3,
-        trainCond = "doc_id % 5 <> 0", scoreCond = "doc_id % 5 = 0"))),
-
-    // ---- MODEL MAINTENANCE (the standing-artifact lifecycle applied
-    // to the trained filter — the mirror of the index merges): standing
-    // weights trained on slices {2,3,4} (3 iterations), then CONTINUED
-    // on a newly-labeled batch (slice 1, 2 iterations over the batch
-    // features ONLY — the standing corpus is never re-featurized; the
-    // classic online/continual fine-tune a production filter runs when
-    // label feedback arrives), then the updated weights score the next
-    // ingest batch (slice 0). Every margin/gradient/weight is an
-    // INTEGER, so the oracle replays initial training AND the
-    // continuation bit-exactly. Per-continuation cost is |batch| ×
-    // contIters + the ≤257-row weight merge — never O(corpus). ----
-    QueryDef(
-      "x_qual_update",
-      (s, d) => {
-        val docs = t(s, d, "documents")
-        val slice = pmod(col("doc_id"), lit(5L))
-        val xa = qualFeatures(labeledDocs(docs.where(slice >= 2))).localCheckpoint()
-        val standing = perceptronWeights(xa, 3)
-        val xc = qualFeatures(labeledDocs(docs.where(slice === 1))).localCheckpoint()
-        val updated = perceptronWeights(xc, 2, init = standing)
-        scoreMargins(qualFeatures(labeledDocs(docs.where(slice === 0))),
-          weightsFrame(s, updated))
-      },
-      Some(qualClassifierOracle(3,
-        trainCond = "doc_id % 5 >= 2", scoreCond = "doc_id % 5 = 0",
-        contCond = Some("doc_id % 5 = 1"), contIters = 2))),
-
-    // ---- token counting: whitespace + BPE-ish regex tokenizer ----
-    QueryDef(
-      "x_text_tokens",
-      (s, d) =>
-        t(s, d, "documents").select(
-          col("doc_id"),
-          size(split(trim(col("text")), "\\s+")).cast("long").as("ws_tokens"),
-          size(regexp_extract_all(col("text"), lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"), lit(0))).cast("long").as("bpe_tokens"),
-          length(col("text")).cast("long").as("chars")),
-      Some("""SELECT doc_id,
-             |  CAST(len(regexp_split_to_array(trim(text), '\s+')) AS BIGINT) AS ws_tokens,
-             |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT) AS bpe_tokens,
-             |  CAST(length(text) AS BIGINT) AS chars
-             |FROM documents""".stripMargin)),
-
-    // ---- rolling-hash document fingerprint (Karp-Rabin base 31 mod
-    // 1e9+7) — computed by the codegen'd `ch_fingerprint` expression
-    // (ValueExpressions.RollingFingerprint): the per-char loop runs
-    // inside whole-stage codegen, replacing the interpreted
-    // aggregate(...) HOF this query originally carried. ----
-    QueryDef(
-      "x_text_fingerprint",
-      (s, d) =>
-        t(s, d, "documents").select(
-          col("doc_id"),
-          call_function("ch_fingerprint", col("text")).as("fp")),
-      Some("""SELECT doc_id,
-             |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-             |    list_transform(str_split(text, ''), c -> CAST(ascii(c) AS BIGINT))),
-             |    (a, b) -> (a * 31 + b) % 1000000007) AS fp
-             |FROM documents""".stripMargin)),
-
-    // ---- char-trigram LM quality score, separation-certified: the
-    // model trains ONCE on the real corpus, then scores both the real
-    // docs and their character-reversed forms — reversed trigrams fall
-    // outside the learned distribution, so real text must outscore the
-    // gibberish by a wide margin (the quality-filter property the op
-    // exists for). Doc count cross-checked by the oracle; per-doc scores
-    // remain available via `lmScore` (TextOpsSpec pins the kernel). ----
-    QueryDef(
-      "x_text_lm_score",
-      (s, d) => {
-        val docs = t(s, d, "documents")
-        val (model, floor) = lmModel(docs)
-        val realMean = lmScoreAgainst(model, floor, docs)
-          .agg(avg(col("avg_logp")).as("m_real"))
-        val gibMean = lmScoreAgainst(model, floor,
-            docs.withColumn("text", reverse(col("text"))))
-          .agg(avg(col("avg_logp")).as("m_gib"))
-        docs.agg(count(lit(1)).as("n_docs"))
-          .crossJoin(realMean).crossJoin(gibMean)
-          .select(col("n_docs"),
-            (col("m_real") > col("m_gib")).as("separation_ok"))
-      },
-      Some("""SELECT CAST(count(*) AS BIGINT) AS n_docs, true AS separation_ok
-             |FROM documents""".stripMargin)),
-
-    // ---- intra-document repetition (Gopher-style quality filter: the
-    // fraction of word trigrams that are repeats of an earlier trigram in
-    // the SAME document). Computed in a typed map kernel — a plain JIT'd
-    // HashSet loop, no interpreted HOFs — making it a pure per-row op:
-    // embarrassingly parallel, zero shuffle, scales linearly to any
-    // corpus. The oracle rebuilds identical trigrams with DuckDB list
-    // comprehensions. ----
-    QueryDef(
-      "x_text_repetition",
-      (s, d) => {
-        import s.implicits._
-        t(s, d, "documents")
-          .select(col("doc_id"), col("text"))
-          .as[(Long, String)]
-          .map { case (id, text) =>
-            val w = text.split(" ").filter(_.nonEmpty)
-            val n = math.max(w.length - 2, 0)
-            val seen = new scala.collection.mutable.HashSet[String]
-            var dups = 0
-            var i = 0
-            while (i < n) {
-              if (!seen.add(w(i) + " " + w(i + 1) + " " + w(i + 2))) dups += 1
-              i += 1
-            }
-            (id, n.toLong, if (n == 0) 0.0 else dups.toDouble / n)
-          }
-          .toDF("doc_id", "n_trigrams", "rf")
-          .select(col("doc_id"), col("n_trigrams"), round(col("rf"), 6).as("rep_frac"))
-      },
-      Some("""WITH w AS (
-             |  SELECT doc_id, list_filter(str_split(text, ' '), x -> x <> '') AS ws
-             |  FROM documents),
-             |g AS (
-             |  SELECT doc_id,
-             |    CASE WHEN len(ws) >= 3 THEN
-             |      list_transform(generate_series(1, len(ws) - 2),
-             |        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])
-             |    ELSE [] END AS tg
-             |  FROM w)
-             |SELECT doc_id, CAST(len(tg) AS BIGINT) AS n_trigrams,
-             |  CASE WHEN len(tg) = 0 THEN 0.0
-             |       ELSE round((len(tg) - len(list_distinct(tg))) / CAST(len(tg) AS DOUBLE), 6)
-             |  END AS rep_frac
-             |FROM g""".stripMargin)),
-
-    // ---- Zipf fit: log-log slope of frequency vs rank over the corpus
-    // vocabulary (natural corpora sit near −1; synthetic/templated text
-    // drifts — a cheap corpus-health statistic). The rank window runs
-    // over the VOCABULARY spectrum, not the token stream; the corpus is
-    // touched only by the word-count aggregate. ----
-    QueryDef(
-      "x_text_zipf",
-      (s, d) => {
-        val W = org.apache.spark.sql.expressions.Window
-          .orderBy(col("c").desc, col("w"))
-        t(s, d, "documents")
-          .select(explode(split(col("text"), " ")).as("w"))
-          .where(col("w") =!= "")
-          .groupBy("w").agg(count(lit(1)).as("c"))
-          .withColumn("r", row_number().over(W))
-          .agg(
-            round(regr_slope(log(col("c")), log(col("r"))), 4).as("zipf_slope"),
-            round(corr(log(col("c")), log(col("r"))), 4).as("pearson_r"),
-            count(lit(1)).as("vocab"))
-      },
-      Some("""WITH v AS (
-             |  SELECT w, count(*) c FROM (
-             |    SELECT unnest(list_filter(str_split(text, ' '), x -> x <> '')) w
-             |    FROM documents) GROUP BY w),
-             |r AS (SELECT c, row_number() OVER (ORDER BY c DESC, w) r FROM v)
-             |SELECT round(regr_slope(ln(c), ln(r)), 4) AS zipf_slope,
-             |  round(corr(ln(c), ln(r)), 4) AS pearson_r,
-             |  count(*) AS vocab
-             |FROM r""".stripMargin)),
-
-    // ---- out-of-vocabulary rate vs the corpus top-20 vocabulary (the
-    // tokenizer-coverage question every training pipeline asks before
-    // committing a vocab). Two passes: the vocab aggregate (ties broken
-    // by word so both engines pick the same top-20 — at real scale this
-    // is the already-declared x_text_vocab histogram), then a per-row
-    // kernel scores coverage against the BROADCAST vocab set (bounded by
-    // construction, unlike the langid profile the round-1 verdict
-    // flagged). ----
-    QueryDef(
-      "x_text_oov",
-      (s, d) => {
-        import s.implicits._
-        val docs = t(s, d, "documents")
-        val vocab = docs
-          .select(explode(split(col("text"), " ")).as("w"))
-          .where(col("w") =!= "")
-          .groupBy(col("w")).agg(count(lit(1)).as("c"))
-          .orderBy(col("c").desc, col("w"))
-          .limit(20)
-          .collect().map(_.getString(0)).toSet
-        docs
-          .select(col("doc_id"), col("text"))
-          .as[(Long, String)]
-          .map { case (id, text) =>
-            val ws = text.split(" ").filter(_.nonEmpty)
-            var oov = 0
-            var i = 0
-            while (i < ws.length) { if (!vocab.contains(ws(i))) oov += 1; i += 1 }
-            (id, ws.length.toLong,
-              if (ws.isEmpty) 0.0 else oov.toDouble / ws.length)
-          }
-          .toDF("doc_id", "n_tokens", "rf")
-          .select(col("doc_id"), col("n_tokens"), round(col("rf"), 6).as("oov_rate"))
-      },
-      Some("""WITH tok AS (
-             |  SELECT unnest(list_filter(str_split(text, ' '), x -> x <> '')) AS w
-             |  FROM documents),
-             |top AS (
-             |  SELECT w FROM (
-             |    SELECT w, count(*) AS c FROM tok GROUP BY w
-             |    ORDER BY c DESC, w LIMIT 20)),
-             |v AS (SELECT list(w) AS vlist FROM top),
-             |ws AS (
-             |  SELECT doc_id, list_filter(str_split(text, ' '), x -> x <> '') AS toks
-             |  FROM documents)
-             |SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-             |  CASE WHEN len(toks) = 0 THEN 0.0
-             |       ELSE round(len(list_filter(toks, x -> NOT list_contains(vlist, x)))
-             |                  / CAST(len(toks) AS DOUBLE), 6) END AS oov_rate
-             |FROM ws CROSS JOIN v""".stripMargin)),
-
-    // ---- tf-idf keyword extraction: top-3 terms per doc by
-    // tf·ln(N/df) — the tagging/clustering primitive next to BM25's
-    // retrieval. Same scale shape as bm25TopK's statistics (df is the
-    // one corpus shuffle; scoring rides the per-doc tf rows); rank ties
-    // break on the rounded score then the term so order is
-    // engine-portable. ----
-    QueryDef(
-      "x_text_keywords",
-      (s, d) => {
-        val docs = t(s, d, "documents")
-        val toks = docs.select(col("doc_id"),
-          explode(split(col("text"), " ", -1)).as("term"))
-        val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        val dfT = tf.groupBy("term").agg(count(lit(1)).as("df"))
-        val n = docs.agg(count(lit(1)).as("n"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("doc_id").orderBy(col("score").desc, col("term").asc)
-        tf.join(dfT, Seq("term"))
-          .crossJoin(broadcast(n))
-          .select(col("doc_id"), col("term"),
-            round(col("tf") * log(col("n").cast("double") / col("df")), 6)
-              .as("score"))
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .where(col("rank") <= 3)
-      },
-      Some("""WITH toks AS (SELECT doc_id, unnest(str_split(text, ' ')) AS term FROM documents),
-             |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-             |dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-             |n AS (SELECT count(*) AS n FROM documents),
-             |scored AS (
-             |  SELECT doc_id, term,
-             |    round(tf * ln(CAST(n.n AS DOUBLE) / dft.df), 6) AS score
-             |  FROM tf JOIN dft USING (term) CROSS JOIN n)
-             |SELECT doc_id, term, score,
-             |  CAST(row_number() OVER (PARTITION BY doc_id
-             |    ORDER BY score DESC, term) AS BIGINT) AS rank
-             |FROM scored
-             |QUALIFY rank <= 3""".stripMargin)),
-
-    // ---- BM25 top-k retrieval (Okapi, k1=1.2 b=0.75; every 50th doc
-    // WITHIN THE sf0.1 ID RANGE is a query — the `< 5000` cap keeps the
-    // query SET fixed as the corpus scales (a no-op at sf0.1 and below),
-    // matching the bench-sized-query contract: sf1 measures corpus
-    // growth against a fixed probe set, the production shape. Rank ties
-    // broken on rounded score then doc_id so order is engine-portable) ----
-    QueryDef(
-      "x_text_bm25",
-      (s, d) => bm25TopK(t(s, d, "documents"),
-        col("doc_id") % 50 === 0 && col("doc_id") < 5000, k = 5),
-      Some("""WITH toks AS (SELECT doc_id, unnest(str_split(text, ' ')) AS term FROM documents),
-             |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-             |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-             |dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-             |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
-             |q AS (SELECT doc_id AS query_id, term FROM tf WHERE doc_id % 50 = 0 AND doc_id < 5000),
-             |scored AS (
-             |  SELECT q.query_id, tf.doc_id,
-             |    round(sum(ln(1 + (s.n - dft.df + 0.5) / (dft.df + 0.5)) *
-             |      (tf.tf * 2.2) /
-             |      (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 6) AS score
-             |  FROM q JOIN tf ON q.term = tf.term AND tf.doc_id <> q.query_id
-             |  JOIN dft ON dft.term = q.term
-             |  JOIN dl ON dl.doc_id = tf.doc_id
-             |  CROSS JOIN stats s
-             |  GROUP BY 1, 2)
-             |SELECT query_id, doc_id, score,
-             |  CAST(row_number() OVER (PARTITION BY query_id
-             |    ORDER BY score DESC, doc_id) AS BIGINT) AS rank
-             |FROM scored
-             |QUALIFY rank <= 5""".stripMargin)),
-
-    // ---- batch retrieval against the STANDING BM25 index (the sparse
-    // mirror of the ANN standing probes): postings + per-term dfs +
-    // corpus scalars are pinned persisted artifacts; this row times the
-    // per-batch path — tokenize the QUERY batch only, broadcast its
-    // term set into the df table then the postings — while x_text_bm25
-    // keeps owning the tokenize+df rebuild cost. Same query set, same
-    // scores: the oracle replays full BM25 top-5 independently. ----
-    QueryDef(
-      "x_retr_index_probe",
-      (s, d) => bm25IndexProbe(s, d,
-        t(s, d, "documents").where(col("doc_id") % 50 === 0 && col("doc_id") < 5000),
-        k = 5),
-      Some("""WITH toks AS (SELECT doc_id, unnest(str_split(text, ' ')) AS term FROM documents),
-             |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-             |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-             |dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-             |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
-             |q AS (SELECT doc_id AS query_id, term FROM tf WHERE doc_id % 50 = 0 AND doc_id < 5000),
-             |scored AS (
-             |  SELECT q.query_id, tf.doc_id,
-             |    round(sum(ln(1 + (s.n - dft.df + 0.5) / (dft.df + 0.5)) *
-             |      (tf.tf * 2.2) /
-             |      (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 6) AS score
-             |  FROM q JOIN tf ON q.term = tf.term AND tf.doc_id <> q.query_id
-             |  JOIN dft ON dft.term = q.term
-             |  JOIN dl ON dl.doc_id = tf.doc_id
-             |  CROSS JOIN stats s
-             |  GROUP BY 1, 2)
-             |SELECT query_id, doc_id, score,
-             |  CAST(row_number() OVER (PARTITION BY query_id
-             |    ORDER BY score DESC, doc_id) AS BIGINT) AS rank
-             |FROM scored
-             |QUALIFY rank <= 5""".stripMargin)),
-
-    // ---- BM25 index MAINTENANCE (the retrieval ingest loop): standing
-    // index over doc_id %5 ∈ {2,3,4}, slice %5==1 admitted + MERGED
-    // (batch tokenize + postings append + O(|terms|) df/scalar merges —
-    // no corpus re-tokenize, no corpus-wide df recompute), then the
-    // query batch (%50==0, outside the corpus slices) retrieves through
-    // the merged index. All merged state is integer-exact, so the
-    // oracle can replay BM25 over the combined slices directly — a
-    // value-exact check of the whole maintenance path. ----
-    QueryDef(
-      "x_retr_index_update",
-      (s, d) => {
-        val docs = t(s, d, "documents")
-        val slice = pmod(col("doc_id"), lit(5L))
-        val p0 = bm25Postings(docs.where(slice >= 2))
-        val ts0 = p0.groupBy("term").agg(count(lit(1)).as("df"))
-        val r0 = p0.select("doc_id", "dl").dropDuplicates("doc_id")
-          .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl"))
-          .collect()(0)
-        val (p1, ts1, n1, sdl1) = mergeBm25Index(
-          p0, ts0, r0.getLong(0), r0.getLong(1), docs.where(slice === 1))
-        val qTerms = bm25Postings(
-          docs.where(col("doc_id") % 50 === 0 && col("doc_id") < 5000))
-          .select(col("doc_id").as("query_id"), col("term"))
-        bm25Score(p1, ts1, n1, sdl1, qTerms, k = 5)
-      },
-      Some("""WITH corp AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 <> 0),
-             |toks AS (SELECT doc_id, unnest(str_split(text, ' ')) AS term FROM corp),
-             |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-             |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-             |dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-             |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
-             |qtoks AS (SELECT doc_id, unnest(str_split(text, ' ')) AS term
-             |  FROM documents WHERE doc_id % 50 = 0 AND doc_id < 5000),
-             |q AS (SELECT DISTINCT doc_id AS query_id, term FROM qtoks),
-             |scored AS (
-             |  SELECT q.query_id, tf.doc_id,
-             |    round(sum(ln(1 + (s.n - dft.df + 0.5) / (dft.df + 0.5)) *
-             |      (tf.tf * 2.2) /
-             |      (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 6) AS score
-             |  FROM q JOIN tf ON q.term = tf.term AND tf.doc_id <> q.query_id
-             |  JOIN dft ON dft.term = q.term
-             |  JOIN dl ON dl.doc_id = tf.doc_id
-             |  CROSS JOIN stats s
-             |  GROUP BY 1, 2)
-             |SELECT query_id, doc_id, score,
-             |  CAST(row_number() OVER (PARTITION BY query_id
-             |    ORDER BY score DESC, doc_id) AS BIGINT) AS rank
-             |FROM scored
-             |QUALIFY rank <= 5""".stripMargin)),
-
-    // ---- COLD-START retrieval (VERDICT r13 next-#1): save the standing
-    // BM25 artifact (postings + dfs parquet, (n, Σdl) sidecar), reload
-    // and probe it in a FRESH session with every cache cold. The
-    // in-engine require pins cold ≡ warm value-exactly (integer state +
-    // 6-dp rounded scores); the certified output is the COLD top-5,
-    // which the oracle replays end to end — the strongest check in the
-    // cold family. ----
-    QueryDef(
-      "x_retr_index_cold_probe",
-      (s, d) => {
-        val path =
-          s"${IndexStore.tempRoot(s)}/${java.lang.Integer.toHexString(d.hashCode)}/bm25"
-        IndexStore.saveOnce(s, path)(saveBm25Index(s, d, path))
-        val qSel = col("doc_id") % 50 === 0 && col("doc_id") < 5000
-        val warm = bm25IndexProbe(s, d, t(s, d, "documents").where(qSel), k = 5)
-        val fresh = s.newSession()
-        val cold = bm25ColdProbe(fresh, path,
-          t(fresh, d, "documents").where(qSel), k = 5)
-        val coldW = IndexStore.recreate(s, cold)
-        val bad = coldW.withColumn("m", lit(1))
-          .join(warm.withColumn("r", lit(1)),
-            Seq("query_id", "doc_id", "score", "rank"), "full")
-          .where(col("m").isNull || col("r").isNull).count()
-        require(bad == 0, s"cold BM25 probe diverged from the warm probe ($bad rows)")
-        coldW
-      },
-      Some("""WITH toks AS (SELECT doc_id, unnest(str_split(text, ' ')) AS term FROM documents),
-             |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-             |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-             |dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-             |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
-             |q AS (SELECT doc_id AS query_id, term FROM tf WHERE doc_id % 50 = 0 AND doc_id < 5000),
-             |scored AS (
-             |  SELECT q.query_id, tf.doc_id,
-             |    round(sum(ln(1 + (s.n - dft.df + 0.5) / (dft.df + 0.5)) *
-             |      (tf.tf * 2.2) /
-             |      (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 6) AS score
-             |  FROM q JOIN tf ON q.term = tf.term AND tf.doc_id <> q.query_id
-             |  JOIN dft ON dft.term = q.term
-             |  JOIN dl ON dl.doc_id = tf.doc_id
-             |  CROSS JOIN stats s
-             |  GROUP BY 1, 2)
-             |SELECT query_id, doc_id, score,
-             |  CAST(row_number() OVER (PARTITION BY query_id
-             |    ORDER BY score DESC, doc_id) AS BIGINT) AS rank
-             |FROM scored
-             |QUALIFY rank <= 5""".stripMargin)),
-
-    // ---- BM25 rebuild-class owner on the ZIPF fixture (the realistic-
-    // vocabulary pair, VERDICT r13 next-#4): derive the corpus, tokenize
-    // it, shuffle the dfs, compute the scalars — the full per-batch
-    // rebuild — then score the short-query batch. Every rep re-pays the
-    // corpus-wide costs; x_retr_vocab_probe runs the SAME queries
-    // against the standing index and should separate clearly. ----
-    QueryDef(
-      "x_text_bm25_zipf",
-      (s, d) => {
-        val docs = t(s, d, "documents")
-        val qSel = col("doc_id") % 50 === 0 && col("doc_id") < 5000
-        // checkpointed for the same three-branch reason as bm25TopK's
-        // postings (r18) — the rebuild is still paid, once
-        val p = bm25Postings(zipfDocs(docs)).localCheckpoint()
-        val ts = p.groupBy("term").agg(count(lit(1)).as("df"))
-        val r = p.select("doc_id", "dl").dropDuplicates("doc_id")
-          .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl"))
-          .collect()(0)
-        val qTerms = bm25Postings(zipfQueries(docs, qSel))
-          .select(col("doc_id").as("query_id"), col("term"))
-        bm25Score(p, ts, r.getLong(0), r.getLong(1), qTerms, k = 5)
-      },
-      Some(zipfBm25Oracle)),
-
-    // ---- standing-index probe on the ZIPF fixture: same queries, same
-    // scores (the oracle replays BM25 over the derived corpus end to
-    // end), but the per-rep cost is ONLY the 4-term query batch against
-    // the pinned postings/dfs — the "never a corpus pass" separation the
-    // ~30-word fixture could not show (r8/r13: probe 1.96 s vs rebuild
-    // 2.17 s there; the scoring join was corpus-sized regardless). ----
-    QueryDef(
-      "x_retr_vocab_probe",
-      (s, d) => bm25IndexProbe(s, d,
-        zipfQueries(t(s, d, "documents"),
-          col("doc_id") % 50 === 0 && col("doc_id") < 5000),
-        k = 5, variant = "zipf"),
-      Some(zipfBm25Oracle)),
-
-    // ---- COLD-START retrieval on the ZIPF fixture (VERDICT r14
-    // next-#6): the raw cold row's cost is the documented ~30-term
-    // density confound (warm + cold probes both drag corpus-sized
-    // postings); this row certifies the SAME load-and-probe contract on
-    // the realistic-vocabulary corpus, where the probe's postings join
-    // is query-sized — its sf0.1→sf10 trend is expected to match
-    // x_retr_vocab_probe's flatness, making restart cost a measured
-    // property of the fixture, not the design. ----
-    QueryDef(
-      "x_retr_vocab_cold_probe",
-      (s, d) => {
-        val path =
-          s"${IndexStore.tempRoot(s)}/${java.lang.Integer.toHexString(d.hashCode)}/bm25zipf"
-        IndexStore.saveOnce(s, path)(saveBm25Index(s, d, path, variant = "zipf"))
-        val qSel = col("doc_id") % 50 === 0 && col("doc_id") < 5000
-        val warm = bm25IndexProbe(s, d,
-          zipfQueries(t(s, d, "documents"), qSel), k = 5, variant = "zipf")
-        val fresh = s.newSession()
-        val cold = bm25ColdProbe(fresh, path,
-          zipfQueries(t(fresh, d, "documents"), qSel), k = 5)
-        val coldW = IndexStore.recreate(s, cold)
-        val bad = coldW.withColumn("m", lit(1))
-          .join(warm.withColumn("r", lit(1)),
-            Seq("query_id", "doc_id", "score", "rank"), "full")
-          .where(col("m").isNull || col("r").isNull).count()
-        require(bad == 0,
-          s"cold zipf BM25 probe diverged from the warm probe ($bad rows)")
-        coldW
-      },
-      Some(zipfBm25Oracle)),
-
-    // ---- retrieval-index DRIFT statistic (the x_sim_index_drift
-    // pattern extended from IVF to the retrieval family): after N
-    // merges, how far has the incoming batches' term-document-frequency
-    // distribution moved from the build-time one? Total-variation
-    // distance between the two df histograms, one groupBy per side over
-    // the zipf corpus (vocab ≤ 2048 — the statistic is vocabulary-sized,
-    // never corpus-sized, after the tokenize). Computed in INTEGER
-    // cross-multiplied form — scaled_abs = Σ|df_b·Σdf_n − df_n·Σdf_b|,
-    // tv = scaled_abs / (2·Σdf_b·Σdf_n) — so unlike the k-means-cell
-    // histogram the WHOLE row is value-exact in DuckDB (every term is
-    // bounded ≤ 2048·n_docs·Σdf ≪ 2^63: no wrap on either engine).
-    // Production compares tv against a refresh threshold; the refresh
-    // is the disk chain's save below. ----
-    QueryDef(
-      "x_retr_vocab_drift",
-      (s, d) => {
-        val z = zipfDocs(t(s, d, "documents"))
-        val slice = pmod(col("doc_id"), lit(5L))
-        val dfB = bm25Postings(z.where(slice >= 2))
-          .groupBy("term").agg(count(lit(1)).as("db"))
-        val dfN = bm25Postings(z.where(slice < 2))
-          .groupBy("term").agg(count(lit(1)).as("dn"))
-        val joined = dfB.join(dfN, Seq("term"), "full")
-          .select(coalesce(col("db"), lit(0L)).as("db"),
-            coalesce(col("dn"), lit(0L)).as("dn"))
-        val totals = joined.agg(sum("db").as("sb"), sum("dn").as("sn"))
-        joined.crossJoin(broadcast(totals))
-          .agg(
-            count(lit(1)).as("n_terms"),
-            sum(when(col("db") === 0, 1L).otherwise(0L)).as("n_new_terms"),
-            sum(abs(col("db") * col("sn") - col("dn") * col("sb"))).as("scaled_abs"),
-            max(col("sb")).as("sb"), max(col("sn")).as("sn"))
-          .select(col("n_terms"), col("n_new_terms"), col("scaled_abs"),
-            col("sb"), col("sn"),
-            round(col("scaled_abs") / (lit(2.0) * col("sb") * col("sn")), 6).as("tv"))
-      },
-      Some("""WITH base AS (SELECT doc_id, len(str_split(text, ' ')) AS nw FROM documents),
-             |corp AS (SELECT doc_id, list_transform(
-             |    list_transform(range(nw), i -> (doc_id * 2654435761 + i * 40503 + 12345) % 1048576),
-             |    h -> 't' || CAST((h // 12) % (CAST(1 AS BIGINT) << (h % 12)) AS VARCHAR)) AS toks
-             |  FROM base),
-             |tf AS (SELECT DISTINCT doc_id, term FROM
-             |  (SELECT doc_id, unnest(toks) AS term FROM corp)),
-             |b AS (SELECT term, count(*) AS db FROM tf WHERE doc_id % 5 >= 2 GROUP BY 1),
-             |nn AS (SELECT term, count(*) AS dn FROM tf WHERE doc_id % 5 < 2 GROUP BY 1),
-             |j AS (SELECT coalesce(db, 0) AS db, coalesce(dn, 0) AS dn
-             |  FROM b FULL JOIN nn USING (term)),
-             |t AS (SELECT CAST(sum(db) AS BIGINT) AS sb, CAST(sum(dn) AS BIGINT) AS sn FROM j)
-             |SELECT CAST(count(*) AS BIGINT) AS n_terms,
-             |  CAST(sum(CASE WHEN db = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_new_terms,
-             |  CAST(sum(abs(db * t.sn - dn * t.sb)) AS BIGINT) AS scaled_abs,
-             |  t.sb AS sb, t.sn AS sn,
-             |  round(CAST(sum(abs(db * t.sn - dn * t.sb)) AS DOUBLE) / (2.0 * t.sb * t.sn), 6) AS tv
-             |FROM j CROSS JOIN t GROUP BY t.sb, t.sn""".stripMargin)),
-
-    // ---- the DISK-level retrieval ingest chain (VERDICT r14
-    // missing-#2; r15 missing-#4 closed the mid-chain window): persist
-    // the standing BM25 state built over doc_id %5 ∈ {2,3,4}, APPEND
-    // the %5==1 slice through [[appendBm25Index]] (batch tokenize +
-    // segment write + ONE-FLIP generation commit of the postings
-    // segment, merged dfs and rolled scalars together — no corpus
-    // re-tokenize), COMPACT the postings (manifest-reachable file count
-    // must not grow), then COLD-probe the compacted artifact from a fresh
-    // session. The certified output is the cold top-5 over the
-    // maintained artifact, which the oracle replays over the combined
-    // slices from scratch — value-exact across the whole chain.
-    // In-engine requires pin compaction and cold ≡ the directly-merged
-    // in-memory state (the x_retr_index_update path). ----
-    QueryDef(
-      "x_retr_index_disk_update",
-      (s, d) => {
-        val docs = t(s, d, "documents")
-        val slice = pmod(col("doc_id"), lit(5L))
-        // p0/ts0 are each consumed by the save, the merge AND the direct
-        // re-score below — checkpointed once so the corpus tokenize and
-        // the df shuffle run once per rep, not once per consumer (r18,
-        // guide §1.2: don't recompute what you already have)
-        val p0 = bm25Postings(docs.where(slice >= 2)).localCheckpoint()
-        val ts0 = p0.groupBy("term").agg(count(lit(1)).as("df")).localCheckpoint()
-        val r0 = p0.select("doc_id", "dl").dropDuplicates("doc_id")
-          .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl"))
-          .collect()(0)
-        val path =
-          s"${IndexStore.tempRoot(s)}/${java.lang.Integer.toHexString(d.hashCode)}/bm25_disk"
-        saveBm25State(s, path, p0, ts0, r0.getLong(0), r0.getLong(1))
-        appendBm25Index(s, path, docs.where(slice === 1))
-        val before = IndexStore.dataFileCount(s, s"$path/state")
-        compactBm25Postings(s, path)
-        val after = IndexStore.dataFileCount(s, s"$path/state")
-        // <=, not <: a tiny fixture where save+append already landed the
-        // minimal layout must not fail spuriously
-        require(after <= before,
-          s"postings compaction grew the layout ($before -> $after files)")
-        val qSel = col("doc_id") % 50 === 0 && col("doc_id") < 5000
-        val fresh = s.newSession()
-        val cold = bm25ColdProbe(fresh, path,
-          t(fresh, d, "documents").where(qSel), k = 5)
-        val coldW = IndexStore.recreate(s, cold)
-        val (p1, ts1, n1, sdl1) = mergeBm25Index(
-          p0, ts0, r0.getLong(0), r0.getLong(1), docs.where(slice === 1))
-        val qTerms = bm25Postings(docs.where(qSel))
-          .select(col("doc_id").as("query_id"), col("term"))
-        val direct = bm25Score(p1, ts1, n1, sdl1, qTerms, k = 5)
-        val bad = coldW.withColumn("m", lit(1))
-          .join(direct.withColumn("r", lit(1)),
-            Seq("query_id", "doc_id", "score", "rank"), "full")
-          .where(col("m").isNull || col("r").isNull).count()
-        require(bad == 0,
-          s"cold probe of the appended+compacted artifact diverged from the " +
-            s"directly-merged state ($bad rows)")
-        coldW
-      },
-      Some("""WITH corp AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 <> 0),
-             |toks AS (SELECT doc_id, unnest(str_split(text, ' ')) AS term FROM corp),
-             |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-             |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-             |dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-             |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
-             |qtoks AS (SELECT doc_id, unnest(str_split(text, ' ')) AS term
-             |  FROM documents WHERE doc_id % 50 = 0 AND doc_id < 5000),
-             |q AS (SELECT DISTINCT doc_id AS query_id, term FROM qtoks),
-             |scored AS (
-             |  SELECT q.query_id, tf.doc_id,
-             |    round(sum(ln(1 + (s.n - dft.df + 0.5) / (dft.df + 0.5)) *
-             |      (tf.tf * 2.2) /
-             |      (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 6) AS score
-             |  FROM q JOIN tf ON q.term = tf.term AND tf.doc_id <> q.query_id
-             |  JOIN dft ON dft.term = q.term
-             |  JOIN dl ON dl.doc_id = tf.doc_id
-             |  CROSS JOIN stats s
-             |  GROUP BY 1, 2)
-             |SELECT query_id, doc_id, score,
-             |  CAST(row_number() OVER (PARTITION BY query_id
-             |    ORDER BY score DESC, doc_id) AS BIGINT) AS rank
-             |FROM scored
-             |QUALIFY rank <= 5""".stripMargin)),
-
-    // ---- the ZIPF twin of the disk chain (VERDICT r15 missing-#3: the
-    // raw chain drags the ~30-term fixture-density postings, so its
-    // sf0.1→sf10 trend reads as a density confound, not the operator's);
-    // this row runs the IDENTICAL save → one-flip append → compact →
-    // cold-probe chain on the realistic-vocabulary corpus, where the
-    // probe's postings join is query-sized — expected near-flat across
-    // scale like x_retr_vocab_probe. The raw chain row stays as the
-    // documented confound case. Oracle replays zipf BM25 over the
-    // combined indexed slices (doc_id %5 ∈ {1..4}) from scratch —
-    // value-exact across the whole chain. ----
-    QueryDef(
-      "x_retr_vocab_disk_update",
-      (s, d) => {
-        val docs = t(s, d, "documents")
-        val z = zipfDocs(docs)
-        val slice = pmod(col("doc_id"), lit(5L))
-        // checkpointed for the same three-consumer reason as the raw
-        // disk chain (save + merge + direct re-score)
-        val p0 = bm25Postings(z.where(slice >= 2)).localCheckpoint()
-        val ts0 = p0.groupBy("term").agg(count(lit(1)).as("df")).localCheckpoint()
-        val r0 = p0.select("doc_id", "dl").dropDuplicates("doc_id")
-          .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl"))
-          .collect()(0)
-        val path =
-          s"${IndexStore.tempRoot(s)}/${java.lang.Integer.toHexString(d.hashCode)}/bm25zipf_disk"
-        saveBm25State(s, path, p0, ts0, r0.getLong(0), r0.getLong(1))
-        appendBm25Index(s, path, z.where(slice === 1))
-        val before = IndexStore.dataFileCount(s, s"$path/state")
-        compactBm25Postings(s, path)
-        val after = IndexStore.dataFileCount(s, s"$path/state")
-        require(after <= before,
-          s"zipf postings compaction grew the layout ($before -> $after files)")
-        val qSel = col("doc_id") % 50 === 0 && col("doc_id") < 5000
-        val fresh = s.newSession()
-        val cold = bm25ColdProbe(fresh, path,
-          zipfQueries(t(fresh, d, "documents"), qSel), k = 5)
-        val coldW = IndexStore.recreate(s, cold)
-        val (p1, ts1, n1, sdl1) = mergeBm25Index(
-          p0, ts0, r0.getLong(0), r0.getLong(1), z.where(slice === 1))
-        val qTerms = bm25Postings(zipfQueries(docs, qSel))
-          .select(col("doc_id").as("query_id"), col("term"))
-        val direct = bm25Score(p1, ts1, n1, sdl1, qTerms, k = 5)
-        val bad = coldW.withColumn("m", lit(1))
-          .join(direct.withColumn("r", lit(1)),
-            Seq("query_id", "doc_id", "score", "rank"), "full")
-          .where(col("m").isNull || col("r").isNull).count()
-        require(bad == 0,
-          s"cold zipf probe of the appended+compacted artifact diverged from " +
-            s"the directly-merged state ($bad rows)")
-        coldW
-      },
-      Some(zipfBm25OracleFor("doc_id % 5 <> 0"))),
-
-    // ---- the retrieval ingest loop under the LIVE streaming engine
-    // (VERDICT r14 missing-#1: the ANN/BM25 merges were batch-only): 4
-    // ordered micro-batches (doc_id %5 = 1..4) through foreachBatch —
-    // the first builds the index state, each later batch first RETRIEVES
-    // through the state as it stood (probe-then-merge, the standing
-    // query batch), then is admitted via [[mergeBm25Index]] with
-    // per-merge localCheckpoints (lineage truncation). In-engine
-    // requires pin streamed state ≡ the direct whole-corpus build
-    // (postings row-set identity + integer scalar equality) and that the
-    // live probes actually ran. Certified output = the final probe,
-    // replayed end to end by the oracle — value-exact. ----
-    QueryDef(
-      "x_stream_bm25_ingest",
-      (s, d) => {
-        import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-        import s.implicits._
-        val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-        val qSel = col("doc_id") % 50 === 0 && col("doc_id") < 5000
-        val qTerms = bm25Postings(docs.where(qSel))
-          .select(col("doc_id").as("query_id"), col("term")).localCheckpoint()
-        val input = MemoryStream[(Long, String)]
-        val stream = input.toDF().toDF("doc_id", "text")
-        val state = new java.util.concurrent.atomic.AtomicReference[
-          (DataFrame, DataFrame, Long, Long)](null)
-        val probed = new java.util.concurrent.atomic.AtomicLong(0)
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_bm25_ingest_").toString
-        val q = stream.writeStream
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            // r18: the raw batch has exactly one consumer per branch
-            // (the postings build / the merge's tokenize) — its old
-            // dedicated checkpoint job bought nothing. The merged
-            // POSTINGS stay unchecked too: p1 is a plain union of
-            // already-checkpointed pieces (cur postings + the merge's
-            // own checkpointed batch postings), so its lineage is
-            // already shallow; only the dfs JOIN result still
-            // checkpoints (its lineage would otherwise chain one
-            // full-outer join per batch).
-            val cur = state.get()
-            if (cur == null) {
-              val p0 = bm25Postings(batch.toDF()).localCheckpoint()
-              val ts0 = p0.groupBy("term").agg(count(lit(1)).as("df")).localCheckpoint()
-              val r0 = p0.select("doc_id", "dl").dropDuplicates("doc_id")
-                .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl"))
-                .collect()(0)
-              state.set((p0, ts0, r0.getLong(0), r0.getLong(1)))
-            } else {
-              probed.addAndGet(
-                bm25Score(cur._1, cur._2, cur._3, cur._4, qTerms, k = 5).count())
-              val (p1, ts1, n1, sdl1) =
-                mergeBm25Index(cur._1, cur._2, cur._3, cur._4, batch.toDF())
-              state.set((p1, ts1.localCheckpoint(), n1, sdl1))
-            }
-            ()
-          }
-          .start()
-        try {
-          (1 to 4).foreach { i =>
-            val slice = docs.where(pmod(col("doc_id"), lit(5L)) === i)
-              .limit(Similarity.maxStreamSlice + 1)
-              .as[(Long, String)].collect()
-            require(slice.length <= Similarity.maxStreamSlice,
-              s"x_stream_bm25_ingest($d): micro-batch slice exceeds maxStreamSlice " +
-                s"(${Similarity.maxStreamSlice}) — the MemoryStream drive is a " +
-                "certification harness, not a corpus-scale ingest")
-            input.addData(slice.toSeq)
-            q.processAllAvailable()
-          }
-        } finally {
-          q.stop()
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-        }
-        val st = state.get()
-        require(st != null, s"x_stream_bm25_ingest($d): empty documents corpus")
-        require(probed.get() > 0,
-          "streamed retrieval never probed — the probe-then-merge loop did not run")
-        // the direct rebuild baseline feeds TWO actions (the postings
-        // divergence count and the scalar recompute) — checkpointed so
-        // the corpus tokenize runs once per rep, not twice (r19)
-        val directP = bm25Postings(docs.where(pmod(col("doc_id"), lit(5L)) =!= 0))
-          .localCheckpoint()
-        val badP = st._1.withColumn("m", lit(1))
-          .join(directP.withColumn("r", lit(1)),
-            Seq("doc_id", "term", "tf", "dl"), "full")
-          .where(col("m").isNull || col("r").isNull).count()
-        require(badP == 0,
-          s"streamed BM25 postings diverged from the direct build ($badP rows)")
-        val dr = directP.select("doc_id", "dl").dropDuplicates("doc_id")
-          .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl"))
-          .collect()(0)
-        require(st._3 == dr.getLong(0) && st._4 == dr.getLong(1),
-          s"streamed BM25 scalars diverged: (${st._3}, ${st._4}) vs " +
-            s"(${dr.getLong(0)}, ${dr.getLong(1)})")
-        bm25Score(st._1, st._2, st._3, st._4, qTerms, k = 5)
-      },
-      Some("""WITH corp AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 <> 0),
-             |toks AS (SELECT doc_id, unnest(str_split(text, ' ')) AS term FROM corp),
-             |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-             |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-             |dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-             |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
-             |qtoks AS (SELECT doc_id, unnest(str_split(text, ' ')) AS term
-             |  FROM documents WHERE doc_id % 50 = 0 AND doc_id < 5000),
-             |q AS (SELECT DISTINCT doc_id AS query_id, term FROM qtoks),
-             |scored AS (
-             |  SELECT q.query_id, tf.doc_id,
-             |    round(sum(ln(1 + (s.n - dft.df + 0.5) / (dft.df + 0.5)) *
-             |      (tf.tf * 2.2) /
-             |      (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 6) AS score
-             |  FROM q JOIN tf ON q.term = tf.term AND tf.doc_id <> q.query_id
-             |  JOIN dft ON dft.term = q.term
-             |  JOIN dl ON dl.doc_id = tf.doc_id
-             |  CROSS JOIN stats s
-             |  GROUP BY 1, 2)
-             |SELECT query_id, doc_id, score,
-             |  CAST(row_number() OVER (PARTITION BY query_id
-             |    ORDER BY score DESC, doc_id) AS BIGINT) AS rank
-             |FROM scored
-             |QUALIFY rank <= 5""".stripMargin)),
-
-    // ---- the retrieval ingest loop from a LIVE FILE source (VERDICT
-    // r15 missing-#2: every index family's ingest was certified only
-    // from MemoryStream drives; the production shape is "new parquet
-    // lands in a watched directory, the loop admits it"). Slices land
-    // as parquet files DURING the stream — one backlog file, then three
-    // more written between processAllAvailable fences — and a
-    // maxFilesPerTrigger=1 paced `readStream` discovers them
-    // incrementally (the b_str1/progressReplay two-stage gate, now
-    // feeding an index merge). The drive is the probe-then-merge loop
-    // of x_stream_bm25_ingest, but NOTHING crosses the driver: batches
-    // flow engine-side from the file source into [[mergeBm25Index]].
-    // Keeps its own drive rather than riding Similarity.annFileIngest —
-    // the BM25 state is the postings/dfs/scalars 4-tuple, the same
-    // state-shape split that kept the BM25 MemoryStream row off
-    // annStreamIngest (r15 self-review precedent).
-    // In-engine requires pin ≥4 discovered non-empty micro-batches
-    // (incremental discovery, not one catch-all), that mid-stream
-    // probes ran, and streamed state ≡ the direct whole-corpus build;
-    // certified output = the final probe, value-exact via the full
-    // DuckDB replay. ----
-    QueryDef(
-      "x_stream_bm25_file_ingest",
-      (s, d) => {
-        val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-        val qSel = col("doc_id") % 50 === 0 && col("doc_id") < 5000
-        val qTerms = bm25Postings(docs.where(qSel))
-          .select(col("doc_id").as("query_id"), col("term")).localCheckpoint()
-        val tmp = java.nio.file.Files.createTempDirectory("graft_bm25_file_")
-        val srcDir = tmp.resolve("in").toString
-        val ckpt = tmp.resolve("ckpt").toString
-        def land(i: Int): Unit = docs
-          .where(pmod(col("doc_id"), lit(5L)) === i)
-          .coalesce(1).write.mode("append").parquet(srcDir)
-        land(1) // the backlog file the stream starts on
-        val state = new java.util.concurrent.atomic.AtomicReference[
-          (DataFrame, DataFrame, Long, Long)](null)
-        val probed = new java.util.concurrent.atomic.AtomicLong(0)
-        val batches = new java.util.concurrent.atomic.AtomicLong(0)
-        val q = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-          .writeStream
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            // r18: same batch-step slimming as x_stream_bm25_ingest —
-            // one emptiness probe for the discovery gate, no raw-batch
-            // checkpoint (single consumer per branch), merged postings
-            // stay a shallow union of checkpointed pieces
-            if (!batch.isEmpty) {
-              batches.incrementAndGet()
-              val cur = state.get()
-              if (cur == null) {
-                val p0 = bm25Postings(batch.toDF()).localCheckpoint()
-                val ts0 = p0.groupBy("term").agg(count(lit(1)).as("df")).localCheckpoint()
-                val r0 = p0.select("doc_id", "dl").dropDuplicates("doc_id")
-                  .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl"))
-                  .collect()(0)
-                state.set((p0, ts0, r0.getLong(0), r0.getLong(1)))
-              } else {
-                probed.addAndGet(
-                  bm25Score(cur._1, cur._2, cur._3, cur._4, qTerms, k = 5).count())
-                val (p1, ts1, n1, sdl1) =
-                  mergeBm25Index(cur._1, cur._2, cur._3, cur._4, batch.toDF())
-                state.set((p1, ts1.localCheckpoint(), n1, sdl1))
-              }
-            }
-            ()
-          }
-          .start()
-        try {
-          q.processAllAvailable()
-          // new parquet LANDS while the stream runs; the paced source
-          // must discover each file in its own later micro-batch
-          (2 to 4).foreach { i => land(i); q.processAllAvailable() }
-        } finally {
-          q.stop()
-          try {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-              .foreach(p => java.nio.file.Files.deleteIfExists(p))
-          } catch { case _: Throwable => () }
-        }
-        val st = state.get()
-        require(st != null, s"x_stream_bm25_file_ingest($d): empty documents corpus")
-        require(batches.get() >= 4,
-          s"file-source ingest discovered only ${batches.get()} non-empty " +
-            "micro-batches — the paced two-stage discovery gate did not hold")
-        require(probed.get() > 0,
-          "file-source ingest never probed — the probe-then-merge loop did not run")
-        // same two-action baseline as x_stream_bm25_ingest — tokenize
-        // once per rep (r19)
-        val directP = bm25Postings(docs.where(pmod(col("doc_id"), lit(5L)) =!= 0))
-          .localCheckpoint()
-        val badP = st._1.withColumn("m", lit(1))
-          .join(directP.withColumn("r", lit(1)),
-            Seq("doc_id", "term", "tf", "dl"), "full")
-          .where(col("m").isNull || col("r").isNull).count()
-        require(badP == 0,
-          s"file-ingested BM25 postings diverged from the direct build ($badP rows)")
-        val dr = directP.select("doc_id", "dl").dropDuplicates("doc_id")
-          .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl"))
-          .collect()(0)
-        require(st._3 == dr.getLong(0) && st._4 == dr.getLong(1),
-          s"file-ingested BM25 scalars diverged: (${st._3}, ${st._4}) vs " +
-            s"(${dr.getLong(0)}, ${dr.getLong(1)})")
-        bm25Score(st._1, st._2, st._3, st._4, qTerms, k = 5)
-      },
-      Some("""WITH corp AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 <> 0),
-             |toks AS (SELECT doc_id, unnest(str_split(text, ' ')) AS term FROM corp),
-             |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-             |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-             |dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-             |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
-             |qtoks AS (SELECT doc_id, unnest(str_split(text, ' ')) AS term
-             |  FROM documents WHERE doc_id % 50 = 0 AND doc_id < 5000),
-             |q AS (SELECT DISTINCT doc_id AS query_id, term FROM qtoks),
-             |scored AS (
-             |  SELECT q.query_id, tf.doc_id,
-             |    round(sum(ln(1 + (s.n - dft.df + 0.5) / (dft.df + 0.5)) *
-             |      (tf.tf * 2.2) /
-             |      (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 6) AS score
-             |  FROM q JOIN tf ON q.term = tf.term AND tf.doc_id <> q.query_id
-             |  JOIN dft ON dft.term = q.term
-             |  JOIN dl ON dl.doc_id = tf.doc_id
-             |  CROSS JOIN stats s
-             |  GROUP BY 1, 2)
-             |SELECT query_id, doc_id, score,
-             |  CAST(row_number() OVER (PARTITION BY query_id
-             |    ORDER BY score DESC, doc_id) AS BIGINT) AS rank
-             |FROM scored
-             |QUALIFY rank <= 5""".stripMargin)),
-
-    // ---- the fused DAILY-INCREMENTAL capstone (r16 verdict next-#5):
-    // the nightly cycle a 100-TB training-data team actually runs,
-    // composed end-to-end as ONE certified scenario. Files land in a
-    // watched directory (real paced file source, maxFilesPerTrigger=1,
-    // files written BETWEEN processAllAvailable fences); each
-    // micro-batch runs normalized-dedup admission (within-batch
-    // first-arrival + anti-join against standing∪seen canon keys),
-    // then the declarative quality gate (the x_text_quality score at
-    // τ = 0.405 — chosen off every fixture value, min |q−τ| ≥ 1.7e-4
-    // at both cert scales, so the cut is knife-edge-free), then
-    // commits the admitted docs with appendBm25Index's ONE-FLIP disk
-    // append (each batch = one generation, manifest +1 segment) and
-    // merges their embeddings into the standing composed IVF-PQ index
-    // under the fixed standing model. A canon is consumed by its FIRST
-    // arrival even when that arrival fails the quality gate —
-    // re-submitting a formatting variant of rejected content must not
-    // smuggle it past the gate (so admission is order-free given
-    // doc_id-ordered landing, and the whole run is SQL-replayable).
-    // Landing set = today's slice (doc_id % 5 = 0) plus formatting
-    // twins (+10M ids, upper+double-space — the x_dedup_normalized
-    // mangle) of every doc_id % 7 = 0 doc, exercising BOTH rejection
-    // paths (twin-of-standing → dup_standing; twin-of-today →
-    // dup_within, arriving after its original by id order).
-    //
-    // In-engine requires pin: ≥4 discovered non-empty micro-batches,
-    // mid-stream COLD probes of the live disk artifact ran, the final
-    // artifact's doc set ≡ standing ∪ ledger-admitted (full-outer,
-    // zero mismatches), sidecar (n, Σdl) ≡ recomputed from the served
-    // postings, manifest = 1 + one segment per non-empty append, and the
-    // streamed composed ANN table ≡ the direct encode of
-    // standing∪admitted vectors. Certified output = the per-doc
-    // admission LEDGER with each admitted doc's dl read back FROM THE
-    // ARTIFACT and its ANN membership read from the merged index —
-    // DuckDB replays dedup, gate, dl and membership value-exactly. ----
-    QueryDef(
-      "x_pipe_daily",
-      (s, d) => {
-        import s.implicits._
-        val W = org.apache.spark.sql.expressions.Window
-        val tau = 0.405
-        val docs = t(s, d, "documents").select(col("doc_id"), col("text"))
-        val emb = t(s, d, "embeddings")
-        val canonOf = call_function("canon_text", col("text"))
-        def qualityOf(frame: DataFrame): DataFrame = frame
-          .withColumn("ws", split(col("text"), " "))
-          .withColumn("q", round(
-            least(length(col("text")) / 500.0, lit(1.0)) * 0.5 +
-              expr(s"size(filter(ws, w -> array_contains($stopListSql, w)))") /
-                size(col("ws")).cast("double") * 0.3 +
-              (lit(1.0) - length(regexp_replace(col("text"), "[A-Za-z0-9 ]", "")) /
-                length(col("text")).cast("double")) * 0.2, 6))
-          .drop("ws")
-
-        // ---- standing state, built fresh per run (the capstone is the
-        // self-contained daily cycle, standing-build cost included) ----
-        val standing = docs.where(pmod(col("doc_id"), lit(5L)) =!= 0)
-        val p0 = bm25Postings(standing).localCheckpoint()
-        val ts0 = p0.groupBy("term").agg(count(lit(1)).as("df"))
-        val r0 = p0.select("doc_id", "dl").dropDuplicates("doc_id")
-          .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl")).collect()(0)
-        val tmp = java.nio.file.Files.createTempDirectory("graft_pipe_daily_")
-        val idxPath = tmp.resolve("bm25").toString
-        saveBm25State(s, idxPath, p0, ts0, r0.getLong(0), r0.getLong(1))
-        val standVec = emb.where(pmod(col("vec_id"), lit(5L)) =!= 0)
-          .select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("cv"))
-        require(!standVec.limit(1).isEmpty, s"x_pipe_daily($d): empty standing embeddings")
-        // quantizer sized for the corpus the nightly index serves
-        // (standing + today's landings ≈ the full documents corpus);
-        // the raw-corpus row count comes from the parquet footers
-        // driver-side — same integer as emb.count(), no count job (r19)
-        val ivfPq = AnnFamily.IvfPq
-        val annModel = ivfPq.train(standVec,
-          Similarity.densityNlist(IndexStore.parquetRowCount(s, s"$d/embeddings.parquet")))
-        val ann = new java.util.concurrent.atomic.AtomicReference[DataFrame](
-          ivfPq.encode(standVec, annModel).localCheckpoint())
-        val standingKeys = standing
-          .select(md5(canonOf.cast("binary")).as("ck")).distinct().localCheckpoint()
-        val keys = new java.util.concurrent.atomic.AtomicReference[DataFrame](standingKeys)
-
-        // ---- today's landing set, in doc_id order across 4 files ----
-        val twins = docs.where(col("doc_id") % 7 === 0)
-          .select((col("doc_id") + 10000000L).as("doc_id"),
-            regexp_replace(upper(col("text")), " ", "  ").as("text"))
-        val landedAll = docs.where(pmod(col("doc_id"), lit(5L)) === 0)
-          .unionByName(twins).localCheckpoint()
-        val ids = landedAll.select("doc_id").as[Long].collect().sorted
-        val cut = Array(ids(ids.length / 4), ids(ids.length / 2), ids(3 * ids.length / 4))
-        def fileSlice(i: Int): DataFrame = i match {
-          case 0 => landedAll.where(col("doc_id") < cut(0))
-          case 1 => landedAll.where(col("doc_id") >= cut(0) && col("doc_id") < cut(1))
-          case 2 => landedAll.where(col("doc_id") >= cut(1) && col("doc_id") < cut(2))
-          case _ => landedAll.where(col("doc_id") >= cut(2))
-        }
-        val srcDir = tmp.resolve("in").toString
-        val ckpt = tmp.resolve("ckpt").toString
-        def land(i: Int): Unit =
-          fileSlice(i).coalesce(1).write.mode("append").parquet(srcDir)
-        // ≡1 mod 50 ⇒ ≡1 mod 5: a fixed probe set that lives in the
-        // STANDING slice (the %50=0 convention would be empty here —
-        // every such id is in today's %5=0 slice)
-        // the probe set is FIXED across the run, so it tokenizes once —
-        // each batch's cold probe stays a cold ARTIFACT read (postings +
-        // dfs + sidecar of the live generation), the query terms are not
-        // part of that contract (r19; was a probeDocs checkpoint plus a
-        // re-tokenize inside every batch's bm25ColdProbe)
-        val probeTerms = bm25Postings(
-            standing.where(col("doc_id") % 50 === 1 && col("doc_id") < 5000))
-          .select(col("doc_id").as("query_id"), col("term")).localCheckpoint()
-        val batches = new java.util.concurrent.atomic.AtomicLong(0)
-        val appends = new java.util.concurrent.atomic.AtomicLong(0)
-        val probed = new java.util.concurrent.atomic.AtomicLong(0)
-        land(0) // the backlog file the stream starts on
-        val q = s.readStream.schema(landedAll.schema)
-          .option("maxFilesPerTrigger", "1").parquet(srcDir)
-          .writeStream
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-            // r18 batch-step shape: one emptiness probe on the source
-            // batch, ONE checkpoint of the survivors+quality frame
-            // (window + anti-join + quality fused — the old step
-            // checkpointed the raw batch, the survivors AND the
-            // admitted slice separately and paid an extra
-            // admitted-emptiness action; appendBm25Index's own
-            // empty-batch no-op now REPORTS whether it appended).
-            // Admission semantics unchanged: canon consumed at first
-            // arrival pre-quality, appends counted only when a batch
-            // actually landed.
-            if (!batch.isEmpty) {
-              batches.incrementAndGet()
-              // the production probe path: a COLD read of the live disk
-              // artifact, against whatever generation is committed now
-              s.sparkContext.setJobDescription("pipe: cold-probe")
-              probed.addAndGet(
-                bm25ColdProbeTerms(s, idxPath, probeTerms, k = 3).count())
-              s.sparkContext.setJobDescription("pipe: admit")
-              // dedup admission: within-batch first arrival, then the
-              // standing∪seen anti-join; quality rides the same frame
-              val svq = qualityOf(batch.toDF()
-                .withColumn("ck", md5(canonOf.cast("binary")))
-                .withColumn("rn", row_number().over(W.partitionBy("ck").orderBy("doc_id")))
-                .where(col("rn") === 1).drop("rn")
-                .join(keys.get(), Seq("ck"), "left_anti"))
-                .localCheckpoint()
-              // canon consumed at FIRST arrival, pre-quality (see header).
-              // Plain union, NO distinct and NO checkpoint (r19): the
-              // standing keys are distinct, the batch's cks are distinct
-              // within the batch (rn=1 per ck) AND anti-joined against
-              // the accumulated keys above — so the union is already
-              // duplicate-free, and an anti-join's right side does not
-              // need dedup anyway. The old per-batch distinct re-shuffled
-              // the O(standing) key set on every admit (the guide §2.4
-              // anti-shape); the union of already-checkpointed frames
-              // (standingKeys + each svq) keeps lineage shallow without
-              // its own materialization job.
-              keys.set(keys.get().unionByName(svq.select("ck")))
-              val admitted = svq.where(col("q") >= tau)
-                .select(col("doc_id"), col("text"))
-              // vector admission is INTENTIONALLY slaved to the BM25
-              // commit (ADVICE r18): the nightly contract is that both
-              // artifacts index exactly the ledger's admitted docs, and
-              // appendBm25Index's did-commit result is the one source
-              // of truth for "this batch added documents" (its anti-join
-              // drops already-indexed doc_ids). A batch whose admitted
-              // docs are all already BM25-indexed must not re-append
-              // their vectors either — mergeIndex would dedup them
-              // anyway (idempotent on vid), so skipping is the same
-              // final state minus a no-op merge.
-              s.sparkContext.setJobDescription("pipe: append")
-              if (appendBm25Index(s, idxPath, admitted)) {
-                appends.incrementAndGet()
-                s.sparkContext.setJobDescription("pipe: ann-merge")
-                val admVec = emb
-                  .join(admitted.select(col("doc_id").as("vec_id")), Seq("vec_id"))
-                  .select(col("vec_id").as("vid"),
-                    col("embedding").cast("array<double>").as("cv"))
-                ann.set(Similarity.mergeIndex(ivfPq, ann.get(), admVec, annModel)
-                  .localCheckpoint())
-              }
-              s.sparkContext.setJobDescription(null)
-            }
-            ()
-          }
-          .start()
-        try {
-          q.processAllAvailable()
-          (1 to 3).foreach { i => land(i); q.processAllAvailable() }
-        } finally {
-          q.stop()
-          // the landing dir + stream checkpoint die with the stream;
-          // the BM25 artifact must outlive this block — the ledger
-          // verification below still reads it — and is reclaimed with
-          // the WHOLE scratch root at the end (ADVICE r17: deleting
-          // only in/ leaked the artifact + checkpoint every rep,
-          // accumulating disk at sf1/sf10 bench scale)
-          try {
-            import scala.jdk.CollectionConverters._
-            Seq(tmp.resolve("in"), tmp.resolve("ckpt")).foreach { p =>
-              if (java.nio.file.Files.exists(p))
-                java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-                  .foreach(f => java.nio.file.Files.deleteIfExists(f))
-            }
-          } catch { case _: Throwable => () }
-        }
-        require(batches.get() >= 4,
-          s"x_pipe_daily discovered only ${batches.get()} non-empty micro-batches")
-        require(probed.get() > 0, "x_pipe_daily never probed the live artifact")
-
-        // ---- the declarative ledger the stream must agree with ----
-        val ledger = qualityOf(landedAll)
-          .withColumn("ck", md5(canonOf.cast("binary")))
-          .withColumn("rn", row_number().over(W.partitionBy("ck").orderBy("doc_id")))
-          .join(standingKeys.withColumn("std", lit(true)), Seq("ck"), "left")
-          .withColumn("verdict",
-            when(col("std"), "dup_standing")
-              .when(col("rn") > 1, "dup_within")
-              .when(col("q") < tau, "low_quality")
-              .otherwise("admitted"))
-          .select(col("doc_id"), col("verdict"))
-          .localCheckpoint()
-
-        // artifact ≡ standing ∪ admitted (doc sets, full-outer)
-        val served = loadBm25Postings(s, idxPath)
-          .select("doc_id", "dl").dropDuplicates("doc_id").localCheckpoint()
-        val expectedDocs = standing.select("doc_id")
-          .unionByName(ledger.where(col("verdict") === "admitted").select("doc_id"))
-        val missed = served.select("doc_id").withColumn("m", lit(1))
-          .join(expectedDocs.withColumn("r", lit(1)), Seq("doc_id"), "full")
-          .where(col("m").isNull || col("r").isNull).count()
-        require(missed == 0,
-          s"x_pipe_daily: artifact doc set diverged from standing∪admitted ($missed)")
-        // sidecar scalars ≡ recomputed from the served postings
-        val meta = IndexStore.readMeta(s, s"$idxPath/state")
-        val sr = served.agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).collect()(0)
-        require(meta("n").toLong == sr.getLong(0) && meta("sumDl").toLong == sr.getLong(1),
-          s"x_pipe_daily: sidecar scalars (${meta("n")}, ${meta("sumDl")}) diverged " +
-            s"from the served postings (${sr.getLong(0)}, ${sr.getLong(1)})")
-        // manifest = the initial segment + one per committed append
-        val mf = bm25ManifestRows(s, idxPath).size
-        require(mf == 1 + appends.get(),
-          s"x_pipe_daily: manifest carries $mf segments for ${appends.get()} appends")
-        // streamed ANN state ≡ direct encode of standing ∪ admitted vecs
-        val admVecAll = emb.join(
-          ledger.where(col("verdict") === "admitted").select(col("doc_id").as("vec_id")),
-          Seq("vec_id"))
-          .select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("cv"))
-        val direct = ivfPq.encode(standVec.unionByName(admVecAll), annModel)
-        val annDiv = ann.get().withColumn("m", lit(1))
-          .join(direct.withColumn("r", lit(1)), Seq("vid", "cell", "codes"), "full")
-          .where(col("m").isNull || col("r").isNull).count()
-        require(annDiv == 0,
-          s"x_pipe_daily: merged composed index diverged from the direct encode ($annDiv)")
-
-        // certified output: the ledger, with admitted docs' dl read back
-        // FROM the artifact and ANN membership from the merged index.
-        // Every joined frame is localCheckpoint'd, so the artifact can
-        // be reclaimed NOW — the scratch root does not outlive the rep
-        // (ADVICE r17: it used to accumulate at sf1/sf10 bench scale)
-        val out = ledger
-          .join(served, Seq("doc_id"), "left")
-          .join(ann.get().select(col("vid").as("doc_id"), lit(true).as("ann")),
-            Seq("doc_id"), "left")
-          .select(col("doc_id"), col("verdict"),
-            when(col("verdict") === "admitted", col("dl")).otherwise(lit(null))
-              .cast("long").as("dl"),
-            coalesce(col("ann"), lit(false)).as("in_ann"))
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        } catch { case _: Throwable => () }
-        out
-      },
-      Some(s"""WITH landed AS (
-              |  SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0
-              |  UNION ALL
-              |  SELECT doc_id + 10000000, replace(upper(text), ' ', '  ')
-              |  FROM documents WHERE doc_id % 7 = 0),
-              |sc AS (
-              |  SELECT DISTINCT trim(regexp_replace(regexp_replace(lower(text),
-              |    '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS canon
-              |  FROM documents WHERE doc_id % 5 <> 0),
-              |l AS (
-              |  SELECT doc_id, text,
-              |    trim(regexp_replace(regexp_replace(lower(text),
-              |      '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS canon,
-              |    round(least(length(text)/500.0, 1.0)*0.5
-              |      + len(list_filter(str_split(text, ' '), w -> list_contains($stopListDuck, w)))
-              |        / CAST(len(str_split(text, ' ')) AS DOUBLE) * 0.3
-              |      + (1.0 - length(regexp_replace(text, '[A-Za-z0-9 ]', '', 'g'))
-              |        / CAST(length(text) AS DOUBLE)) * 0.2, 6) AS q
-              |  FROM landed),
-              |r AS (
-              |  SELECT doc_id, text, q,
-              |    row_number() OVER (PARTITION BY canon ORDER BY doc_id) AS rn,
-              |    canon IN (SELECT canon FROM sc) AS std
-              |  FROM l),
-              |v AS (
-              |  SELECT doc_id, text,
-              |    CASE WHEN std THEN 'dup_standing'
-              |         WHEN rn > 1 THEN 'dup_within'
-              |         WHEN q < 0.405 THEN 'low_quality'
-              |         ELSE 'admitted' END AS verdict
-              |  FROM r)
-              |SELECT doc_id, verdict,
-              |  CASE WHEN verdict = 'admitted'
-              |       THEN CAST(len(str_split(text, ' ')) AS BIGINT) END AS dl,
-              |  (verdict = 'admitted'
-              |    AND doc_id IN (SELECT vec_id FROM embeddings)) AS in_ann
-              |FROM v""".stripMargin)),
-
-    // ---- hard-negative mining: BM25 top-20 lexical candidates per
-    // query (query set capped at the sf0.1 id range like x_text_bm25 —
-    // fixed probe set as the corpus scales), kept only where embedding
-    // cosine < 0 (similar words, different meaning), re-ranked by BM25 —
-    // the contrastive-training negative set. DuckDB recomputes BM25 AND
-    // the cosine filter
-    // independently (list_cosine_similarity over DOUBLE[]). ----
-    QueryDef(
-      "x_retr_hard_negatives",
-      (s, d) => hardNegatives(
-        t(s, d, "documents"), t(s, d, "embeddings"),
-        col("doc_id") % 100 === 0 && col("doc_id") < 5000, kCand = 15, k = 5, tau = 0.0),
-      Some("""WITH toks AS (SELECT doc_id, unnest(str_split(text, ' ')) AS term FROM documents),
-             |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-             |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-             |dft AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-             |stats AS (SELECT count(*) AS n, avg(dl) AS avgdl FROM dl),
-             |q AS (SELECT doc_id AS query_id, term FROM tf WHERE doc_id % 100 = 0 AND doc_id < 5000),
-             |scored AS (
-             |  SELECT q.query_id, tf.doc_id,
-             |    round(sum(ln(1 + (s.n - dft.df + 0.5) / (dft.df + 0.5)) *
-             |      (tf.tf * 2.2) /
-             |      (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / s.avgdl))), 6) AS score
-             |  FROM q JOIN tf ON q.term = tf.term AND tf.doc_id <> q.query_id
-             |  JOIN dft ON dft.term = q.term
-             |  JOIN dl ON dl.doc_id = tf.doc_id
-             |  CROSS JOIN stats s
-             |  GROUP BY 1, 2),
-             |cands AS (
-             |  SELECT query_id, doc_id, score,
-             |    row_number() OVER (PARTITION BY query_id
-             |      ORDER BY score DESC, doc_id) AS rank
-             |  FROM scored QUALIFY rank <= 15),
-             |withcos AS (
-             |  SELECT c.query_id, c.doc_id, c.score,
-             |    round(list_cosine_similarity(
-             |      qe.embedding::DOUBLE[], de.embedding::DOUBLE[]), 6) AS cos
-             |  FROM cands c
-             |  JOIN embeddings qe ON qe.vec_id = c.query_id
-             |  JOIN embeddings de ON de.vec_id = c.doc_id)
-             |SELECT query_id, doc_id, score, cos,
-             |  CAST(row_number() OVER (PARTITION BY query_id
-             |    ORDER BY score DESC, doc_id) AS BIGINT) AS hn_rank
-             |FROM withcos WHERE cos < 0.0
-             |QUALIFY hn_rank <= 5""".stripMargin)),
-
-    // ---- BPE merge learning (Sennrich et al. 2016): the first 8
-    // learned merges over the corpus vocabulary. The oracle REPLAYS the
-    // learner step-by-step — 8 chained MATERIALIZED CTE stages, each a
-    // pair-count + argmax + literal replace sharing the double-space
-    // symbol encoding — so rank order, merge pair, AND pair count are
-    // all independently recomputed. ----
-    QueryDef(
-      "x_text_bpe_learn",
-      (s, d) => learnBpeMerges(t(s, d, "documents"), nMerges = 8),
-      Some(bpeLearnOracle(8))),
-
-    // ---- BPE encoding: per-doc token counts under the 6-merge vocab,
-    // via a broadcast join from per-doc word counts to the final
-    // symbol-count table (corpus never re-shuffles). ----
-    QueryDef(
-      "x_text_bpe_encode",
-      // encodes against the PINNED standing vocab (bpeVocabFor) — the
-      // learn cost class is owned by x_text_bpe_learn above
-      (s, d) => bpeEncodeWith(t(s, d, "documents"), bpeVocabFor(s, d, 6)),
-      Some(bpeEncodeOracle(6))),
-
-    // ---- COLD-START tokenizer (the vocab-family mirror of the index
-    // cold probes): the standing BPE vocabulary persisted once, then a
-    // FRESH session loads it and encodes the corpus — the restarted
-    // tokenizer every training job runs (the vocab file ships with the
-    // model). Cold ≡ warm value-exact in-engine; the oracle replays the
-    // learn + encode end to end. ----
-    QueryDef(
-      "x_text_bpe_cold_encode",
-      (s, d) => {
-        val path =
-          s"${IndexStore.tempRoot(s)}/${java.lang.Integer.toHexString(d.hashCode)}/bpe6"
-        IndexStore.saveOnce(s, path)(saveBpeVocab(s, d, 6, path))
-        val warm = bpeEncodeWith(t(s, d, "documents"), bpeVocabFor(s, d, 6))
-        val fresh = s.newSession()
-        val cold = bpeColdEncode(fresh, path, t(fresh, d, "documents"))
-        val coldW = IndexStore.recreate(s, cold)
-        val bad = coldW.withColumn("m", lit(1))
-          .join(warm.withColumn("r", lit(1)),
-            Seq("doc_id", "bpe_tokens", "base_chars", "compression"), "full")
-          .where(col("m").isNull || col("r").isNull).count()
-        require(bad == 0, s"cold BPE encode diverged from the warm encode ($bad rows)")
-        coldW
-      },
-      Some(bpeEncodeOracle(6)))
-  )
 }

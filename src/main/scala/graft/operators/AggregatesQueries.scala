@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * oracle SQL) because summation order differs between engines; row-level
   * arithmetic needs no rounding.
   */
-object Aggregates extends QueryRegistry {
+object AggregatesQueries extends QueryRegistry {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.t(s, d, n)
 

@@ -1,8 +1,7 @@
 package graft.operators
 
-import graft.{QueryDef, QueryRegistry, Tables}
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Bucketed co-located join — the pre-shuffle strategy that makes the
   * fact⋈fact join survive 100 TB (SURVEY §6: "co-locate joins via
@@ -17,7 +16,7 @@ import org.apache.spark.sql.functions._
   * and an IO-bound join; the one-time bucketed write amortizes across
   * every subsequent join on that key.
   */
-object Bucketed extends QueryRegistry {
+object Bucketed {
 
   private val written = new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
@@ -46,20 +45,4 @@ object Bucketed extends QueryRegistry {
     (s.table(names._1), s.table(names._2))
   }
 
-  val defs: Seq[QueryDef] = Seq(
-    QueryDef(
-      "b_jn10_bucketed",
-      (s, d) => {
-        val (li, ord) = tables(s, d)
-        li.join(ord, col("l_orderkey") === col("o_orderkey"))
-          .groupBy(col("o_orderpriority"))
-          .agg(
-            count(lit(1)).as("n"),
-            round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("rev"))
-      },
-      Some("""SELECT o_orderpriority, count(*) AS n,
-             |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS rev
-             |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-             |GROUP BY o_orderpriority""".stripMargin))
-  )
 }

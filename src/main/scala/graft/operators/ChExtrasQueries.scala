@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *    is engine-portable AND stable under re-runs — every executor
   *    picks the same rows, unlike `rand()`-based sampling.
   */
-object ChExtras extends QueryRegistry {
+object ChExtrasQueries extends QueryRegistry {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.t(s, d, n)
 

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, QueryRegistry, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Layer-B relational surface: scans, projection, filtering, joins, set
@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * Scale notes are attached per query: dimension joins are broadcast,
   * fact-fact joins shuffle on their keys, top-k never collects.
   */
-object Relational extends QueryRegistry {
+object RelationalQueries extends QueryRegistry {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.t(s, d, n)
 

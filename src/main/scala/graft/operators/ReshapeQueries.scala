@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *  - UNPIVOT (CH `arrayJoin(map(...))` idiom) — native `unpivot`
   *    (Spark 3.4+), a generator, no shuffle at all.
   */
-object Reshape extends QueryRegistry {
+object ReshapeQueries extends QueryRegistry {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.t(s, d, n)
 

@@ -150,7 +150,7 @@ object Spectrum {
       }
     }
     val outSchema = StructType(inSchema.fields ++ sums.zipWithIndex.map {
-      case ((s, out), i) => StructField(out, inSchema(sumIdx(i)).dataType, nullable = true)
+      case ((_, out), i) => StructField(out, inSchema(sumIdx(i)).dataType, nullable = true)
     })
     val nKeys = pcIdx.length
     val cum = sorted.mapPartitions { it =>

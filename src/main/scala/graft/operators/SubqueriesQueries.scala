@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * SURVEY §4.1), so none of them cartesian-explodes at scale;
   * SubqueriesSpec asserts the decorrelated plan shape.
   */
-object Subqueries extends QueryRegistry {
+object SubqueriesQueries extends QueryRegistry {
 
   private def withViews(s: SparkSession, d: String): Unit = {
     Tables.t(s, d, "orders").createOrReplaceTempView("sq_orders")

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * are exercised on a genuinely tied ordering (deterministic by
   * definition of rank).
   */
-object Windows extends QueryRegistry {
+object WindowsQueries extends QueryRegistry {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.t(s, d, n)
 

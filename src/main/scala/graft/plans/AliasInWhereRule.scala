@@ -95,7 +95,7 @@ class AliasInWhereRule(session: SparkSession) extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
-    case p @ Project(list, f @ Filter(cond, child))
+    case p @ Project(list, Filter(cond, child))
         if child.resolved && !cond.resolved =>
       val moved = movable(cond, list, child.output)
       if (moved.isEmpty) p
@@ -110,7 +110,7 @@ class AliasInWhereRule(session: SparkSession) extends Rule[LogicalPlan] {
 
     case ag: Aggregate =>
       ag.child match {
-        case f @ Filter(cond, child) if child.resolved && !cond.resolved =>
+        case Filter(cond, child) if child.resolved && !cond.resolved =>
           // grouped shape: inline function-free alias bodies textually,
           // resolving their column refs against the child by hand
           val subs = movable(cond, ag.aggregateExpressions, child.output)

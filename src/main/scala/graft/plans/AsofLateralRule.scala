@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, First, MaxBy, MinBy}
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftOuter}
@@ -95,7 +94,7 @@ import org.apache.spark.sql.types._
   * subquery-bearing expressions, and aggregates/windows inside the
   * probe.
   */
-class AsofLateralRule(session: SparkSession) extends Rule[LogicalPlan] {
+class AsofLateralRule extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     // Cross is how `CROSS JOIN LATERAL` (the parser's INNER asof/any

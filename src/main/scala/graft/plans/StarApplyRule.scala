@@ -70,7 +70,7 @@ class StarApplyRule(session: SparkSession) extends Rule[LogicalPlan] {
     val byMarker = new java.util.IdentityHashMap[ChStarApply, Seq[NamedExpression]]()
     val expanded = plan.transformUp {
       case p @ Project(projList, child) =>
-        val l2 = expandList(projList, expansions, byMarker, aggregate = false)
+        val l2 = expandList(projList, expansions, byMarker)
         if (l2 eq projList) p
         // `SELECT * APPLY(sum) FROM t` without GROUP BY: the marker hid
         // the aggregates from the analyzer, so the node is a Project —
@@ -80,7 +80,7 @@ class StarApplyRule(session: SparkSession) extends Rule[LogicalPlan] {
           Aggregate(Nil, l2, child)
         else Project(l2, child)
       case a @ Aggregate(grouping, aggList, child, hint) =>
-        val l2 = expandList(aggList, expansions, byMarker, aggregate = true)
+        val l2 = expandList(aggList, expansions, byMarker)
         if (l2 eq aggList) a else Aggregate(grouping, l2, child, hint)
     }
     if (expansions.isEmpty && byMarker.isEmpty) return expanded
@@ -121,8 +121,8 @@ class StarApplyRule(session: SparkSession) extends Rule[LogicalPlan] {
   private def expandList(
       list: Seq[NamedExpression],
       expansions: scala.collection.mutable.Map[ExprId, Seq[NamedExpression]],
-      byMarker: java.util.IdentityHashMap[ChStarApply, Seq[NamedExpression]],
-      aggregate: Boolean): Seq[NamedExpression] = {
+      byMarker: java.util.IdentityHashMap[ChStarApply, Seq[NamedExpression]])
+      : Seq[NamedExpression] = {
     val changed = list.exists {
       case Alias(_: ChStarApply, _) => true
       case a: AttributeReference => expansions.contains(a.exprId)
@@ -131,7 +131,7 @@ class StarApplyRule(session: SparkSession) extends Rule[LogicalPlan] {
     if (!changed) return list
     list.flatMap {
       case al @ Alias(m: ChStarApply, _) =>
-        val ex = expand(m, aggregate)
+        val ex = expand(m)
         expansions(al.exprId) = ex
         byMarker.put(m, ex)
         ex
@@ -147,7 +147,7 @@ class StarApplyRule(session: SparkSession) extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  private def expand(m: ChStarApply, aggregate: Boolean): Seq[NamedExpression] = {
+  private def expand(m: ChStarApply): Seq[NamedExpression] = {
     def bad(why: String): Nothing = throw new IllegalArgumentException(
       s"* APPLY: $why")
     if (m.children.length < 2) bad("malformed ch_star_apply marker")

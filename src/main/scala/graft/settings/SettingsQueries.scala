@@ -569,7 +569,7 @@ object SettingsQueries extends QueryRegistry {
     // (native.rs) — CH's multithreaded numbers spelling, same sequence ----
     QueryDef(
       "b_sql37_numbers_mt",
-      (s, d) => s.sql("SELECT number FROM system.numbers_mt LIMIT 10"),
+      (s, _) => s.sql("SELECT number FROM system.numbers_mt LIMIT 10"),
       Some("SELECT CAST(x AS BIGINT) AS number FROM range(10) t(x)")),
 
     // ---- round-8 dialect tail, the DuckDB-expressible subset (the
@@ -1256,7 +1256,7 @@ object SettingsQueries extends QueryRegistry {
     // its presence. ----
     QueryDef(
       "b_sql53_version_probe",
-      (s, d) => s.sql("SELECT 1 AS value, length(version()) > 0 AS has_version"),
+      (s, _) => s.sql("SELECT 1 AS value, length(version()) > 0 AS has_version"),
       Some("SELECT 1 AS value, true AS has_version")),
 
     // ---- nearest-match lateral probe (round-9 AsofLateralRule

@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 
 import graft.connector.ArrowCodec
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 
 /** Arrow IPC stream files as a Spark source/sink — the reference's

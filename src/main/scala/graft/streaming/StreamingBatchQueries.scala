@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * carries nanosecond precision in the fixture parquet, which Spark
   * truncates to µs — never emit it raw (see Tables.t).
   */
-object StreamingBatch extends QueryRegistry {
+object StreamingBatchQueries extends QueryRegistry {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.t(s, d, n)
 

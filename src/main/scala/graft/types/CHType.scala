@@ -576,8 +576,4 @@ object CHType {
       case _ => fromSpark(f.dataType, f.nullable, opts)
     }
   }
-
-  /** Schema-level mapping: a full CH table schema → Spark StructType. */
-  def toStructType(fields: Seq[(String, CHType)]): StructType =
-    StructType(fields.map { case (n, t) => toSparkField(n, t) })
 }

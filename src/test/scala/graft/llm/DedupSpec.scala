@@ -178,7 +178,7 @@ class DedupSpec extends SparkSpec {
     val crossSlice = pairsOf(Dedup.ngramJaccardPairs(docs, 0.5))
       .filter { case (a, b) => a % 4 != b % 4 }
       .map { case (a, b) => if (a % 4 > b % 4) (a, b) else (b, a) }
-    val out = Dedup.streamingIngestPairsFor(spark, sf001, 0.5)
+    val out = DedupQueries.streamingIngestPairsFor(spark, sf001, 0.5)
       .select("batch_doc", "corpus_doc").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(crossSlice.nonEmpty, "fixture should contain cross-slice near-dups")

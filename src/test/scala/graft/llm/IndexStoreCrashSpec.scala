@@ -64,17 +64,17 @@ class IndexStoreCrashSpec extends SparkSpec {
       s"$label: a crashed append must be DETECTABLE as an orphan segment")
 
     // B: generation staged (manifest names the new segment), pointer old
-    IndexStore.swapHookBeforeFlip = () => throw new RuntimeException("boom-preflip")
+    IndexStore.commitHookBeforeFlip = () => throw new RuntimeException("boom-preflip")
     try intercept[RuntimeException](IndexStore.append(a, path))
-    finally IndexStore.swapHookBeforeFlip = () => ()
+    finally IndexStore.commitHookBeforeFlip = () => ()
     assertSame(label, "crash-before-flip", b)
     IndexStore.verifyManifest(spark, path)
 
     // C: inside the flip — resolution falls back to the new complete
     // generation; the batch is present EXACTLY once
-    IndexStore.swapHookMidFlip = () => throw new RuntimeException("boom-midflip")
+    IndexStore.commitHookMidFlip = () => throw new RuntimeException("boom-midflip")
     try intercept[RuntimeException](IndexStore.append(a, path))
-    finally IndexStore.swapHookMidFlip = () => ()
+    finally IndexStore.commitHookMidFlip = () => ()
     val merged = b.unionByName(a)
     assertSame(label, "crash-mid-flip", merged)
     IndexStore.verifyManifest(spark, path)

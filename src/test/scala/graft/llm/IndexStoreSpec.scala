@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Cross-application index persistence (VERDICT r13 next-#1): artifacts
   * round-trip bit-exactly, cold probes run against (session, path) only
   * — no per-application memo/model-cache can be consulted, so none of
-  * the "must compute in this application" guards can fire — and the
-  * stage-and-swap refresh exchanges artifacts atomically.
+  * the "must compute in this application" guards can fire — and a save
+  * over a live artifact replaces it in one commit, at every crash point.
   */
 class IndexStoreSpec extends SparkSpec {
 
@@ -50,27 +50,16 @@ class IndexStoreSpec extends SparkSpec {
       java.util.Arrays.equals(m(1), Array(0.1 + 0.2, 3.0)))
   }
 
-  test("sidecar numeric codecs round-trip doubles bit-exactly") {
-    val m = Array(
-      Array(1.0, -0.0, Double.MinPositiveValue, math.Pi),
-      Array(1e308, -1.7976931348623157e308, 4.9e-324, 0.1 + 0.2))
-    val back = IndexStore.decodeMatrix(IndexStore.encodeMatrix(m))
-    assert(m.length == back.length)
-    m.indices.foreach { i =>
-      assert(m(i).map(java.lang.Double.doubleToRawLongBits(_)).toSeq ==
-        back(i).map(java.lang.Double.doubleToRawLongBits(_)).toSeq)
-    }
-    val cube = Array(m, m.map(_.map(-_)))
-    val cb = IndexStore.decodeCube(IndexStore.encodeCube(cube))
-    assert(cb.length == 2 && cb(1)(0)(3) == -math.Pi)
+  test("sidecar integer codec round-trips the subspace bounds") {
     assert(IndexStore.decodeInts(IndexStore.encodeInts(Array(0, 8, 16, 64))).toSeq ==
       Seq(0, 8, 16, 64))
+    assert(IndexStore.decodeInts(IndexStore.encodeInts(Array.empty)).isEmpty)
   }
 
   test("metadata sidecar writes and parses flat JSON with escapes") {
     val dir = java.nio.file.Files.createTempDirectory("graft_meta_").toString
     val meta = Map("kind" -> "test", "quote" -> "a\"b", "slash" -> "a\\b",
-      "vec" -> IndexStore.encodeVec(Array(1.5, -2.5)))
+      "vec" -> "1.5,-2.5")
     IndexStore.writeMeta(spark, s"$dir/_index_meta.json", meta)
     val back = IndexStore.readMeta(spark, dir)
     assert(back == meta)
@@ -91,7 +80,7 @@ class IndexStoreSpec extends SparkSpec {
 
   test("cold IVF probe from a fresh session equals the warm probe; no application guard fires") {
     val d = sf001
-    val path = s"${IndexStore.tempRoot(spark)}/spec/ivf"
+    val path = s"${ArtifactQueries.tempRoot(spark)}/spec/ivf"
     Similarity.saveIndex(spark, d, AnnFamily.Ivf, path)
     val emb = graft.Tables.t(spark, d, "embeddings")
     val q = emb.filter(col("vec_id") % 25 === 0)
@@ -111,7 +100,7 @@ class IndexStoreSpec extends SparkSpec {
 
   test("cold BM25 probe from a fresh session is value-identical to the warm probe") {
     val d = sf001
-    val path = s"${IndexStore.tempRoot(spark)}/spec/bm25"
+    val path = s"${ArtifactQueries.tempRoot(spark)}/spec/bm25"
     TextOps.saveBm25Index(spark, d, path)
     val qSel = col("doc_id") % 50 === 0 && col("doc_id") < 5000
     val warm = TextOps.bm25IndexProbe(spark, d,
@@ -127,7 +116,7 @@ class IndexStoreSpec extends SparkSpec {
 
   test("cold band-index candidates equal warm candidates") {
     val d = sf001
-    val path = s"${IndexStore.tempRoot(spark)}/spec/bands"
+    val path = s"${ArtifactQueries.tempRoot(spark)}/spec/bands"
     Dedup.saveBandIndex(spark, d, path)
     val isBatch = pmod(col("doc_id"), lit(5L)) === 0
     val warm = Dedup.incrementalCandidates(
@@ -142,7 +131,7 @@ class IndexStoreSpec extends SparkSpec {
 
   test("cold probes scan the artifact from disk and never degenerate") {
     val d = sf001
-    val path = s"${IndexStore.tempRoot(spark)}/spec/ivf_plan"
+    val path = s"${ArtifactQueries.tempRoot(spark)}/spec/ivf_plan"
     Similarity.saveIndex(spark, d, AnnFamily.Ivf, path)
     val fresh = spark.newSession()
     val embF = graft.Tables.t(fresh, d, "embeddings")
@@ -169,7 +158,7 @@ class IndexStoreSpec extends SparkSpec {
     // no runtime subquery — and the scan reads only nprobe/nlist of the
     // artifact's partitions
     val d = sf001
-    val path = s"${IndexStore.tempRoot(spark)}/spec/ivfpq_plan"
+    val path = s"${ArtifactQueries.tempRoot(spark)}/spec/ivfpq_plan"
     Similarity.saveIvfPqIndex(spark, d, path)
     val fresh = spark.newSession()
     val embF = graft.Tables.t(fresh, d, "embeddings")
@@ -209,74 +198,71 @@ class IndexStoreSpec extends SparkSpec {
     assert(IndexStore.dataFileCount(spark, flat) >= 1)
   }
 
-  test("stage-and-swap promotes the staged artifact and drops the old one") {
+  private def ids(path: String): Seq[Long] = {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_swap_").toString
-    val live = s"$root/live"
-    val staged = s"$root/staged"
-    IndexStore.save(Seq((1L, "old")).toDF("id", "v"), live, Map("gen" -> "1"))
-    IndexStore.save(Seq((2L, "new")).toDF("id", "v"), staged, Map("gen" -> "2"))
-    IndexStore.swap(spark, staged, live)
-    assert(IndexStore.readMeta(spark, live)("gen") == "2")
-    assert(IndexStore.load(spark, live).select("id").as[Long].collect().toSeq == Seq(2L))
-    assert(!new java.io.File(staged).exists())
-    assert(!new java.io.File(live + ".old").exists())
+    IndexStore.load(spark, path).select("id").as[Long].collect().toSeq.sorted
   }
 
-  test("swap killed at every crash window still serves one complete artifact") {
+  test("save over a live artifact serves the new rows; the old segment is swept one commit later") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_swapcrash_").toString
-    val live = s"$root/live"
+    val live = java.nio.file.Files.createTempDirectory("graft_resave_").toString + "/live"
+    IndexStore.save(Seq((1L, "g1")).toDF("id", "v"), live, Map("gen" -> "1"))
+    val g1 = IndexStore.manifestEntries(spark, live).map(_.dir)
+    IndexStore.save(Seq((2L, "g2"), (3L, "g2")).toDF("id", "v"), live, Map("gen" -> "2"))
+    assert(IndexStore.readMeta(spark, live)("gen") == "2")
+    assert(ids(live) == Seq(2L, 3L))
+    IndexStore.verifyManifest(spark, live)
+    // one generation of grace: an in-flight reader of g1 keeps its files
+    assert(IndexStore.orphanPoolDirs(spark, live) == g1)
+    IndexStore.save(Seq((4L, "g3")).toDF("id", "v"), live, Map("gen" -> "3"))
+    assert(ids(live) == Seq(4L))
+    assert(IndexStore.orphanPoolDirs(spark, live).intersect(g1).isEmpty,
+      "the superseded segment must be swept by the next commit")
+    assert(new java.io.File(live).listFiles().map(_.getName)
+      .count(_.matches("v\\d+")) == 1, "superseded generations must be deleted")
+  }
+
+  test("save over a live artifact killed at either flip window serves one complete generation") {
+    import spark.implicits._
+    val live = java.nio.file.Files.createTempDirectory("graft_resavecrash_").toString + "/live"
     IndexStore.save(Seq((1L, "g1")).toDF("id", "v"), live, Map("gen" -> "1"))
 
-    // window 1: staged generation renamed in, pointer NOT yet flipped —
-    // resolution must keep serving the OLD generation
-    IndexStore.save(Seq((2L, "g2")).toDF("id", "v"), s"$root/staged1", Map("gen" -> "2"))
-    IndexStore.swapHookBeforeFlip = () => throw new RuntimeException("boom-before-flip")
-    try intercept[RuntimeException](IndexStore.swap(spark, s"$root/staged1", live))
-    finally IndexStore.swapHookBeforeFlip = () => ()
+    // killed before the flip: the new generation is fully staged, the
+    // pointer still names the old one — the old rows are served
+    IndexStore.commitHookBeforeFlip = () => throw new RuntimeException("boom-before-flip")
+    try intercept[RuntimeException](
+      IndexStore.save(Seq((2L, "g2")).toDF("id", "v"), live, Map("gen" -> "2")))
+    finally IndexStore.commitHookBeforeFlip = () => ()
     assert(IndexStore.readMeta(spark, live)("gen") == "1")
-    assert(IndexStore.load(spark, live).select("id").as[Long].collect().toSeq == Seq(1L))
+    assert(ids(live) == Seq(1L))
+    IndexStore.verifyManifest(spark, live)
+    val crashed = IndexStore.orphanPoolDirs(spark, live)
+    assert(crashed.size == 1, s"the crashed save's segment must be detectable: $crashed")
 
-    // recovery = re-stage and re-swap (never reconstructs); the orphaned
-    // crashed generation is garbage-collected by the successful swap
-    IndexStore.save(Seq((2L, "g2")).toDF("id", "v"), s"$root/staged2", Map("gen" -> "2"))
-    IndexStore.swap(spark, s"$root/staged2", live)
-    assert(IndexStore.readMeta(spark, live)("gen") == "2")
-
-    // window 2: killed INSIDE the pointer flip (old pointer deleted, new
-    // one not yet renamed in) — resolution falls back to the highest
-    // complete generation, the new one, already fully renamed in
-    IndexStore.save(Seq((3L, "g3")).toDF("id", "v"), s"$root/staged3", Map("gen" -> "3"))
-    IndexStore.swapHookMidFlip = () => throw new RuntimeException("boom-mid-flip")
-    try intercept[RuntimeException](IndexStore.swap(spark, s"$root/staged3", live))
-    finally IndexStore.swapHookMidFlip = () => ()
+    // killed inside the flip (old pointer deleted, new one not renamed
+    // in): resolution falls back to the highest complete generation —
+    // the new one
+    IndexStore.commitHookMidFlip = () => throw new RuntimeException("boom-mid-flip")
+    try intercept[RuntimeException](
+      IndexStore.save(Seq((3L, "g3"), (4L, "g3")).toDF("id", "v"), live, Map("gen" -> "3")))
+    finally IndexStore.commitHookMidFlip = () => ()
     assert(IndexStore.readMeta(spark, live)("gen") == "3")
-    assert(IndexStore.load(spark, live).select("id").as[Long].collect().toSeq == Seq(3L))
+    assert(ids(live) == Seq(3L, 4L))
+    IndexStore.verifyManifest(spark, live)
 
-    // a further normal swap over the crashed-pointer state heals it
-    IndexStore.save(Seq((4L, "g4")).toDF("id", "v"), s"$root/staged4", Map("gen" -> "4"))
-    IndexStore.swap(spark, s"$root/staged4", live)
+    // the next commit heals the pointer and sweeps the crash's orphans
+    IndexStore.save(Seq((5L, "g4")).toDF("id", "v"), live, Map("gen" -> "4"))
     assert(IndexStore.readMeta(spark, live)("gen") == "4")
-    assert(IndexStore.load(spark, live).select("id").as[Long].collect().toSeq == Seq(4L))
-  }
-
-  test("save over a previously-swapped root replaces the artifact whole") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_resave_").toString
-    val live = s"$root/live"
-    IndexStore.save(Seq((1L, "a")).toDF("id", "v"), live, Map("gen" -> "1"))
-    IndexStore.save(Seq((2L, "b")).toDF("id", "v"), s"$root/st", Map("gen" -> "2"))
-    IndexStore.swap(spark, s"$root/st", live)
-    // root is versioned now; a fresh save must win over the old pointer
-    IndexStore.save(Seq((3L, "c")).toDF("id", "v"), live, Map("gen" -> "3"))
-    assert(IndexStore.readMeta(spark, live)("gen") == "3")
-    assert(IndexStore.load(spark, live).select("id").as[Long].collect().toSeq == Seq(3L))
+    assert(ids(live) == Seq(5L))
+    IndexStore.verifyManifest(spark, live)
+    assert(IndexStore.orphanPoolDirs(spark, live).intersect(crashed).isEmpty,
+      "the crashed save's orphan segment survived the next commit's sweep")
+    assert(new java.io.File(s"$live/_current").exists())
   }
 
   test("recreate dies loudly, with the budget named, on a corpus-sized frame") {
     val big = spark.range((1L << 20) + 1).toDF("id")
-    val e = intercept[IllegalArgumentException] { IndexStore.recreate(spark, big) }
+    val e = intercept[IllegalArgumentException] { ArtifactQueries.recreate(spark, big) }
     assert(e.getMessage.contains("maxRecreateRows"), e.getMessage)
   }
 }

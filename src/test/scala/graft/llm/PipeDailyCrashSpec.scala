@@ -30,7 +30,7 @@ class PipeDailyCrashSpec extends SparkSpec {
     val r0 = p0.select("doc_id", "dl").dropDuplicates("doc_id")
       .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl")).collect()(0)
     val path = java.nio.file.Files.createTempDirectory(s"graft_pipecrash_$tag").toString + "/idx"
-    TextOps.saveBm25State(spark, path, p0, ts0, r0.getLong(0), r0.getLong(1))
+    TextOps.saveBm25State(path, p0, ts0, r0.getLong(0), r0.getLong(1))
     path
   }
 
@@ -56,11 +56,11 @@ class PipeDailyCrashSpec extends SparkSpec {
         () => IndexStore.appendHookAfterPool = () => throw new RuntimeException("boom"),
         () => IndexStore.appendHookAfterPool = () => ()),
       ("before-flip",
-        () => IndexStore.swapHookBeforeFlip = () => throw new RuntimeException("boom"),
-        () => IndexStore.swapHookBeforeFlip = () => ()),
+        () => IndexStore.commitHookBeforeFlip = () => throw new RuntimeException("boom"),
+        () => IndexStore.commitHookBeforeFlip = () => ()),
       ("mid-flip",
-        () => IndexStore.swapHookMidFlip = () => throw new RuntimeException("boom"),
-        () => IndexStore.swapHookMidFlip = () => ()))
+        () => IndexStore.commitHookMidFlip = () => throw new RuntimeException("boom"),
+        () => IndexStore.commitHookMidFlip = () => ()))
 
     hooks.foreach { case (tag, arm, disarm) =>
       val live = freshState(docs, tag)

@@ -243,7 +243,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = Tables.t(spark, sf001, "embeddings")
     val q = emb.filter(col("vec_id") % 25 === 0)
     for ((saved, probed) <- Seq(AnnFamily.Ivf -> AnnFamily.IvfPq, AnnFamily.Pq -> AnnFamily.Lsh)) {
-      val path = s"${IndexStore.tempRoot(spark)}/spec/kind_${saved.kind}"
+      val path = s"${ArtifactQueries.tempRoot(spark)}/spec/kind_${saved.kind}"
       Similarity.saveIndex(spark, sf001, saved, path)
       val e = intercept[IllegalArgumentException] {
         Similarity.coldProbe(spark, path, probed, Similarity.corpusOf(emb), q, k = 5)

@@ -96,7 +96,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("token counts match a local tokenizer on a sample") {
     val sample = graft.Tables.t(spark, sf0001, "documents").limit(20)
-    val got = graft.llm.TextOps.defs.find(_.name == "x_text_tokens").get
+    val got = graft.llm.TextOpsQueries.defs.find(_.name == "x_text_tokens").get
       .build(spark, sf0001)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     sample.select("doc_id", "text").collect().foreach { r =>
@@ -198,7 +198,7 @@ class TextOpsSpec extends SparkSpec {
     val r0 = p0.select("doc_id", "dl").dropDuplicates("doc_id")
       .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl")).collect()(0)
     val path = java.nio.file.Files.createTempDirectory("graft_bm25_tx_").toString + "/idx"
-    TextOps.saveBm25State(spark, path, p0, ts0, r0.getLong(0), r0.getLong(1))
+    TextOps.saveBm25State(path, p0, ts0, r0.getLong(0), r0.getLong(1))
 
     // the consistency oracle: whatever generation load resolves, its
     // sidecar scalars and dfs table must be EXACTLY recomputable from
@@ -229,17 +229,17 @@ class TextOpsSpec extends SparkSpec {
       "a crashed append's orphan pool dir leaked into the served state")
 
     // crash B: staged generation renamed in, pointer not yet flipped
-    IndexStore.swapHookBeforeFlip = () => throw new RuntimeException("boom-preflip")
+    IndexStore.commitHookBeforeFlip = () => throw new RuntimeException("boom-preflip")
     try intercept[RuntimeException] {
       TextOps.appendBm25Index(spark, path, docs.where(slice === 1))
-    } finally IndexStore.swapHookBeforeFlip = () => ()
+    } finally IndexStore.commitHookBeforeFlip = () => ()
     assertConsistent("crash before pointer flip")
 
     // crash C: inside the pointer flip's delete->rename window
-    IndexStore.swapHookMidFlip = () => throw new RuntimeException("boom-midflip")
+    IndexStore.commitHookMidFlip = () => throw new RuntimeException("boom-midflip")
     try intercept[RuntimeException] {
       TextOps.appendBm25Index(spark, path, docs.where(slice === 1))
-    } finally IndexStore.swapHookMidFlip = () => ()
+    } finally IndexStore.commitHookMidFlip = () => ()
     assertConsistent("crash mid pointer flip")
 
     // replay heals: the committed chain converges to the direct merge
@@ -279,7 +279,7 @@ class TextOpsSpec extends SparkSpec {
     val r0 = p0.select("doc_id", "dl").dropDuplicates("doc_id")
       .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl")).collect()(0)
     val path = java.nio.file.Files.createTempDirectory("graft_bm25_multi_").toString + "/idx"
-    TextOps.saveBm25State(spark, path, p0, ts0, r0.getLong(0), r0.getLong(1))
+    TextOps.saveBm25State(path, p0, ts0, r0.getLong(0), r0.getLong(1))
     def manifestSize: Int =
       IndexStore.manifestEntries(spark, s"$path/state").size
     assert(manifestSize === 1)
@@ -333,7 +333,7 @@ class TextOpsSpec extends SparkSpec {
     val r0 = p0.select("doc_id", "dl").dropDuplicates("doc_id")
       .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl")).collect()(0)
     val path = java.nio.file.Files.createTempDirectory("graft_bm25_prune_").toString + "/idx"
-    TextOps.saveBm25State(spark, path, p0, ts0, r0.getLong(0), r0.getLong(1))
+    TextOps.saveBm25State(path, p0, ts0, r0.getLong(0), r0.getLong(1))
     TextOps.appendBm25Index(spark, path, docs.where(col("doc_id") >= t1 && col("doc_id") < t2))
     TextOps.appendBm25Index(spark, path, docs.where(col("doc_id") >= t2))
     // a doc in the MIDDLE batch: the stats must prune the pool to ONE
@@ -366,7 +366,7 @@ class TextOpsSpec extends SparkSpec {
     val r0 = p0.select("doc_id", "dl").dropDuplicates("doc_id")
       .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl")).collect()(0)
     val path = java.nio.file.Files.createTempDirectory("graft_bm25_audit_").toString + "/idx"
-    TextOps.saveBm25State(spark, path, p0, ts0, r0.getLong(0), r0.getLong(1))
+    TextOps.saveBm25State(path, p0, ts0, r0.getLong(0), r0.getLong(1))
     val state = s"$path/state"
     val saved = IndexStore.manifestEntries(spark, state).map(_.dir)
     assert(TextOps.appendBm25Index(spark, path, docs.where(slice === 0)))
