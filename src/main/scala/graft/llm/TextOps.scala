@@ -474,11 +474,11 @@ object TextOps {
     val state = s"$path/state"
     val indexed = loadBm25Postings(s, path).select("doc_id").distinct()
     IndexStore.append(bm25Postings(admitted.join(indexed, Seq("doc_id"), "left_anti")),
-      state, (batch, meta) => {
+      state, Some((batch, meta) => {
         val (dfs, n, sumDl) = foldBm25Batch(IndexStore.loadAux(s, state, "dfs"),
           meta("n").toLong, meta("sumDl").toLong, batch)
         (Map("n" -> n.toString, "sumDl" -> sumDl.toString), Map("dfs" -> dfs))
-      })
+      }))
   }
 
   /** Postings COMPACTION: [[IndexStore.compact]] of the artifact — the

@@ -50,8 +50,10 @@ object Projections {
   def clear(): Unit = registry.clear()
   def isEmpty: Boolean = registry.isEmpty
 
+  // `.` and `..` segments resolve first: a scan's root paths arrive
+  // normalized (Hadoop's Path normalizes its URI), a registration may not
   private def normalize(p: String): String =
-    new java.net.URI(p).getPath match { case null => p; case x => x }
+    new java.net.URI(p).normalize().getPath match { case null => p; case x => x }
 
   private[plans] def find(rootPaths: Seq[String]): Option[ProjectionDef] =
     rootPaths.flatMap(p => registry.get(normalize(p))).headOption

@@ -48,6 +48,26 @@ class ProjectionsSpec extends SparkSpec {
     } finally Projections.clear()
   }
 
+  test("a path with `.` segments routes the scan of the same file, both ways") {
+    val (_, mvDir) = setup()
+    val parent = new java.io.File(sf0001).getParent
+    val base = new java.io.File(sf0001).getName
+    val dotted = s"$parent/./$base"
+    def routes(registerDir: String, scanDir: String): Boolean = {
+      Projections.clear()
+      Projections.register(Projections.ProjectionDef(s"$registerDir/events.parquet",
+        Seq("user_id", "event_type"), "value", mvDir))
+      try Tables.t(spark, scanDir, "events").groupBy(col("user_id"))
+        .agg(count(lit(1)).as("n")).queryExecution.executedPlan.toString
+        .contains("partials")
+      finally Projections.clear()
+    }
+    assert(routes(dotted, sf0001), s"projection routing did not fire: registered $dotted")
+    assert(routes(sf0001, dotted), s"projection routing did not fire: scanned $dotted")
+    assert(routes(s"$dotted/../$base", sf0001),
+      s"projection routing did not fire: registered $dotted/../$base")
+  }
+
   test("filters and foreign aggregates block routing") {
     val (src, mvDir) = setup()
     Projections.register(Projections.ProjectionDef(src, Seq("user_id", "event_type"), "value", mvDir))
