@@ -233,8 +233,8 @@ def connector_auth_scan():
 
 # 15: round-13 surface — batch retrieval through the STANDING BM25
 # inverted index from Python (build-once/probe-per-batch, the
-# production retrieval path; k1/b passed explicitly — py4j resolves
-# real overloads, not Scala default params)
+# production retrieval path; the variant passed explicitly — py4j
+# resolves real overloads, not Scala default params)
 def bm25_index_probe():
     from pyspark.sql import DataFrame
 
@@ -243,7 +243,7 @@ def bm25_index_probe():
     q = docs.filter("doc_id % 50 = 0 AND doc_id < 5000")
     out = DataFrame(
         jvm.graft.llm.TextOps.bm25IndexProbe(
-            spark._jsparkSession, SF_DIR, q._jdf, 5, 1.2, 0.75, "raw"), spark)
+            spark._jsparkSession, SF_DIR, q._jdf, 5, "raw"), spark)
     rows = out.collect()
     assert out.columns == ["query_id", "doc_id", "score", "rank"], out.columns
     assert len(rows) > 0 and all(r.rank <= 5 for r in rows), len(rows)

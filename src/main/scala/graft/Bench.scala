@@ -1,4 +1,7 @@
 package graft
+
+import org.apache.spark.GraftListenerBus
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -56,22 +59,11 @@ object Bench {
     // listener events ride an async bus, so counters sampled the instant
     // an action returns can miss this query's tail events or absorb the
     // previous query's (ADVICE r18): AFTER the timed action (never inside
-    // the timing) wait for the counters to go quiescent — two consecutive
-    // identical reads 20 ms apart, bounded at 2 s — before differencing.
-    def drainJobLog(): Unit = {
-      val deadline = System.nanoTime() + 2L * 1000 * 1000 * 1000
-      var prev = (jobs.get(), stages.get(), tasks.get())
-      var stable = false
-      while (!stable && System.nanoTime() < deadline) {
-        Thread.sleep(20)
-        val cur = (jobs.get(), stages.get(), tasks.get())
-        stable = cur == prev
-        prev = cur
-      }
-    }
+    // the timing) drain the bus — every event of the finished jobs has
+    // then reached the counters — before differencing.
     def timeOnce(name: String,
         fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      if (jobLog) drainJobLog()
+      if (jobLog) GraftListenerBus.drain(spark.sparkContext)
       val (j0, s0, t0n) = (jobs.get(), stages.get(), tasks.get())
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch {
@@ -81,7 +73,7 @@ object Bench {
       }
       val dt = (System.nanoTime() - t0) / 1e9
       if (jobLog) {
-        drainJobLog()
+        GraftListenerBus.drain(spark.sparkContext)
         println(f"JOBLOG $name jobs=${jobs.get() - j0} " +
           f"stages=${stages.get() - s0} tasks=${tasks.get() - t0n} sec=$dt%.2f")
       }

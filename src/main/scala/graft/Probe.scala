@@ -69,11 +69,11 @@ object Probe {
     def rec(name: String, df: org.apache.spark.sql.DataFrame): Unit =
       put(s"recall $name", (brute intersect pairs(df)).size.toDouble / brute.size)
     rec("lsh", Similarity.lshTopK(emb, q, k = 5, tables = 8, bits = 6))
-    rec("ivf", Similarity.ivfTopK(emb, q, k = 5, nlist = 0, nprobe = 0))
+    rec("ivf", Similarity.rebuildTopK(AnnFamily.Ivf, emb, q, k = 5))
     // shipped defaults (m=8, ksub=256) so a floor re-audit prints the
     // numbers the contracts actually run under
-    rec("pq", Similarity.pqTopK(emb, q, k = 5))
-    rec("ivfpq", Similarity.ivfPqTopK(emb, q, k = 5))
+    rec("pq", Similarity.rebuildTopK(AnnFamily.Pq, emb, q, k = 5))
+    rec("ivfpq", Similarity.rebuildTopK(AnnFamily.IvfPq, emb, q, k = 5))
 
     // sliced-merge scenario calibration (the x_sim_index_update_*
     // floors): corpus = vec_id % 5 != 0, full query batch, brute
@@ -83,9 +83,9 @@ object Probe {
       val bruteS = pairs(Similarity.bruteForceTopK(sliced, q, 5))
       def recS(name: String, df: org.apache.spark.sql.DataFrame): Unit =
         put(s"recall $name", (bruteS intersect pairs(df)).size.toDouble / bruteS.size)
-      recS("ivf_sliced", Similarity.ivfTopK(sliced, q, k = 5, nlist = 0, nprobe = 0))
-      recS("pq_sliced", Similarity.pqTopK(sliced, q, k = 5))
-      recS("ivfpq_sliced", Similarity.ivfPqTopK(sliced, q, k = 5))
+      recS("ivf_sliced", Similarity.rebuildTopK(AnnFamily.Ivf, sliced, q, k = 5))
+      recS("pq_sliced", Similarity.rebuildTopK(AnnFamily.Pq, sliced, q, k = 5))
+      recS("ivfpq_sliced", Similarity.rebuildTopK(AnnFamily.IvfPq, sliced, q, k = 5))
     }
 
     // knob sweep for the density-aware PQ shortlist: recall as a
@@ -93,10 +93,12 @@ object Probe {
     if (args.contains("sweep")) {
       for (sf <- Seq(2, 4, 8, 16, 32); np <- Seq(4, 6, 8)) {
         rec(s"ivfpq np=$np sf=$sf",
-          Similarity.ivfPqTopK(emb, q, k = 5, nprobe = np, shortlistFactor = sf))
+          Similarity.rebuildTopK(AnnFamily.IvfPq, emb, q, k = 5, nprobe = np,
+            shortlistFactor = sf))
       }
       for (sf <- Seq(2, 4, 8, 16, 32))
-        rec(s"pq sf=$sf", Similarity.pqTopK(emb, q, k = 5, shortlistFactor = sf))
+        rec(s"pq sf=$sf",
+          Similarity.rebuildTopK(AnnFamily.Pq, emb, q, k = 5, shortlistFactor = sf))
       // the shortlist LEVER at auto nlist/nprobe: how much recall a
       // deployment gives back by pinning shortlistFactor below the
       // √N auto (the composed probe's residual super-constant cost
@@ -104,7 +106,7 @@ object Probe {
       for (sf <- Seq(8, 16, 32, 0)) {
         val tag = if (sf == 0) "auto" else sf.toString
         rec(s"ivfpq lever np=auto sf=$tag",
-          Similarity.ivfPqTopK(emb, q, k = 5, shortlistFactor = sf))
+          Similarity.rebuildTopK(AnnFamily.IvfPq, emb, q, k = 5, shortlistFactor = sf))
       }
     }
 
@@ -141,8 +143,8 @@ object Probe {
       val bruteD = pairs(Similarity.bruteForceTopK(dense, qD, 5))
       def recD(name: String, df: org.apache.spark.sql.DataFrame): Unit =
         put(s"recall $name", (bruteD intersect pairs(df)).size.toDouble / bruteD.size)
-      recD("dense_ivf", Similarity.ivfTopK(dense, qD, k = 5, nlist = 0, nprobe = 0))
-      recD("dense_ivfpq", Similarity.ivfPqTopK(dense, qD, k = 5))
+      recD("dense_ivf", Similarity.rebuildTopK(AnnFamily.Ivf, dense, qD, k = 5))
+      recD("dense_ivfpq", Similarity.rebuildTopK(AnnFamily.IvfPq, dense, qD, k = 5))
     }
 
     // embed LSH + semantic recall vs exact pairs

@@ -25,19 +25,14 @@ object CHValues {
       s"${b(0) & 0xff}.${b(1) & 0xff}.${b(2) & 0xff}.${b(3) & 0xff}")
   }
 
-  /** Dotted quad → 4-byte big-endian. */
-  def ipv4FromString(s: UTF8String): Array[Byte] = {
-    val parts = s.toString.split("\\.", -1)
-    require(parts.length == 4, s"malformed IPv4: $s")
-    val out = new Array[Byte](4)
-    var i = 0
-    while (i < 4) {
-      val v = Integer.parseInt(parts(i))
-      require(v >= 0 && v <= 255 && parts(i).nonEmpty, s"malformed IPv4: $s")
-      out(i) = v.toByte
-      i += 1
-    }
-    out
+  /** Dotted quad → 4-byte big-endian: the strict [[parseIpv4Literal]],
+    * throwing on anything it rejects. */
+  def ipv4FromString(s: UTF8String): Array[Byte] =
+    parsedOrThrow("IPv4", s, parseIpv4Literal(s.toString))
+
+  private def parsedOrThrow(kind: String, s: UTF8String, b: Array[Byte]): Array[Byte] = {
+    if (b == null) throw new IllegalArgumentException(s"malformed $kind: '$s'")
+    b
   }
 
   // ------------------------------------------------------------- IPv6
@@ -74,40 +69,10 @@ object CHValues {
   }
 
   /** RFC 4291 text (with optional `::` and trailing dotted-quad) → 16
-    * bytes. */
-  def ipv6FromString(s: UTF8String): Array[Byte] = {
-    val text = s.toString
-    require(text.nonEmpty, "malformed IPv6: empty")
-    val dc = text.indexOf("::")
-    require(dc == text.lastIndexOf("::"), s"malformed IPv6: $text")
-    def parseGroups(part: String): Array[Int] =
-      if (part.isEmpty) Array.empty
-      else part.split(":", -1).flatMap { g =>
-        if (g.contains('.')) { // embedded IPv4 tail
-          val v4 = ipv4FromString(UTF8String.fromString(g))
-          Array(((v4(0) & 0xff) << 8) | (v4(1) & 0xff), ((v4(2) & 0xff) << 8) | (v4(3) & 0xff))
-        } else {
-          require(g.nonEmpty && g.length <= 4, s"malformed IPv6: $text")
-          Array(Integer.parseInt(g, 16))
-        }
-      }
-    val groups: Array[Int] =
-      if (dc >= 0) {
-        val head = parseGroups(text.substring(0, dc))
-        val tail = parseGroups(text.substring(dc + 2))
-        require(head.length + tail.length <= 7, s"malformed IPv6: $text")
-        head ++ Array.fill(8 - head.length - tail.length)(0) ++ tail
-      } else parseGroups(text)
-    require(groups.length == 8, s"malformed IPv6: $text")
-    val out = new Array[Byte](16)
-    var i = 0
-    while (i < 8) {
-      out(2 * i) = (groups(i) >> 8).toByte
-      out(2 * i + 1) = groups(i).toByte
-      i += 1
-    }
-    out
-  }
+    * bytes: the strict [[parseIpv6Literal]], throwing on anything it
+    * rejects. */
+  def ipv6FromString(s: UTF8String): Array[Byte] =
+    parsedOrThrow("IPv6", s, parseIpv6Literal(s.toString))
 
   // ------------------------------------------------------------- UUID
 

@@ -124,7 +124,7 @@ class ChSqlParser(delegate: ParserInterface) extends ParserInterface {
   /** Safe pass first; on ParseException retry once with the rescue pass
     * (CH-only clause forms). The original error is rethrown when rescue
     * changes nothing, so pure Spark syntax errors surface untouched. */
-  private def parseRescuing[A](sqlText: String)(f: String => A): A = {
+  private def parseRescuing[A <: AnyRef](sqlText: String)(f: String => A): A = {
     // a prior query's per-query SETTINGS scope ends, at the latest, when
     // the next statement arrives (the synchronous half of the CH
     // per-query scoping — see ChSqlRewrite.applySettings)
@@ -139,7 +139,7 @@ class ChSqlParser(delegate: ParserInterface) extends ParserInterface {
         // parse FIRST: a rescue that still fails to parse must not
         // leave session confs mutated as a side effect
         val parsed = f(r.sql)
-        ChSqlRewrite.applySettings(r.settings)
+        ChSqlRewrite.applySettings(r.settings, parsed)
         parsed
     }
   }
@@ -541,17 +541,20 @@ object ChSqlRewrite {
     * rejects (static conf, bad value) is skipped, never fails the query.
     *
     * Scope matches CH's per-query settings (`src/query.rs:71-166`): the
-    * touched confs are SNAPSHOTTED here and restored when that query's
-    * execution completes (one-shot [[QueryExecutionListener]]) — and, as
-    * the synchronous backstop, at the NEXT statement's parse
-    * ([[drainPendingSettings]]), which also unwinds a query whose
-    * ANALYSIS failed after the rescued parse applied its settings (no
-    * execution ever starts there, so no listener would fire). Either
-    * path wins; both are idempotent through the one-shot flag.
+    * touched confs are SNAPSHOTTED here and restored when the execution
+    * of `plan` — the rescued parse's plan, matched by reference —
+    * completes (one-shot [[QueryExecutionListener]]; another query's
+    * execution-end event, a late one from an earlier query included,
+    * leaves the scope open) — and, as the synchronous backstop, at the
+    * NEXT statement's parse ([[drainPendingSettings]]), which also
+    * unwinds a query whose ANALYSIS failed after the rescued parse
+    * applied its settings (no execution ever starts there, so no
+    * listener would fire) or that runs only as part of a derived query.
+    * Either path wins; both are idempotent through the one-shot flag.
     * Residual deviation (documented): between the rescued query's parse
     * and its execution end, the confs are visible session-wide — Spark
     * has no per-query conf context to attach them to. */
-  def applySettings(kvs: Seq[(String, String)]): Unit =
+  def applySettings(kvs: Seq[(String, String)], plan: AnyRef): Unit =
     org.apache.spark.sql.SparkSession.getActiveSession.foreach { sp =>
       drainPendingSettings(sp) // the previous query's scope ends here at the latest
       if (kvs.isEmpty) return
@@ -562,23 +565,27 @@ object ChSqlRewrite {
         catch { case scala.util.control.NonFatal(_) => None }
       }
       if (touched.nonEmpty) {
-        val snap = new SettingsSnapshot(sp, touched)
+        val snap = new SettingsSnapshot(sp, touched, plan)
         pendingSettings.synchronized { pendingSettings.put(sp, snap) }
         sp.listenerManager.register(snap.listener)
       }
     }
 
-  /** One rescued query's conf snapshot + its one-shot restore. */
+  /** One rescued query's conf snapshot + its one-shot restore, fired by
+    * the end of `plan`'s own execution. */
   private final class SettingsSnapshot(
       sp: org.apache.spark.sql.SparkSession,
-      touched: Seq[(String, Option[String])]) {
+      touched: Seq[(String, Option[String])],
+      plan: AnyRef) {
     private val done = new java.util.concurrent.atomic.AtomicBoolean(false)
     val listener: org.apache.spark.sql.util.QueryExecutionListener =
       new org.apache.spark.sql.util.QueryExecutionListener {
         override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit = restore()
+            qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+          if (qe.logical eq plan) restore()
         override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = restore()
+            qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit =
+          if (qe.logical eq plan) restore()
       }
     def restore(): Unit = if (done.compareAndSet(false, true)) {
       touched.foreach { case (key, old) =>

@@ -286,14 +286,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), round(col("est"), 6).as("est_jaccard"))
   }
 
-  /** Band-collision candidate pairs only (no signature-estimate filter):
-    * the recall half of the standard LSH-then-verify pipeline. `k` hashes
-    * in `bands` bands of k/bands rows; a pair is a candidate iff some
-    * band agrees exactly. 16 bands of 2 rows put the miss probability at
-    * (1−j²)^16 — < 1e-11 at j=0.9 — so over the 0.5 working threshold
-    * the candidate set is effectively recall-1 and the verified output
-    * equals the exact pair set.
-    */
   /** (doc_id, band, bkey) LSH band keys — the per-doc kernel shared by
     * the whole-corpus candidate generator and the incremental probe:
     * MinHash signature → per-band FNV fold of the band's slice. This is
@@ -311,6 +303,14 @@ object Dedup {
       .toDF("doc_id", "band", "bkey")
   }
 
+  /** Band-collision candidate pairs only (no signature-estimate filter):
+    * the recall half of the standard LSH-then-verify pipeline. `k` hashes
+    * in `bands` bands of k/bands rows; a pair is a candidate iff some
+    * band agrees exactly. 16 bands of 2 rows put the miss probability at
+    * (1−j²)^16 — < 1e-11 at j=0.9 — so over the 0.5 working threshold
+    * the candidate set is effectively recall-1 and the verified output
+    * equals the exact pair set.
+    */
   def minhashBandCandidates(docs: DataFrame, k: Int, bands: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._

@@ -257,11 +257,16 @@ object AnnFamily {
       AnnModel(centroids = IndexStore.readModelMatrix(s, path, "centroids"))
   }
 
-  /** Flat PQ: the zero-centroid IVF-PQ, stored as (vid, codes). */
+  /** Flat product quantization: the embedding dimension splits into m
+    * subspaces, a per-subspace k-means codebook (ksub centroids, trained
+    * on a bounded sample of L2-normalized vectors) encodes each vector as
+    * m byte codes — 32x narrower than the vector at dim 64, m 8 — and a
+    * query scores codes through its asymmetric-distance (ADC) lookup
+    * table. Runs as the zero-centroid IVF-PQ, stored as (vid, codes). */
   case object Pq extends AnnFamily("pq", Seq("vid", "codes"), Seq("vid"), Nil,
       stableProbe = false) {
     def train(corpus: DataFrame, nlist: => Int): AnnModel = {
-      val sample = normalizedSample(corpus.select(col("cv")), 2048)
+      val sample = normalizedSample(corpus.select(col("cv")), quantizerSampleFloor)
       require(sample.nonEmpty, "pq: empty corpus")
       flatPqModel(sample, pqM, pqKsub, seed = 42L)
     }
@@ -364,14 +369,23 @@ object AnnFamily {
   */
 object Similarity {
 
-  /** Score (qid, vid, qv, cv) pairs with exact cosine via a typed map. */
-  private def scoreCosine(pairs: DataFrame): DataFrame = {
+  /** The per-query top-k cut every scorer ends in: (qid, vid, cos) rows,
+    * ranked cos desc then vid asc, cos rounded to 6 dp. */
+  private def topKByCos(scored: DataFrame, k: Int): DataFrame =
+    graft.operators.LimitBy
+      .limitBy(scored, Seq(col("qid")), Seq(col("cos").desc, col("vid").asc), k)
+      .select(col("qid"), col("vid"), round(col("cos"), 6).as("cos"))
+
+  /** The exact re-rank tail of the join-based probes: (qid, vid, qv, cv)
+    * candidate pairs scored with exact cosine in a typed map, then
+    * [[topKByCos]]. */
+  private def rerankTopK(pairs: DataFrame, k: Int): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    pairs.select(col("qid"), col("vid"), col("qv"), col("cv"))
+    topKByCos(pairs.select(col("qid"), col("vid"), col("qv"), col("cv"))
       .as[(Long, Long, Array[Double], Array[Double])]
-      .map { case (qid, vid, qv, cv) => (qid, vid, VecKernels.cosine(qv, cv)) }
-      .toDF("qid", "vid", "cos")
+      .mapPartitions(_.map { case (qid, vid, qv, cv) => (qid, vid, VecKernels.cosine(qv, cv)) })
+      .toDF("qid", "vid", "cos"), k)
   }
 
   /** Largest query batch [[bruteForceTopK]] may collect to the driver —
@@ -379,12 +393,39 @@ object Similarity {
     * scale past it). */
   private[llm] val maxQueryBatch: Int = 1 << 16
 
+  /** The driver-side query batch of the one-pass scorers: (ids, vectors,
+    * norms). The query side is small BY DEFINITION (it is the broadcast
+    * side), so the contract is enforced in ONE execution: collect at
+    * most budget+1 rows — a mis-carved corpus-sized "query" frame dies
+    * with the budget named and never OOMs the driver, and the query
+    * pipeline is not run twice for a count. */
+  private def gatherQueries(queries: DataFrame, caller: String)
+      : (Array[Long], Array[Array[Double]], Array[Double]) = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val qRows = queries.select(col("vec_id"), col("embedding").cast("array<double>"))
+      .limit(maxQueryBatch + 1).as[(Long, Array[Double])].collect()
+    require(qRows.length <= maxQueryBatch,
+      s"$caller: query batch carries at least ${maxQueryBatch + 1} rows, over " +
+        s"maxQueryBatch ($maxQueryBatch; the one-execution probe stops counting " +
+        "at budget+1) — the one-pass path broadcasts the whole batch to every " +
+        "partition; tile the batch or use a standing-index probe at this size")
+    val qvs = qRows.map(_._2)
+    val qns = qvs.map { v =>
+      var s = 0.0; var i = 0
+      while (i < v.length) { s += v(i) * v(i); i += 1 }
+      math.sqrt(s)
+    }
+    (qRows.map(_._1), qvs, qns)
+  }
+
   /** Exact top-k by cosine for each query vector — the correctness
     * baseline the ANN paths are measured against. O(N·Q) dot products by
-    * design; use [[lshTopK]]/[[ivfTopK]]/[[pqTopK]] at scale.
+    * design; use [[lshTopK]] or an [[AnnFamily]] ([[rebuildTopK]]) at
+    * scale.
     *
     * Shape: ONE corpus pass against the broadcast query set with a
-    * bounded per-query heap per partition (the [[pqTopK]] shortlist
+    * bounded per-query heap per partition (the ADC scan's shortlist
     * shape, exact instead of approximate). Every partition emits only
     * its local top-k per query (≤ k·Q·parts rows) and a global per-query
     * TopN merges heads — nothing else leaves the scan. The previous
@@ -399,27 +440,9 @@ object Similarity {
   def bruteForceTopK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val qSel = queries.select(col("vec_id"), col("embedding").cast("array<double>"))
-    // enforce the query-side-is-small CONTRACT in ONE execution: collect
-    // at most budget+1 rows — a mis-carved corpus-sized "query" frame
-    // still dies with the budget named and never OOMs the driver, and
-    // the query pipeline is not run twice for a count (review finding)
-    val qRows = qSel.limit(maxQueryBatch + 1).as[(Long, Array[Double])].collect()
-    require(qRows.length <= maxQueryBatch,
-      s"bruteForceTopK: query batch carries at least ${maxQueryBatch + 1} " +
-        s"rows, over maxQueryBatch ($maxQueryBatch; the one-execution probe " +
-        "stops counting at budget+1) — the exact baseline broadcasts the " +
-        "whole batch to every partition; tile the batch or use the ANN " +
-        "paths at this size")
-    if (qRows.isEmpty) return spark.emptyDataset[(Long, Long, Double)].toDF("qid", "vid", "cos")
-    val qids = qRows.map(_._1)
-    val qvs = qRows.map(_._2)
-    val qns = qvs.map { v =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      math.sqrt(s)
-    }
-    val bc = spark.sparkContext.broadcast((qids, qvs, qns))
+    val qBatch = gatherQueries(queries, "bruteForceTopK")
+    if (qBatch._1.isEmpty) return emptyTopK(spark)
+    val bc = spark.sparkContext.broadcast(qBatch)
     // worst-first ordering so heap.head is the eviction candidate:
     // smaller cos is worse; equal cos, larger vid is worse (the TopN
     // sort is cos desc, vid asc)
@@ -468,9 +491,7 @@ object Similarity {
           heaps(qi).iterator.map { case (cos, vid) => (ids(qi), vid, cos) })
       }
       .toDF("qid", "vid", "cos")
-    graft.operators.LimitBy
-      .limitBy(heads, Seq(col("qid")), Seq(col("cos").desc, col("vid").asc), k)
-      .select(col("qid"), col("vid"), round(col("cos"), 6).as("cos"))
+    topKByCos(heads, k)
   }
 
   /** Sign-LSH ANN: `tables` independent hash tables, each hashing the sign
@@ -486,21 +507,20 @@ object Similarity {
     * probed-bucket count, all on the broadcast side — far cheaper than
     * adding tables, which re-hash and re-shuffle the full candidate set.
     *
-    * `dim` defaults to the embedding width probed from one row (guarded:
-    * empty input → empty result, no driver exception).
+    * The embedding width is probed from one row (guarded: empty input →
+    * empty result, no driver exception).
+    *
+    * Unlike the [[AnnFamily]] rebuilds ([[rebuildTopK]]) this keeps its
+    * own one-pass kernel: at the board's 6 bits the family's join-based
+    * probe ([[lshProbe]]) degenerates toward a cross join (see
+    * [[lshIndexBits]]). The planes and the exact re-rank are shared.
     */
-  def lshTopK(emb: DataFrame, queries: DataFrame, k: Int, tables: Int, bits: Int,
-              dim: Int = -1): DataFrame = {
+  def lshTopK(emb: DataFrame, queries: DataFrame, k: Int, tables: Int, bits: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val d =
-      if (dim > 0) dim
-      else dimOf(emb)
-    if (d == 0) return spark.emptyDataset[(Long, Long, Double)].toDF("qid", "vid", "cos")
-
-    val rnd = new scala.util.Random(42)
-    val planes: Array[Array[Array[Double]]] =
-      Array.fill(tables)(Array.fill(bits)(Array.fill(d)(rnd.nextGaussian())))
+    val d = dimOf(emb)
+    if (d == 0) return emptyTopK(spark)
+    val planes = lshPlanesFor(d, bits, tables)
 
     // The query side is small BY DEFINITION (it is the broadcast side), so
     // the probe index lives in a driver-built broadcast: (table, bucket) →
@@ -511,25 +531,10 @@ object Similarity {
     // to be a (qid, vid, qv, cv) shuffle), and scores exact cosine against
     // the broadcast query vectors. Zero shuffles before the final top-k,
     // and the corpus is never row-multiplied ×tables.
-    // same one-execution budget probe as bruteForceTopK: the query side
-    // is small BY DEFINITION (it is the broadcast side), and a mis-carved
-    // corpus-sized frame dies naming the contract, not as a driver OOM
-    val qRows = queries
-      .select(col("vec_id").as("qid"), col("embedding").cast("array<double>").as("qv"))
-      .limit(maxQueryBatch + 1)
-      .as[(Long, Array[Double])].collect()
-    require(qRows.length <= maxQueryBatch,
-      s"lshTopK: query batch carries at least ${maxQueryBatch + 1} rows, " +
-        s"over maxQueryBatch ($maxQueryBatch; the one-execution probe stops " +
-        "counting at budget+1) — the one-shot path broadcasts the whole " +
-        "batch; use the standing-index probe and tile the batch at this size")
-    val qVecs: Map[Long, (Array[Double], Double)] = qRows.map { case (id, v) =>
-      var s = 0.0; var i = 0
-      while (i < v.length) { s += v(i) * v(i); i += 1 }
-      id -> (v, math.sqrt(s))
-    }.toMap
-    val probeIndex: Map[(Int, Int), Array[Long]] = qRows
-      .iterator
+    val (qids, qvs, qns) = gatherQueries(queries, "lshTopK")
+    val qVecs: Map[Long, (Array[Double], Double)] =
+      qids.indices.map(i => qids(i) -> (qvs(i), qns(i))).toMap
+    val probeIndex: Map[(Int, Int), Array[Long]] = qids.iterator.zip(qvs.iterator)
       .flatMap { case (id, v) =>
         Iterator.range(0, tables).flatMap { t =>
           val key = VecKernels.bucketKey(v, planes(t))
@@ -573,39 +578,28 @@ object Similarity {
         }
       }
       .toDF("qid", "vid", "cos")
-    graft.operators.LimitBy
-      .limitBy(cand, Seq(col("qid")), Seq(col("cos").desc, col("vid").asc), k)
-      .select(col("qid"), col("vid"), round(col("cos"), 6).as("cos"))
+    topKByCos(cand, k)
   }
 
-  /** IVF (inverted-file) ANN: a coarse k-means quantizer partitions the
-    * corpus into `nlist` cells; each vector lands in exactly ONE cell
-    * (vs LSH's `tables` copies), queries probe their `nprobe` nearest
-    * cells. Training runs on a bounded driver-side sample (`sampleCap`
-    * rows — the classic IVF recipe); assignment and search are fully
-    * distributed: one JIT'd pass to assign, one equi-join on cell id
-    * (broadcast query side), exact cosine re-rank. At 100 TB the cell id
-    * doubles as a write-time partition key, turning probes into
-    * partition-pruned scans.
-    */
-  def ivfTopK(emb: DataFrame, queries: DataFrame, k: Int, nlist: Int, nprobe: Int,
-              sampleCap: Int = 2048, seed: Long = 42L): DataFrame = {
-    val cv = emb.select(col("embedding").cast("array<double>"))
-    if (cv.limit(1).isEmpty) return emptyTopK(emb.sparkSession)
-    // 0 = density-scaled, resolved on ONE raw corpus count (metadata-
-    // cheap on parquet; lazy so explicit knobs never pay it — ADVICE
-    // r17: the nlist/nprobe pair used to count twice)
-    lazy val n = emb.count()
-    val nl = if (nlist > 0) nlist else densityNlist(n)
-    val centroids = trainCoarseQuantizer(cv, nl, normalize = false, seed,
-      sampleFloor = sampleCap)
-    val np = if (nprobe > 0) nprobe else densityNprobe(n, nl)
-    ivfProbe(ivfAssign(corpusOf(emb), centroids), centroids, queries, k, np)
+  /** ANN top-k that rebuilds the family's index per call: train the
+    * model over the corpus, encode the corpus under it, then probe that
+    * table through the family's own probe — the standing-index code,
+    * so a rebuild and a standing probe over the same corpus differ only
+    * in where the index came from. Owns the rebuild cost class on the
+    * board (the `x_sim_topk_*` rows). 0 knobs are density-scaled from
+    * ONE raw corpus count (metadata-cheap on parquet), which doubles as
+    * the emptiness check: an empty corpus returns no rows. */
+  def rebuildTopK(fam: AnnFamily, emb: DataFrame, queries: DataFrame, k: Int,
+      nlist: Int = 0, nprobe: Int = 0, shortlistFactor: Int = 0): DataFrame = {
+    val c = corpusOf(emb)
+    val n = c.count()
+    if (n == 0) return emptyTopK(emb.sparkSession)
+    val model = fam.train(c, if (nlist > 0) nlist else densityNlist(n))
+    fam.probe(fam.encode(c, model), c, model, queries, k, nprobe, shortlistFactor)(n)
   }
 
   /** One JIT'd pass assigning every (vid, cv) corpus vector to its IVF
-    * cell — the posting-list build half of [[ivfTopK]], shared with the
-    * standing IVF family ([[AnnFamily.Ivf]]). */
+    * cell — the posting-list build half of [[AnnFamily.Ivf]]. */
   private[llm] def ivfAssign(c: DataFrame, centroids: Array[Array[Double]]): DataFrame = {
     val spark = c.sparkSession
     import spark.implicits._
@@ -639,47 +633,11 @@ object Similarity {
         VecKernels.nearestCentroids(v, centroids, nprobe).iterator.map(cell => (id, cell))
       })
       .toDF("qid", "cell")
-    val cand = scoreCosine(
+    rerankTopK(
       assigned.join(broadcast(probes), Seq("cell"))
         .filter(col("qid") =!= col("vid"))
         .select(col("qid"), col("vid"), col("cv"))
-        .join(q, Seq("qid")))
-    graft.operators.LimitBy
-      .limitBy(cand, Seq(col("qid")), Seq(col("cos").desc, col("vid").asc), k)
-      .select(col("qid"), col("vid"), round(col("cos"), 6).as("cos"))
-  }
-
-  /** Product-quantization (PQ) ANN with an asymmetric-distance (ADC) scan.
-    *
-    * The embedding dimension is split into `m` subspaces; a per-subspace
-    * k-means codebook (`ksub` centroids, trained on a bounded driver-side
-    * sample of L2-NORMALIZED vectors) encodes each corpus vector as `m`
-    * byte codes. That codes column is the scale story: at 100 TB the ADC
-    * scan reads m bytes per vector instead of 4·dim floats (32x narrower
-    * at dim=64, m=8), and it is what a real deployment would materialize.
-    *
-    * Each query precomputes an ADC lookup table — m × ksub partial dots
-    * between its normalized subvectors and the codebook — so scoring a
-    * candidate costs m table adds instead of a dim-length dot. Since both
-    * sides are normalized, the ADC sum approximates cosine directly.
-    * The scan keeps a bounded per-query min-heap per partition (local
-    * top-s, s = shortlistFactor·k), so the shuffle after the scan carries
-    * at most partitions × Q × s rows — never the N × Q score matrix.
-    * The shortlist is broadcast back against the corpus for an exact
-    * cosine re-rank, then final top-k. Runs as the zero-centroid IVF-PQ
-    * ([[flatPqModel]]) through the one ADC scan, [[ivfPqScan]].
-    */
-  def pqTopK(emb: DataFrame, queries: DataFrame, k: Int, m: Int = 8, ksub: Int = 256,
-             sampleCap: Int = 2048, shortlistFactor: Int = 0, seed: Long = 42L): DataFrame = {
-    val c = corpusOf(emb)
-    val sample = normalizedSample(c.select(col("cv")), sampleCap)
-    if (sample.isEmpty) return emptyTopK(emb.sparkSession)
-    val model = flatPqModel(sample, m, ksub, seed)
-    // density knob resolved on the RAW corpus count (metadata-cheap on
-    // parquet) so the encode pass runs once, not once-per-resolution
-    val slf = if (shortlistFactor > 0) shortlistFactor
-              else densityShortlistFactor(c.count())
-    ivfPqScan(AnnFamily.Pq.encode(c, model), c, model, queries, k, nprobe = 1, slf)
+        .join(q, Seq("qid")), k)
   }
 
   /** Flat PQ as the zero-centroid IVF-PQ: one all-zero coarse centroid
@@ -705,8 +663,8 @@ object Similarity {
     spark.emptyDataset[(Long, Long, Double)].toDF("qid", "vid", "cos")
   }
 
-  /** Codebook training half of [[pqTopK]] (bounded driver sample, one
-    * per-subspace k-means each), shared with the standing-index path. */
+  /** Codebook training of the PQ families (bounded driver sample, one
+    * per-subspace k-means each). */
   private[llm] def pqTrain(sample: Array[Array[Double]], m: Int, ksub: Int,
       seed: Long): (Array[Array[Array[Double]]], Array[Int]) = {
     val d = sample(0).length
@@ -803,13 +761,17 @@ object Similarity {
     * to wherever the corpus ends. */
   private[llm] val quantizerDriverSampleCap = 65536
 
+  /** The smallest training sample any family draws: the historical 2048
+    * rows (small fixtures keep their certified models' sample size
+    * class). */
+  private[llm] val quantizerSampleFloor = 2048
+
   /** Training-sample size for a given cell count: points-per-cell ×
-    * nlist, floored at the historical 2048 (small fixtures keep their
-    * certified centroids' sample size class), capped at the driver
+    * nlist, floored at [[quantizerSampleFloor]], capped at the driver
     * budget (the switchover to distributed training). */
-  private[llm] def quantizerSampleSize(nlist: Int, sampleFloor: Int = 2048): Int =
+  private[llm] def quantizerSampleSize(nlist: Int): Int =
     math.min(quantizerDriverSampleCap.toLong,
-      math.max(sampleFloor.toLong, quantizerPointsPerCell.toLong * nlist)).toInt
+      math.max(quantizerSampleFloor.toLong, quantizerPointsPerCell.toLong * nlist)).toInt
 
   /** Train the coarse quantizer for `nlist` cells over a one-column
     * frame of `array<double>` vectors — the sample ceiling's
@@ -821,13 +783,12 @@ object Similarity {
     * driver traffic is nlist × dim doubles per iteration, never a
     * corpus-sized gather, so the shape holds at any density. */
   private[llm] def trainCoarseQuantizer(cv: DataFrame, nlist: Int,
-      normalize: Boolean, seed: Long, sampleFloor: Int = 2048,
-      iters: Int = 8): Array[Array[Double]] = {
+      normalize: Boolean, seed: Long, iters: Int = 8): Array[Array[Double]] = {
     val spark = cv.sparkSession
     import spark.implicits._
     def norm(v: Array[Double]): Array[Double] =
       if (normalize) VecKernels.normalize(v) else v
-    val need = math.max(sampleFloor.toLong, quantizerPointsPerCell.toLong * nlist)
+    val need = math.max(quantizerSampleFloor.toLong, quantizerPointsPerCell.toLong * nlist)
     if (need <= quantizerDriverSampleCap) {
       val sample = cv.limit(need.toInt).as[Array[Double]].collect().map(norm)
       require(sample.nonEmpty, "trainCoarseQuantizer: empty corpus")
@@ -852,18 +813,17 @@ object Similarity {
     * fixed (256), so the codebook sample is density-INdependent and
     * never outgrows the driver. */
   private[llm] def ivfPqTrainAt(cv: DataFrame, nlist: Int, m: Int, ksub: Int,
-      seed: Long, sampleFloor: Int = 2048)
-      : (Array[Array[Double]], Array[Array[Array[Double]]], Array[Int]) = {
-    val need = quantizerSampleSize(nlist, sampleFloor)
+      seed: Long): (Array[Array[Double]], Array[Array[Array[Double]]], Array[Int]) = {
+    val need = quantizerSampleSize(nlist)
     if (quantizerPointsPerCell.toLong * nlist <= quantizerDriverSampleCap) {
       // one bounded sample trains both quantizers — the classic recipe
       val sample = normalizedSample(cv, need)
       require(sample.nonEmpty, "ivfPqTrainAt: empty corpus")
       ivfPqTrain(sample, nlist, m, ksub, seed)
     } else {
-      val centroids = trainCoarseQuantizer(cv, nlist, normalize = true, seed,
-        sampleFloor)
-      val csample = normalizedSample(cv, math.max(sampleFloor, quantizerPointsPerCell * ksub))
+      val centroids = trainCoarseQuantizer(cv, nlist, normalize = true, seed)
+      val csample = normalizedSample(cv,
+        math.max(quantizerSampleFloor, quantizerPointsPerCell * ksub))
       val residuals = csample.map(v =>
         VecKernels.residual(v, centroids(VecKernels.nearestCentroid(v, centroids))))
       val (codebooks, bounds) = pqTrain(residuals, m, ksub, seed)
@@ -1111,38 +1071,7 @@ object Similarity {
     // `short` stays hinted (two longs per row, batch × s·8 bounded — the
     // hint keeps the corpus from shuffling on vid); the query-vector
     // frame is NOT hinted — AQE broadcasts it only when actually small
-    val rerank = c.join(broadcast(short), Seq("vid"))
-      .join(q, Seq("qid"))
-      .select(col("qid"), col("vid"), col("qv"), col("cv"))
-      .as[(Long, Long, Array[Double], Array[Double])]
-      .mapPartitions(_.map { case (qid, vid, qv, cv) =>
-        (qid, vid, VecKernels.cosine(qv, cv))
-      })
-      .toDF("qid", "vid", "cos")
-    graft.operators.LimitBy
-      .limitBy(rerank, Seq(col("qid")), Seq(col("cos").desc, col("vid").asc), k)
-      .select(col("qid"), col("vid"), round(col("cos"), 6).as("cos"))
-  }
-
-  /** IVF-PQ ANN top-k, rebuilding everything per call (training both
-    * quantizers on one bounded normalized sample) — owns the rebuild
-    * cost class; the standing path is [[indexProbe]] of
-    * [[AnnFamily.IvfPq]]. */
-  def ivfPqTopK(emb: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int = 0, nprobe: Int = 0, m: Int = 8, ksub: Int = 256,
-      sampleCap: Int = 2048, shortlistFactor: Int = 0, seed: Long = 42L): DataFrame = {
-    val c = corpusOf(emb)
-    if (c.limit(1).isEmpty) return emptyTopK(emb.sparkSession)
-    // density knobs resolved on ONE raw corpus count (lazy: explicit
-    // knobs never pay it) so the encode pass runs once
-    lazy val n = c.count()
-    val nl = if (nlist > 0) nlist else densityNlist(n)
-    val (centroids, codebooks, bounds) =
-      ivfPqTrainAt(c.select(col("cv")), nl, m, ksub, seed, sampleFloor = sampleCap)
-    val np = if (nprobe > 0) nprobe else densityNprobe(n, nl)
-    val slf = if (shortlistFactor > 0) shortlistFactor else densityShortlistFactor(n)
-    ivfPqScan(ivfPqEncodeDf(c, centroids, codebooks, bounds), c,
-      AnnModel(centroids, codebooks, bounds), queries, k, np, slf)
+    rerankTopK(c.join(broadcast(short), Seq("vid")).join(q, Seq("qid")), k)
   }
 
   /** Embedding-cosine near-duplicate PAIRS, exact: all (a < b) pairs with
@@ -1411,13 +1340,15 @@ object Similarity {
   // pay a full corpus pass anyway.
   private[llm] val lshIndexBits = 8
 
-  /** Hyperplanes are a pure function of (seed, dim, bits) — the same
-    * seeded gaussians [[lshTopK]] draws — so the probe path recomputes
-    * them instead of persisting model state (in production the seed
-    * rides the index's metadata file). */
-  private[llm] def lshPlanesFor(dim: Int, bits: Int = lshIndexBits): Array[Array[Array[Double]]] = {
+  /** Hyperplanes are a pure function of (seed, dim, bits, tables) — the
+    * one-shot [[lshTopK]] and the standing family draw the same seeded
+    * gaussians — so the probe path recomputes them instead of persisting
+    * model state (in production the seed rides the index's metadata
+    * file). */
+  private[llm] def lshPlanesFor(dim: Int, bits: Int = lshIndexBits,
+      tables: Int = lshTables): Array[Array[Array[Double]]] = {
     val rnd = new scala.util.Random(42)
-    Array.fill(lshTables)(Array.fill(bits)(Array.fill(dim)(rnd.nextGaussian())))
+    Array.fill(tables)(Array.fill(bits)(Array.fill(dim)(rnd.nextGaussian())))
   }
 
   /** Corpus (vid, cv) → (vid, t, bucket): one JIT'd hash pass per vector
@@ -1484,19 +1415,7 @@ object Similarity {
     val cand = index.join(broadcast(probeDf), Seq("t", "bucket"))
       .where(col("qid") =!= col("vid"))
       .select("qid", "vid").dropDuplicates("qid", "vid")
-    val scored = corpus
-      .join(cand, Seq("vid"))
-      .join(q, Seq("qid"))
-      .select(col("qid"), col("vid"), col("qv"), col("cv"))
-      .as[(Long, Long, Array[Double], Array[Double])]
-      // same IEEE operation order as the previous inline kernel
-      .mapPartitions(_.map { case (qid, vid, qv, cv) =>
-        (qid, vid, VecKernels.cosine(qv, cv))
-      })
-      .toDF("qid", "vid", "cos")
-    graft.operators.LimitBy
-      .limitBy(scored, Seq(col("qid")), Seq(col("cos").desc, col("vid").asc), k)
-      .select(col("qid"), col("vid"), round(col("cos"), 6).as("cos"))
+    rerankTopK(corpus.join(cand, Seq("vid")).join(q, Seq("qid")), k)
   }
 
   /** First-row vector width of `column` (0 on an empty frame) — one

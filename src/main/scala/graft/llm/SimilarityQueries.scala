@@ -234,7 +234,9 @@ object SimilarityQueries extends QueryRegistry {
   /** Batch probe against the STANDING index (build once, probe per
     * batch): the pinned table is reused, so this row times the probe
     * path while the family's `x_sim_topk_*` row keeps owning the
-    * rebuild cost. */
+    * rebuild cost. Both rows run the family's one probe
+    * ([[rebuildTopK]] trains, encodes, then probes), so they differ
+    * only in the build. */
   private def probeRow(name: String, fam: AnnFamily, minRecall: Double): QueryDef =
     QueryDef(name, (s, d) => annRecallContract(
       indexProbe(s, d, fam, queriesOf(t(s, d, "embeddings")), k = 5),
@@ -454,7 +456,7 @@ object SimilarityQueries extends QueryRegistry {
       (s, d) => {
         val emb = t(s, d, "embeddings")
         annRecallContract(
-          ivfTopK(emb, queriesOf(emb), k = 5, nlist = 0, nprobe = 0),
+          rebuildTopK(AnnFamily.Ivf, emb, queriesOf(emb), k = 5),
           bruteTopKFor(s, d, 5), minRecall = 0.55)
       },
       contractOracle("recall_ok")),
@@ -472,7 +474,7 @@ object SimilarityQueries extends QueryRegistry {
       (s, d) => {
         val emb = t(s, d, "embeddings")
         annRecallContract(
-          pqTopK(emb, queriesOf(emb), k = 5, m = 8, ksub = 256),
+          rebuildTopK(AnnFamily.Pq, emb, queriesOf(emb), k = 5),
           bruteTopKFor(s, d, 5), minRecall = 0.8)
       },
       contractOracle("recall_ok")),
@@ -484,9 +486,10 @@ object SimilarityQueries extends QueryRegistry {
     coldRow("x_sim_index_cold_probe_lsh", AnnFamily.Lsh, minRecall = 0.45, "cold_eq_warm"),
 
     // ---- composed IVF-PQ top-5, recall-certified: the rebuild row —
-    // trains BOTH quantizers on one bounded normalized sample (r16:
-    // by_residual codes + ksub 256), encodes the corpus into (vid,
-    // cell, codes), cell-pruned ADC scan. Floor below the PQ row's:
+    // the family's lifecycle per rep: trains BOTH quantizers on one
+    // bounded normalized sample (r16: by_residual codes + ksub 256),
+    // encodes the corpus into (vid, cell, codes), then the standing
+    // probe's cell-pruned ADC scan. Floor below the PQ row's:
     // the two approximations compound (nprobe-of-nlist pruning ×
     // 8-byte codes). r16's fixed knobs measured 0.65 at sf0.01 but
     // 0.48 at sf0.1 (the r16 verdict weak); the density-scaled triple
@@ -498,7 +501,7 @@ object SimilarityQueries extends QueryRegistry {
       (s, d) => {
         val emb = t(s, d, "embeddings")
         annRecallContract(
-          ivfPqTopK(emb, queriesOf(emb), k = 5),
+          rebuildTopK(AnnFamily.IvfPq, emb, queriesOf(emb), k = 5),
           bruteTopKFor(s, d, 5), minRecall = 0.6)
       },
       contractOracle("recall_ok")),

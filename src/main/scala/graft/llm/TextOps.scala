@@ -160,37 +160,34 @@ object TextOps {
     * score then doc_id, so rank order is engine-portable.
     *
     * `isQuery` selects query docs by doc_id; query docs never score
-    * themselves.
+    * themselves. A rebuild is the standing-index code over freshly built
+    * state: tokenize, [[bm25Stats]], [[bm25Score]].
     */
-  def bm25TopK(docs: DataFrame, isQuery: org.apache.spark.sql.Column, k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // the postings subtree appears three times in the one scoring plan
-    // (df shuffle, query-term slice, scoring join) and Catalyst does
-    // not share subtrees across branches — checkpointed so the rebuild
-    // row pays its corpus tokenize ONCE per rep, not three times (r18;
-    // the row still owns the full rebuild cost class)
+  def bm25TopK(docs: DataFrame, isQuery: org.apache.spark.sql.Column, k: Int): DataFrame = {
+    // the postings feed the statistics, the query-term slice and the
+    // scoring join — checkpointed so the rebuild pays its corpus
+    // tokenize ONCE per call, not once per consumer (r18; the row still
+    // owns the full rebuild cost class)
     val tf = bm25Postings(docs).localCheckpoint()
-    val dfT = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val stats = docs
-      .select(size(split(col("text"), " ", -1)).cast("long").as("dl"))
-      .agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl"))
-    val q = tf.where(isQuery).select(col("doc_id").as("query_id"), col("term"))
-    val qIdf = dfT.join(broadcast(q), Seq("term"))
-    val scored = tf
-      .join(broadcast(qIdf), Seq("term"))
-      .where(col("doc_id") =!= col("query_id"))
-      .crossJoin(broadcast(stats))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(
-        log(lit(1.0) + (col("n") - col("df") + 0.5) / (col("df") + 0.5)) *
-          (col("tf") * (k1 + 1.0)) /
-          (col("tf") + lit(k1) * (col("dl") * b / col("avgdl") + (1.0 - b))))
-        .as("s0"))
-      .select(col("query_id"), col("doc_id"), round(col("s0"), 6).as("score"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("score").desc, col("doc_id").asc)
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
+    val (dfs, n, sumDl) = bm25Stats(tf)
+    bm25Score(tf, dfs, n, sumDl,
+      tf.where(isQuery).select(col("doc_id").as("query_id"), col("term")), k)
+  }
+
+  /** BM25's corpus statistics of a postings table: the per-term document
+    * frequencies (term, df) — lazy, the one corpus-wide shuffle — and
+    * the exact-integer (n, Σdl) scalars, computed now. Every BM25 state
+    * (a rebuild, the standing index, a maintenance batch) derives its
+    * statistics here; callers checkpoint the dfs where they reuse them.
+    * The scalars fold the per-doc rows in their partitions: one shuffle
+    * (the per-doc dedup), where a global aggregate would add a second. */
+  private[llm] def bm25Stats(postings: DataFrame): (DataFrame, Long, Long) = {
+    val spark = postings.sparkSession
+    import spark.implicits._
+    val (n, sumDl) = postings.select("doc_id", "dl").dropDuplicates("doc_id")
+      .select(col("dl")).as[Long].rdd
+      .aggregate((0L, 0L))((a, dl) => (a._1 + 1, a._2 + dl), (a, b) => (a._1 + b._1, a._2 + b._2))
+    (postings.groupBy("term").agg(count(lit(1)).as("df")), n, sumDl)
   }
 
   /** Per-doc (term, tf, dl) postings — the tokenize half of
@@ -255,22 +252,24 @@ object TextOps {
     * rebuild — avgdl derives as Σdl/n at probe time). */
   def bm25TermStatsFor(s: SparkSession, d: String, variant: String = "raw"): DataFrame =
     bm25StatsCache.getOrCompute(s, (d, variant)) {
-      val postings = bm25IndexFor(s, d, variant)
-      val row = postings.select("doc_id", "dl").dropDuplicates("doc_id")
-        .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl"))
-        .collect()(0)
-      bm25ScalarsCache.put((s.sparkContext.applicationId, d, variant),
-        (row.getLong(0), row.getLong(1)))
-      postings.groupBy("term").agg(count(lit(1)).as("df")).localCheckpoint()
+      val (dfs, n, sumDl) = bm25Stats(bm25IndexFor(s, d, variant))
+      bm25ScalarsCache.put((s.sparkContext.applicationId, d, variant), (n, sumDl))
+      dfs.localCheckpoint()
     }
 
-  /** Scoring half against explicit index state: query terms broadcast
-    * into the df table, then that tiny (query, term, df) set broadcasts
-    * into the postings — the same three-shuffle-bounded shape as
-    * [[bm25TopK]], minus the corpus tokenize and the df shuffle. */
+  /** Okapi BM25's term-frequency saturation and length normalization,
+    * the standard defaults (the oracles hard-code the same two). */
+  private val Bm25K1 = 1.2
+  private val Bm25B = 0.75
+
+  /** The one BM25 scorer, against explicit index state (postings, dfs,
+    * exact (n, Σdl)): query terms broadcast into the df table, then that
+    * tiny (query, term, df) set broadcasts into the postings — scoring
+    * is a map-side join, one (query_id, doc_id) partial-agg and the
+    * per-query top-k window. The rebuild, standing, cold and maintained
+    * paths all score here. */
   private[llm] def bm25Score(postings: DataFrame, termStats: DataFrame,
-      n: Long, sumDl: Long, qTerms: DataFrame, k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      n: Long, sumDl: Long, qTerms: DataFrame, k: Int): DataFrame = {
     val avgdl = sumDl.toDouble / n
     val qIdf = termStats.join(broadcast(qTerms), Seq("term"))
     val scored = postings
@@ -279,8 +278,8 @@ object TextOps {
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(
         log(lit(1.0) + (lit(n) - col("df") + 0.5) / (col("df") + 0.5)) *
-          (col("tf") * (k1 + 1.0)) /
-          (col("tf") + lit(k1) * (col("dl") * b / lit(avgdl) + (1.0 - b))))
+          (col("tf") * (Bm25K1 + 1.0)) /
+          (col("tf") + lit(Bm25K1) * (col("dl") * Bm25B / lit(avgdl) + (1.0 - Bm25B))))
         .as("s0"))
       .select(col("query_id"), col("doc_id"), round(col("s0"), 6).as("score"))
     val w = org.apache.spark.sql.expressions.Window
@@ -295,7 +294,7 @@ object TextOps {
     * identical to [[bm25TopK]] over the same corpus by construction
     * (same postings, same integer stats). */
   def bm25IndexProbe(s: SparkSession, d: String, queries: DataFrame, k: Int,
-      k1: Double = 1.2, b: Double = 0.75, variant: String = "raw"): DataFrame = {
+      variant: String = "raw"): DataFrame = {
     val postings = bm25IndexFor(s, d, variant)
     val termStats = bm25TermStatsFor(s, d, variant)
     val scalars = bm25ScalarsCache.get((s.sparkContext.applicationId, d, variant))
@@ -303,7 +302,7 @@ object TextOps {
       "bm25TermStatsFor must compute in this application before probing")
     val (n, sumDl) = scalars
     val qTerms = bm25Postings(queries).select(col("doc_id").as("query_id"), col("term"))
-    bm25Score(postings, termStats, n, sumDl, qTerms, k, k1, b)
+    bm25Score(postings, termStats, n, sumDl, qTerms, k)
   }
 
   // ---- realistic-vocabulary retrieval fixture (VERDICT r13 next-#4 /
@@ -385,14 +384,12 @@ object TextOps {
     * disk-level maintenance paths share. */
   private def foldBm25Batch(dfs: DataFrame, n: Long, sumDl: Long,
       batch: DataFrame): (DataFrame, Long, Long) = {
-    val row = batch.select("doc_id", "dl").dropDuplicates("doc_id")
-      .agg(count(lit(1)).as("nb"), coalesce(sum("dl"), lit(0L)).as("sdl"))
-      .collect()(0)
+    val (dfB, nB, sumDlB) = bm25Stats(batch)
     val merged = dfs
-      .join(batch.groupBy("term").agg(count(lit(1)).as("df_b")), Seq("term"), "full")
+      .join(dfB.withColumnRenamed("df", "df_b"), Seq("term"), "full")
       .select(col("term"),
         (coalesce(col("df"), lit(0L)) + coalesce(col("df_b"), lit(0L))).as("df"))
-    (merged, n + row.getLong(0), sumDl + row.getLong(1))
+    (merged, n + nB, sumDl + sumDlB)
   }
 
   // ---- cross-application persistence: the BM25 artifact is ONE
@@ -493,11 +490,9 @@ object TextOps {
     * probe (all merged state is integer-exact; scores round to 6 dp
     * before ranking, absorbing summation-order jitter exactly as the
     * DuckDB oracle comparison does). */
-  def bm25ColdProbe(s: SparkSession, path: String, queries: DataFrame, k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame =
+  def bm25ColdProbe(s: SparkSession, path: String, queries: DataFrame, k: Int): DataFrame =
     bm25ColdProbeTerms(s, path,
-      bm25Postings(queries).select(col("doc_id").as("query_id"), col("term")),
-      k, k1, b)
+      bm25Postings(queries).select(col("doc_id").as("query_id"), col("term")), k)
 
   /** [[bm25ColdProbe]] against PRE-TOKENIZED query terms — the COLD half
     * of the contract is the artifact read (postings + dfs + sidecar per
@@ -506,10 +501,10 @@ object TextOps {
     * probe set (x_pipe_daily: 4 cold probes of the same 100-doc batch)
     * tokenizes it once and passes the terms here (r19). */
   def bm25ColdProbeTerms(s: SparkSession, path: String, qTerms: DataFrame,
-      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      k: Int): DataFrame = {
     val meta = IndexStore.readMeta(s, s"$path/state")
     bm25Score(loadBm25Postings(s, path), IndexStore.loadAux(s, s"$path/state", "dfs"),
-      meta("n").toLong, meta("sumDl").toLong, qTerms, k, k1, b)
+      meta("n").toLong, meta("sumDl").toLong, qTerms, k)
   }
 
   /** Hard-negative mining for contrastive training: candidates that are

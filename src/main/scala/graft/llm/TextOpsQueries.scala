@@ -528,26 +528,20 @@ object TextOpsQueries extends QueryRegistry {
 
     // ---- tf-idf keyword extraction: top-3 terms per doc by
     // tf·ln(N/df) — the tagging/clustering primitive next to BM25's
-    // retrieval. Same scale shape as bm25TopK's statistics (df is the
-    // one corpus shuffle; scoring rides the per-doc tf rows); rank ties
+    // retrieval, over BM25's postings and statistics (df is the one
+    // corpus shuffle; scoring rides the per-doc tf rows); rank ties
     // break on the rounded score then the term so order is
     // engine-portable. ----
     QueryDef(
       "x_text_keywords",
       (s, d) => {
-        val docs = t(s, d, "documents")
-        val toks = docs.select(col("doc_id"),
-          explode(split(col("text"), " ", -1)).as("term"))
-        val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-        val dfT = tf.groupBy("term").agg(count(lit(1)).as("df"))
-        val n = docs.agg(count(lit(1)).as("n"))
+        val tf = bm25Postings(t(s, d, "documents"))
+        val (dfT, n, _) = bm25Stats(tf)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("doc_id").orderBy(col("score").desc, col("term").asc)
         tf.join(dfT, Seq("term"))
-          .crossJoin(broadcast(n))
           .select(col("doc_id"), col("term"),
-            round(col("tf") * log(col("n").cast("double") / col("df")), 6)
-              .as("score"))
+            round(col("tf") * log(lit(n.toDouble) / col("df")), 6).as("score"))
           .withColumn("rank", row_number().over(w).cast("long"))
           .where(col("rank") <= 3)
       },
@@ -602,8 +596,9 @@ object TextOpsQueries extends QueryRegistry {
     // corpus scalars are pinned persisted artifacts; this row times the
     // per-batch path — tokenize the QUERY batch only, broadcast its
     // term set into the df table then the postings — while x_text_bm25
-    // keeps owning the tokenize+df rebuild cost. Same query set, same
-    // scores: the oracle replays full BM25 top-5 independently. ----
+    // keeps owning the tokenize+df rebuild cost; both score through
+    // bm25Score. Same query set, same scores: the oracle replays full
+    // BM25 top-5 independently. ----
     QueryDef(
       "x_retr_index_probe",
       (s, d) => bm25IndexProbe(s, d,
@@ -645,12 +640,8 @@ object TextOpsQueries extends QueryRegistry {
         val docs = t(s, d, "documents")
         val slice = pmod(col("doc_id"), lit(5L))
         val p0 = bm25Postings(docs.where(slice >= 2))
-        val ts0 = p0.groupBy("term").agg(count(lit(1)).as("df"))
-        val r0 = p0.select("doc_id", "dl").dropDuplicates("doc_id")
-          .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl"))
-          .collect()(0)
-        val (p1, ts1, n1, sdl1) = mergeBm25Index(
-          p0, ts0, r0.getLong(0), r0.getLong(1), docs.where(slice === 1))
+        val (ts0, n0, sdl0) = bm25Stats(p0)
+        val (p1, ts1, n1, sdl1) = mergeBm25Index(p0, ts0, n0, sdl0, docs.where(slice === 1))
         val qTerms = bm25Postings(
           docs.where(col("doc_id") % 50 === 0 && col("doc_id") < 5000))
           .select(col("doc_id").as("query_id"), col("term"))
@@ -731,9 +722,10 @@ object TextOpsQueries extends QueryRegistry {
     // ---- BM25 rebuild-class owner on the ZIPF fixture (the realistic-
     // vocabulary pair, VERDICT r13 next-#4): derive the corpus, tokenize
     // it, shuffle the dfs, compute the scalars — the full per-batch
-    // rebuild — then score the short-query batch. Every rep re-pays the
+    // rebuild — then score the short-query batch with the standing
+    // index's scorer, as bm25TopK does. Every rep re-pays the
     // corpus-wide costs; x_retr_vocab_probe runs the SAME queries
-    // against the standing index and should separate clearly. ----
+    // against the standing index and differs only in the build. ----
     QueryDef(
       "x_text_bm25_zipf",
       (s, d) => {
@@ -742,13 +734,10 @@ object TextOpsQueries extends QueryRegistry {
         // checkpointed for the same three-branch reason as bm25TopK's
         // postings (r18) — the rebuild is still paid, once
         val p = bm25Postings(zipfDocs(docs)).localCheckpoint()
-        val ts = p.groupBy("term").agg(count(lit(1)).as("df"))
-        val r = p.select("doc_id", "dl").dropDuplicates("doc_id")
-          .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl"))
-          .collect()(0)
+        val (ts, n, sdl) = bm25Stats(p)
         val qTerms = bm25Postings(zipfQueries(docs, qSel))
           .select(col("doc_id").as("query_id"), col("term"))
-        bm25Score(p, ts, r.getLong(0), r.getLong(1), qTerms, k = 5)
+        bm25Score(p, ts, n, sdl, qTerms, k = 5)
       },
       Some(zipfBm25Oracle)),
 
@@ -874,12 +863,10 @@ object TextOpsQueries extends QueryRegistry {
         // the df shuffle run once per rep, not once per consumer (r18,
         // guide §1.2: don't recompute what you already have)
         val p0 = bm25Postings(docs.where(slice >= 2)).localCheckpoint()
-        val ts0 = p0.groupBy("term").agg(count(lit(1)).as("df")).localCheckpoint()
-        val r0 = p0.select("doc_id", "dl").dropDuplicates("doc_id")
-          .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl"))
-          .collect()(0)
+        val (dfs0, n0, sdl0) = bm25Stats(p0)
+        val ts0 = dfs0.localCheckpoint()
         val path = ArtifactQueries.artifactPath(s, d, "bm25_disk")
-        saveBm25State(path, p0, ts0, r0.getLong(0), r0.getLong(1))
+        saveBm25State(path, p0, ts0, n0, sdl0)
         appendBm25Index(s, path, docs.where(slice === 1))
         val before = IndexStore.dataFileCount(s, s"$path/state")
         compactBm25Postings(s, path)
@@ -894,7 +881,7 @@ object TextOpsQueries extends QueryRegistry {
           t(fresh, d, "documents").where(qSel), k = 5)
         val coldW = ArtifactQueries.recreate(s, cold)
         val (p1, ts1, n1, sdl1) = mergeBm25Index(
-          p0, ts0, r0.getLong(0), r0.getLong(1), docs.where(slice === 1))
+          p0, ts0, n0, sdl0, docs.where(slice === 1))
         val qTerms = bm25Postings(docs.where(qSel))
           .select(col("doc_id").as("query_id"), col("term"))
         val direct = bm25Score(p1, ts1, n1, sdl1, qTerms, k = 5)
@@ -951,12 +938,10 @@ object TextOpsQueries extends QueryRegistry {
         // checkpointed for the same three-consumer reason as the raw
         // disk chain (save + merge + direct re-score)
         val p0 = bm25Postings(z.where(slice >= 2)).localCheckpoint()
-        val ts0 = p0.groupBy("term").agg(count(lit(1)).as("df")).localCheckpoint()
-        val r0 = p0.select("doc_id", "dl").dropDuplicates("doc_id")
-          .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl"))
-          .collect()(0)
+        val (dfs0, n0, sdl0) = bm25Stats(p0)
+        val ts0 = dfs0.localCheckpoint()
         val path = ArtifactQueries.artifactPath(s, d, "bm25zipf_disk")
-        saveBm25State(path, p0, ts0, r0.getLong(0), r0.getLong(1))
+        saveBm25State(path, p0, ts0, n0, sdl0)
         appendBm25Index(s, path, z.where(slice === 1))
         val before = IndexStore.dataFileCount(s, s"$path/state")
         compactBm25Postings(s, path)
@@ -969,7 +954,7 @@ object TextOpsQueries extends QueryRegistry {
           zipfQueries(t(fresh, d, "documents"), qSel), k = 5)
         val coldW = ArtifactQueries.recreate(s, cold)
         val (p1, ts1, n1, sdl1) = mergeBm25Index(
-          p0, ts0, r0.getLong(0), r0.getLong(1), z.where(slice === 1))
+          p0, ts0, n0, sdl0, z.where(slice === 1))
         val qTerms = bm25Postings(zipfQueries(docs, qSel))
           .select(col("doc_id").as("query_id"), col("term"))
         val direct = bm25Score(p1, ts1, n1, sdl1, qTerms, k = 5)
@@ -1026,11 +1011,9 @@ object TextOpsQueries extends QueryRegistry {
             val cur = state.get()
             if (cur == null) {
               val p0 = bm25Postings(batch.toDF()).localCheckpoint()
-              val ts0 = p0.groupBy("term").agg(count(lit(1)).as("df")).localCheckpoint()
-              val r0 = p0.select("doc_id", "dl").dropDuplicates("doc_id")
-                .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl"))
-                .collect()(0)
-              state.set((p0, ts0, r0.getLong(0), r0.getLong(1)))
+              val (dfs0, n0, sdl0) = bm25Stats(p0)
+              val ts0 = dfs0.localCheckpoint()
+              state.set((p0, ts0, n0, sdl0))
             } else {
               probed.addAndGet(
                 bm25Score(cur._1, cur._2, cur._3, cur._4, qTerms, k = 5).count())
@@ -1072,12 +1055,10 @@ object TextOpsQueries extends QueryRegistry {
           .where(col("m").isNull || col("r").isNull).count()
         require(badP == 0,
           s"streamed BM25 postings diverged from the direct build ($badP rows)")
-        val dr = directP.select("doc_id", "dl").dropDuplicates("doc_id")
-          .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl"))
-          .collect()(0)
-        require(st._3 == dr.getLong(0) && st._4 == dr.getLong(1),
+        val (_, dn, dsdl) = bm25Stats(directP)
+        require(st._3 == dn && st._4 == dsdl,
           s"streamed BM25 scalars diverged: (${st._3}, ${st._4}) vs " +
-            s"(${dr.getLong(0)}, ${dr.getLong(1)})")
+            s"($dn, $dsdl)")
         bm25Score(st._1, st._2, st._3, st._4, qTerms, k = 5)
       },
       Some("""WITH corp AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 <> 0),
@@ -1157,11 +1138,9 @@ object TextOpsQueries extends QueryRegistry {
               val cur = state.get()
               if (cur == null) {
                 val p0 = bm25Postings(batch.toDF()).localCheckpoint()
-                val ts0 = p0.groupBy("term").agg(count(lit(1)).as("df")).localCheckpoint()
-                val r0 = p0.select("doc_id", "dl").dropDuplicates("doc_id")
-                  .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl"))
-                  .collect()(0)
-                state.set((p0, ts0, r0.getLong(0), r0.getLong(1)))
+                val (dfs0, n0, sdl0) = bm25Stats(p0)
+                val ts0 = dfs0.localCheckpoint()
+                state.set((p0, ts0, n0, sdl0))
               } else {
                 probed.addAndGet(
                   bm25Score(cur._1, cur._2, cur._3, cur._4, qTerms, k = 5).count())
@@ -1203,12 +1182,10 @@ object TextOpsQueries extends QueryRegistry {
           .where(col("m").isNull || col("r").isNull).count()
         require(badP == 0,
           s"file-ingested BM25 postings diverged from the direct build ($badP rows)")
-        val dr = directP.select("doc_id", "dl").dropDuplicates("doc_id")
-          .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl"))
-          .collect()(0)
-        require(st._3 == dr.getLong(0) && st._4 == dr.getLong(1),
+        val (_, dn, dsdl) = bm25Stats(directP)
+        require(st._3 == dn && st._4 == dsdl,
           s"file-ingested BM25 scalars diverged: (${st._3}, ${st._4}) vs " +
-            s"(${dr.getLong(0)}, ${dr.getLong(1)})")
+            s"($dn, $dsdl)")
         bm25Score(st._1, st._2, st._3, st._4, qTerms, k = 5)
       },
       Some("""WITH corp AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 <> 0),
@@ -1293,12 +1270,10 @@ object TextOpsQueries extends QueryRegistry {
         // self-contained daily cycle, standing-build cost included) ----
         val standing = docs.where(pmod(col("doc_id"), lit(5L)) =!= 0)
         val p0 = bm25Postings(standing).localCheckpoint()
-        val ts0 = p0.groupBy("term").agg(count(lit(1)).as("df"))
-        val r0 = p0.select("doc_id", "dl").dropDuplicates("doc_id")
-          .agg(count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("sdl")).collect()(0)
+        val (ts0, n0, sdl0) = bm25Stats(p0)
         val tmp = java.nio.file.Files.createTempDirectory("graft_pipe_daily_")
         val idxPath = tmp.resolve("bm25").toString
-        saveBm25State(idxPath, p0, ts0, r0.getLong(0), r0.getLong(1))
+        saveBm25State(idxPath, p0, ts0, n0, sdl0)
         val standVec = emb.where(pmod(col("vec_id"), lit(5L)) =!= 0)
           .select(col("vec_id").as("vid"), col("embedding").cast("array<double>").as("cv"))
         require(!standVec.limit(1).isEmpty, s"x_pipe_daily($d): empty standing embeddings")
@@ -1468,10 +1443,10 @@ object TextOpsQueries extends QueryRegistry {
           s"x_pipe_daily: artifact doc set diverged from standing∪admitted ($missed)")
         // sidecar scalars ≡ recomputed from the served postings
         val meta = IndexStore.readMeta(s, s"$idxPath/state")
-        val sr = served.agg(count(lit(1)), coalesce(sum("dl"), lit(0L))).collect()(0)
-        require(meta("n").toLong == sr.getLong(0) && meta("sumDl").toLong == sr.getLong(1),
+        val (_, sn, ssdl) = bm25Stats(loadBm25Postings(s, idxPath))
+        require(meta("n").toLong == sn && meta("sumDl").toLong == ssdl,
           s"x_pipe_daily: sidecar scalars (${meta("n")}, ${meta("sumDl")}) diverged " +
-            s"from the served postings (${sr.getLong(0)}, ${sr.getLong(1)})")
+            s"from the served postings ($sn, $ssdl)")
         // manifest = the initial segment + one per committed append
         val mf = bm25ManifestRows(s, idxPath).size
         require(mf == 1 + appends.get(),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Bucketed co-located join — the pre-shuffle strategy that makes the
@@ -21,24 +21,27 @@ object Bucketed {
   private val written = new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
   /** Bucketed copies of lineitem/orders keyed on the join key; written
-    * once per (session, sfDir) and registered in the session catalog.
+    * once per (process, sfDir) under the process's [[graft.Scratch]]
+    * root — two JVMs on one fixture never overwrite each other's copy —
+    * and registered in the session catalog.
     */
   def tables(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val names = written.computeIfAbsent(d, _ => {
       val suffix = math.abs(d.hashCode).toString
+      val dir = Scratch.root.resolve("graft_buckets")
       val li = s"graft_bkt_lineitem_$suffix"
       val ord = s"graft_bkt_orders_$suffix"
       Tables.t(s, d, "lineitem")
         .select("l_orderkey", "l_extendedprice", "l_discount")
         .write.mode("overwrite").format("parquet")
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .option("path", s"/tmp/graft_buckets/li_$suffix")
+        .option("path", dir.resolve(s"li_$suffix").toString)
         .saveAsTable(li)
       Tables.t(s, d, "orders")
         .select("o_orderkey", "o_orderpriority")
         .write.mode("overwrite").format("parquet")
         .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .option("path", s"/tmp/graft_buckets/ord_$suffix")
+        .option("path", dir.resolve(s"ord_$suffix").toString)
         .saveAsTable(ord)
       (li, ord)
     })

@@ -1,7 +1,6 @@
 package graft.sources
 
-import java.util.concurrent.atomic.AtomicLong
-import graft.{QueryDef, QueryRegistry, Tables}
+import graft.{QueryDef, QueryRegistry, Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,17 +19,13 @@ import org.apache.spark.sql.functions._
 object FormatsQueries extends QueryRegistry {
   import Formats._
 
-  private val seq = new AtomicLong()
-
   private def roundTrip(
       s: SparkSession, d: String, fmt: String)(opts: Map[String, String]): DataFrame = {
     val src = Tables.t(s, d, "supplier")
       .select(col("s_suppkey"), col("s_name"), col("s_nationkey"), col("s_acctbal"))
-    val dir = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft-$fmt-rt-${ProcessHandle.current().pid()}-${seq.incrementAndGet()}")
-    src.write.mode("overwrite").options(opts).format(fmt).save(dir.toString)
-    s.read.schema(src.schema).options(opts).format(fmt).load(dir.toString)
+    val dir = Scratch.fresh(s"$fmt-rt")
+    src.write.mode("overwrite").options(opts).format(fmt).save(dir)
+    s.read.schema(src.schema).options(opts).format(fmt).load(dir)
   }
 
   private val oracle =
@@ -58,9 +53,7 @@ object FormatsQueries extends QueryRegistry {
       "b_src10_schema_evolution",
       (s, d) => {
         val src = Tables.t(s, d, "supplier")
-        val dir = new java.io.File(
-          System.getProperty("java.io.tmpdir"),
-          s"graft-evo-${ProcessHandle.current().pid()}-${seq.incrementAndGet()}").toString
+        val dir = Scratch.fresh("evo")
         src.select(col("s_suppkey"), col("s_name"))
           .where(col("s_suppkey") % 2 === 0)
           .write.mode("overwrite").parquet(s"$dir/v=1")
@@ -80,9 +73,7 @@ object FormatsQueries extends QueryRegistry {
       (s, d) => {
         val src = Tables.t(s, d, "supplier")
           .select(col("s_suppkey"), col("s_name"), col("s_nationkey"), col("s_acctbal"))
-        val dir = new java.io.File(
-          System.getProperty("java.io.tmpdir"),
-          s"graft-arrows-${ProcessHandle.current().pid()}-${seq.incrementAndGet()}").toString
+        val dir = Scratch.fresh("arrows")
         ArrowIpc.write(src, dir)
         ArrowIpc.read(s, dir)
       },
@@ -99,9 +90,7 @@ object FormatsQueries extends QueryRegistry {
     QueryDef(
       "b_src12_partitioned_scan",
       (s, d) => {
-        val dir = new java.io.File(
-          System.getProperty("java.io.tmpdir"),
-          s"graft-partby-${ProcessHandle.current().pid()}-${seq.incrementAndGet()}").toString
+        val dir = Scratch.fresh("partby")
         Tables.t(s, d, "orders")
           .withColumn("o_year", year(col("o_orderdate")))
           .write.mode("overwrite").partitionBy("o_year").parquet(dir)
@@ -168,9 +157,7 @@ object FormatsQueries extends QueryRegistry {
     QueryDef(
       "b_src14_compaction",
       (s, d) => {
-        val base = new java.io.File(
-          System.getProperty("java.io.tmpdir"),
-          s"graft-compact-${ProcessHandle.current().pid()}-${seq.incrementAndGet()}")
+        val base = new java.io.File(Scratch.fresh("compact"))
         val small = new java.io.File(base, "small").toString
         val compacted = new java.io.File(base, "compacted").toString
         Tables.t(s, d, "lineitem")
@@ -217,9 +204,7 @@ object FormatsQueries extends QueryRegistry {
     QueryDef(
       "b_src18_partition_overwrite",
       (s, d) => {
-        val dir = new java.io.File(
-          System.getProperty("java.io.tmpdir"),
-          s"graft-dynpart-${ProcessHandle.current().pid()}-${seq.incrementAndGet()}").toString
+        val dir = Scratch.fresh("dynpart")
         val orders = Tables.t(s, d, "orders")
           .withColumn("o_year", year(col("o_orderdate")))
         orders.write.mode("overwrite").partitionBy("o_year").parquet(dir)
@@ -246,9 +231,7 @@ object FormatsQueries extends QueryRegistry {
     QueryDef(
       "b_src17_compression",
       (s, d) => {
-        val dir = new java.io.File(
-          System.getProperty("java.io.tmpdir"),
-          s"graft-zstd-${ProcessHandle.current().pid()}-${seq.incrementAndGet()}").toString
+        val dir = Scratch.fresh("zstd")
         Tables.t(s, d, "supplier")
           .select(col("s_suppkey"), col("s_name"), col("s_nationkey"), col("s_acctbal"))
           .write.mode("overwrite").option("compression", "zstd").parquet(dir)

@@ -1111,6 +1111,21 @@ class ChDialectSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prior)
   }
 
+  test("SETTINGS scope ends with its own query's execution, not another query's") {
+    val prior = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      val q = spark.sql("SELECT 1 AS x SETTINGS max_threads = 7")
+      // an unrelated execution (no parse, so no backstop) ends first:
+      // its execution-end event must leave the scope open
+      spark.range(1).collect()
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      assert(spark.conf.get("spark.sql.shuffle.partitions") === "7")
+      q.collect()
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      assert(spark.conf.get("spark.sql.shuffle.partitions") === prior)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prior)
+  }
+
   test("round-8 dialect tail: time arithmetic, bit ops, folds, formatters") {
     def one(sql: String): Any = spark.sql(s"SELECT $sql").head.get(0)
     assert(one("addHours(TIMESTAMP '2024-01-01 10:00:00', 3)").toString

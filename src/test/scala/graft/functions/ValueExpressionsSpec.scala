@@ -24,6 +24,8 @@ class ValueExpressionsSpec extends SparkSpec {
     }
     intercept[Exception](CHValues.ipv4FromString(u("1.2.3.256")))
     intercept[Exception](CHValues.ipv4FromString(u("1.2.3")))
+    // a sign is not a digit
+    intercept[IllegalArgumentException](CHValues.ipv4FromString(u("+1.2.3.4")))
   }
 
   test("IPv6 canonicalization follows RFC 5952") {
@@ -46,6 +48,11 @@ class ValueExpressionsSpec extends SparkSpec {
       === Seq[Byte](1, 2, 3, 4))
     intercept[Exception](CHValues.ipv6FromString(u("1:2:3")))
     intercept[Exception](CHValues.ipv6FromString(u("1::2::3")))
+    // a sign is not a hex digit; a dotted quad is only legal as the
+    // final 32 bits of the address
+    Seq("-1::", "1:2:3:1.2.3.4:5:6:7", "1.2.3.4::").foreach { bad =>
+      intercept[IllegalArgumentException](CHValues.ipv6FromString(u(bad)))
+    }
   }
 
   test("UUID canonical form round trips") {

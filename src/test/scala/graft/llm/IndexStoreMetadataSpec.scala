@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
-import org.apache.spark.GraftTestBus
+import org.apache.spark.GraftListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -48,12 +48,12 @@ class IndexStoreMetadataSpec extends SparkSpec {
         if (e.properties != null && e.properties.getProperty("graft.spec.tag") == tag)
           n.incrementAndGet()
     }
-    GraftTestBus.drain(sc)
+    GraftListenerBus.drain(sc)
     sc.addSparkListener(l)
     sc.setLocalProperty("graft.spec.tag", tag)
     try {
       val r = body
-      GraftTestBus.drain(sc)
+      GraftListenerBus.drain(sc)
       (r, n.get)
     } finally {
       sc.setLocalProperty("graft.spec.tag", null)

@@ -23,7 +23,7 @@ class SimilaritySpec extends SparkSpec {
     def topSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val brute = topSet(Similarity.bruteForceTopK(emb, queries, 5))
-    val ivf = topSet(Similarity.ivfTopK(emb, queries, 5, nlist = 16, nprobe = 4))
+    val ivf = topSet(Similarity.rebuildTopK(AnnFamily.Ivf, emb, queries, 5, nlist = 16, nprobe = 4))
     val recall = (brute intersect ivf).size.toDouble / brute.size
     assert(recall >= 0.5, s"IVF recall too low: $recall")
   }
@@ -51,7 +51,7 @@ class SimilaritySpec extends SparkSpec {
     // density-scaled cell count, and equality needs identical centroids
     val probe = topSet(Similarity.indexProbe(spark, sf001, AnnFamily.Ivf, queries, k = 5,
       nprobe = 4))
-    val rebuild = topSet(Similarity.ivfTopK(emb, queries, 5, nlist = 0, nprobe = 4))
+    val rebuild = topSet(Similarity.rebuildTopK(AnnFamily.Ivf, emb, queries, 5, nprobe = 4))
     assert(probe === rebuild,
       "standing-index probe must agree with the per-rep rebuild path")
   }
@@ -70,7 +70,7 @@ class SimilaritySpec extends SparkSpec {
     def topSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val probe = topSet(Similarity.indexProbe(spark, sf001, AnnFamily.Pq, queries, k = 5))
-    val rebuild = topSet(Similarity.pqTopK(emb, queries, 5))
+    val rebuild = topSet(Similarity.rebuildTopK(AnnFamily.Pq, emb, queries, 5))
     assert(probe === rebuild,
       "standing-codes probe must agree with the per-rep rebuild path")
   }
@@ -125,7 +125,7 @@ class SimilaritySpec extends SparkSpec {
     def topSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val brute = topSet(Similarity.bruteForceTopK(emb, queries, 5))
-    val ivfpq = topSet(Similarity.ivfPqTopK(emb, queries, 5))
+    val ivfpq = topSet(Similarity.rebuildTopK(AnnFamily.IvfPq, emb, queries, 5))
     val recall = (brute intersect ivfpq).size.toDouble / brute.size
     assert(recall >= 0.5, s"IVF-PQ recall too low: $recall")
   }
@@ -144,7 +144,7 @@ class SimilaritySpec extends SparkSpec {
     def topSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val probe = topSet(Similarity.indexProbe(spark, sf001, AnnFamily.IvfPq, queries, k = 5))
-    val rebuild = topSet(Similarity.ivfPqTopK(emb, queries, 5))
+    val rebuild = topSet(Similarity.rebuildTopK(AnnFamily.IvfPq, emb, queries, 5))
     assert(probe === rebuild,
       "standing composed probe must agree with the per-rep rebuild path")
   }
@@ -299,7 +299,7 @@ class SimilaritySpec extends SparkSpec {
     def topSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.select("qid", "vid").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val brute = topSet(Similarity.bruteForceTopK(emb, queries, 5))
-    val pq = topSet(Similarity.pqTopK(emb, queries, 5))
+    val pq = topSet(Similarity.rebuildTopK(AnnFamily.Pq, emb, queries, 5))
     val recall = (brute intersect pq).size.toDouble / brute.size
     assert(recall >= 0.75, s"PQ recall too low: $recall")
   }
@@ -481,11 +481,11 @@ class SimilaritySpec extends SparkSpec {
     val emb = Seq((0L, Array(1.0, 0.0)), (1L, Array(0.0, 1.0)),
       (2L, Array(0.6, 0.8))).toDF("vec_id", "embedding")
     val e = intercept[IllegalArgumentException] {
-      Similarity.pqTopK(emb, big, 1, m = 1, ksub = 2)
+      Similarity.rebuildTopK(AnnFamily.Pq, emb, big, 1)
     }
     assert(e.getMessage.contains("maxQueryBatch"), e.getMessage)
     val e2 = intercept[IllegalArgumentException] {
-      Similarity.ivfPqTopK(emb, big, 1, nlist = 2, nprobe = 1, m = 1, ksub = 2)
+      Similarity.rebuildTopK(AnnFamily.IvfPq, emb, big, 1, nlist = 2, nprobe = 1)
     }
     assert(e2.getMessage.contains("maxQueryBatch"), e2.getMessage)
   }
@@ -495,12 +495,15 @@ class SimilaritySpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") % 25 === 0)
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val whole = rows(Similarity.pqTopK(emb, queries, 5))
+    val whole = rows(Similarity.rebuildTopK(AnnFamily.Pq, emb, queries, 5))
     // a tiny tile forces the multi-tile path (several codes scans, one
     // bounded LUT gather per tile); per-query results must be identical
     // because each query lives in exactly one tile
     val tiled =
-      try { Similarity.pqLutTile = 4; rows(Similarity.pqTopK(emb, queries, 5)) }
+      try {
+        Similarity.pqLutTile = 4
+        rows(Similarity.rebuildTopK(AnnFamily.Pq, emb, queries, 5))
+      }
       finally Similarity.pqLutTile = 4096
     assert(tiled === whole)
   }
@@ -513,9 +516,12 @@ class SimilaritySpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") % 25 === 0)
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val whole = rows(Similarity.ivfPqTopK(emb, queries, 5))
+    val whole = rows(Similarity.rebuildTopK(AnnFamily.IvfPq, emb, queries, 5))
     val tiled =
-      try { Similarity.pqLutTile = 4; rows(Similarity.ivfPqTopK(emb, queries, 5)) }
+      try {
+        Similarity.pqLutTile = 4
+        rows(Similarity.rebuildTopK(AnnFamily.IvfPq, emb, queries, 5))
+      }
       finally Similarity.pqLutTile = 4096
     assert(tiled === whole)
   }

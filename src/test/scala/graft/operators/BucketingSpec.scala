@@ -30,4 +30,14 @@ class BucketingSpec extends SparkSpec {
         col("l_orderkey") === col("o_orderkey")).count()
     assert(bucketed == plain)
   }
+
+  test("bucketed copies live under a directory naming this process") {
+    val (li, ord) = Bucketed.tables(spark, sf0001)
+    val mine = s"graft-${ProcessHandle.current().pid()}-"
+    val files = li.inputFiles ++ ord.inputFiles
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      assert(new java.net.URI(f).getPath.split('/').exists(_.startsWith(mine)), f)
+    }
+  }
 }
