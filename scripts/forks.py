@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Count the OS processes one benchmark workload's JVM starts.
+"""Count the OS processes and generated classes one benchmark workload's JVM starts.
 
 Usage (from the repository root):
 
@@ -8,24 +8,33 @@ Usage (from the repository root):
 Builds the benchmark harness first (so sbt's own processes are not
 recorded), then runs `benchmark/run.py` for one workload with a Java
 Flight Recording (`settings=profile`, which records `jdk.ProcessStart`
-with its stack) passed through JAVA_TOOL_OPTIONS. Prints the number of
-processes started, by command, by starting thread and by the first
-`graft.` frame on the starting stack (the innermost graft method that
-led to the process; `-` when no graft frame is on it).
+with its stack, plus `jdk.ClassDefine`) passed through JAVA_TOOL_OPTIONS.
+Prints the number of processes started, by command, by starting thread,
+by the first `graft.` frame on the starting stack (the innermost graft
+method that led to the process; `-` when no graft frame is on it) and by
+benchmark phase. Then prints the classes Spark's code generator compiled
+(`GeneratedClass`, one per Janino compile; its nested classes counted
+apart), by phase: a compile in the measured phase is a plan the warm-up
+compiled and the codegen cache did not keep.
 
-On a machine without libhadoop, Hadoop's local FileSystem forks `ls -ld`
-to read a file's permission and `chmod` to set one; this script shows
-where a workload pays for that.
+A phase (set-up, warm-up, measured ops, final checks) is read from the
+main thread's stacks; an event on another thread belongs to the phase
+the main thread was in at that moment. `scripts/JfrEvents.java` reads
+the recording.
+
+On a machine without libhadoop, Hadoop's stock local FileSystem forks
+`ls -ld` to read a file's permission and `chmod` to set one; this script
+shows where a workload pays for that.
 """
 import argparse
 import collections
 import importlib.util
-import json
 import os
 import subprocess
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+GENERATED = "org.apache.spark.sql.catalyst.expressions.GeneratedClass"
 
 
 def load_run_module():
@@ -36,21 +45,29 @@ def load_run_module():
     return mod
 
 
-def process_starts(jfr):
-    out = subprocess.run(["jfr", "print", "--json", "--stack-depth", "256",
-                          "--events", "jdk.ProcessStart", jfr],
+def read_events(jfr):
+    """(kind, nanos, thread, phase, first graft frame, detail) tuples."""
+    out = subprocess.run(["java", os.path.join(ROOT, "scripts", "JfrEvents.java"), jfr],
                          stdout=subprocess.PIPE, check=True, text=True).stdout
-    return json.loads(out)["recording"]["events"]
+    events = [tuple(line.split("\t")) for line in out.splitlines() if line]
+    return [(k, int(t), th, ph, fr, d) for k, t, th, ph, fr, d in events]
 
 
-def first_graft_frame(event):
-    frames = ((event["values"].get("stackTrace") or {}).get("frames")) or []
-    for fr in frames:
-        m = fr["method"]
-        cls = m["type"]["name"].replace("/", ".")
-        if cls.startswith("graft."):
-            return f"{cls}.{m['name']}"
-    return "-"
+def phase_of(events):
+    """Map an event to the phase the main thread was in when it fired."""
+    starts = {}
+    for kind, t, thread, phase, _, _ in events:
+        if thread == "main" and phase != "-":
+            starts[phase] = min(t, starts.get(phase, t))
+    timeline = sorted((t, p) for p, t in starts.items())
+
+    def of(t):
+        current = "start-up"
+        for start, p in timeline:
+            if start <= t:
+                current = p
+        return current
+    return of
 
 
 def table(title, counter):
@@ -77,7 +94,8 @@ def main():
             os.remove(jfr)
         env = dict(os.environ)
         env["JAVA_TOOL_OPTIONS"] = (env.get("JAVA_TOOL_OPTIONS", "") +
-                                    f" -XX:StartFlightRecording=filename={jfr},settings=profile"
+                                    f" -XX:StartFlightRecording=filename={jfr},settings=profile,"
+                                    "jdk.ClassDefine#enabled=true"
                                     " -XX:FlightRecorderOptions=stackdepth=256").strip()
         r = subprocess.run([sys.executable, os.path.join(ROOT, "benchmark", "run.py"),
                             "--workload", a.workload, "--seed", str(a.seed),
@@ -85,19 +103,21 @@ def main():
         if r.returncode != 0 or not os.path.exists(jfr):
             sys.exit(f"forks: the {a.workload} run failed (exit {r.returncode})")
 
-    events = process_starts(jfr)
-    by_command = collections.Counter(e["values"]["command"].split()[0] for e in events)
-    by_thread = collections.Counter((e["values"].get("eventThread") or {}).get("javaName", "?")
-                                    for e in events)
-    by_frame = collections.Counter(first_graft_frame(e) for e in events)
-    by_main_frame = collections.Counter(
-        first_graft_frame(e) for e in events
-        if (e["values"].get("eventThread") or {}).get("javaName") == "main")
-    print(f"processes started: {len(events)} ({jfr})")
-    table("by command", by_command)
-    table("by thread", by_thread)
-    table("by first graft frame", by_frame)
-    table("main thread, by first graft frame", by_main_frame)
+    events = read_events(jfr)
+    phase = phase_of(events)
+    procs = [e for e in events if e[0] == "process"]
+    print(f"processes started: {len(procs)} ({jfr})")
+    table("by command", collections.Counter(e[5].split()[0] for e in procs))
+    table("by thread", collections.Counter(e[2] for e in procs))
+    table("by first graft frame", collections.Counter(e[4] for e in procs))
+    table("main thread, by first graft frame",
+          collections.Counter(e[4] for e in procs if e[2] == "main"))
+    table("by phase", collections.Counter(phase(e[1]) for e in procs))
+    generated = [e for e in events if e[0] == "generated"]
+    compiles = [e for e in generated if e[5] == GENERATED]
+    print(f"generated classes compiled: {len(compiles)} "
+          f"(+{len(generated) - len(compiles)} nested classes)")
+    table("compiled, by phase", collections.Counter(phase(e[1]) for e in compiles))
 
 
 if __name__ == "__main__":

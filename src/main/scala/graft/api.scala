@@ -36,7 +36,25 @@ object Sessions {
     *  - UTC so date/timestamp results are engine-portable vs the oracle;
     *  - `nanosAsLong` because the `events` fixture carries parquet
     *    TIMESTAMP(NANOS), which Spark's µs TimestampType otherwise rejects
-    *    at read time (the loader then truncates ns → µs explicitly).
+    *    at read time (the loader then truncates ns → µs explicitly);
+    *  - `spark.sql.codegen.cache.maxEntries` = 1000: Spark keeps the
+    *    classes it generates in one cache per JVM, sized once when
+    *    `CodeGenerator` initialises (default 100), and Guava splits that
+    *    bound over 4 segments that evict on their own. One `ingest`
+    *    benchmark run (standing BM25 + IVF-PQ build, then batches of
+    *    append, both cold probes and compaction) compiles 192 distinct
+    *    classes: 44 in set-up, 142 in the first batch, 3 in each later
+    *    one. At 100 the cache could not hold one batch's classes, and each
+    *    later batch compiled 129 again; 1000 leaves each segment room for
+    *    five times its share of that run;
+    *  - `spark.hadoop.fs.file.impl` = [[GraftLocalFileSystem]]: without
+    *    libhadoop, Hadoop's local FileSystem forks `chmod` for every file,
+    *    `.crc` and directory it creates (947 processes in one `ingest`
+    *    benchmark run); this one sets the same bits in-process. Hadoop
+    *    caches a FileSystem per scheme and user, so the class holds for
+    *    the JVM when the first `file:` access comes from a graft session.
+    *    A session built without these confs keeps Hadoop's class and
+    *    reads and writes the same files.
     */
   def withGraftConfs(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.session.timeZone", "UTC")
@@ -45,6 +63,8 @@ object Sessions {
       // CH-style introspection: SELECT * FROM system.tables/columns/...
       .config("spark.sql.catalog.system", "graft.connector.SystemCatalog")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
 
   def local(cores: String, shufflePartitions: String): SparkSession = {
     val s = withGraftConfs(

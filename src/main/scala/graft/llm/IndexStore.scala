@@ -82,6 +82,13 @@ import org.apache.spark.sql.types.StructType
   *   - take a table's schema from its first data file's footer, by
   *     Spark's own rule, and hand it to the reader: schema inference is
   *     a Spark job per scan.
+  *
+  * The WRITE PLANE (segment writes and their commit protocol, manifests,
+  * sidecars, aux tables, the pointer flip) creates files and directories
+  * without an OS process: on a graft session `file:` resolves to
+  * [[graft.GraftLocalFileSystem]], which sets permission bits
+  * in-process where Hadoop's local FileSystem, without libhadoop, forks
+  * `chmod` for every file, `.crc` and directory.
   */
 object IndexStore {
 

@@ -242,7 +242,7 @@ object AnnFamily {
   case object Ivf extends AnnFamily("ivf", Seq("vid", "cell"), Seq("vid"), Seq("cell"),
       stableProbe = true) {
     def train(corpus: DataFrame, nlist: => Int): AnnModel = AnnModel(centroids =
-      trainCoarseQuantizer(corpus.select(col("cv")), nlist, normalize = false, seed = 42L))
+      trainCoarseQuantizer(corpus.select(col("cv")), nlist, normalize = false))
     def encode(corpus: DataFrame, model: AnnModel): DataFrame =
       ivfAssign(corpus, model.centroids)
     def probe(index: DataFrame, corpus: => DataFrame, model: AnnModel, queries: DataFrame,
@@ -268,7 +268,7 @@ object AnnFamily {
     def train(corpus: DataFrame, nlist: => Int): AnnModel = {
       val sample = normalizedSample(corpus.select(col("cv")), quantizerSampleFloor)
       require(sample.nonEmpty, "pq: empty corpus")
-      flatPqModel(sample, pqM, pqKsub, seed = 42L)
+      flatPqModel(sample, pqM, pqKsub)
     }
     def encode(corpus: DataFrame, model: AnnModel): DataFrame =
       ivfPqEncodeDf(corpus, model.centroids, model.codebooks, model.bounds)
@@ -296,7 +296,7 @@ object AnnFamily {
       Seq("cell"), stableProbe = false) {
     def train(corpus: DataFrame, nlist: => Int): AnnModel = {
       val (centroids, codebooks, bounds) =
-        ivfPqTrainAt(corpus.select(col("cv")), nlist, pqM, pqKsub, seed = 42L)
+        ivfPqTrainAt(corpus.select(col("cv")), nlist, pqM, pqKsub)
       AnnModel(centroids, codebooks, bounds)
     }
     def encode(corpus: DataFrame, model: AnnModel): DataFrame =
@@ -644,9 +644,8 @@ object Similarity {
     * (the residual against 0.0 is the vector itself, so codes and the
     * codebook training inputs are the plain PQ ones) and [[pqTrain]]'s
     * codebooks over the normalized `sample`. */
-  private[llm] def flatPqModel(sample: Array[Array[Double]], m: Int, ksub: Int,
-      seed: Long): AnnModel = {
-    val (codebooks, bounds) = pqTrain(sample, m, ksub, seed)
+  private[llm] def flatPqModel(sample: Array[Array[Double]], m: Int, ksub: Int): AnnModel = {
+    val (codebooks, bounds) = pqTrain(sample, m, ksub)
     AnnModel(Array(new Array[Double](sample(0).length)), codebooks, bounds)
   }
 
@@ -665,21 +664,21 @@ object Similarity {
 
   /** Codebook training of the PQ families (bounded driver sample, one
     * per-subspace k-means each). */
-  private[llm] def pqTrain(sample: Array[Array[Double]], m: Int, ksub: Int,
-      seed: Long): (Array[Array[Array[Double]]], Array[Int]) = {
+  private[llm] def pqTrain(sample: Array[Array[Double]], m: Int, ksub: Int)
+      : (Array[Array[Array[Double]]], Array[Int]) = {
     val d = sample(0).length
     val mm = math.min(m, d)
     // subspace f covers [bounds(f), bounds(f+1)) — remainder spread left
     val bounds = Array.tabulate(mm + 1)(f => f * d / mm)
     // the m per-subspace k-means runs are INDEPENDENT (each slices its
-    // own columns and seeds seed+f), so they run on a parallel stream —
-    // bit-identical output (per-f work unchanged, results land by
+    // own columns and seeds trainSeed+f), so they run on a parallel
+    // stream — bit-identical output (per-f work unchanged, results land by
     // index), ~m× less driver wall on the training every PQ/IVF-PQ row
     // pays per rep (r19; PQSpec pins determinism across calls)
     val codebooks = new Array[Array[Array[Double]]](mm)
     java.util.stream.IntStream.range(0, mm).parallel().forEach { f =>
       val sub = sample.map(v => java.util.Arrays.copyOfRange(v, bounds(f), bounds(f + 1)))
-      codebooks(f) = VecKernels.kmeans(sub, ksub, iters = 8, seed = seed + f)
+      codebooks(f) = VecKernels.kmeans(sub, ksub, iters = 8, seed = trainSeed + f)
     }
     (codebooks, bounds)
   }
@@ -783,7 +782,7 @@ object Similarity {
     * driver traffic is nlist × dim doubles per iteration, never a
     * corpus-sized gather, so the shape holds at any density. */
   private[llm] def trainCoarseQuantizer(cv: DataFrame, nlist: Int,
-      normalize: Boolean, seed: Long, iters: Int = 8): Array[Array[Double]] = {
+      normalize: Boolean): Array[Array[Double]] = {
     val spark = cv.sparkSession
     import spark.implicits._
     def norm(v: Array[Double]): Array[Double] =
@@ -792,7 +791,7 @@ object Similarity {
     if (need <= quantizerDriverSampleCap) {
       val sample = cv.limit(need.toInt).as[Array[Double]].collect().map(norm)
       require(sample.nonEmpty, "trainCoarseQuantizer: empty corpus")
-      VecKernels.kmeans(sample, nlist, iters = iters, seed = seed)
+      VecKernels.kmeans(sample, nlist, iters = 8, seed = trainSeed)
     } else {
       val init = cv.limit(nlist).as[Array[Double]].collect().map(norm)
       require(init.length == nlist,
@@ -801,7 +800,7 @@ object Similarity {
           "training cannot be smaller than its cell count")
       val ds = cv.as[Array[Double]]
         .mapPartitions(_.map(v => (0L, if (normalize) VecKernels.normalize(v) else v)))
-      val (cents, _) = fitKMeans(ds, nlist, iters = iters, init = Some(init))
+      val (cents, _) = fitKMeans(ds, nlist, iters = 8, init = Some(init))
       cents
     }
   }
@@ -812,21 +811,21 @@ object Similarity {
     * on a driver-side sample of ≥ 39·ksub normalized vectors — ksub is
     * fixed (256), so the codebook sample is density-INdependent and
     * never outgrows the driver. */
-  private[llm] def ivfPqTrainAt(cv: DataFrame, nlist: Int, m: Int, ksub: Int,
-      seed: Long): (Array[Array[Double]], Array[Array[Array[Double]]], Array[Int]) = {
+  private[llm] def ivfPqTrainAt(cv: DataFrame, nlist: Int, m: Int, ksub: Int)
+      : (Array[Array[Double]], Array[Array[Array[Double]]], Array[Int]) = {
     val need = quantizerSampleSize(nlist)
     if (quantizerPointsPerCell.toLong * nlist <= quantizerDriverSampleCap) {
       // one bounded sample trains both quantizers — the classic recipe
       val sample = normalizedSample(cv, need)
       require(sample.nonEmpty, "ivfPqTrainAt: empty corpus")
-      ivfPqTrain(sample, nlist, m, ksub, seed)
+      ivfPqTrain(sample, nlist, m, ksub)
     } else {
-      val centroids = trainCoarseQuantizer(cv, nlist, normalize = true, seed)
+      val centroids = trainCoarseQuantizer(cv, nlist, normalize = true)
       val csample = normalizedSample(cv,
         math.max(quantizerSampleFloor, quantizerPointsPerCell * ksub))
       val residuals = csample.map(v =>
         VecKernels.residual(v, centroids(VecKernels.nearestCentroid(v, centroids))))
-      val (codebooks, bounds) = pqTrain(residuals, m, ksub, seed)
+      val (codebooks, bounds) = pqTrain(residuals, m, ksub)
       (centroids, codebooks, bounds)
     }
   }
@@ -840,12 +839,12 @@ object Similarity {
     * The merge path stays one-pass: the cell assignment already computes
     * the centroid the residual needs. */
   private[llm] def ivfPqTrain(sample: Array[Array[Double]], nlist: Int,
-      m: Int, ksub: Int, seed: Long)
+      m: Int, ksub: Int)
       : (Array[Array[Double]], Array[Array[Array[Double]]], Array[Int]) = {
-    val centroids = VecKernels.kmeans(sample, nlist, iters = 8, seed = seed)
+    val centroids = VecKernels.kmeans(sample, nlist, iters = 8, seed = trainSeed)
     val residuals = sample.map(v =>
       VecKernels.residual(v, centroids(VecKernels.nearestCentroid(v, centroids))))
-    val (codebooks, bounds) = pqTrain(residuals, m, ksub, seed)
+    val (codebooks, bounds) = pqTrain(residuals, m, ksub)
     (centroids, codebooks, bounds)
   }
 
@@ -1126,13 +1125,10 @@ object Similarity {
     * bucket key — never an all-pairs product; exact cosine filters. Same
     * bucket→collect→in-bucket-pairs shape as MinHash banding.
     */
-  def embedDupPairsLsh(emb: DataFrame, tau: Double, tables: Int, bits: Int,
-                       dim: Int = -1): DataFrame = {
+  def embedDupPairsLsh(emb: DataFrame, tau: Double, tables: Int, bits: Int): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val d =
-      if (dim > 0) dim
-      else dimOf(emb)
+    val d = dimOf(emb)
     if (d == 0) return spark.emptyDataset[(Long, Long, Double)].toDF("vec_a", "vec_b", "cos")
     val rnd = new scala.util.Random(7)
     val planes: Array[Array[Array[Double]]] =
@@ -1184,6 +1180,11 @@ object Similarity {
     * per vector over 256-centroid subquantizers. */
   private[llm] val pqM = 8
   private[llm] val pqKsub = 256
+
+  /** Seed of every ANN model's k-means (coarse quantizer and PQ
+    * codebooks; codebook f seeds `trainSeed + f`), so a retrain
+    * reproduces the model. */
+  private[llm] val trainSeed = 42L
 
   // ---- standing ANN indexes (VERDICT r12 next-#3 — the production ANN
   // shape, mirroring the dedup corpusBandIndexFor pattern): each

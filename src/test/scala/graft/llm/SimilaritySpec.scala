@@ -104,7 +104,7 @@ class SimilaritySpec extends SparkSpec {
       col("embedding").cast("array<double>").as("cv"))
     val sample = c.select(col("cv")).limit(2048).as[Array[Double]].collect()
       .map(VecKernels.normalize)
-    val model = Similarity.flatPqModel(sample, 8, 256, seed = 42L)
+    val model = Similarity.flatPqModel(sample, 8, 256)
     val slice = pmod(col("vid"), lit(5L))
     val pq = AnnFamily.Pq
     val codes0 = pq.encode(c.where(slice >= 2), model)
@@ -157,7 +157,7 @@ class SimilaritySpec extends SparkSpec {
     val sample = c.select(col("cv")).limit(2048).as[Array[Double]].collect()
       .map(VecKernels.normalize)
     val (centroids, codebooks, bounds) =
-      Similarity.ivfPqTrain(sample, 16, 8, 256, seed = 42L)
+      Similarity.ivfPqTrain(sample, 16, 8, 256)
     val model = AnnModel(centroids, codebooks, bounds)
     val slice = pmod(col("vid"), lit(5L))
     val ivfPq = AnnFamily.IvfPq
@@ -192,7 +192,7 @@ class SimilaritySpec extends SparkSpec {
     // flat scan (no cell column, the all-zero centroid) returns over
     // those codes (pins heap logic, the cell→query routing, the
     // best-first shortlist cut, and the re-rank)
-    val (c1, cb1, bd1) = Similarity.ivfPqTrain(sample, nlist = 1, 8, 256, seed = 42L)
+    val (c1, cb1, bd1) = Similarity.ivfPqTrain(sample, nlist = 1, 8, 256)
     val index1 = Similarity.ivfPqEncodeDf(c, c1, cb1, bd1)
     val composed = topSet(Similarity.ivfPqScan(index1, c, AnnModel(c1, cb1, bd1),
       queries, 5, nprobe = 1, shortlistFactor = 4))
@@ -203,7 +203,7 @@ class SimilaritySpec extends SparkSpec {
       "single-cell composed scan diverged from the flat PQ scan on identical residual codes")
     // and the pruned probe's plan actually filters on cell (real model)
     val (centroids, codebooks, bounds) =
-      Similarity.ivfPqTrain(sample, 16, 8, 256, seed = 42L)
+      Similarity.ivfPqTrain(sample, 16, 8, 256)
     val index = Similarity.ivfPqEncodeDf(c, centroids, codebooks, bounds)
     val prunedPlan = Similarity.ivfPqScan(index, c, AnnModel(centroids, codebooks, bounds),
       queries, 5, nprobe = 4, shortlistFactor = 4)
@@ -620,10 +620,10 @@ class SimilaritySpec extends SparkSpec {
     val rnd = new java.util.Random(7)
     val sample = Array.fill(512)(
       VecKernels.normalize(Array.fill(64)(rnd.nextGaussian())))
-    val (cb1, bounds) = Similarity.pqTrain(sample, 8, 32, seed = 42L)
+    val (cb1, bounds) = Similarity.pqTrain(sample, 8, 32)
     // a second run reproduces identical codebooks (the r19 parallel
     // stream must not introduce any run-to-run nondeterminism)
-    val (cb2, _) = Similarity.pqTrain(sample, 8, 32, seed = 42L)
+    val (cb2, _) = Similarity.pqTrain(sample, 8, 32)
     assert(cb1.length == cb2.length && bounds.length == 9)
     cb1.zip(cb2).foreach { case (a, b) =>
       a.zip(b).foreach { case (x, y) =>
